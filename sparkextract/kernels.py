@@ -1,10 +1,16 @@
-"""Per-page numpy kernels used inside vectorized (Arrow-batched) UDFs.
+"""Kernels used inside the Arrow-batched UDFs.
 
-These are the sequential-fold pieces that are *not* relational
-(SURVEY.md §7.5): greedy NMS, the 10px bubble pass, line sessionization,
-interval subtraction, and byte-exact paragraph assembly. Each runs on a
-single page's (or block's) handful of boxes inside mapInPandas /
-applyInPandas — per-group cardinality is tiny, total work is linear.
+Two kinds:
+- the sequential folds that are *not* relational (SURVEY.md §7.5):
+  greedy NMS, the 10px bubble pass, line sessionization, interval
+  subtraction, and byte-exact paragraph assembly. Each runs on one
+  group's handful of boxes, as Python lists of [x0,y0,x1,y1] rows (no
+  numpy dispatch per tiny group); per-group cardinality is tiny, total
+  work is linear;
+- the segment helpers (``run_starts``, ``rank_in_run``, and
+  ``page_pairs``, the per-page cross product) that let the batch-wide
+  steps (page/det ordering, OCR containment, J1 fill) run as flat numpy
+  over every page of a batch at once.
 
 Semantics are pinned in DESIGN.md with reference file:line citations.
 """
@@ -49,7 +55,53 @@ def is_zh(s: str) -> bool:
     return _CJK.search(s) is not None
 
 
-# ---------- geometry kernels (vectorized) ----------
+# ---------- segments (batch-wide geometry) ----------
+
+def run_starts(*keys: np.ndarray) -> np.ndarray:
+    """Bool per row: the row starts a run of equal consecutive key tuples."""
+    change = np.zeros(len(keys[0]), dtype=bool)
+    change[:1] = True
+    for k in keys:
+        change[1:] |= k[1:] != k[:-1]
+    return change
+
+
+def rank_in_run(starts: np.ndarray) -> np.ndarray:
+    """Position of each row within its run (a segment-wise cumcount)."""
+    idx = np.arange(len(starts))
+    return idx - np.maximum.accumulate(np.where(starts, idx, 0))
+
+
+PAIR_CHUNK = 1 << 16  # pairs per chunk: bounds memory by chunk, not by page²
+
+
+def page_pairs(a_page: np.ndarray, b_page: np.ndarray):
+    """Yield (a, b) index arrays of every pair of an a-row and a b-row on
+    the same page, a-major and b in input order. ``a_page``/``b_page`` are
+    the rows' non-decreasing page ids. Chunks split between a-rows and
+    hold at most ``PAIR_CHUNK`` pairs, or one a-row's pairs if it has
+    more."""
+    if len(a_page) == 0 or len(b_page) == 0:
+        return
+    chunk = PAIR_CHUNK
+    n_pages = int(max(a_page[-1], b_page[-1])) + 1
+    b_count = np.bincount(b_page, minlength=n_pages)
+    b_start = np.cumsum(b_count) - b_count
+    reps = b_count[a_page]
+    ends = np.cumsum(reps)
+    lo = 0
+    while lo < len(a_page):
+        base = int(ends[lo - 1]) if lo else 0
+        hi = max(int(np.searchsorted(ends, base + chunk, side="right")), lo + 1)
+        r = reps[lo:hi]
+        a = np.repeat(np.arange(lo, hi), r)
+        first = np.repeat(ends[lo:hi] - r - base, r)
+        b = np.arange(len(a)) - first + np.repeat(b_start[a_page[lo:hi]], r)
+        yield a, b
+        lo = hi
+
+
+# ---------- geometry kernels ----------
 
 def nms_keep(boxes: np.ndarray, order: np.ndarray, iou_thres: float) -> np.ndarray:
     """M3 greedy NMS. ``order`` = candidate indices pre-sorted by
@@ -90,13 +142,10 @@ def nms_keep(boxes: np.ndarray, order: np.ndarray, iou_thres: float) -> np.ndarr
     return np.asarray(kept, dtype=np.int64)
 
 
-def bubble_pass(bs: np.ndarray) -> np.ndarray:
+def bubble_pass(rows: list) -> list[int]:
     """O2 (paddle_ocr.py:57-78): stable (y0,x0) sort + 10px adjacent-swap
-    pass. Input (n,4) bboxes; returns row order as an index array.
-    Internals run on Python floats — identical IEEE doubles, ~3× less
-    dispatch overhead than numpy scalar indexing on these tiny groups."""
-    n = len(bs)
-    rows = bs.tolist()
+    pass. Input: [x0,y0,x1,y1] rows; returns the row order as indices."""
+    n = len(rows)
     idx = sorted(range(n), key=lambda i: (rows[i][1], rows[i][0]))  # stable
     for i in range(n - 1):
         for j in range(i, -1, -1):
@@ -105,7 +154,7 @@ def bubble_pass(bs: np.ndarray) -> np.ndarray:
                 idx[j], idx[j + 1] = b, a
             else:
                 break
-    return np.asarray(idx, dtype=np.int64)
+    return idx
 
 
 def y_overlap_gt(b1, b2, thr=0.8) -> bool:
@@ -122,13 +171,12 @@ def y_overlap_gt(b1, b2, thr=0.8) -> bool:
     return ov / den > thr
 
 
-def merge_det_boxes(bs: np.ndarray) -> np.ndarray:
+def merge_det_boxes(rows: list) -> list[list[float]]:
     """O7 (paddle_ocr.py:250-289): y-sessionize into lines (O3 fold) then
-    union x-touching boxes per line (O6 fold). Input/output (n,4);
-    internals on Python floats (see bubble_pass)."""
-    if len(bs) == 0:
-        return bs.reshape(0, 4)
-    rows = bs.tolist()
+    union x-touching boxes per line (O6 fold). [x0,y0,x1,y1] rows in and
+    out."""
+    if not rows:
+        return []
     order = sorted(range(len(rows)), key=lambda i: rows[i][1])  # stable
     lines: list[list[int]] = [[order[0]]]
     for i in order[1:]:
@@ -150,7 +198,7 @@ def merge_det_boxes(bs: np.ndarray) -> np.ndarray:
                 out.append(cur)
                 cur = [b[0], b[1], b[2], b[3]]
         out.append(cur)
-    return np.asarray(out, dtype=np.float64).reshape(-1, 4)
+    return out
 
 
 def subtract_intervals(lo: float, hi: float, masks: list[tuple[float, float]]):
@@ -174,17 +222,17 @@ def subtract_intervals(lo: float, hi: float, masks: list[tuple[float, float]]):
     return out
 
 
-def split_by_masks(bs: np.ndarray, masks: np.ndarray) -> np.ndarray:
+def split_by_masks(rows: list, masks: list) -> list:
     """J2 (paddle_ocr.py:156-172): subtract x-intervals of y-overlapping
-    formula masks from each text box."""
-    if len(masks) == 0:
-        return bs
+    formula masks from each text box. [x0,y0,x1,y1] rows in and out."""
+    if not masks:
+        return rows
     out = []
-    for b in bs:
+    for b in rows:
         xiv = [(m[0], m[2]) for m in masks if y_overlap_gt(b, m)]
         for lo, hi in subtract_intervals(b[0], b[2], xiv):
-            out.append((lo, b[1], hi, b[3]))
-    return np.asarray(out, dtype=np.float64).reshape(-1, 4)
+            out.append([lo, b[1], hi, b[3]])
+    return out
 
 
 # ---------- paragraph assembly (A2) ----------

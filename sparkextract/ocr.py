@@ -1,12 +1,19 @@
-"""Stage 2 — per-page OCR merge layer (M6-M9, O2, O7, J2, P3).
+"""Stage 2 — OCR merge layer (M6-M9, O2, O7, J2, P3).
 
 The reference runs OCR per cropped layout region with formula masks
-(pdf2markdown.py:195-256 + paddle_ocr.py:388-450). The det-box geometry
-pipeline — (y0,x0) sort + 10px bubble pass (O2), line merge (O7), formula
-mask x-interval subtraction (J2) — is a sequential fold, so it lives in a
-numpy kernel (``ocr_page_arrays``) called from an ``applyInPandas`` per
-(conv_id, turn_idx, page_seq) group in the staged pipeline, and directly
-from the fused turn kernel. One implementation, two call sites.
+(pdf2markdown.py:195-256 + paddle_ocr.py:388-450). ``ocr_page_arrays``
+runs that layer for many pages at once, on flat arrays where every row
+carries its page id:
+- batch-wide numpy: region × raw center containment per page (in
+  chunks of ``kernels.page_pairs``), crop shifts and centers, and the
+  region × mask bounds test;
+- per region, on Python lists: the sequential folds — (y0,x0) sort +
+  10px bubble pass (O2), line merge (O7), formula-mask x-interval
+  subtraction (J2) — and the score/content join of each merged box.
+
+It is called once per Arrow batch by the fused turn kernel and once per
+(conv_id, salted turn bucket) group by the staged pipeline's
+``applyInPandas``. One implementation, two call sites.
 
 Output: the final ``text`` span rows, with ``det_order`` continuing after
 the page's model detections — the reference's layout_dets append order
@@ -23,7 +30,6 @@ from pyspark.sql import functions as F
 from . import kernels, schema
 
 _PAD = float(schema.OCR_PAD)
-_SHIFT4 = np.array([1.0, 1.0, 1.0, 1.0])
 
 ROT_MARK = "@rot180 "
 
@@ -40,142 +46,167 @@ def angle_cls(contents: list[str]) -> list[str]:
 
 
 def ocr_page_arrays(
-    region_boxes: np.ndarray,  # (n,4) OCR-able regions in det_order
+    region_page: np.ndarray,  # (n,) page id per OCR-able region
+    region_boxes: np.ndarray,  # (n,4) regions in (page, det_order) order
+    mask_page: np.ndarray,  # (m,) page id per formula mask
     masks: np.ndarray,  # (m,4) formula masks (int coords as float)
-    raw_boxes: np.ndarray,  # (r,4) raw text dets in det_idx order
+    raw_page: np.ndarray,  # (r,) page id per raw text det
+    raw_boxes: np.ndarray,  # (r,4) raw text dets in (page, det_idx) order
     raw_scores: np.ndarray,  # (r,)
     raw_contents: list[str],
     use_angle_cls: bool = True,
-) -> tuple[list, list, list]:
-    """→ (boxes [x0,y0,x1,y1], scores, contents) in emission order."""
-    out_boxes: list = []
-    out_scores: list = []
-    out_contents: list = []
+) -> tuple[np.ndarray, np.ndarray, list, list]:
+    """→ (page ids, boxes (k,4) [x0,y0,x1,y1], scores, contents) of the OCR
+    text spans in emission order: by page, then region, then merged box.
+    Page ids are any non-decreasing integers, the same on all three
+    inputs."""
+    none = (np.empty(0, dtype=np.int64), np.empty((0, 4)), [], [])
     if len(raw_boxes) == 0 or len(region_boxes) == 0:
-        return out_boxes, out_scores, out_contents
+        return none
     if use_angle_cls:
         raw_contents = angle_cls(raw_contents)
     rcx = (raw_boxes[:, 0] + raw_boxes[:, 2]) / 2.0
     rcy = (raw_boxes[:, 1] + raw_boxes[:, 3]) / 2.0
-    # sequential-sum score mean: matches the reference's sum()/len() to the
-    # last bit (np.mean switches to pairwise summation above 8 elements)
-    # and skips numpy dispatch overhead on these 1-5 element groups
-    scores_list = raw_scores.tolist()
-    # center containment on Python floats for the usual handful of raw
-    # dets (same IEEE compares, ~6 numpy dispatches per region avoided)
-    rcx_l, rcy_l = rcx.tolist(), rcy.tolist()
-    n_raw = len(rcx_l)
-    for reg in region_boxes.tolist():
-        rx0, ry0, rx1, ry1 = reg
-        nw, nh = rx1 - rx0 + 2 * _PAD, ry1 - ry0 + 2 * _PAD
-        mine = [
-            j for j in range(n_raw)
-            if rx0 <= rcx_l[j] <= rx1 and ry0 <= rcy_l[j] <= ry1
-        ]
-        if not mine:
-            continue
-        shift = np.array([rx0, ry0, rx0, ry0]) - _PAD
-        crop = raw_boxes[mine] - shift
-        boxes = kernels.merge_det_boxes(crop[kernels.bubble_pass(crop)])
-        if len(masks):
-            adj = masks - shift
+    rx0, ry0, rx1, ry1 = region_boxes.T
+    # members: (region, raw) pairs with the raw's center inside the region,
+    # region-major, raws in det_idx order within a region
+    mem_reg, mem_raw = [], []
+    for a, b in kernels.page_pairs(region_page, raw_page):
+        inside = (
+            (rx0[a] <= rcx[b]) & (rcx[b] <= rx1[a])
+            & (ry0[a] <= rcy[b]) & (rcy[b] <= ry1[a])
+        )
+        mem_reg.append(a[inside])
+        mem_raw.append(b[inside])
+    mem_reg = np.concatenate(mem_reg)
+    mem_raw = np.concatenate(mem_raw)
+    if len(mem_reg) == 0:
+        return none
+    # crop space: shifted by the region origin, padded (P1)
+    sx = rx0 - _PAD
+    sy = ry0 - _PAD
+    shift = np.stack([sx, sy, sx, sy], axis=1)
+    crop = raw_boxes[mem_raw] - shift[mem_reg]
+    ccx = ((crop[:, 0] + crop[:, 2]) / 2.0).tolist()
+    ccy = ((crop[:, 1] + crop[:, 3]) / 2.0).tolist()
+    starts = np.flatnonzero(kernels.run_starts(mem_reg))
+    regs = mem_reg[starts]
+    # formula masks in each member region's crop space, kept unless they
+    # lie wholly outside the padded crop (paddle_ocr.py:405-414)
+    reg_masks: dict[int, list] = {}
+    if len(masks):
+        nw = rx1 - rx0 + 2 * _PAD
+        nh = ry1 - ry0 + 2 * _PAD
+        for a, b in kernels.page_pairs(region_page[regs], mask_page):
+            g = regs[a]
+            adj = masks[b] - shift[g]
             ok = ~(
-                (adj[:, 2] < 0) | (adj[:, 3] < 0) | (adj[:, 0] > nw) | (adj[:, 1] > nh)
+                (adj[:, 2] < 0) | (adj[:, 3] < 0)
+                | (adj[:, 0] > nw[g]) | (adj[:, 1] > nh[g])
             )
-            adj = adj[ok]
-            if len(adj):  # reference: `if mfd_res:` (paddle_ocr.py:414)
-                boxes = kernels.split_by_masks(boxes, adj)
-        # tiny-group inner loop on Python floats (identical IEEE doubles,
-        # ~5µs numpy dispatch per flatnonzero/lexsort avoided per box)
-        ccx = ((crop[:, 0] + crop[:, 2]) / 2.0).tolist()
-        ccy = ((crop[:, 1] + crop[:, 3]) / 2.0).tolist()
-        mine_l = mine
-        m = len(mine_l)
-        sx, sy = float(shift[0]), float(shift[1])
-        for b in np.asarray(boxes).tolist():
-            b0, b1, b2, b3 = b
+            for g_k, box in zip(g[ok].tolist(), adj[ok].tolist()):
+                reg_masks.setdefault(g_k, []).append(box)
+    crop_l = crop.tolist()
+    raw_l = mem_raw.tolist()
+    scores_l = raw_scores.tolist()
+    pages_l = region_page.tolist()
+    sx_l, sy_l = sx.tolist(), sy.tolist()
+    bounds = np.r_[starts, len(mem_reg)].tolist()
+    out_page: list[int] = []
+    out_boxes: list = []
+    out_scores: list = []
+    out_contents: list = []
+    for k, g in enumerate(regs.tolist()):
+        s, e = bounds[k], bounds[k + 1]
+        rows = crop_l[s:e]
+        boxes = kernels.merge_det_boxes([rows[i] for i in kernels.bubble_pass(rows)])
+        adj = reg_masks.get(g)
+        if adj:  # reference: `if mfd_res:` (paddle_ocr.py:414)
+            boxes = kernels.split_by_masks(boxes, adj)
+        cx, cy, mine = ccx[s:e], ccy[s:e], raw_l[s:e]
+        m = e - s
+        gx, gy, page = sx_l[g], sy_l[g], pages_l[g]
+        for b0, b1, b2, b3 in boxes:
             cons = [
                 j for j in range(m)
-                if b0 <= ccx[j] <= b2 and b1 <= ccy[j] <= b3
+                if b0 <= cx[j] <= b2 and b1 <= cy[j] <= b3
             ]
-            cons.sort(key=lambda j: (ccx[j], j))  # (center_x, det_idx)
+            cons.sort(key=cx.__getitem__)  # stable: (center_x, det_idx)
             if cons:
-                s = 0.0
+                # sequential sum: the reference's sum()/len() to the last bit
+                t = 0.0
                 for j in cons:
-                    s += scores_list[mine_l[j]]
-                score = s / len(cons)
+                    t += scores_l[mine[j]]
+                score = t / len(cons)
             else:
                 score = 0.0
             if score < schema.DROP_SCORE:
                 continue
-            out_boxes.append([b0 + sx, b1 + sy, b2 + sx, b3 + sy])
+            out_page.append(page)
+            out_boxes.append([b0 + gx, b1 + gy, b2 + gx, b3 + gy])
             out_scores.append(round(score, 2))
-            out_contents.append(
-                " ".join(raw_contents[mine_l[j]] for j in cons)
-            )
-    return out_boxes, out_scores, out_contents
+            out_contents.append(" ".join(raw_contents[mine[j]] for j in cons))
+    return (
+        np.asarray(out_page, dtype=np.int64),
+        np.asarray(out_boxes, dtype=np.float64).reshape(-1, 4),
+        out_scores,
+        out_contents,
+    )
 
 
 def _ocr_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel over a salted-conversation group: iterates the
-    group's (turn, page) slices via numpy boundaries (one pandas frame per
-    GROUP is applyInPandas' own overhead — keep groups coarse, work in
-    arrays)."""
-    srt = pdf.sort_values(
-        ["turn_idx", "page_seq", "branch", "det_idx"], kind="stable"
+    """applyInPandas kernel over a salted-conversation group: one
+    ``ocr_page_arrays`` call over all of the group's (turn, page)
+    segments (one pandas frame per GROUP is applyInPandas' own overhead —
+    keep groups coarse, work in arrays)."""
+    turn = pdf["turn_idx"].to_numpy(np.int64)
+    pseq = pdf["page_seq"].to_numpy(np.int64)
+    branch = pdf["branch"].to_numpy(np.int64)
+    dord = pdf["det_order"].to_numpy(np.int64)
+    didx = pdf["det_idx"].to_numpy(np.int64)
+    # regions and masks in det_order, raws in det_idx order — the order
+    # the fake detector requires (DESIGN.md §2)
+    o = np.lexsort((np.where(branch == 2, didx, dord), branch, pseq, turn))
+    turn, pseq, branch, dord = turn[o], pseq[o], branch[o], dord[o]
+    boxes = pdf[["x0", "y0", "x1", "y1"]].to_numpy(np.float64)[o]
+    score = pdf["score"].to_numpy(np.float64)[o]
+    content = pdf["content"].to_numpy(object)[o]
+    cat = pdf["category"].to_numpy(object)[o]
+    page = np.cumsum(kernels.run_starts(turn, pseq)) - 1
+    regions = np.flatnonzero(
+        (branch == 0) & pd.Series(cat).isin(schema.OCR_REGION_CLASSES).to_numpy()
     )
-    turn = srt["turn_idx"].to_numpy(np.int64)
-    pseq = srt["page_seq"].to_numpy(np.int64)
-    branch = srt["branch"].to_numpy(np.int64)
-    dord = srt["det_order"].to_numpy(np.int64)
-    boxes = srt[["x0", "y0", "x1", "y1"]].to_numpy(np.float64)
-    score = srt["score"].to_numpy(np.float64)
-    content = srt["content"].to_numpy(object)
-    cat = srt["category"].to_numpy(object)
-    pno = srt["page_no"].to_numpy(np.int64)
-    pw = srt["page_w"].to_numpy(np.float64)
-    ph = srt["page_h"].to_numpy(np.float64)
-    conv = pdf["conv_id"].iat[0]
-
-    key = turn * (pseq.max() + 1 if len(pseq) else 1) + pseq
-    bounds = np.r_[0, np.flatnonzero(key[1:] != key[:-1]) + 1, len(key)]
-    out = []
-    region_set = frozenset(schema.OCR_REGION_CLASSES)
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        pb = branch[s:e]
-        pcat = cat[s:e]
-        regions = np.array(
-            [i for i in range(len(pb)) if pb[i] == 0 and pcat[i] in region_set],
-            dtype=np.int64,
-        )
-        # within-page rows are sorted by (branch, det_idx): branch-0 rows
-        # are in det_idx order == det_order order for regions; raws sorted
-        # by det_idx as the fake detector requires (DESIGN.md §2)
-        if len(regions):
-            regions = regions[np.argsort(dord[s:e][regions], kind="stable")]
-        masks = np.flatnonzero(pb == 1)
-        raws = np.flatnonzero(pb == 2)
-        model = pb < 2
-        tboxes, tscores, tcontents = ocr_page_arrays(
-            boxes[s:e][regions],
-            boxes[s:e][masks],
-            boxes[s:e][raws],
-            score[s:e][raws],
-            [content[s + i] for i in raws],
-        )
-        if not tboxes:
-            continue
-        offset = int(dord[s:e][model].max()) + 1 if model.any() else 0
-        for i, b in enumerate(tboxes):
-            out.append(
-                (
-                    conv, int(turn[s]), int(pseq[s]), int(pno[s]),
-                    float(pw[s]), float(ph[s]), -1, offset + i, 2, "text",
-                    tscores[i], b[0], b[1], b[2], b[3], tcontents[i],
-                )
-            )
+    masks = np.flatnonzero(branch == 1)
+    raws = np.flatnonzero(branch == 2)
+    tpage, tboxes, tscores, tcontents = ocr_page_arrays(
+        page[regions], boxes[regions], page[masks], boxes[masks],
+        page[raws], boxes[raws], score[raws], content[raws].tolist(),
+    )
     cols = [f.name for f in schema.DETECTIONS.fields]
-    return pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)
+    if len(tpage) == 0:
+        return pd.DataFrame(columns=cols)
+    # det_order continues after the page's model dets
+    model = np.flatnonzero(branch < 2)
+    last = np.full(page[-1] + 1, -1, dtype=np.int64)
+    np.maximum.at(last, page[model], dord[model])
+    rank = kernels.rank_in_run(kernels.run_starts(tpage))
+    row = np.searchsorted(page, tpage)  # first row of each span's page
+    n = len(tpage)
+    return pd.DataFrame({
+        "conv_id": pdf["conv_id"].iat[0],
+        "turn_idx": turn[row].astype(np.int32),
+        "page_seq": pseq[row].astype(np.int32),
+        "page_no": pdf["page_no"].to_numpy(np.int64)[o][row].astype(np.int32),
+        "page_w": pdf["page_w"].to_numpy(np.float64)[o][row],
+        "page_h": pdf["page_h"].to_numpy(np.float64)[o][row],
+        "det_idx": np.full(n, -1, dtype=np.int32),
+        "det_order": (last[tpage] + 1 + rank).astype(np.int32),
+        "branch": np.full(n, 2, dtype=np.int32),
+        "category": "text",
+        "score": np.asarray(tscores, dtype=np.float64),
+        "x0": tboxes[:, 0], "y0": tboxes[:, 1], "x1": tboxes[:, 2], "y1": tboxes[:, 3],
+        "content": pd.Series(tcontents, dtype=object),
+    })[cols]
 
 
 def ocr_crop_assign(detections: DataFrame) -> DataFrame:

@@ -308,15 +308,18 @@ def ivf_train(embeddings: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
     (cell, dim, centroid_sum, n_members) — mean_c[dim] = centroid_sum /
     n_members.
 
-    Round 6 plan: while the centroid table fits the literal budget, each
-    Lloyd iteration is ONE narrow argmax pass (centroids embedded as
-    literal arrays — no exploded-vector broadcast join, no per-vector
-    window) plus ONE combinable (cell, dim) aggregation, with the k·dim
-    sums collected per round (bounded driver traffic, the iterative-
-    algorithm pattern like ``kcenter_select``'s literal centers).
-    Measured at sf0.1 (2000×64, k=32): 5.4 s → ~1 s. Beyond the budget
-    (k = √n grows with the corpus) the original broadcast-join + window
-    phrasing below is the scale path — same arithmetic, same rows."""
+    Round 6 plan: while the corpus is uniform-dim and the centroid table
+    fits ``_CENTROID_BUDGET`` (k·dim values), each Lloyd iteration is ONE
+    narrow ``mapInPandas`` pass (``_train_batches``: the centroid sums
+    ride in the UDF closure; an exact int64 matmul + argmax per Arrow
+    batch emits per-(cell, dim) partial sums) plus ONE combinable
+    (cell, dim) aggregation, with the k·dim sums collected per round
+    (bounded driver traffic). No exploded-vector broadcast join, no
+    per-vector window. Embedding the centroids as literal arrays in
+    Catalyst expressions was tried first and discarded: interpreted
+    per-element evaluation made it 3× slower than the join. Ragged or
+    over-budget corpora (k = √n grows with the corpus) take the original
+    broadcast-join + window phrasing below — same arithmetic, same rows."""
     return _ivf_train_impl(embeddings, k, iters)[0]
 
 
@@ -848,11 +851,14 @@ def _propagate_min_labels(
     carries undirected edges (doc_a, doc_b).
 
     Size-adaptive (round 6): when the edge set is small
-    (``driver_edge_threshold``, default 2M rows ≈ tens of MB — broadcast
-    scale), components run as one driver union-find over the EDGES ONLY
-    plus a broadcast join onto the node stream
-    (``_components_driver_unionfind``) — replacing diameter-many
-    join+checkpoint rounds (~1 s each of fixed latency) with one job.
+    (``driver_edge_threshold``, default 2M rows), components run as one
+    driver union-find over the EDGES ONLY plus a broadcast join onto the
+    node stream (``_components_driver_unionfind``) — replacing
+    diameter-many join+checkpoint rounds (~1 s each of fixed latency)
+    with one job. Driver cost is Python objects, not raw ints: measured
+    on CPython 3.11, each collected edge Row takes ~330 B and the
+    union-find dict ~105 B per edge, so 2M edges hold ~0.9 GB of driver
+    memory at the threshold.
     Duplicate-pair edge sets are sparse by nature (they are the output
     of near-dup DETECTION), so this is the production-common case; a
     bigger graph takes the distributed loop below, which remains the

@@ -1,12 +1,19 @@
-"""Per-turn extraction kernel for the fused pipeline (fused.py).
+"""Batch-level extraction kernel for the fused pipeline (fused.py).
 
 Runs the post-detection stages — MFR (F1), OCR merge (O2/O7/J2), span→block
 fill (J1), line/paragraph assembly (O3/A2), reading order (O1), markdown
-emit (A3/A4) — for ONE turn, on plain numpy arrays (no per-group pandas
-frames: at ~tens of detections per page, frame construction costs more
-than the work). Shares the fold kernels with the staged pipeline
-(ocr.ocr_page_arrays, kernels.merge_para, kernels.latex_rm_whitespace) —
-one tested implementation of each reference fold.
+emit (A3/A4) — for every turn of one Arrow batch at once. The batch is
+one set of flat arrays with segment ids (turn → page → det), so each
+stage is one numpy pass over the whole batch instead of a Python loop
+per turn and per page:
+- one lexsort brings each page's dets together in det_order; page and
+  turn segments come from key changes;
+- region and mask selection, OCR center containment, the J1 first-wins
+  fill (span × fixed-block pairs per page, via ``kernels.page_pairs``),
+  and the O1 reading-order sort are segment-wise numpy;
+- only the genuinely sequential folds stay per group, fed with Python
+  lists: the OCR region folds (``ocr.ocr_page_arrays``), A2
+  ``kernels.merge_para`` per filled block, and the markdown concat.
 
 Why this exists: every turn is independent (SURVEY.md §3.1), so the
 scale-optimal plan is parse+extract fused in one narrow mapInPandas —
@@ -19,189 +26,185 @@ tests/oracle.py exactly.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from . import kernels, schema
 from .ocr import ocr_page_arrays
 
-_SPAN_CATS = frozenset(["inline", "text", "isolated"])
-_FIX = frozenset(schema.FIX_BLOCK_TYPES)
-_OCR_REGION = frozenset(schema.OCR_REGION_CLASSES)
+_SPAN_CATS = ("inline", "text", "isolated")
+_PIECE = {  # A3 block render (pdf2markdown.py:311-324); others render ''
+    "title": ("\n# ", "\n"),
+    "isolate_formula": ("\n", "\n"),
+    "plain text": (" ", " "),
+    "figure_caption": (" ", " "),
+    "table_caption": (" ", " "),
+}
 
 
-def _fill_first_wins(sboxes: np.ndarray, bboxes: np.ndarray) -> np.ndarray:
+def _member(codes: np.ndarray, uniques, names) -> np.ndarray:
+    """codes → bool: the code's unique value is one of ``names``."""
+    hit = [i for i, u in enumerate(uniques) if u in names]
+    return np.isin(codes, hit)
+
+
+def _fill_first_wins(s_page, sboxes, b_page, bboxes) -> np.ndarray:
     """J1 (merge_blocks_and_spans.py:111-155): for each span, index of the
-    earliest block with overlap_area/span_area > 0.6, else -1. Vectorized
-    (n_spans × n_blocks) — both are tens per page."""
-    if len(sboxes) == 0 or len(bboxes) == 0:
-        return np.full(len(sboxes), -1, dtype=np.int64)
-    if len(sboxes) * len(bboxes) <= 64:
-        # tiny-page fast path: same IEEE arithmetic on Python floats,
-        # first-qualifying-block scan ≡ argmax of the hit matrix
-        srows = sboxes.tolist()
-        brows = bboxes.tolist()
-        out = []
-        for s in srows:
-            area = (s[2] - s[0]) * (s[3] - s[1])
-            hit = -1
-            if area > 0:
-                for bi, b in enumerate(brows):
-                    ox = min(s[2], b[2]) - max(s[0], b[0])
-                    oy = min(s[3], b[3]) - max(s[1], b[1])
-                    if ox >= 0 and oy >= 0 and (ox * oy) / area > schema.FILL_RATIO:
-                        hit = bi
-                        break
-            out.append(hit)
-        return np.asarray(out, dtype=np.int64)
-    sx0, sy0, sx1, sy1 = (sboxes[:, i][:, None] for i in range(4))
-    bx0, by0, bx1, by1 = (bboxes[:, i][None, :] for i in range(4))
-    ox = np.minimum(sx1, bx1) - np.maximum(sx0, bx0)
-    oy = np.minimum(sy1, by1) - np.maximum(sy0, by0)
-    inter = np.where((ox >= 0) & (oy >= 0), ox * oy, 0.0)
-    area = np.broadcast_to((sx1 - sx0) * (sy1 - sy0), inter.shape)
-    ratio = np.divide(inter, area, out=np.zeros_like(inter), where=area > 0)
-    hit = ratio > schema.FILL_RATIO
-    return np.where(hit.any(axis=1), hit.argmax(axis=1), -1)
+    earliest fixed block on its page with overlap_area/span_area > 0.6,
+    else -1. Spans and blocks come sorted by (page, list order); pairs are
+    checked chunk by chunk."""
+    assign = np.full(len(sboxes), -1, dtype=np.int64)
+    for a, b in kernels.page_pairs(s_page, b_page):
+        s, k = sboxes[a], bboxes[b]
+        ox = np.minimum(s[:, 2], k[:, 2]) - np.maximum(s[:, 0], k[:, 0])
+        oy = np.minimum(s[:, 3], k[:, 3]) - np.maximum(s[:, 1], k[:, 1])
+        with np.errstate(invalid="ignore"):  # inf payload coords: 0 * inf
+            inter = np.where((ox >= 0) & (oy >= 0), ox * oy, 0.0)
+            area = (s[:, 2] - s[:, 0]) * (s[:, 3] - s[:, 1])
+        ratio = np.divide(inter, area, out=np.zeros_like(inter), where=area > 0)
+        hit = np.flatnonzero(ratio > schema.FILL_RATIO)
+        a, b = a[hit], b[hit]
+        first = kernels.run_starts(a)  # pairs are a-major, b ascending
+        assign[a[first]] = b[first]
+    return assign
 
 
-def run_turn_arrays(
-    page_list: list[tuple[int, int]],  # (page_no, page_seq) marker rows
-    page_seq: np.ndarray,  # per-det arrays, any order within a page=det_order
-    branch: np.ndarray,
-    det_order: np.ndarray,
-    category: np.ndarray,  # object
-    score: np.ndarray,
-    boxes: np.ndarray,  # (n,4)
-    content: np.ndarray,  # object
-    det_idx: np.ndarray,  # payload order — raw-det tiebreak (paddle_ocr.py)
-    f1_cache: dict | None = None,  # per-batch memo for the F1 fixpoint
-) -> tuple[str, list[tuple]]:
-    """One turn's detection arrays → (main_text, spans list of tuples).
+def run_turn_arrays(dets: pd.DataFrame) -> tuple[list, list, list, list]:
+    """One batch's detection rows (schema.DETECTIONS, any row order) →
+    (conv_ids, turn_idxs, main_texts, spans) of every turn with a page,
+    turns in (conv_id, turn_idx) order; spans are lists of SPAN_STRUCT
+    dicts."""
+    if len(dets) == 0:
+        return [], [], [], []
+    conv = dets["conv_id"].to_numpy(object)
+    ccode = pd.factorize(conv, sort=True)[0]
+    turn = dets["turn_idx"].to_numpy(np.int64)
+    pseq = dets["page_seq"].to_numpy(np.int64)
+    dord = dets["det_order"].to_numpy(np.int64)
+    # one sort: turn → page (in payload order) → det_order; the page
+    # marker (det_order -1) leads its page
+    o = np.lexsort((dord, pseq, turn, ccode))
+    ccode, turn, pseq, dord = ccode[o], turn[o], pseq[o], dord[o]
+    pstart = np.flatnonzero(kernels.run_starts(ccode, turn, pseq))
+    page = np.repeat(np.arange(len(pstart)), np.diff(np.r_[pstart, len(o)]))
+    n_pages = len(pstart)
 
-    ``f1_cache`` (optional, supplied per Arrow batch by the fused
-    engine) memoizes ``latex_rm_whitespace`` — a pure string→string
-    fixpoint of ~10 regex passes — for formula strings repeated within
-    the batch; bounded by the batch's distinct formulas, dropped with
-    the batch."""
-    mds: list[str] = []
-    out_spans: list[tuple] = []
-    order_pages = sorted(page_list)  # (page_no, page_seq): A4 page order
-    for _pn, ps in order_pages:
-        sel = np.flatnonzero(page_seq == ps)
-        if len(sel) == 0:
-            mds.append("")
-            continue
-        sel = sel[np.argsort(det_order[sel], kind="stable")]
-        pb = branch[sel]
-        pcat = category[sel]
-        pscore = score[sel]
-        pbox = boxes[sel]
-        pcontent = content[sel].copy()
-        pord = det_order[sel]
-        pidx = det_idx[sel]
+    branch = dets["branch"].to_numpy(np.int64)[o]
+    d = np.flatnonzero(branch >= 0)  # det rows, by (page, det_order)
+    branch, dord, dpage = branch[d], dord[d], page[d]
+    od = o[d]
+    cat = dets["category"].to_numpy(object)[od]
+    score = dets["score"].to_numpy(np.float64)[od]
+    boxes = dets[["x0", "y0", "x1", "y1"]].to_numpy(np.float64)[od]
+    content = dets["content"].to_numpy(object)[od]
+    didx = dets["det_idx"].to_numpy(np.int64)[od]
+    ccodes, cuniq = pd.factorize(cat)
+    cuniq = list(cuniq)
 
-        # MFR (F1) on the formula branch
-        for k in np.flatnonzero(pb == 1):
-            c = pcontent[k]
-            if f1_cache is None:
-                pcontent[k] = kernels.latex_rm_whitespace(c)
-            else:
-                v = f1_cache.get(c)
-                if v is None:
-                    v = kernels.latex_rm_whitespace(c)
-                    f1_cache[c] = v
-                pcontent[k] = v
+    # MFR (F1) on the formula branch, once per distinct formula string
+    form = np.flatnonzero(branch == 1)
+    if len(form):
+        fs = content[form].tolist()
+        memo = {c: kernels.latex_rm_whitespace(c) for c in set(fs)}
+        content[form] = [memo[c] for c in fs]
 
-        # OCR merge: regions = OCR-able layout dets (pdf2markdown.py:209)
-        model = pb < 2
-        # raws MUST be in det_idx (payload) order: ocr_page_arrays' contract —
-        # bubble_pass tiebreak + cons content-join lexsort follow input order
-        # (paddle_ocr.py sorted_boxes / oracle run_page raws). det_order for
-        # branch 2 is score-desc, so re-sort here (staged path: ocr.py:86).
-        raws = np.flatnonzero(pb == 2)
-        raws = raws[np.argsort(pidx[raws], kind="stable")]
-        reg_sel = np.array(
-            [i for i in range(len(pb))
-             if pb[i] == 0 and pcat[i] in _OCR_REGION],
-            dtype=np.int64,
-        )
-        mask_sel = np.flatnonzero(pb == 1)
-        tboxes, tscores, tcontents = ocr_page_arrays(
-            pbox[reg_sel], pbox[mask_sel],
-            pbox[raws], pscore[raws], [pcontent[i] for i in raws],
-        )
-        offset = int(pord[model].max()) + 1 if model.any() else 0
+    # OCR merge: regions = OCR-able layout dets (pdf2markdown.py:209) in
+    # det_order; raws in det_idx (payload) order — the bubble-pass
+    # tiebreak and the content join follow input order (paddle_ocr.py
+    # sorted_boxes); det_order for branch 2 is score-desc, so re-sort
+    regions = np.flatnonzero(
+        (branch == 0) & _member(ccodes, cuniq, schema.OCR_REGION_CLASSES)
+    )
+    raws = np.flatnonzero(branch == 2)
+    raws = raws[np.lexsort((didx[raws], dpage[raws]))]
+    tpage, tboxes, tscores, tcontents = ocr_page_arrays(
+        dpage[regions], boxes[regions], dpage[form], boxes[form],
+        dpage[raws], boxes[raws], score[raws], content[raws].tolist(),
+    )
 
-        # final page dets = model dets + OCR text spans, in det_order
-        n_model = int(model.sum())
-        n = n_model + len(tboxes)
-        cats = np.empty(n, dtype=object)
-        fbox = np.empty((n, 4), dtype=np.float64)
-        fcontent = np.empty(n, dtype=object)
-        fscore = np.empty(n, dtype=np.float64)
-        ford = np.empty(n, dtype=np.int64)
-        mi = np.flatnonzero(model)
-        cats[:n_model] = pcat[mi]
-        fbox[:n_model] = pbox[mi]
-        fcontent[:n_model] = pcontent[mi]
-        fscore[:n_model] = pscore[mi]
-        ford[:n_model] = pord[mi]
-        for j in range(len(tboxes)):
-            cats[n_model + j] = "text"
-            fbox[n_model + j] = tboxes[j]
-            fcontent[n_model + j] = tcontents[j]
-            fscore[n_model + j] = tscores[j]
-            ford[n_model + j] = offset + j
+    # final page dets = model dets (det_order 0..n_model-1, layout then
+    # mfd) + OCR text spans appended in emission order
+    model = np.flatnonzero(branch < 2)
+    n_model = np.bincount(dpage[model], minlength=n_pages)
+    t_rank = kernels.rank_in_run(kernels.run_starts(tpage))
+    fpage = np.r_[dpage[model], tpage]
+    ford = np.r_[dord[model], n_model[tpage] + t_rank]
+    fo = np.lexsort((ford, fpage))
+    fpage, ford = fpage[fo], ford[fo]
+    fbox = np.concatenate([boxes[model], tboxes])[fo]
+    fscore = np.r_[score[model], np.asarray(tscores, dtype=np.float64)][fo]
+    cuniq_text = cuniq + ["text"]  # OCR spans: category "text"
+    fcode = np.r_[ccodes[model], np.full(len(tpage), len(cuniq))][fo]
+    fcontent = np.concatenate(
+        [content[model], np.asarray(tcontents, dtype=object).reshape(-1)]
+    )[fo]
 
-        # spans pool + block list (pdf2markdown.py:272-298)
-        span_idx: list[int] = []
-        block_rows: list[tuple[str, int]] = []
-        for i in range(n):
-            c = cats[i]
-            if c in _SPAN_CATS:
-                span_idx.append(i)
-                if c == "isolated":
-                    block_rows.append(("isolate_formula", i))
-            else:
-                block_rows.append((c, i))
-        span_idx = np.asarray(span_idx, dtype=np.int64)
-        is_fixed = np.array([c in _FIX for c, _ in block_rows], dtype=bool)
-        fix_pos = np.flatnonzero(is_fixed)
-        bidx = np.array([i for _, i in block_rows], dtype=np.int64)
+    # spans pool + block list (pdf2markdown.py:272-298): non-span dets are
+    # blocks, every isolated span is also an isolate_formula block
+    is_span = _member(fcode, cuniq_text, _SPAN_CATS)
+    iso = _member(fcode, cuniq_text, ("isolated",))
+    sp = np.flatnonzero(is_span)
+    bl = np.flatnonzero(~is_span | iso)
+    btype = np.asarray(cuniq_text, dtype=object)[fcode[bl]]
+    btype[iso[bl]] = "isolate_formula"
+    bpage = fpage[bl]
+    fixed = iso[bl] | _member(fcode[bl], cuniq_text, schema.FIX_BLOCK_TYPES)
+    fx = np.flatnonzero(fixed)
 
-        assign = _fill_first_wins(
-            fbox[span_idx],
-            fbox[bidx[fix_pos]] if len(fix_pos) else np.empty((0, 4)),
-        )
-        texts_by_block: dict[int, str] = {}
-        for k, fp in enumerate(fix_pos):
-            mine = span_idx[assign == k]
-            texts_by_block[int(fp)] = kernels.merge_para(
-                [cats[i] for i in mine],
-                [fcontent[i] for i in mine],
-                fbox[mine],
-                ford[mine],
-                is_interline=block_rows[fp][0] == "isolate_formula",
+    # J1 fill, then A2 per filled block over its spans in pool order
+    assign = _fill_first_wins(fpage[sp], fbox[sp], bpage[fx], fbox[bl[fx]])
+    btext = np.full(len(bl), "", dtype=object)
+    took = np.flatnonzero(assign >= 0)
+    if len(took):
+        so = took[np.lexsort((ford[sp[took]], assign[took]))]
+        blk = fx[assign[so]]
+        rows = sp[so]
+        s_type = np.asarray(cuniq_text, dtype=object)[fcode[rows]].tolist()
+        s_content = fcontent[rows].tolist()
+        s_box = fbox[rows]
+        s_ord = ford[rows]
+        starts = np.flatnonzero(kernels.run_starts(blk))
+        bounds = np.r_[starts, len(so)].tolist()
+        for k, b in enumerate(blk[starts].tolist()):
+            s, e = bounds[k], bounds[k + 1]
+            btext[b] = kernels.merge_para(
+                s_type[s:e], s_content[s:e], s_box[s:e], s_ord[s:e],
+                is_interline=btype[b] == "isolate_formula",
             )
 
-        # O1 reading order: untouched first, then fixed, stable (DESIGN §3)
-        okeys = sorted(
-            (fbox[i][1] * schema.READ_ORDER_W + fbox[i][0],
-             1 if is_fixed[k] else 0, ford[i], k)
-            for k, (_c, i) in enumerate(block_rows)
-        )
-        md = ""
-        for _ok, _fx, _o, k in okeys:
-            c, i = block_rows[k]
-            text = texts_by_block.get(k, "")
-            if c == "title":
-                md += "\n# " + text + "\n"
-            elif c == "isolate_formula":
-                md += "\n" + text + "\n"
-            elif c in ("plain text", "figure_caption", "table_caption"):
-                md += " " + text + " "
-            out_spans.append(
-                (c, float(fbox[i][0]), float(fbox[i][1]), float(fbox[i][2]),
-                 float(fbox[i][3]), text, float(fscore[i]))
-            )
-        mds.append(md)
-    return "\n\n".join(mds), out_spans
+    # O1 reading order per page: ymin*3000 + xmin, untouched blocks before
+    # fixed ones on ties, then list position (DESIGN §3); pages of a turn
+    # in (page_no, payload) order (A4)
+    tstart = np.flatnonzero(kernels.run_starts(ccode[pstart], turn[pstart]))
+    pg_turn = np.repeat(np.arange(len(tstart)), np.diff(np.r_[tstart, n_pages]))
+    pg_no = dets["page_no"].to_numpy(np.int64)[o][pstart]
+    pg_rank = np.empty(n_pages, dtype=np.int64)
+    pg_rank[np.lexsort((pseq[pstart], pg_no, pg_turn))] = np.arange(n_pages)
+    bbox = fbox[bl]
+    okey = bbox[:, 1] * schema.READ_ORDER_W + bbox[:, 0]
+    ro = np.lexsort((ford[bl], fixed, okey, pg_rank[bpage]))
+
+    # A3/A4 emit: page markdown and spans in page, then reading order
+    types = btype[ro].tolist()
+    texts = btext[ro].tolist()
+    box_l = bbox[ro].tolist()
+    score_l = fscore[bl][ro].tolist()
+    spans_all = [
+        {"type": t, "x0": b[0], "y0": b[1], "x1": b[2], "y1": b[3],
+         "content": x, "score": sc}
+        for t, b, x, sc in zip(types, box_l, texts, score_l)
+    ]
+    pieces = [
+        f"{p[0]}{x}{p[1]}" if (p := _PIECE.get(t)) else ""
+        for t, x in zip(types, texts)
+    ]
+    # blocks per page in output order → page bounds in the sorted list;
+    # ranking keeps each turn's pages together, so turn k holds the ranks
+    # tstart[k] .. tstart[k+1]-1
+    per_page = np.bincount(pg_rank[bpage], minlength=n_pages)
+    pb = np.r_[0, np.cumsum(per_page)].tolist()
+    page_md = ["".join(pieces[pb[r]:pb[r + 1]]) for r in range(n_pages)]
+    tb = np.r_[tstart, n_pages].tolist()
+    out_text = ["\n\n".join(page_md[tb[k]:tb[k + 1]]) for k in range(len(tstart))]
+    out_spans = [spans_all[pb[tb[k]]:pb[tb[k + 1]]] for k in range(len(tstart))]
+    first = pstart[tstart]
+    return conv[o[first]].tolist(), turn[first].tolist(), out_text, out_spans

@@ -57,8 +57,8 @@ def test_sorted_boxes_bubble():
             b = list(boxes[0])
             boxes.append([b[0] - 50, b[1] + rng.uniform(0, 9), b[2] - 50, b[3]])
         want = oracle.sorted_boxes([list(b) for b in boxes])
-        arr = np.array(boxes, dtype=float).reshape(-1, 4)
-        got = arr[kernels.bubble_pass(arr)].tolist() if len(arr) else []
+        rows = [list(b) for b in boxes]
+        got = [rows[i] for i in kernels.bubble_pass(rows)]
         assert got == want, trial
 
 
@@ -68,8 +68,7 @@ def test_merge_det_boxes():
         boxes = rand_boxes(rng, rng.randint(0, 20), max_side=200)
         srt = oracle.sorted_boxes([list(b) for b in boxes])
         want = oracle.merge_det_boxes([list(b) for b in srt])
-        arr = np.array(srt, dtype=float).reshape(-1, 4)
-        got = kernels.merge_det_boxes(arr).tolist()
+        got = kernels.merge_det_boxes([list(b) for b in srt])
         assert got == want, trial
 
 
@@ -80,9 +79,7 @@ def test_update_det_boxes():
         masks = rand_boxes(rng, rng.randint(0, 5), max_side=80)
         want = oracle.update_det_boxes([list(b) for b in boxes],
                                        [list(m) for m in masks])
-        got = kernels.split_by_masks(
-            np.array(boxes, dtype=float), np.array(masks, dtype=float).reshape(-1, 4)
-        ).tolist()
+        got = kernels.split_by_masks([list(b) for b in boxes], [list(m) for m in masks])
         assert got == want, trial
 
 
@@ -160,10 +157,11 @@ def test_angle_cls_hook_changes_output():
     raws = np.array([[15.0, 20.0, 300.0, 60.0], [320.0, 20.0, 600.0, 60.0]])
     scores = np.array([0.8, 0.8])
     contents = ["@rot180 nwod edispu", "normal"]
-    _, _, on = ocr_page_arrays(regions, masks, raws, scores, contents,
-                               use_angle_cls=True)
-    _, _, off = ocr_page_arrays(regions, masks, raws, scores, contents,
-                                use_angle_cls=False)
+    page = np.zeros(1, dtype=np.int64)
+    args = (page, regions, page[:0], masks, np.zeros(2, dtype=np.int64), raws,
+            scores, contents)
+    _, _, _, on = ocr_page_arrays(*args, use_angle_cls=True)
+    _, _, _, off = ocr_page_arrays(*args, use_angle_cls=False)
     assert on != off
     assert any("upside down" in c for c in on)
     assert any("@rot180" in c for c in off)

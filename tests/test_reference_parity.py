@@ -9,6 +9,7 @@ only their pure-Python function ranges are exec'd into a namespace.
 """
 
 import importlib.util
+import os
 import random
 import re
 
@@ -20,8 +21,18 @@ import oracle
 REF = "/root/reference"
 
 
+def _require_reference():
+    """Skip, with the reason, where the reference checkout is absent; the
+    golden, edge-payload and hypothesis suites still pin the engines to
+    tests/oracle.py there."""
+    if not os.path.isdir(REF):
+        pytest.skip("reference checkout not present: oracle-vs-reference "
+                    "parity needs the reference sources")
+
+
 @pytest.fixture(scope="module")
 def ref_merge():
+    _require_reference()
     spec = importlib.util.spec_from_file_location(
         "ref_merge", f"{REF}/pdf_extract_kit/utils/merge_blocks_and_spans.py"
     )
@@ -39,6 +50,7 @@ def _exec_lines(path, start, end, ns):
 
 @pytest.fixture(scope="module")
 def ref_ocr():
+    _require_reference()
     ns = {"np": np, "numpy": np}
     return _exec_lines(
         f"{REF}/pdf_extract_kit/tasks/ocr/models/paddle_ocr.py", 57, 289, ns
@@ -47,6 +59,7 @@ def ref_ocr():
 
 @pytest.fixture(scope="module")
 def ref_latex():
+    _require_reference()
     ns = {"re": re}
     return _exec_lines(
         f"{REF}/project/pdf2markdown/scripts/pdf2markdown.py", 23, 39, ns
