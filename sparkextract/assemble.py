@@ -28,7 +28,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from . import kernels, schema
+from . import kernels, pyworker, schema
 
 PAGE_KEY = ["conv_id", "turn_idx", "page_seq"]
 
@@ -109,6 +109,7 @@ def fill_spans(spans: DataFrame, blocks: DataFrame) -> DataFrame:
 def _para_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """applyInPandas kernel over a salted-conversation group: iterates
     (turn, page, block) slices via numpy boundaries."""
+    pyworker.install()
     srt = pdf.sort_values(
         ["turn_idx", "page_seq", "block_order", "span_order"], kind="stable"
     )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from . import schema
+from . import pyworker, schema
 from .parse import _parse_batch
 from .turnkernel import run_turn_arrays
 
@@ -103,6 +103,7 @@ def extract_fused(transcripts: DataFrame, repartition: int = 0) -> DataFrame:
         )
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for batch in it:
             yield _extract_batch(batch)
 

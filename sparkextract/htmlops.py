@@ -40,6 +40,8 @@ from html.parser import HTMLParser
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import pyworker
+
 # ---------------------------------------------------------------- regex
 # Java ∩ RE2 subset. \b after the tag name keeps <p> from matching <pre>.
 SCRIPT_STYLE_RE = r"(?is)<script\b[^>]*>.*?</script>|<style\b[^>]*>.*?</style>"
@@ -316,6 +318,7 @@ def html_dom_extract(df: DataFrame, html_col: str = "html") -> DataFrame:
     import pandas as pd  # local import: executors only
 
     def run(batches):
+        pyworker.install()
         for pdf in batches:
             ids, mains, nbs, kbs, rms = [], [], [], [], []
             for did, h in zip(pdf["doc_id"], pdf[html_col]):

@@ -83,6 +83,7 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from . import pyworker
 from .pipeline import extract
 
 LINEAGE_DIR = "_lineage"
@@ -495,6 +496,7 @@ def _footer_stats(spark: SparkSession, files: list[str], columns) -> list:
     cols = list(columns)
 
     def scan(batches):
+        pyworker.install()
         import pyarrow.parquet as pq
 
         for pdf in batches:

@@ -19,11 +19,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from . import kernels
+from . import kernels, pyworker
 
 
 @F.pandas_udf(StringType())
 def latex_udf(s: pd.Series) -> pd.Series:
+    pyworker.install()
     # per-batch memo: F1 is a pure ~10-regex-pass fixpoint and formula
     # strings repeat within a batch; bounded by the batch's distinct
     # formulas, dropped with the batch

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import pyworker
+
 MEDIA = StructType(
     [
         StructField("media_id", LongType()),
@@ -514,6 +516,7 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     real embedding model stage has. PNG payloads are REALLY decoded."""
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for b in it:
             feats = [
                 _feature_vec(decode_image(bytes(p), fake=fake))
@@ -550,6 +553,7 @@ def sample_frames(
     from .riffav import parse_avi_frames
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for b in it:
             rows = []
             for mid, kind, payload in zip(b["media_id"], b["kind"], b["payload"]):
@@ -577,6 +581,7 @@ def audio_features(media: DataFrame) -> DataFrame:
     from .riffav import wav_features
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for b in it:
             rows = []
             for mid, kind, payload in zip(b["media_id"], b["kind"], b["payload"]):

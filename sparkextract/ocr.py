@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import kernels, schema
+from . import kernels, pyworker, schema
 
 _PAD = float(schema.OCR_PAD)
 
@@ -159,6 +159,7 @@ def _ocr_group(pdf: pd.DataFrame) -> pd.DataFrame:
     ``ocr_page_arrays`` call over all of the group's (turn, page)
     segments (one pandas frame per GROUP is applyInPandas' own overhead —
     keep groups coarse, work in arrays)."""
+    pyworker.install()
     turn = pdf["turn_idx"].to_numpy(np.int64)
     pseq = pdf["page_seq"].to_numpy(np.int64)
     branch = pdf["branch"].to_numpy(np.int64)

@@ -28,7 +28,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import kernels, schema
+from . import kernels, pyworker, schema
 
 _BRANCH = {
     **{c: 0 for c in schema.LAYOUT_CLASSES},
@@ -209,6 +209,7 @@ def parse_detections(transcripts: DataFrame) -> DataFrame:
     ).select("conv_id", "turn_idx", "text", "tool")
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         for batch in it:
             yield _parse_batch(batch)
 

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import pyworker
+
 
 def quantized(embeddings: DataFrame) -> DataFrame:
     # cast float→double BEFORE scaling: float*int arithmetic differs across
@@ -66,6 +68,7 @@ def baseline_ann_topk(
         qmat = np.array([r["qv"] for r in qrows], dtype=np.int64).T  # d×nq
 
         def it(batches):
+            pyworker.install()
             for pdf in batches:
                 if not len(pdf):
                     continue
@@ -179,6 +182,7 @@ def _probe_batches(cells, cent_mat, counts_vec, nprobe, dim, with_q):
     vectorized in numpy (the ``cosine_neardup_blocked`` GEMM pattern)."""
 
     def it(batches):
+        pyworker.install()
         C = cent_mat.T  # dim × k, int64
         for pdf in batches:
             if not len(pdf):
@@ -214,6 +218,7 @@ def _train_batches(cells, cent_mat, counts_vec):
     k = len(cells)
 
     def it(batches):
+        pyworker.install()
         C = cent_mat.T
         for pdf in batches:
             if not len(pdf):
@@ -274,23 +279,6 @@ def _dense_lists(tmp: dict) -> dict | None:
     return out
 
 
-def _collect_centroid_arrays(trained: DataFrame) -> tuple[dict, dict]:
-    """trained (cell, dim, centroid_sum, n_members) → ({cell: [sums]},
-    {cell: count}). k·dim rows — bounded by the training parameters, not
-    the corpus (the same driver-traffic class as kcenter's 1 row/round).
-    Returns ({}, {}) when centroid dims are not dense (ragged corpus) —
-    ``_centroid_fits`` then routes to the join path."""
-    cents: dict[int, dict[int, int]] = {}
-    counts: dict[int, int] = {}
-    for r in trained.collect():
-        cents.setdefault(int(r["cell"]), {})[int(r["dim"])] = int(r["centroid_sum"])
-        counts[int(r["cell"])] = int(r["n_members"])
-    dense = _dense_lists(cents)
-    if dense is None:
-        return {}, {}
-    return dense, counts
-
-
 def _centroid_fits(cents: dict) -> bool:
     return bool(cents) and (
         len(cents) * len(next(iter(cents.values()))) <= _CENTROID_BUDGET
@@ -325,10 +313,12 @@ def ivf_train(embeddings: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
 
 def _ivf_train_impl(
     embeddings: DataFrame, k: int = 8, iters: int = 2
-) -> tuple[DataFrame, int]:
-    """(trained, uniform_dim): uniform_dim is the corpus dimensionality
-    when the numpy path verified it (callers reuse it instead of paying
-    the ``_uniform_dim`` action again), else 0."""
+) -> tuple[DataFrame, dict, dict]:
+    """(trained, cents, counts). When the numpy path ran (uniform dim
+    verified, centroid table within budget), cents/counts are the
+    trained centroids already on the driver — {cell: [sums]} and
+    {cell: n_members} — and callers probe with them directly instead of
+    collecting ``trained`` back; on the join fallback both are empty."""
     base = quantized(embeddings)
     spark = embeddings.sparkSession
     init = base.where(F.col("vec_id") < k).collect()
@@ -368,17 +358,20 @@ def _ivf_train_impl(
                 if int(r["dim"]) == 0:
                     lcounts[int(r["cell"])] = int(r["c"])
             lcents = _dense_lists(tmp) or {}
-        rows = [
-            (c, i, v, lcounts[c])
-            for c in sorted(lcents)
-            for i, v in enumerate(lcents[c])
-        ]
-        return (
-            spark.createDataFrame(
-                rows, "cell BIGINT, dim INT, centroid_sum BIGINT, n_members BIGINT"
-            ),
-            udim,
+        pdf = pd.DataFrame(
+            [
+                (c, i, v, lcounts[c])
+                for c in sorted(lcents)
+                for i, v in enumerate(lcents[c])
+            ],
+            columns=["cell", "dim", "centroid_sum", "n_members"],
         )
+        # pandas input plans as an Arrow LocalRelation; a list of tuples
+        # would be a Python-RDD scan running its own Python-worker stage
+        trained = spark.createDataFrame(
+            pdf, "cell BIGINT, dim INT, centroid_sum BIGINT, n_members BIGINT"
+        )
+        return trained, lcents, lcounts
     qd = base.select(
         "vec_id", F.posexplode("q").alias("dim", "val")
     ).persist()
@@ -414,7 +407,7 @@ def _ivf_train_impl(
     # can be freed — no lingering cache blocks in long-lived sessions
     out = out.localCheckpoint(eager=True)
     qd.unpersist()
-    return out, udim
+    return out, {}, {}
 
 
 def ivf_topk_trained(
@@ -437,10 +430,9 @@ def ivf_topk_trained(
     cell ASC) ranking. Ragged corpora and bigger centroid tables use
     the original join+window phrasing."""
     base = quantized(embeddings)
-    trained, udim = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
-    lcents, lcounts = _collect_centroid_arrays(trained)
-    dim = len(next(iter(lcents.values()))) if lcents else 0
-    if dim and _centroid_fits(lcents) and udim == dim:
+    trained, lcents, lcounts = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
+    if lcents:
+        dim = len(next(iter(lcents.values())))
         assigned = _numpy_probes(
             base, lcents, lcounts, 1, dim, with_q=True
         ).select("vec_id", "q", "cell")
@@ -741,6 +733,7 @@ def cosine_neardup_blocked(
     )
 
     def gemm(pdf: pd.DataFrame) -> pd.DataFrame:
+        pyworker.install()
         lo, hi = int(pdf["lo"].iat[0]), int(pdf["hi"].iat[0])
         a = pdf[pdf["blk"] == lo]
         b = pdf[pdf["blk"] == hi] if hi != lo else a
@@ -825,8 +818,12 @@ def _components_driver_unionfind(nodes: DataFrame, edges: DataFrame) -> DataFram
     from pyspark.sql.types import StructField, StructType
 
     t = edges.schema[0].dataType
+    # pandas input: an Arrow LocalRelation, not a Python-RDD scan (see
+    # ``_ivf_train_impl``)
     mapdf = nodes.sparkSession.createDataFrame(
-        [(x, find(x)) for x in parent],
+        pd.DataFrame(
+            [(x, find(x)) for x in parent], columns=["doc_id", "minlab"]
+        ),
         StructType([StructField("doc_id", t), StructField("minlab", t)]),
     )
     return (
@@ -995,6 +992,7 @@ def _verify_cosine_pairs(
         t2f = float(t2i)
 
         def it(batches):
+            pyworker.install()
             tids, tV, tn2 = bc.value
             n = len(tids)
             for pdf in batches:
@@ -1129,10 +1127,9 @@ def cosine_neardup_ivf(
     if nprobe == "auto":
         nprobe = auto_nprobe(n_cells)
     base = quantized(embeddings)
-    trained, udim = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
-    lcents, lcounts = _collect_centroid_arrays(trained)
-    dim = len(next(iter(lcents.values()))) if lcents else 0
-    if dim and _centroid_fits(lcents) and udim == dim:
+    trained, lcents, lcounts = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
+    if lcents:
+        dim = len(next(iter(lcents.values())))
         # narrow probe list (round 6): the nprobe closest cells per vector
         # from one numpy matmul pass (``_numpy_probes``) — no exploded
         # join, no window; identical exact ranking to the fallback below

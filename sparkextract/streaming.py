@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import schema
+from . import pyworker, schema
 from .fused import extract_fused
 
 
@@ -98,6 +98,7 @@ def conversation_stats_stream(stream: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        pyworker.install()
         n, nd, mx = state.get if state.exists else (0, 0, -1)
         for pdf in pdfs:
             n += len(pdf)

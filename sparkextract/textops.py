@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import pyworker
+
 N_MINHASH = 8  # seeds 0..7; bands of 2 → 4 LSH bands
 
 
@@ -353,6 +355,7 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     from collections import Counter
 
     def it(batches):
+        pyworker.install()
         import pandas as pd  # textops has no module-level pandas dep
 
         for pdf in batches:
