@@ -6,14 +6,19 @@ same pattern). Cross-engine determinism: embeddings are quantized to
 integer milli-units first, so dot products are exact integer sums —
 no FP-summation-order ambiguity between Spark and the DuckDB oracle.
 
-All arithmetic stays JVM-side (zip_with/aggregate higher-order
-functions — no Python in the hot path).
+Pairwise dots in plans are JVM-side zip_with/aggregate higher-order
+functions (``_dot``). Bulk math runs as exact int64 numpy inside
+Arrow-batched Python UDFs: IVF training and cell probes (mapInArrow over
+broadcast centroids), the blocked and baseline GEMMs, and the
+small-corpus verify.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -54,14 +59,14 @@ def baseline_ann_topk(
     # of an interpreted per-pair HOF over the nested-loop join — still
     # the brute-force baseline algorithm, just vectorized. The query
     # matrix ships in the closure (it is already collected to build the
-    # broadcast in the fallback); uniform-dim corpora only, and the same
-    # centroid-style budget bounds the closure size.
+    # broadcast in the fallback); uniform-dim corpora only, and at most
+    # 262,144 query values (2 MB) ride in the closure.
     qrows = queries.collect()
     qmat_ok = (
         qrows
         and all(r["qv"] for r in qrows)
         and len({len(r["qv"]) for r in qrows}) == 1
-        and len(qrows) * len(qrows[0]["qv"]) <= 4 * _CENTROID_BUDGET
+        and len(qrows) * len(qrows[0]["qv"]) <= 262_144
     )
     if qmat_ok and _uniform_dim(base) == len(qrows[0]["qv"]):
         q_ids = np.array([int(r["q_id"]) for r in qrows], dtype=np.int64)
@@ -142,21 +147,17 @@ def ivf_topk(
     )
 
 
-# collected-centroid budget: the numpy probe/assignment paths below
-# collect the k×dim centroid table to the driver and ship it in the UDF
-# closure; past ~64k values (k = √n grows with the corpus) the driver
-# round-trip and closure size start to matter, so bigger centroid tables
-# fall back to the broadcast-join + window phrasing.
-_CENTROID_BUDGET = 65536
+# score-matrix chunk: the train/probe kernels score at most this many
+# (row, cell) pairs at once — rows per chunk = _SCORE_CHUNK // k, so a
+# kernel's float64 score block stays ≤ 32 MB at any cell count
+_SCORE_CHUNK = 1 << 22
 
 
 def _uniform_dim(base: DataFrame) -> int:
     """One tiny aggregate answering: do ALL quantized vectors share one
     non-null dimensionality with no null elements? Returns that dim, or
-    0 when the corpus is ragged/nullable (callers then use the dim-join
-    fallback whose semantics ragged data needs). Cost: one narrow scan —
-    cheap next to the multi-pass training/probing it de-risks, and only
-    run while the centroid table fits the collected budget anyway."""
+    0 when the corpus is ragged/nullable (``baseline_ann_topk`` then
+    keeps the join phrasing whose semantics ragged data needs)."""
     row = base.agg(
         F.min(F.size("q")).alias("lo"),
         F.max(F.size("q")).alias("hi"),
@@ -172,117 +173,177 @@ def _uniform_dim(base: DataFrame) -> int:
     return int(row["lo"])
 
 
-def _probe_batches(cells, cent_mat, counts_vec, nprobe, dim, with_q):
-    """mapInPandas kernel factory: per batch, ONE exact int64 matmul
-    against the (k×dim) centroid matrix, float64-divide by member counts
-    (bit-identical to Spark's cast-to-double division), stable argsort
-    per row (score DESC, then cell ASC via the ascending column order) —
-    the top ``nprobe`` cells per vector as (vec_id[, q], cell, rn) rows.
-    Guide §4.2: distribution/shuffle stays in Spark, bulk math runs
-    vectorized in numpy (the ``cosine_neardup_blocked`` GEMM pattern)."""
+def _arrow_matrix(col) -> tuple[np.ndarray, np.ndarray | None, np.ndarray]:
+    """Dense view of a list<bigint> Arrow column: ``(V, M, lens)``. V is
+    the zero-padded int64 matrix (rows × longest row), M its non-null
+    mask — None when every row is full length and null-free, so callers
+    skip the mask arithmetic — and lens the row lengths (0 for null)."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy().astype(np.int64)
+    flat = col.flatten()  # honours slicing; skips null rows
+    vals = np.asarray(pc.fill_null(flat, 0).to_numpy(zero_copy_only=False), np.int64)
+    n = len(lens)
+    width = int(lens.max()) if n else 0
+    if flat.null_count == 0 and (lens == width).all():
+        return vals.reshape(n, width), None, lens
+    rows = np.repeat(np.arange(n), lens)
+    cols = np.arange(len(vals)) - np.repeat(np.cumsum(lens) - lens, lens)
+    V = np.zeros((n, width), dtype=np.int64)
+    V[rows, cols] = vals
+    M = np.zeros((n, width), dtype=bool)
+    M[rows, cols] = flat.is_valid().to_numpy(zero_copy_only=False)
+    return V, M, lens
+
+
+def _scores(V, M, cent) -> np.ndarray:
+    """(rows × k) ranking scores dot(v, sum_c) / count_c — the exact int64
+    dot divided once in float64, bit-identical to the twin's
+    ``CAST(cdot AS DOUBLE) / c`` — and -inf where no product is non-null
+    (the twin's NULL cdot, which ranks last). A dim one side lacks adds
+    nothing, as in the twin's dim join."""
+    cells, C, P, counts = cent
+    w = min(V.shape[1], C.shape[1])
+    s = (V[:, :w] @ C[:, :w].T).astype(np.float64) / counts
+    if M is not None or not P[:, :w].all():
+        Mw = np.ones((len(V), w), np.float32) if M is None else M[:, :w].astype(np.float32)
+        s[(Mw @ P[:, :w].T.astype(np.float32)) == 0] = -np.inf
+    return s
+
+
+def _top_cells(V, M, cent, p: int) -> np.ndarray:
+    """(rows × p) centroid indices of each row's ``p`` best cells in the
+    twin's order — score DESC, NULL scores last, ties by cell ASC (the
+    centroid rows are sorted by cell id, and both argmax and the stable
+    argsort keep the first column among equals) — scored in row chunks
+    of ≤ ``_SCORE_CHUNK`` (row, cell) pairs."""
+    step = max(1, _SCORE_CHUNK // len(cent[0]))
+    out = [np.empty((0, p), dtype=np.int64)]
+    for i in range(0, len(V), step):
+        s = _scores(V[i:i + step], None if M is None else M[i:i + step], cent)
+        if p == 1:
+            out.append(s.argmax(axis=1)[:, None])
+        else:
+            out.append(np.argsort(-s, axis=1, kind="stable")[:, :p])
+    return np.concatenate(out)
+
+
+def _nonempty(batch: pa.RecordBatch):
+    """(row indices, V, M, lens) of the batch's vectors that have at least
+    one element; null and length-0 vectors have no (vec, dim) rows in the
+    twin, so they are never assigned, trained on or probed."""
+    V, M, lens = _arrow_matrix(batch.column("q"))
+    rows = np.flatnonzero(lens > 0)
+    if len(rows) < len(lens):
+        V, lens = V[rows], lens[rows]
+        M = None if M is None else M[rows]
+    return rows, V, M, lens
+
+
+def _train_partials(V, M, lens, cent):
+    """One Lloyd step over one batch: assign every row to its best cell
+    and return the batch's partial per-(cell, dim) sums as flat arrays
+    ``(cell index, dim, s, e, nn)``: s sums the non-null values, e counts
+    members that have the dim, nn members whose value there is non-null.
+    Only (cell, dim) pairs with e > 0 are returned; e at dim 0 is the
+    cell's member count (every member has dim 0)."""
+    a = _top_cells(V, M, cent, 1)[:, 0]
+    order = np.argsort(a, kind="stable")
+    a = a[order]
+    starts = np.flatnonzero(np.r_[True, a[1:] != a[:-1]])
+    S = np.add.reduceat(V[order], starts, axis=0)
+    if M is None:
+        E = np.broadcast_to(np.diff(np.r_[starts, len(a)])[:, None], S.shape)
+        NN = E
+    else:
+        L = np.arange(V.shape[1]) < lens[:, None]
+        E = np.add.reduceat(L[order].astype(np.int64), starts, axis=0)
+        NN = np.add.reduceat(M[order].astype(np.int64), starts, axis=0)
+    ci, di = np.nonzero(E)
+    return a[starts][ci], di, S[ci, di], E[ci, di], NN[ci, di]
+
+
+def _train_kernel(bc):
+    """mapInArrow body for one Lloyd iteration: per Arrow batch,
+    ``_train_partials`` against the broadcast centroids; the combinable
+    (cell, dim) sum upstream adds the batches up."""
 
     def it(batches):
         pyworker.install()
-        C = cent_mat.T  # dim × k, int64
-        for pdf in batches:
-            if not len(pdf):
+        cent = bc.value
+        for batch in batches:
+            _, V, M, lens = _nonempty(batch)
+            if not len(V):
                 continue
-            Q = np.array([np.asarray(v, dtype=np.int64) for v in pdf["q"]])
-            dots = Q @ C  # exact: int64 × int64
-            if counts_vec is None:
-                scores = dots
-            else:
-                scores = dots.astype(np.float64) / counts_vec
-            # stable sort on -score: ties keep column order == cell ASC
-            order = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
-            n, p = order.shape
-            out = {
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), p),
-                "cell": cells[order].ravel(),
-                "rn": np.tile(np.arange(1, p + 1, dtype=np.int32), n),
-            }
-            if with_q:
-                out["q"] = pdf["q"].repeat(p).to_numpy()
-            yield pd.DataFrame(out)
-
-    return it
-
-
-def _train_batches(cells, cent_mat, counts_vec):
-    """mapInPandas kernel factory for one Lloyd iteration: per batch,
-    assign every vector to its argmax cell (exact int64 matmul + the
-    same float64 count division; np.argmax's first-max = lowest column =
-    lowest cell id — the window's (score DESC, cell ASC) rn=1) and emit
-    the batch's PARTIAL per-(cell, dim) sums and member counts — k×dim
-    rows per batch, summed by a tiny combinable groupBy upstream."""
-    k = len(cells)
-
-    def it(batches):
-        pyworker.install()
-        C = cent_mat.T
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.array([np.asarray(v, dtype=np.int64) for v in pdf["q"]])
-            scores = (Q @ C).astype(np.float64) / counts_vec
-            a = np.argmax(scores, axis=1)
-            d = Q.shape[1]
-            sums = np.zeros((k, d), dtype=np.int64)
-            np.add.at(sums, a, Q)
-            cnt = np.bincount(a, minlength=k)
-            nz = np.flatnonzero(cnt)
-            yield pd.DataFrame(
-                {
-                    "cell": np.repeat(cells[nz], d),
-                    "dim": np.tile(np.arange(d, dtype=np.int32), len(nz)),
-                    "s": sums[nz].ravel(),
-                    "c": np.repeat(cnt[nz], d).astype(np.int64),
-                }
+            ci, di, s, e, nn = _train_partials(V, M, lens, cent)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(cent[0][ci]), pa.array(di.astype(np.int32)),
+                    pa.array(s), pa.array(e), pa.array(nn),
+                ],
+                names=["cell", "dim", "s", "e", "nn"],
             )
 
     return it
 
 
-def _numpy_probes(
-    base: DataFrame, cents: dict, counts: dict | None, nprobe: int,
-    dim: int, with_q: bool = False,
-) -> DataFrame:
-    """(vec_id[, q], cell, rn) — each vector's ``nprobe`` closest cells
-    by the EXACT trained ranking (dot(q, sum_c)/count_c DESC, cell ASC;
-    raw int dot when ``counts`` is None), computed narrowly in numpy.
-    Callers guard with ``_uniform_dim`` ≡ dim and ``_CENTROID_BUDGET``."""
-    cell_ids = np.array(sorted(cents), dtype=np.int64)
-    cent_mat = np.array([cents[int(c)] for c in cell_ids], dtype=np.int64)
-    counts_vec = (
-        None
-        if counts is None
-        else np.array([counts[int(c)] for c in cell_ids], dtype=np.float64)
-    )
+def _probe_kernel(bc, nprobe: int, with_q: bool):
+    """mapInArrow body: each non-empty vector's ``nprobe`` best cells as
+    (vec_id[, q], cell, rn) rows, rn = 1..nprobe in ranking order."""
+
+    def it(batches):
+        pyworker.install()
+        cent = bc.value
+        if not len(cent[0]):
+            return
+        p = min(nprobe, len(cent[0]))
+        for batch in batches:
+            rows, V, M, _ = _nonempty(batch)
+            if not len(rows):
+                continue
+            top = _top_cells(V, M, cent, p)
+            n = len(rows)
+            rep = np.repeat(rows, p)
+            cols = [batch.column("vec_id").take(pa.array(rep))]
+            if with_q:
+                cols.append(batch.column("q").take(pa.array(rep)))
+            cols += [
+                pa.array(cent[0][top.ravel()]),
+                pa.array(np.tile(np.arange(1, p + 1, dtype=np.int32), n)),
+            ]
+            names = ["vec_id"] + (["q"] if with_q else []) + ["cell", "rn"]
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return it
+
+
+def _probes(base: DataFrame, bc, nprobe: int, with_q: bool = False) -> DataFrame:
+    """(vec_id[, q], cell, rn) — each vector's ``nprobe`` closest cells by
+    the exact trained ranking of the broadcast centroids ``bc``: one
+    narrow mapInArrow pass, no exploded join and no window."""
     schema = "vec_id bigint, " + ("q array<bigint>, " if with_q else "") + (
         "cell bigint, rn int"
     )
-    return base.select("vec_id", "q").mapInPandas(
-        _probe_batches(cell_ids, cent_mat, counts_vec, nprobe, dim, with_q),
-        schema=schema,
+    return base.select("vec_id", "q").mapInArrow(
+        _probe_kernel(bc, nprobe, with_q), schema=schema
     )
 
 
-def _dense_lists(tmp: dict) -> dict | None:
-    """{cell: {dim: v}} → {cell: [v...]} when every cell's dims are the
-    contiguous 0..m-1 (the uniform-embedding case); None otherwise so
-    callers fall back to the dim-join paths (ragged corpora)."""
-    out = {}
-    for c, d in tmp.items():
-        if sorted(d) != list(range(len(d))):
-            return None
-        out[c] = [d[i] for i in range(len(d))]
-    return out
-
-
-def _centroid_fits(cents: dict) -> bool:
-    return bool(cents) and (
-        len(cents) * len(next(iter(cents.values()))) <= _CENTROID_BUDGET
-    )
+def _scatter_centroids(tab: pa.Table):
+    """Collected (cell, dim, s, e, nn) sums → ``(cent, E)``: cent =
+    (cells, C, P, counts) with cells sorted, C the k×D int64 sums (0
+    where null), P their non-null mask and counts the float64 member
+    counts; E marks the (cell, dim) pairs some member has."""
+    cell = tab.column("cell").to_numpy()
+    dim = tab.column("dim").to_numpy()
+    cells, ci = np.unique(cell, return_inverse=True)
+    shape = (len(cells), int(dim.max()) + 1 if len(dim) else 0)
+    C, E, NN = (np.zeros(shape, dtype=np.int64) for _ in range(3))
+    C[ci, dim] = tab.column("s").to_numpy()
+    E[ci, dim] = tab.column("e").to_numpy()
+    NN[ci, dim] = tab.column("nn").to_numpy()
+    counts = E[:, :1].sum(axis=1).astype(np.float64)
+    return (cells, C, NN > 0, counts), E > 0
 
 
 def ivf_train(embeddings: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
@@ -296,118 +357,65 @@ def ivf_train(embeddings: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
     (cell, dim, centroid_sum, n_members) — mean_c[dim] = centroid_sum /
     n_members.
 
-    Round 6 plan: while the corpus is uniform-dim and the centroid table
-    fits ``_CENTROID_BUDGET`` (k·dim values), each Lloyd iteration is ONE
-    narrow ``mapInPandas`` pass (``_train_batches``: the centroid sums
-    ride in the UDF closure; an exact int64 matmul + argmax per Arrow
-    batch emits per-(cell, dim) partial sums) plus ONE combinable
-    (cell, dim) aggregation, with the k·dim sums collected per round
-    (bounded driver traffic). No exploded-vector broadcast join, no
-    per-vector window. Embedding the centroids as literal arrays in
-    Catalyst expressions was tried first and discarded: interpreted
-    per-element evaluation made it 3× slower than the join. Ragged or
-    over-budget corpora (k = √n grows with the corpus) take the original
-    broadcast-join + window phrasing below — same arithmetic, same rows."""
+    Plan: each Lloyd iteration is ONE narrow ``mapInArrow`` pass
+    (``_train_kernel``: the dense k×D centroid sums arrive by
+    ``sc.broadcast``; per Arrow batch, chunked exact int64 scores +
+    argmax, then per-(cell, dim) partial sums) plus ONE combinable
+    (cell, dim) aggregation whose k×D result is collected per round as
+    Arrow. No exploded-vector join, no window, at any k.
+
+    Ragged/null contract (the twin's, ``ivf_train_sql``): null and empty
+    vectors are never assigned; a missing dim or null element adds
+    nothing to a dot, and a vector whose dots with a cell are all null
+    ranks that cell last. A (cell, dim) row exists iff some member has
+    that dim; its ``centroid_sum`` is NULL when every member's value
+    there is null."""
     return _ivf_train_impl(embeddings, k, iters)[0]
 
 
-def _ivf_train_impl(
-    embeddings: DataFrame, k: int = 8, iters: int = 2
-) -> tuple[DataFrame, dict, dict]:
-    """(trained, cents, counts). When the numpy path ran (uniform dim
-    verified, centroid table within budget), cents/counts are the
-    trained centroids already on the driver — {cell: [sums]} and
-    {cell: n_members} — and callers probe with them directly instead of
-    collecting ``trained`` back; on the join fallback both are empty."""
+def _ivf_train_impl(embeddings: DataFrame, k: int = 8, iters: int = 2):
+    """(trained, cent): the ``ivf_train`` frame plus the trained centroids
+    already on the driver as ``(cells, C, P, counts)`` (see
+    ``_scatter_centroids``), which callers broadcast to probe with."""
     base = quantized(embeddings)
     spark = embeddings.sparkSession
-    init = base.where(F.col("vec_id") < k).collect()
-    lcents = {
-        int(r["vec_id"]): [int(v) for v in r["q"]] for r in init if r["q"]
-    }
-    udim = 0
-    if lcents and _centroid_fits(lcents):
-        udim = _uniform_dim(base)
-        if udim != len(next(iter(lcents.values()))):
-            udim = 0
-    if udim:
-        lcounts = {c: 1 for c in lcents}
-        for _ in range(iters):
-            if not lcents:  # every cell emptied out — fixpoint is empty
-                break
-            cell_ids = np.array(sorted(lcents), dtype=np.int64)
-            cent_mat = np.array(
-                [lcents[int(c)] for c in cell_ids], dtype=np.int64
-            )
-            counts_vec = np.array(
-                [lcounts[int(c)] for c in cell_ids], dtype=np.float64
-            )
-            part = base.select("vec_id", "q").mapInPandas(
-                _train_batches(cell_ids, cent_mat, counts_vec),
-                schema="cell bigint, dim int, s bigint, c bigint",
-            )
-            agg = (
-                part.groupBy("cell", "dim")
-                .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
-                .collect()
-            )
-            tmp: dict[int, dict[int, int]] = {}
-            lcounts = {}
-            for r in agg:
-                tmp.setdefault(int(r["cell"]), {})[int(r["dim"])] = int(r["s"])
-                if int(r["dim"]) == 0:
-                    lcounts[int(r["cell"])] = int(r["c"])
-            lcents = _dense_lists(tmp) or {}
-        pdf = pd.DataFrame(
-            [
-                (c, i, v, lcounts[c])
-                for c in sorted(lcents)
-                for i, v in enumerate(lcents[c])
-            ],
-            columns=["cell", "dim", "centroid_sum", "n_members"],
-        )
-        # pandas input plans as an Arrow LocalRelation; a list of tuples
-        # would be a Python-RDD scan running its own Python-worker stage
-        trained = spark.createDataFrame(
-            pdf, "cell BIGINT, dim INT, centroid_sum BIGINT, n_members BIGINT"
-        )
-        return trained, lcents, lcounts
-    qd = base.select(
-        "vec_id", F.posexplode("q").alias("dim", "val")
-    ).persist()
-    cents = qd.where(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cell"), "dim", F.col("val").alias("s")
-    )
-    counts = base.where(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cell"), F.lit(1).cast("bigint").alias("c")
+    init = base.where(F.col("vec_id") < k).select("vec_id", "q").toArrow()
+    V, M, lens = _arrow_matrix(init.column("q"))
+    keep = np.flatnonzero(lens > 0)
+    keep = keep[np.argsort(init.column("vec_id").to_numpy()[keep], kind="stable")]
+    E = np.arange(V.shape[1]) < lens[keep][:, None]
+    cent = (
+        init.column("vec_id").to_numpy()[keep], V[keep],
+        E if M is None else M[keep], np.ones(len(keep)),
     )
     for _ in range(iters):
-        scored = (
-            qd.join(F.broadcast(cents), "dim")
-            .groupBy("vec_id", "cell")
-            .agg(F.sum(F.col("val") * F.col("s")).alias("cdot"))
-            .join(F.broadcast(counts), "cell")
+        if not len(cent[0]):  # every cell emptied out — fixpoint is empty
+            break
+        bc = spark.sparkContext.broadcast(cent)
+        tab = (
+            base.select("q")
+            .mapInArrow(
+                _train_kernel(bc),
+                schema="cell bigint, dim int, s bigint, e bigint, nn bigint",
+            )
+            .groupBy("cell", "dim")
+            .agg(*(F.sum(c).alias(c) for c in ("s", "e", "nn")))
+            .toArrow()
         )
-        w = Window.partitionBy("vec_id").orderBy(
-            (F.col("cdot").cast("double") / F.col("c")).desc(), F.col("cell").asc()
-        )
-        best = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-            .select("vec_id", "cell")
-        )
-        cents = best.join(qd, "vec_id").groupBy("cell", "dim").agg(
-            F.sum("val").alias("s")
-        )
-        counts = best.groupBy("cell").agg(F.count(F.lit(1)).alias("c"))
-    out = cents.join(counts, "cell").select(
-        "cell", "dim", F.col("s").alias("centroid_sum"), F.col("c").alias("n_members")
+        bc.unpersist()
+        cent, E = _scatter_centroids(tab)
+    cells, C, P, counts = cent
+    ci, di = np.nonzero(E)
+    trained = pa.table(
+        {
+            "cell": pa.array(cells[ci], pa.int64()),
+            "dim": pa.array(di, pa.int32()),
+            "centroid_sum": pa.array(C[ci, di], pa.int64(), mask=~P[ci, di]),
+            "n_members": pa.array(counts[ci].astype(np.int64), pa.int64()),
+        }
     )
-    # materialize the (tiny: k×dim) result so the cached exploded vectors
-    # can be freed — no lingering cache blocks in long-lived sessions
-    out = out.localCheckpoint(eager=True)
-    qd.unpersist()
-    return out, {}, {}
+    # an Arrow table plans as a LocalRelation: no Python-RDD stage
+    return spark.createDataFrame(trained), cent
 
 
 def ivf_topk_trained(
@@ -423,52 +431,23 @@ def ivf_topk_trained(
     is engine-portable; ``ivf_topk``'s fixed first-k centroids are the
     untrained fallback.
 
-    Round 6: on a uniform-dim corpus with a budget-sized centroid table,
-    assignment and the nprobe probe list come from ONE narrow numpy
-    matmul pass each (``_numpy_probes`` — no exploded-vector broadcast
-    join, no window, no join-back for q); same exact (cdot/count DESC,
-    cell ASC) ranking. Ragged corpora and bigger centroid tables use
-    the original join+window phrasing."""
+    Assignment and the nprobe probe list each come from ONE narrow
+    mapInArrow pass over the broadcast trained centroids (``_probes``):
+    same exact (cdot/count DESC, cell ASC) ranking as the twin, no
+    exploded join, no window, no join-back for q. Null and empty vectors
+    are neither assigned nor queried, and cells are ranked under
+    ``ivf_train``'s ragged/null contract; the final exact dot is
+    ``_dot``, which is NULL for two vectors of different lengths (the
+    twin sums their common prefix — a known divergence on ragged data)."""
     base = quantized(embeddings)
-    trained, lcents, lcounts = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
-    if lcents:
-        dim = len(next(iter(lcents.values())))
-        assigned = _numpy_probes(
-            base, lcents, lcounts, 1, dim, with_q=True
-        ).select("vec_id", "q", "cell")
-        # each query probes its nprobe closest cells; a neighbor lives in
-        # exactly one cell and probed cells are distinct, so no dedup needed
-        queries = _numpy_probes(
-            base.where(F.col("vec_id") % query_mod == 0),
-            lcents, lcounts, nprobe, dim, with_q=True,
-        ).select(
-            F.col("vec_id").alias("q_id"), F.col("q").alias("qv"), "cell"
-        )
-    else:
-        cents_d = trained.select("cell", "dim", F.col("centroid_sum").alias("s"))
-        counts = trained.select("cell", F.col("n_members").alias("c")).distinct()
-        qd = base.select("vec_id", F.posexplode("q").alias("dim", "val"))
-        scored = (
-            qd.join(F.broadcast(cents_d), "dim")
-            .groupBy("vec_id", "cell")
-            .agg(F.sum(F.col("val") * F.col("s")).alias("cdot"))
-            .join(F.broadcast(counts), "cell")
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            (F.col("cdot").cast("double") / F.col("c")).desc(), F.col("cell").asc()
-        )
-        ranked = scored.withColumn("rn", F.row_number().over(w))
-        assigned = (
-            ranked.where("rn = 1").select("vec_id", "cell")
-        ).join(base, "vec_id")
-        queries = (
-            ranked.where((F.col("vec_id") % query_mod == 0) & (F.col("rn") <= nprobe))
-            .select(F.col("vec_id").alias("q_id"), "cell")
-            .join(
-                base.select(F.col("vec_id").alias("q_id"), F.col("q").alias("qv")),
-                "q_id",
-            )
-        )
+    _, cent = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
+    bc = embeddings.sparkSession.sparkContext.broadcast(cent)
+    assigned = _probes(base, bc, 1, with_q=True).select("vec_id", "q", "cell")
+    # each query probes its nprobe closest cells; a neighbor lives in
+    # exactly one cell and probed cells are distinct, so no dedup needed
+    queries = _probes(
+        base.where(F.col("vec_id") % query_mod == 0), bc, nprobe, with_q=True
+    ).select(F.col("vec_id").alias("q_id"), F.col("q").alias("qv"), "cell")
     pairs = assigned.join(F.broadcast(queries), "cell").where(
         F.col("vec_id") != F.col("q_id")
     )
@@ -974,19 +953,13 @@ def _verify_cosine_pairs(
     t2i = int(round(threshold * threshold * 1_000_000))
     # bounded probe: collect at most 32769 rows — enough to decide, and
     # the budget check below re-guards rows×dim before building
-    probe = base.limit(32769).collect()
-    dims = {len(r["q"]) for r in probe if r["q"]}
-    if (
-        probe
-        and len(probe) <= 32768
-        and len(dims) == 1
-        and all(r["q"] for r in probe)
-        and len(probe) * next(iter(dims)) <= _VERIFY_TABLE_VALUES
-    ):
-        ids = np.array([int(r["vec_id"]) for r in probe], dtype=np.int64)
+    probe = base.limit(32769).toArrow()
+    V, M, _ = _arrow_matrix(probe.column("q"))
+    if len(V) <= 32768 and M is None and 0 < V.size <= _VERIFY_TABLE_VALUES:
+        ids = probe.column("vec_id").to_numpy()
         order = np.argsort(ids, kind="stable")
         ids_s = ids[order]
-        V = np.array([probe[i]["q"] for i in order], dtype=np.int64)
+        V = V[order]
         n2 = np.einsum("ij,ij->i", V, V)
         bc = embeddings.sparkSession.sparkContext.broadcast((ids_s, V, n2))
         t2f = float(t2i)
@@ -1121,39 +1094,22 @@ def cosine_neardup_ivf(
     ``nprobe`` defaults to ``"auto"`` = ``auto_nprobe(n_cells)`` so the
     recall knob scales WITH the cell count (a fixed nprobe silently
     loses recall as auto-cells grows — measured in
-    BENCH/recall_grid.json; rule + cost tradeoff on ``auto_nprobe``)."""
+    BENCH/recall_grid.json; rule + cost tradeoff on ``auto_nprobe``).
+
+    The probe list is one narrow mapInArrow pass over the broadcast
+    trained centroids (``_probes``). Ragged/null contract: null and
+    empty vectors get no cells, and cells rank under ``ivf_train``'s
+    contract; the verify (``_verify_cosine_pairs``) drops a pair whose
+    vectors differ in length or hold a null (``_dot`` is NULL there),
+    where the twin sums the common prefix and skips nulls — a known
+    divergence on ragged data."""
     if n_cells == "auto":
         n_cells = auto_cells(embeddings.count())
     if nprobe == "auto":
         nprobe = auto_nprobe(n_cells)
-    base = quantized(embeddings)
-    trained, lcents, lcounts = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
-    if lcents:
-        dim = len(next(iter(lcents.values())))
-        # narrow probe list (round 6): the nprobe closest cells per vector
-        # from one numpy matmul pass (``_numpy_probes``) — no exploded
-        # join, no window; identical exact ranking to the fallback below
-        probes = _numpy_probes(base, lcents, lcounts, nprobe, dim).select(
-            "vec_id", "cell"
-        )
-    else:
-        cents_d = trained.select("cell", "dim", F.col("centroid_sum").alias("s"))
-        counts = trained.select("cell", F.col("n_members").alias("c")).distinct()
-        qd = base.select("vec_id", F.posexplode("q").alias("dim", "val"))
-        scored = (
-            qd.join(F.broadcast(cents_d), "dim")
-            .groupBy("vec_id", "cell")
-            .agg(F.sum(F.col("val") * F.col("s")).alias("cdot"))
-            .join(F.broadcast(counts), "cell")
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            (F.col("cdot").cast("double") / F.col("c")).desc(), F.col("cell").asc()
-        )
-        probes = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= nprobe)
-            .select("vec_id", "cell")
-        )
+    _, cent = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
+    bc = embeddings.sparkSession.sparkContext.broadcast(cent)
+    probes = _probes(quantized(embeddings), bc, nprobe).select("vec_id", "cell")
     cand = (
         probes.alias("a").join(probes.alias("b"), "cell")
         .where(F.col("a.vec_id") < F.col("b.vec_id"))

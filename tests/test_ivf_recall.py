@@ -2,15 +2,64 @@
 paths are deterministic, not that they retrieve. Measure recall@5 of
 ivf_topk / ivf_topk_trained against the brute-force baseline_ann_topk ground
 truth, with n_cells sensitivity. The committed sf0.01/sf0.1 numbers live
-in BENCH/BASELINE.md (§recall)."""
+in BENCH/BASELINE.md (§recall).
 
+The second half pins the IVF train/probe kernels themselves: DuckDB-twin
+parity on ragged and null vectors, and the chunked numpy kernels against
+full-matrix references without Spark."""
+
+import collections
 import os
 
+import duckdb
+import numpy as np
+import pyarrow as pa
 import pytest
 
 from sparkextract import simsearch
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
+
+# vector fixture shapes: ragged lengths; ragged plus null, empty and
+# all-null vectors and scattered null elements; a uniform corpus with one
+# null element in init vector 2; all of these at once
+SHAPES = ("ragged", "holes", "null_in_init", "combined")
+
+
+def vector_table(seed: int, shape: str, n: int = 60, dim: int = 6) -> pa.Table:
+    """An embeddings table (vec_id, embedding list<float>) of ``shape``."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for _ in range(n):
+        d = dim if shape == "null_in_init" else int(rng.integers(2, dim + 3))
+        rows.append([float(x) for x in rng.normal(0, 1, d).round(3).astype(np.float32)])
+    if shape in ("holes", "combined"):
+        for i in (4, 17):
+            rows[i] = None
+        for i in (5, 23):
+            rows[i] = []
+        rows[9] = [None] * len(rows[9])
+        for i in rng.choice(np.arange(6, n), 8, replace=False):
+            if rows[i]:
+                rows[i][int(rng.integers(len(rows[i])))] = None
+    if shape in ("null_in_init", "combined"):
+        rows[2][1] = None
+    return pa.table(
+        {
+            "vec_id": pa.array(range(n), pa.int64()),
+            "embedding": pa.array(rows, pa.list_(pa.float32())),
+        }
+    )
+
+
+def _twin(tab: pa.Table, sql: str) -> collections.Counter:
+    con = duckdb.connect()
+    con.register("embeddings", tab)
+    return collections.Counter(map(tuple, con.execute(sql).fetchall()))
+
+
+def _spark(df) -> collections.Counter:
+    return collections.Counter(map(tuple, df.collect()))
 
 
 @pytest.fixture(scope="module")
@@ -43,26 +92,146 @@ def test_trained_not_catastrophically_worse(report):
 
 
 def test_numpy_paths_equal_join_paths(spark, monkeypatch):
-    """Round-6 guard: the numpy matmul train/probe fast paths (uniform
-    corpus under the centroid budget) must produce row-identical results
-    to the broadcast-join + window fallbacks they replace — pinned by
-    forcing the budget to 0 (fallback) and diffing every family member."""
+    """The broadcast numpy verify (small uniform corpus) must keep exactly
+    the pairs the keyed-join verify keeps — pinned by forcing
+    ``_VERIFY_TABLE_VALUES`` to 0 (join path) and diffing the IVF near-dup
+    output. IVF train/probe have one implementation; their twin parity on
+    ragged/null vectors is pinned below."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
     def snap():
-        return {
-            "train": sorted(map(tuple, simsearch.ivf_train(emb, k=16).collect())),
-            "trained": sorted(
-                map(tuple, simsearch.ivf_topk_trained(emb, nprobe=2).collect())
-            ),
-            "ivf_neardup": sorted(
-                map(tuple, simsearch.cosine_neardup_ivf(emb, n_cells=16).collect())
-            ),
-        }
+        return sorted(
+            map(tuple, simsearch.cosine_neardup_ivf(emb, n_cells=16).collect())
+        )
 
     fast = snap()
-    monkeypatch.setattr(simsearch, "_CENTROID_BUDGET", 0)
     monkeypatch.setattr(simsearch, "_VERIFY_TABLE_VALUES", 0)
-    slow = snap()
-    for key in fast:
-        assert fast[key] == slow[key], key
+    assert fast == snap()
+
+
+@pytest.mark.parametrize("shape", SHAPES)
+def test_ivf_train_twin_parity(spark, shape):
+    """``ivf_train`` rows equal ``ivf_train_sql``'s on ragged and null
+    vectors, including NULL centroid sums. ``null_in_init`` is the
+    regression case for a null element among the first k vectors, which
+    used to raise TypeError while building the init centroids."""
+    tab = vector_table(1, shape)
+    emb = spark.createDataFrame(tab)
+    for k in (3, 6):
+        assert _spark(simsearch.ivf_train(emb, k=k)) == _twin(
+            tab, simsearch.ivf_train_sql(k=k)
+        ), k
+
+
+@pytest.mark.parametrize("shape", SHAPES)
+def test_probe_lists_twin_parity(spark, shape):
+    """Each vector's ranked probe cells (vec_id, cell, rn ≤ nprobe) equal
+    the twin's ``ranked`` CTE — the one both probing twins share — over
+    the trained centroids."""
+    tab = vector_table(2, shape)
+    emb = spark.createDataFrame(tab)
+    _, cent = simsearch._ivf_train_impl(emb, k=6)
+    bc = spark.sparkContext.broadcast(cent)
+    for p in (1, 3):
+        sql = simsearch.cosine_neardup_ivf_sql(n_cells=6, nprobe=p)
+        sql = sql[: sql.index(",\nprobes AS")] + (
+            f"\nSELECT vec_id, cell, CAST(rn AS INT) FROM ranked WHERE rn <= {p}"
+        )
+        got = _spark(simsearch._probes(simsearch.quantized(emb), bc, p))
+        assert got == _twin(tab, sql), p
+
+
+@pytest.mark.parametrize("shape", SHAPES)
+def test_cosine_neardup_ivf_within_twin(spark, shape):
+    """On any vector shape the near-dup path runs and keeps a subset of
+    the twin's pairs: candidates are equal (probe parity above) and the
+    verify only drops the ragged/null pairs ``_dot`` makes NULL."""
+    tab = vector_table(3, shape)
+    got = _spark(
+        simsearch.cosine_neardup_ivf(spark.createDataFrame(tab), n_cells=6, nprobe=3)
+    )
+    want = _twin(tab, simsearch.cosine_neardup_ivf_sql(n_cells=6, nprobe=3))
+    assert got and not got - want
+
+
+_DOT_DIVERGENCE = (
+    "_dot (zip_with pads the shorter list with null, so the aggregate is "
+    "NULL) differs from the twins' list_sum over range(1, len(a)+1), which "
+    "sums the common prefix and skips nulls; see ROADMAP carried fixes"
+)
+
+
+@pytest.mark.xfail(strict=True, reason=_DOT_DIVERGENCE)
+def test_cosine_neardup_ivf_twin_on_ragged(spark):
+    tab = vector_table(0, "ragged")
+    got = simsearch.cosine_neardup_ivf(spark.createDataFrame(tab), n_cells=6, nprobe=3)
+    assert _spark(got) == _twin(
+        tab, simsearch.cosine_neardup_ivf_sql(n_cells=6, nprobe=3)
+    )
+
+
+@pytest.mark.xfail(strict=True, reason=_DOT_DIVERGENCE)
+def test_ivf_topk_trained_twin_on_ragged(spark):
+    tab = vector_table(0, "ragged")
+    got = simsearch.ivf_topk_trained(spark.createDataFrame(tab), n_cells=6, nprobe=3)
+    assert _spark(got) == _twin(
+        tab, simsearch.ivf_topk_trained_sql(n_cells=6, nprobe=3)
+    )
+
+
+def test_chunked_kernels_equal_full_matrix_reference():
+    """No Spark: 4,096 cells scored against a 4,096-row batch runs in
+    four ``_SCORE_CHUNK`` row chunks. The probe ranking must equal one
+    full-matrix stable argsort, and the train partials must equal
+    ``np.add.at`` over the whole batch — on a batch with null, empty and
+    short rows and null elements, and on a uniform null-free one."""
+    rng = np.random.default_rng(7)
+    k, n, width = 4096, 4096, 8
+    cells = np.sort(rng.choice(10 * k, k, replace=False)).astype(np.int64)
+    C = rng.integers(-3, 4, (k, width + 2)).astype(np.int64)
+    P = rng.random((k, width + 2)) > 0.05
+    C[~P] = 0
+    counts = rng.integers(1, 5, k).astype(np.float64)
+    cent = (cells, C, P, counts)
+
+    def lists(ragged):
+        out = []
+        for _ in range(n):
+            d = int(rng.integers(0, width + 1)) if ragged else width
+            v = [int(x) for x in rng.integers(-3, 4, d)]
+            if ragged and v and rng.random() < 0.2:
+                v[int(rng.integers(len(v)))] = None
+            out.append(None if ragged and rng.random() < 0.02 else v)
+        return out
+
+    for ragged in (True, False):
+        rows = lists(ragged)
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(rows, pa.list_(pa.int64()))], names=["q"]
+        )
+        kept, V, M, lens = simsearch._nonempty(batch)
+        assert (M is None) == (not ragged)
+        assert kept.tolist() == [i for i, v in enumerate(rows) if v]
+        Vr = np.zeros((len(kept), width), np.int64)
+        Mr = np.zeros((len(kept), width), bool)
+        for j, i in enumerate(kept):
+            for d, x in enumerate(rows[i]):
+                Vr[j, d], Mr[j, d] = x or 0, x is not None
+        np.testing.assert_array_equal(V, Vr[:, : V.shape[1]])
+        score = (Vr @ C[:, :width].T).astype(np.float64) / counts
+        hit = Mr.astype(np.int64) @ P[:, :width].T.astype(np.int64)
+        score[hit == 0] = -np.inf
+        ref = np.argsort(-score, axis=1, kind="stable")[:, :3]
+        np.testing.assert_array_equal(simsearch._top_cells(V, M, cent, 3), ref)
+
+        ci, di, s, e, nn = simsearch._train_partials(V, M, lens, cent)
+        want = [np.zeros((k, width), np.int64) for _ in range(3)]
+        L = np.arange(width) < np.array([len(rows[i]) for i in kept])[:, None]
+        for w, x in zip(want, (Vr, L, Mr)):
+            np.add.at(w, ref[:, 0], x.astype(np.int64))
+        got = [np.zeros((k, width), np.int64) for _ in range(3)]
+        for g, x in zip(got, (s, e, nn)):
+            g[ci, di] = x
+        for g, w in zip(got, want):
+            np.testing.assert_array_equal(g, w)
+        assert (want[1][ci, di] > 0).all() and len(ci) == (want[1] > 0).sum()

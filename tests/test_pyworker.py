@@ -15,7 +15,7 @@ import pandas as pd
 from sparkextract import pyworker
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sparkextract")
-UDF_METHODS = {"mapInPandas", "applyInPandas", "applyInPandasWithState"}
+UDF_METHODS = {"mapInPandas", "mapInArrow", "applyInPandas", "applyInPandasWithState"}
 
 
 def test_hook_rereads_only_changed_archives(tmp_path, monkeypatch):
@@ -88,7 +88,7 @@ def _first_stmt_installs(fn) -> bool:
 
 def _udf_bodies(tree):
     """(line, FunctionDef or None) for every function the module hands to a
-    pandas UDF API; None when the argument cannot be resolved to a def."""
+    Arrow or pandas UDF API; None when the argument cannot be resolved to a def."""
     parents = {}
     for node in ast.walk(tree):
         for child in ast.iter_child_nodes(node):
