@@ -302,14 +302,13 @@ def _probe_kernel(bc, nprobe: int, with_q: bool):
             if not len(rows):
                 continue
             top = _top_cells(V, M, cent, p)
-            n = len(rows)
             rep = np.repeat(rows, p)
             cols = [batch.column("vec_id").take(pa.array(rep))]
             if with_q:
                 cols.append(batch.column("q").take(pa.array(rep)))
             cols += [
                 pa.array(cent[0][top.ravel()]),
-                pa.array(np.tile(np.arange(1, p + 1, dtype=np.int32), n)),
+                pa.array(np.tile(np.arange(1, p + 1, dtype=np.int32), len(rows))),
             ]
             names = ["vec_id"] + (["q"] if with_q else []) + ["cell", "rn"]
             yield pa.RecordBatch.from_arrays(cols, names=names)
@@ -380,14 +379,12 @@ def _ivf_train_impl(embeddings: DataFrame, k: int = 8, iters: int = 2):
     base = quantized(embeddings)
     spark = embeddings.sparkSession
     init = base.where(F.col("vec_id") < k).select("vec_id", "q").toArrow()
+    ids = init.column("vec_id").to_numpy()
     V, M, lens = _arrow_matrix(init.column("q"))
     keep = np.flatnonzero(lens > 0)
-    keep = keep[np.argsort(init.column("vec_id").to_numpy()[keep], kind="stable")]
+    keep = keep[np.argsort(ids[keep], kind="stable")]
     E = np.arange(V.shape[1]) < lens[keep][:, None]
-    cent = (
-        init.column("vec_id").to_numpy()[keep], V[keep],
-        E if M is None else M[keep], np.ones(len(keep)),
-    )
+    cent = (ids[keep], V[keep], E if M is None else M[keep], np.ones(len(keep)))
     for _ in range(iters):
         if not len(cent[0]):  # every cell emptied out — fixpoint is empty
             break
@@ -437,8 +434,9 @@ def ivf_topk_trained(
     exploded join, no window, no join-back for q. Null and empty vectors
     are neither assigned nor queried, and cells are ranked under
     ``ivf_train``'s ragged/null contract; the final exact dot is
-    ``_dot``, which is NULL for two vectors of different lengths (the
-    twin sums their common prefix — a known divergence on ragged data)."""
+    ``_dot``, which is NULL when the two lengths differ or an element is
+    null (the twin sums the common prefix and skips nulls — a known
+    divergence on ragged data)."""
     base = quantized(embeddings)
     _, cent = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
     bc = embeddings.sparkSession.sparkContext.broadcast(cent)
