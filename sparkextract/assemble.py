@@ -9,8 +9,9 @@ the earliest qualifying block; later blocks never see it).
 
 O3 line sessionization + A2 ``merge_para_with_text``
 (merge_blocks_and_spans.py:19-51,228-268) are order-dependent folds →
-one ``applyInPandas`` per (conv_id, turn_idx, page_seq) group running the
-numpy/string kernel per block (SURVEY.md §7.5).
+one ``applyInPandas`` per (conv_id, salted turn bucket) group running
+the batch-level ``kernels.merge_para`` over all of the group's blocks
+(SURVEY.md §7.5).
 """
 
 from __future__ import annotations
@@ -107,8 +108,9 @@ def fill_spans(spans: DataFrame, blocks: DataFrame) -> DataFrame:
 
 
 def _para_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel over a salted-conversation group: iterates
-    (turn, page, block) slices via numpy boundaries."""
+    """applyInPandas kernel over a salted-conversation group: one
+    batch-level ``kernels.merge_para`` over all of its (turn, page, block)
+    segments."""
     pyworker.install()
     srt = pdf.sort_values(
         ["turn_idx", "page_seq", "block_order", "span_order"], kind="stable"
@@ -117,29 +119,17 @@ def _para_group(pdf: pd.DataFrame) -> pd.DataFrame:
     pseq = srt["page_seq"].to_numpy(np.int64)
     border = srt["block_order"].to_numpy(np.int64)
     btype = srt["block_type"].to_numpy(object)
-    stype = srt["span_type"].to_numpy(object)
-    sorder = srt["span_order"].to_numpy(np.int64)
-    boxes = srt[["sx0", "sy0", "sx1", "sy1"]].to_numpy(np.float64)
-    scontent = srt["span_content"].to_numpy(object)
-    conv = pdf["conv_id"].iat[0]
-
-    changed = (
-        (turn[1:] != turn[:-1])
-        | (pseq[1:] != pseq[:-1])
-        | (border[1:] != border[:-1])
+    starts = kernels.run_starts(turn, pseq, border)
+    texts = kernels.merge_para(
+        starts, srt["span_type"].to_numpy(object), srt["span_content"].to_numpy(object),
+        srt[["sx0", "sy0", "sx1", "sy1"]].to_numpy(np.float64),
+        srt["span_order"].to_numpy(np.int64), btype == "isolate_formula",
     )
-    bounds = np.r_[0, np.flatnonzero(changed) + 1, len(turn)]
-    out = []
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        text = kernels.merge_para(
-            list(stype[s:e]),
-            list(scontent[s:e]),
-            boxes[s:e],
-            sorder[s:e],
-            is_interline=btype[s] == "isolate_formula",
-        )
-        out.append((conv, int(turn[s]), int(pseq[s]), int(border[s]), text))
-    return pd.DataFrame(out, columns=[f.name for f in PARA.fields])
+    return pd.DataFrame({
+        "conv_id": pdf["conv_id"].iat[0],
+        "turn_idx": turn[starts], "page_seq": pseq[starts],
+        "block_order": border[starts], "para_text": texts,
+    })
 
 
 def merge_paragraphs(filled: DataFrame, salt: int = 16) -> DataFrame:

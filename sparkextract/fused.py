@@ -15,9 +15,9 @@ staged path to study operators relationally; use this to run 10^12 turns.
 Batch internals are flat arrays end-to-end: ``parse._parse_batch``
 tokenizes the whole Arrow batch with pyarrow.compute, and
 ``turnkernel.run_turn_arrays`` runs every turn of the batch as segment-wise
-numpy over (turn → page → det) segments, with only the sequential folds
-per group — per-turn or per-page frames and array slices cost more than
-the extraction itself at this granularity.
+numpy over (turn → page → det) segments, the sequential folds included
+(``kernels``) — per-turn or per-page frames and array slices cost more
+than the extraction itself at this granularity.
 """
 
 from __future__ import annotations

@@ -1,16 +1,22 @@
 """Kernels used inside the Arrow-batched UDFs.
 
-Two kinds:
-- the sequential folds that are *not* relational (SURVEY.md §7.5):
-  greedy NMS, the 10px bubble pass, line sessionization, interval
-  subtraction, and byte-exact paragraph assembly. Each runs on one
-  group's handful of boxes, as Python lists of [x0,y0,x1,y1] rows (no
-  numpy dispatch per tiny group); per-group cardinality is tiny, total
-  work is linear;
-- the segment helpers (``run_starts``, ``rank_in_run``, and
-  ``page_pairs``, the per-page cross product) that let the batch-wide
-  steps (page/det ordering, OCR containment, J1 fill) run as flat numpy
-  over every page of a batch at once.
+Every kernel runs over a whole batch at once. Rows carry a segment (a
+page, an OCR region, a merged box, a block or an NMS group), segments
+are contiguous, and a bool ``starts`` array (or a non-decreasing segment
+id) marks where each begins. The reference's sequential folds (SURVEY.md
+§7.5) reduce to segment-wise numpy passes (DESIGN.md §3):
+- a fold that only looks at its predecessor (line sessionization, the
+  x-touch and interval unions) is one adjacent-pair compare, with a
+  segmented running max where the fold carries an envelope;
+- a fold with real carried state (greedy NMS, the J2 subtraction's
+  running ``lo``, the score's left-to-right sum) is a loop over rank in
+  segment: one numpy step per rank, up to the largest segment;
+- the O2 bubble pass runs as a Python fold, but only on the segments
+  where one vectorized test finds a swap candidate.
+
+The segment helpers (``run_starts``, ``rank_in_run``, and ``page_pairs``,
+the chunked per-segment cross product) serve the batch-wide steps too:
+page/det ordering, OCR containment, the J1 fill.
 
 Semantics are pinned in DESIGN.md with reference file:line citations.
 """
@@ -20,6 +26,7 @@ from __future__ import annotations
 import re
 
 import numpy as np
+import pandas as pd
 
 # ---------- scalar kernels ----------
 
@@ -101,52 +108,110 @@ def page_pairs(a_page: np.ndarray, b_page: np.ndarray):
         lo = hi
 
 
+def pairs_where(a_page: np.ndarray, b_page: np.ndarray, test):
+    """(a, b) index arrays of the same-page pairs for which ``test(a, b)``
+    (a bool array over one ``page_pairs`` chunk) holds; a-major, b in
+    input order."""
+    pa, pb = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
+    for a, b in page_pairs(a_page, b_page):
+        hit = test(a, b)
+        pa.append(a[hit])
+        pb.append(b[hit])
+    return np.concatenate(pa), np.concatenate(pb)
+
+
+def rank_steps(starts: np.ndarray) -> list[np.ndarray]:
+    """Row positions by rank in run: element ``r`` holds every row that is
+    the ``r``-th of its run. Drives the loops over rank that stand in
+    for per-segment folds, one numpy step per rank."""
+    if len(starts) == 0:
+        return []
+    rank = rank_in_run(starts)
+    order = np.argsort(rank, kind="stable")
+    return np.split(order, np.cumsum(np.bincount(rank))[:-1])
+
+
+def run_max(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Segment-wise cumulative max (a global ``np.maximum.accumulate``
+    would carry across segments)."""
+    out = values.copy()
+    for i in rank_steps(starts)[1:]:
+        out[i] = np.maximum(out[i - 1], values[i])
+    return out
+
+
+def run_sum(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Left-to-right float sum of each run, one per run. Bit-equal to a
+    Python ``+=`` loop; ``np.add.reduceat`` sums pairwise past 8 terms."""
+    run = np.cumsum(starts) - 1
+    out = np.zeros(int(starts.sum()))
+    for i in rank_steps(starts):
+        out[run[i]] += values[i]
+    return out
+
+
+def islands(starts: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Bool per row: the row opens a new island of its segment. Rows are
+    sorted by ``lo`` within each segment; an island grows while its
+    running max of ``hi`` reaches the next ``lo`` — the union fold of O5
+    and O6, whose envelope hi is that running max. The segment's running
+    max serves as well as the island's: every earlier island's max is
+    below a ``lo`` at or before this row."""
+    top = run_max(hi, starts)
+    new = starts.copy()
+    new[1:] |= ~(top[:-1] >= lo[1:])
+    return new
+
+
+def _ends(starts: np.ndarray) -> list[int]:
+    """Run bounds as a Python list: run k is rows [b[k], b[k+1])."""
+    return np.r_[np.flatnonzero(starts), len(starts)].tolist()
+
+
 # ---------- geometry kernels ----------
 
-def nms_keep(boxes: np.ndarray, order: np.ndarray, iou_thres: float) -> np.ndarray:
-    """M3 greedy NMS. ``order`` = candidate indices pre-sorted by
-    (score DESC, det_idx ASC); suppress IoU > iou_thres. Returns kept indices
-    in ``order`` sequence. (layout_detection/models/yolo.py:74-80 semantics)
-    """
-    if len(order) == 0:
-        return order
-    if len(order) == 2:
-        # two-candidate fast path (the common payload shape): identical
-        # IEEE arithmetic on Python floats, no numpy dispatch
-        i, j = int(order[0]), int(order[1])
-        bi, bj = boxes[i].tolist(), boxes[j].tolist()
-        ai = (bi[2] - bi[0]) * (bi[3] - bi[1])
-        aj = (bj[2] - bj[0]) * (bj[3] - bj[1])
-        iw = min(bi[2], bj[2]) - max(bi[0], bj[0])
-        ih = min(bi[3], bj[3]) - max(bi[1], bj[1])
-        inter = (iw if iw > 0 else 0.0) * (ih if ih > 0 else 0.0)
-        union = aj + ai - inter
-        iou = inter / max(union, 1e-12) if union > 0 else 0.0
-        keep2 = [i] if iou > iou_thres else [i, j]
-        return np.asarray(keep2, dtype=np.int64)
-    areas = (boxes[:, 2] - boxes[:, 0]) * (boxes[:, 3] - boxes[:, 1])
-    kept: list[int] = []
-    for i in order:
-        if kept:
-            k = np.asarray(kept)
-            xl = np.maximum(boxes[i, 0], boxes[k, 0])
-            yt = np.maximum(boxes[i, 1], boxes[k, 1])
-            xr = np.minimum(boxes[i, 2], boxes[k, 2])
-            yb = np.minimum(boxes[i, 3], boxes[k, 3])
-            inter = np.clip(xr - xl, 0, None) * np.clip(yb - yt, 0, None)
-            union = areas[i] + areas[k] - inter
-            iou = np.where(union > 0, inter / np.maximum(union, 1e-12), 0.0)
-            if (iou > iou_thres).any():
-                continue
-        kept.append(int(i))
-    return np.asarray(kept, dtype=np.int64)
+def y_overlaps(a: np.ndarray, b: np.ndarray, thr: float = 0.8) -> np.ndarray:
+    """F8 (paddle_ocr.py:81-91 / merge_blocks_and_spans.py:7-17) on row
+    pairs of two (n,4) [x0,y0,x1,y1] arrays. Pinned contract (DESIGN §3):
+    min box height <= 0 → no overlap (the reference would
+    ZeroDivisionError; tests/oracle.py pins the same guard)."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        ov = np.minimum(a[:, 3], b[:, 3]) - np.maximum(a[:, 1], b[:, 1])
+        ov = np.where(ov < 0.0, 0.0, ov)
+        den = np.minimum(a[:, 3] - a[:, 1], b[:, 3] - b[:, 1])
+        return (den > 0) & (ov / den > thr)
+
+
+def nms_keep(starts: np.ndarray, boxes: np.ndarray, iou_thres: float) -> np.ndarray:
+    """M3 greedy NMS for every group at once (layout_detection/models/
+    yolo.py:74-80 semantics). Rows come grouped, each group's candidates
+    in (score DESC, det_idx ASC) order; a candidate is suppressed when its
+    IoU with a kept earlier candidate exceeds ``iou_thres``. → bool keep
+    per row. A loop over rank in group: step ``r`` tests every group's
+    ``r``-th candidate against its ``r`` predecessors."""
+    keep = np.ones(len(boxes), dtype=bool)
+    x0, y0, x1, y1 = boxes.T
+    with np.errstate(invalid="ignore", divide="ignore"):
+        area = (x1 - x0) * (y1 - y0)
+        for r, i in enumerate(rank_steps(starts)[1:], start=1):
+            c = np.repeat(i, r)
+            k = np.repeat(i - r, r) + np.tile(np.arange(r), len(i))
+            iw = np.minimum(x1[c], x1[k]) - np.maximum(x0[c], x0[k])
+            ih = np.minimum(y1[c], y1[k]) - np.maximum(y0[c], y0[k])
+            inter = np.where(iw > 0, iw, 0.0) * np.where(ih > 0, ih, 0.0)
+            union = area[c] + area[k] - inter
+            iou = np.where(union > 0, inter / union, 0.0)
+            hit = (iou > iou_thres) & keep[k]
+            keep[i] = ~hit.reshape(len(i), r).any(axis=1)
+    return keep
 
 
 def bubble_pass(rows: list) -> list[int]:
-    """O2 (paddle_ocr.py:57-78): stable (y0,x0) sort + 10px adjacent-swap
-    pass. Input: [x0,y0,x1,y1] rows; returns the row order as indices."""
+    """O2's 10px adjacent-swap pass (paddle_ocr.py:66-78) over one
+    segment's [x0,y0,x1,y1] rows, already in stable (y0, x0) order;
+    returns the new row order as indices."""
     n = len(rows)
-    idx = sorted(range(n), key=lambda i: (rows[i][1], rows[i][0]))  # stable
+    idx = list(range(n))
     for i in range(n - 1):
         for j in range(i, -1, -1):
             a, b = idx[j], idx[j + 1]
@@ -157,128 +222,159 @@ def bubble_pass(rows: list) -> list[int]:
     return idx
 
 
-def y_overlap_gt(b1, b2, thr=0.8) -> bool:
-    """F8 (paddle_ocr.py:81-91 / merge_blocks_and_spans.py:7-17).
-    Pinned contract (DESIGN §3): min box height <= 0 → no overlap (the
-    reference would ZeroDivisionError; tests/oracle.py pins the same
-    guard so degenerate payload boxes are defined, not engine-dependent)."""
-    ov = min(b1[3], b2[3]) - max(b1[1], b2[1])
-    if ov < 0.0:
-        ov = 0.0
-    den = min(b1[3] - b1[1], b2[3] - b2[1])
-    if den <= 0:
-        return False
-    return ov / den > thr
+def sort_boxes(starts: np.ndarray, boxes: np.ndarray) -> np.ndarray:
+    """O2 (paddle_ocr.py:57-78) for every segment: the stable (y0, x0)
+    sort (input order breaks ties), then ``bubble_pass`` on just the
+    segments with a swap candidate — an adjacent pair with |Δy0| < 10 and
+    x0 below its predecessor's. Without one the pass swaps nothing.
+    → row order."""
+    seg = np.cumsum(starts) - 1
+    o = np.lexsort((boxes[:, 0], boxes[:, 1], seg))
+    b = boxes[o]
+    with np.errstate(invalid="ignore"):
+        cand = (np.abs(b[1:, 1] - b[:-1, 1]) < 10) & (b[1:, 0] < b[:-1, 0])
+    cand &= ~starts[1:]
+    if cand.any():
+        ends = _ends(starts)
+        for k in np.unique(seg[1:][cand]).tolist():
+            s, e = ends[k], ends[k + 1]
+            o[s:e] = o[s:e][bubble_pass(b[s:e].tolist())]
+    return o
 
 
-def merge_det_boxes(rows: list) -> list[list[float]]:
-    """O7 (paddle_ocr.py:250-289): y-sessionize into lines (O3 fold) then
-    union x-touching boxes per line (O6 fold). [x0,y0,x1,y1] rows in and
-    out."""
-    if not rows:
-        return []
-    order = sorted(range(len(rows)), key=lambda i: rows[i][1])  # stable
-    lines: list[list[int]] = [[order[0]]]
-    for i in order[1:]:
-        if y_overlap_gt(rows[i], rows[lines[-1][-1]]):
-            lines[-1].append(i)
-        else:
-            lines.append([i])
-    out = []
-    for line in lines:
-        line = sorted(line, key=lambda i: rows[i][0])  # stable x0 sort
-        first = rows[line[0]]
-        cur = [first[0], first[1], first[2], first[3]]
-        for i in line[1:]:
-            b = rows[i]
-            if cur[2] >= b[0]:  # x-touch → envelope union (paddle_ocr.py:233)
-                cur[0], cur[1] = min(cur[0], b[0]), min(cur[1], b[1])
-                cur[2], cur[3] = max(cur[2], b[2]), max(cur[3], b[3])
-            else:
-                out.append(cur)
-                cur = [b[0], b[1], b[2], b[3]]
-        out.append(cur)
-    return out
+def merge_boxes(starts: np.ndarray, boxes: np.ndarray):
+    """O7 (paddle_ocr.py:250-289) for every segment: y-sessionize into
+    lines (O3), then union x-touching boxes per line (O6). Rows come
+    grouped by segment, each in bubble order. → (segment id, envelope
+    [x0,y0,x1,y1]) of each merged box, in emission order.
+
+    O3: after a stable y0 sort a line breaks where a box does not
+    y-overlap its predecessor (the fold compares with ``lines[-1][-1]``).
+    O6: after a stable x0 sort per line a run breaks where the line's
+    running max of x1 is below the next x0 — the fold's envelope x1 —
+    which holds for inverted boxes too (``islands``)."""
+    seg = np.cumsum(starts) - 1
+    b = boxes[np.lexsort((boxes[:, 1], seg))]
+    line_start = starts.copy()
+    line_start[1:] |= ~y_overlaps(b[1:], b[:-1])
+    b = b[np.lexsort((b[:, 0], np.cumsum(line_start)))]
+    r = np.flatnonzero(islands(line_start, b[:, 0], b[:, 2]))
+    env = np.stack([
+        np.minimum.reduceat(b[:, 0], r), np.minimum.reduceat(b[:, 1], r),
+        np.maximum.reduceat(b[:, 2], r), np.maximum.reduceat(b[:, 3], r),
+    ], axis=1)
+    return seg[r], env
 
 
-def subtract_intervals(lo: float, hi: float, masks: list[tuple[float, float]]):
-    """O5 + interval subtraction (paddle_ocr.py:108-153)."""
-    masks = sorted(masks)
-    merged: list[list[float]] = []
-    for m0, m1 in masks:
-        if merged and merged[-1][1] >= m0:
-            merged[-1][1] = max(merged[-1][1], m1)
-        else:
-            merged.append([m0, m1])
-    out = []
-    for m0, m1 in merged:
-        if m0 > hi or m1 < lo:
-            continue
-        if lo < m0:
-            out.append((lo, m0 - 1))
-        lo = max(m1 + 1, lo)
-    if lo <= hi:
-        out.append((lo, hi))
-    return out
+def split_masks(box_seg: np.ndarray, boxes: np.ndarray,
+                mask_seg: np.ndarray, masks: np.ndarray):
+    """J2 (paddle_ocr.py:108-172) for every segment: subtract from each
+    box the x-intervals of the segment's formula masks that y-overlap it.
+    ``box_seg``/``mask_seg`` are non-decreasing segment ids, masks in
+    mask order per segment. → (segment id, box) of each piece, in box
+    then piece order.
 
-
-def split_by_masks(rows: list, masks: list) -> list:
-    """J2 (paddle_ocr.py:156-172): subtract x-intervals of y-overlapping
-    formula masks from each text box. [x0,y0,x1,y1] rows in and out."""
-    if not masks:
-        return rows
-    out = []
-    for b in rows:
-        xiv = [(m[0], m[2]) for m in masks if y_overlap_gt(b, m)]
-        for lo, hi in subtract_intervals(b[0], b[2], xiv):
-            out.append([lo, b[1], hi, b[3]])
-    return out
+    Per box the masks sort by (x0, mask order) and merge with the running
+    max rule (O5); each merged interval, unless it misses [lo, hi],
+    emits (lo, m0-1) when lo < m0 and lifts lo to max(m1+1, lo); the tail
+    (lo, hi) is kept when lo <= hi. Boxes of a segment without masks pass
+    through unchanged, inverted ones too; in a segment with masks an
+    inverted box (x0 > x1) leaves nothing."""
+    masked = np.isin(box_seg, mask_seg)
+    a, b = pairs_where(
+        box_seg, mask_seg, lambda a, b: y_overlaps(boxes[a], masks[b])
+    )
+    m0, m1 = masks[b, 0], masks[b, 2]
+    o = np.lexsort((b, m0, a))
+    a, m0, m1 = a[o], m0[o], m1[o]
+    # O5: interval union per box
+    g = np.flatnonzero(islands(run_starts(a), m0, m1))
+    gbox, g0, g1 = a[g], m0[g], np.maximum.reduceat(m1, g)
+    # subtraction: a loop over the rank of the merged interval in its box
+    lo, hi = boxes[:, 0].copy(), boxes[:, 2]
+    out_box, out_lo, out_hi = [], [], []
+    for i in rank_steps(run_starts(gbox)):
+        k, i0, i1 = gbox[i], g0[i], g1[i]
+        live = ~((i0 > hi[k]) | (i1 < lo[k]))
+        cut = live & (lo[k] < i0)
+        out_box.append(k[cut])
+        out_lo.append(lo[k][cut])
+        out_hi.append(i0[cut] - 1)
+        lo[k] = np.where(live, np.maximum(i1 + 1, lo[k]), lo[k])
+    tail = ~masked | (lo <= hi)
+    out_box.append(np.flatnonzero(tail))
+    out_lo.append(lo[tail])
+    out_hi.append(hi[tail])
+    # pieces were made rank by rank, tails last: a stable sort by box
+    # puts each box's pieces in emission order
+    k = np.concatenate(out_box)
+    o = np.argsort(k, kind="stable")
+    k = k[o]
+    piece = boxes[k].copy()
+    piece[:, 0] = np.concatenate(out_lo)[o]
+    piece[:, 2] = np.concatenate(out_hi)[o]
+    return box_seg[k], piece
 
 
 # ---------- paragraph assembly (A2) ----------
 
-def merge_para(types: list[str], contents: list[str], boxes: np.ndarray,
-               pool_order: np.ndarray, is_interline: bool) -> str:
-    """O3 + O4 + A2 for one block (merge_blocks_and_spans.py:19-88,228-268).
+_TEXT, _INLINE, _ISOLATED, _FOOTNOTE = 1, 2, 3, 4
+_TYPE_CODE = {"text": _TEXT, "inline": _INLINE, "ignore-formula": _INLINE,
+              "isolated": _ISOLATED, "footnote": _FOOTNOTE}
 
-    ``pool_order`` is the span-pool position standing in for Python list
-    order (the stable-sort tiebreak, SURVEY.md §7.5).
-    """
-    n = len(types)
-    if n == 0:
-        return ""
-    if not is_interline:  # fix_text_block: isolated → inline (:71-80)
-        types = ["inline" if t == "isolated" else t for t in types]
-    rows = boxes.tolist()
-    porder = pool_order.tolist()
-    order = sorted(range(n), key=lambda i: (rows[i][1], porder[i]))  # stable y0
-    lines: list[list[int]] = [[order[0]]]
-    for i in order[1:]:
-        cur = lines[-1]
-        if types[i] == "isolated" or any(types[j] == "isolated" for j in cur):
-            lines.append([i])
-        elif y_overlap_gt(rows[i], rows[cur[-1]]):
-            cur.append(i)
-        else:
-            lines.append([i])
-    out = ""
-    for line in lines:
-        # O4: stable x0 sort over the line's y-order sequence (:54-58)
-        line = [line[k] for k in
-                sorted(range(len(line)), key=lambda k: (rows[line[k]][0], k))]
-        joined = "".join(contents[i].strip() for i in line if types[i] == "text")
-        zh = bool(joined) and is_zh(joined)
-        for i in line:
-            t, c = types[i], ""
-            if t == "text":
-                c = md_escape(contents[i])
-            elif t in ("inline", "ignore-formula"):
-                c = f" ${contents[i].strip('$')}$ "
-            elif t == "isolated":
-                c = f"\n$$\n{contents[i].strip('$')}\n$$\n"
-            elif t == "footnote":
-                body = contents[i].strip("$")
-                c = f" ${body}$ " if "^" in body else f" $^{body}$ "
-            if c != "":
-                out += c.strip() if zh else c.strip() + " "
-    return out
+
+def _span_md(t: int, c: str) -> str:
+    """A2 piece template of one span (merge_blocks_and_spans.py:245-262);
+    '' for types the reference renders as nothing."""
+    if t == _TEXT:
+        return md_escape(c)
+    if t == _INLINE:
+        return f" ${c.strip('$')}$ "
+    if t == _ISOLATED:
+        return f"\n$$\n{c.strip('$')}\n$$\n"
+    if t == _FOOTNOTE:
+        body = c.strip("$")
+        return f" ${body}$ " if "^" in body else f" $^{body}$ "
+    return ""
+
+
+def merge_para(starts: np.ndarray, types, contents, boxes: np.ndarray,
+               pool_order: np.ndarray, interline: np.ndarray) -> list[str]:
+    """O3 + O4 + A2 for every block at once (merge_blocks_and_spans.py:
+    19-88,228-268) → one paragraph string per block, in block order.
+
+    Rows (spans) come grouped by block, ``starts`` marking each block's
+    first; ``pool_order`` is the span-pool position standing in for
+    Python list order (the stable-sort tiebreak, SURVEY.md §7.5);
+    ``interline`` is per row, true for an isolate_formula block's spans.
+    A line breaks where a span does not y-overlap its predecessor in
+    (y0, pool order), or where it or its predecessor is ``isolated`` (an
+    isolated span always sits alone in its line). A line is zh when any
+    of its text spans has a CJK character."""
+    if len(starts) == 0:
+        return []
+    codes, uniq = pd.factorize(np.asarray(types, dtype=object))
+    t = np.array([_TYPE_CODE.get(u, 0) for u in uniq], dtype=np.int64)[codes]
+    t[(t == _ISOLATED) & ~interline] = _INLINE  # fix_text_block (:71-80)
+    blk = np.cumsum(starts)
+    yo = np.lexsort((pool_order, boxes[:, 1], blk))
+    t, b = t[yo], boxes[yo]
+    iso = t == _ISOLATED
+    line_start = starts.copy()
+    line_start[1:] |= iso[1:] | iso[:-1] | ~y_overlaps(b[1:], b[:-1])
+    line = np.cumsum(line_start) - 1
+    xo = np.lexsort((b[:, 0], line))  # O4: stable x0 sort over y order
+    row = yo[xo]
+    t = t[xo].tolist()
+    c = np.asarray(contents, dtype=object)[row].tolist()
+    cjk = np.array(
+        [ti == _TEXT and _CJK.search(ci) is not None for ti, ci in zip(t, c)],
+        dtype=bool,
+    )
+    zh = np.logical_or.reduceat(cjk, np.flatnonzero(line_start))[line].tolist()
+    pieces = [
+        "" if (p := _span_md(ti, ci)) == "" else p.strip() if z else p.strip() + " "
+        for ti, ci, z in zip(t, c, zh)
+    ]
+    e = _ends(starts)
+    return ["".join(pieces[e[k]:e[k + 1]]) for k in range(len(e) - 1)]

@@ -4,12 +4,16 @@ The reference runs OCR per cropped layout region with formula masks
 (pdf2markdown.py:195-256 + paddle_ocr.py:388-450). ``ocr_page_arrays``
 runs that layer for many pages at once, on flat arrays where every row
 carries its page id:
-- batch-wide numpy: region × raw center containment per page (in
-  chunks of ``kernels.page_pairs``), crop shifts and centers, and the
-  region × mask bounds test;
-- per region, on Python lists: the sequential folds — (y0,x0) sort +
-  10px bubble pass (O2), line merge (O7), formula-mask x-interval
-  subtraction (J2) — and the score/content join of each merged box.
+- region × raw center containment per page (in chunks of
+  ``kernels.page_pairs``), crop shifts and centers, and the region × mask
+  bounds test;
+- the reference's sequential folds as segment-wise passes over every
+  region at once (``kernels``): (y0,x0) sort + 10px bubble pass (O2,
+  the Python pass only on regions with a swap candidate), line merge
+  (O7), formula-mask x-interval subtraction (J2);
+- the score/content join: merged box × member pairs per region, a
+  left-to-right score sum over rank, Python ``round`` per kept box and
+  one ``" ".join`` per kept box.
 
 It is called once per Arrow batch by the fused turn kernel and once per
 (conv_id, salted turn bucket) group by the staged pipeline's
@@ -45,6 +49,7 @@ def angle_cls(contents: list[str]) -> list[str]:
     ]
 
 
+@np.errstate(invalid="ignore")  # inf payload coords: inf - inf
 def ocr_page_arrays(
     region_page: np.ndarray,  # (n,) page id per OCR-able region
     region_boxes: np.ndarray,  # (n,4) regions in (page, det_order) order
@@ -70,87 +75,66 @@ def ocr_page_arrays(
     rx0, ry0, rx1, ry1 = region_boxes.T
     # members: (region, raw) pairs with the raw's center inside the region,
     # region-major, raws in det_idx order within a region
-    mem_reg, mem_raw = [], []
-    for a, b in kernels.page_pairs(region_page, raw_page):
-        inside = (
-            (rx0[a] <= rcx[b]) & (rcx[b] <= rx1[a])
-            & (ry0[a] <= rcy[b]) & (rcy[b] <= ry1[a])
-        )
-        mem_reg.append(a[inside])
-        mem_raw.append(b[inside])
-    mem_reg = np.concatenate(mem_reg)
-    mem_raw = np.concatenate(mem_raw)
+    mem_reg, mem_raw = kernels.pairs_where(
+        region_page, raw_page,
+        lambda a, b: (rx0[a] <= rcx[b]) & (rcx[b] <= rx1[a])
+        & (ry0[a] <= rcy[b]) & (rcy[b] <= ry1[a]),
+    )
     if len(mem_reg) == 0:
         return none
+    # segments: the member regions, k = 0.. in region order
+    starts = kernels.run_starts(mem_reg)
+    seg = np.cumsum(starts) - 1
+    regs = mem_reg[starts]
     # crop space: shifted by the region origin, padded (P1)
     sx = rx0 - _PAD
     sy = ry0 - _PAD
     shift = np.stack([sx, sy, sx, sy], axis=1)
     crop = raw_boxes[mem_raw] - shift[mem_reg]
-    ccx = ((crop[:, 0] + crop[:, 2]) / 2.0).tolist()
-    ccy = ((crop[:, 1] + crop[:, 3]) / 2.0).tolist()
-    starts = np.flatnonzero(kernels.run_starts(mem_reg))
-    regs = mem_reg[starts]
-    # formula masks in each member region's crop space, kept unless they
-    # lie wholly outside the padded crop (paddle_ocr.py:405-414)
-    reg_masks: dict[int, list] = {}
+    # O2 sort + bubble pass, O7 line merge
+    box_seg, boxes = kernels.merge_boxes(starts, crop[kernels.sort_boxes(starts, crop)])
+    # J2: formula masks in each member region's crop space, kept unless
+    # they lie wholly outside the padded crop (paddle_ocr.py:405-414)
     if len(masks):
         nw = rx1 - rx0 + 2 * _PAD
         nh = ry1 - ry0 + 2 * _PAD
-        for a, b in kernels.page_pairs(region_page[regs], mask_page):
+
+        def inside_crop(a, b):
             g = regs[a]
-            adj = masks[b] - shift[g]
-            ok = ~(
-                (adj[:, 2] < 0) | (adj[:, 3] < 0)
-                | (adj[:, 0] > nw[g]) | (adj[:, 1] > nh[g])
-            )
-            for g_k, box in zip(g[ok].tolist(), adj[ok].tolist()):
-                reg_masks.setdefault(g_k, []).append(box)
-    crop_l = crop.tolist()
-    raw_l = mem_raw.tolist()
-    scores_l = raw_scores.tolist()
-    pages_l = region_page.tolist()
-    sx_l, sy_l = sx.tolist(), sy.tolist()
-    bounds = np.r_[starts, len(mem_reg)].tolist()
-    out_page: list[int] = []
-    out_boxes: list = []
-    out_scores: list = []
-    out_contents: list = []
-    for k, g in enumerate(regs.tolist()):
-        s, e = bounds[k], bounds[k + 1]
-        rows = crop_l[s:e]
-        boxes = kernels.merge_det_boxes([rows[i] for i in kernels.bubble_pass(rows)])
-        adj = reg_masks.get(g)
-        if adj:  # reference: `if mfd_res:` (paddle_ocr.py:414)
-            boxes = kernels.split_by_masks(boxes, adj)
-        cx, cy, mine = ccx[s:e], ccy[s:e], raw_l[s:e]
-        m = e - s
-        gx, gy, page = sx_l[g], sy_l[g], pages_l[g]
-        for b0, b1, b2, b3 in boxes:
-            cons = [
-                j for j in range(m)
-                if b0 <= cx[j] <= b2 and b1 <= cy[j] <= b3
-            ]
-            cons.sort(key=cx.__getitem__)  # stable: (center_x, det_idx)
-            if cons:
-                # sequential sum: the reference's sum()/len() to the last bit
-                t = 0.0
-                for j in cons:
-                    t += scores_l[mine[j]]
-                score = t / len(cons)
-            else:
-                score = 0.0
-            if score < schema.DROP_SCORE:
-                continue
-            out_page.append(page)
-            out_boxes.append([b0 + gx, b1 + gy, b2 + gx, b3 + gy])
-            out_scores.append(round(score, 2))
-            out_contents.append(" ".join(raw_contents[mine[j]] for j in cons))
+            m = masks[b] - shift[g]
+            return ~((m[:, 2] < 0) | (m[:, 3] < 0) | (m[:, 0] > nw[g]) | (m[:, 1] > nh[g]))
+
+        mask_seg, mb = kernels.pairs_where(region_page[regs], mask_page, inside_crop)
+        box_seg, boxes = kernels.split_masks(
+            box_seg, boxes, mask_seg, masks[mb] - shift[regs[mask_seg]]
+        )
+    # score/content join: each box's members with their crop center inside
+    # it, by (center_x, det_idx)
+    ccx = (crop[:, 0] + crop[:, 2]) / 2.0
+    ccy = (crop[:, 1] + crop[:, 3]) / 2.0
+    a, b = kernels.pairs_where(
+        box_seg, seg,
+        lambda a, b: (boxes[a, 0] <= ccx[b]) & (ccx[b] <= boxes[a, 2])
+        & (boxes[a, 1] <= ccy[b]) & (ccy[b] <= boxes[a, 3]),
+    )
+    o = np.lexsort((ccx[b], a))  # stable: member (det_idx) order breaks ties
+    a, raw = a[o], mem_raw[b[o]]
+    first = kernels.run_starts(a)
+    # sequential sum ÷ count: the reference's sum()/len() to the last bit
+    count = np.bincount(a, minlength=len(boxes))
+    total = np.zeros(len(boxes))
+    total[a[first]] = kernels.run_sum(raw_scores[raw], first)
+    score = total / np.maximum(count, 1)
+    keep = (count > 0) & ~(score < schema.DROP_SCORE)
+    k = np.flatnonzero(keep)
+    g = regs[box_seg[k]]
+    text = np.asarray(raw_contents, dtype=object)[raw].tolist()
+    e = np.r_[0, np.cumsum(count)].tolist()
     return (
-        np.asarray(out_page, dtype=np.int64),
-        np.asarray(out_boxes, dtype=np.float64).reshape(-1, 4),
-        out_scores,
-        out_contents,
+        region_page[g],
+        boxes[k] + shift[g],
+        [round(s, 2) for s in score[k].tolist()],
+        [" ".join(text[e[j]:e[j + 1]]) for j in k.tolist()],
     )
 
 

@@ -150,15 +150,11 @@ def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
     # by (score desc, det_idx)
     m = np.flatnonzero(branch < 2)
     m = m[np.lexsort((det_idx[m], -sc[m], codes[m], branch[m], page[m]))]
-    starts = np.flatnonzero(kernels.run_starts(page[m], branch[m], codes[m]))
-    size = np.diff(np.r_[starts, len(m)])
-    m_boxes = boxes[m]
+    keep = kernels.nms_keep(
+        kernels.run_starts(page[m], branch[m], codes[m]), boxes[m], schema.IOU_THRES
+    )
     alive = np.ones(len(v), dtype=bool)
-    for s, n in zip(starts[size > 1].tolist(), size[size > 1].tolist()):
-        kept = kernels.nms_keep(m_boxes[s:s + n], range(n), schema.IOU_THRES)
-        if len(kept) < n:
-            alive[m[s:s + n]] = False
-            alive[m[s + kept]] = True
+    alive[m[~keep]] = False
     if not alive.all():
         sel = np.flatnonzero(alive)
         v, det_idx, codes, branch, sc, page, boxes = (

@@ -209,13 +209,13 @@ def detections_sql_cte(payload_cte: str | None = None) -> str:
 
     layout_in = ", ".join(f"'{c}'" for c in schema.LAYOUT_CLASSES)
     # IoU(candidate c, kept box k), engine semantics (kernels.nms_keep):
-    # union > 0 ? inter / max(union, 1e-12) : 0
+    # union > 0 ? inter / union : 0
     inter = (
         "greatest(least(c.x1, k.x1) - greatest(c.x0, k.x0), 0)"
         " * greatest(least(c.y1, k.y1) - greatest(c.y0, k.y0), 0)"
     )
     union = f"(c.x1 - c.x0) * (c.y1 - c.y0) + (k.x1 - k.x0) * (k.y1 - k.y0) - {inter}"
-    iou = f"CASE WHEN {union} > 0 THEN ({inter}) / greatest({union}, 1e-12) ELSE 0.0 END"
+    iou = f"CASE WHEN {union} > 0 THEN ({inter}) / ({union}) ELSE 0.0 END"
     survives = f"len(list_filter(n.boxes, k -> {iou} > {schema.IOU_THRES})) = 0"
     box = "struct_pack(x0 := c.x0, y0 := c.y0, x1 := c.x1, y1 := c.y1)"
     if payload_cte is None:
@@ -504,11 +504,11 @@ mbo AS (
   FROM mb
 ),
 mk AS (
-  SELECT g.doc_id, g.page_seq, g.region_order,
+  SELECT g.doc_id, g.page_seq, g.region_order, m.det_order AS kord,
          m.x0 - (g.rx0 - {pad}) AS kx0, m.y0 - (g.ry0 - {pad}) AS ky0,
          m.x1 - (g.rx0 - {pad}) AS kx1, m.y1 - (g.ry0 - {pad}) AS ky1
   FROM rg2 g JOIN (SELECT doc_id, page_seq, trunc(x0) AS x0, trunc(y0) AS y0,
-                          trunc(x1) AS x1, trunc(y1) AS y1
+                          trunc(x1) AS x1, trunc(y1) AS y1, det_order
                    FROM ordered WHERE branch = 1) m
     ON m.doc_id = g.doc_id AND m.page_seq = g.page_seq
   WHERE NOT (m.x1 - (g.rx0 - {pad}) < 0 OR m.y1 - (g.ry0 - {pad}) < 0
@@ -516,7 +516,8 @@ mk AS (
              OR m.y0 - (g.ry0 - {pad}) > g.ry1 - g.ry0 + 2 * {pad})
 ),
 bm AS (
-  SELECT b.doc_id, b.page_seq, b.region_order, b.box_ord, k.kx0 AS mlo, k.kx1 AS mhi
+  SELECT b.doc_id, b.page_seq, b.region_order, b.box_ord, k.kord,
+         k.kx0 AS mlo, k.kx1 AS mhi
   FROM mbo b JOIN mk k USING (doc_id, page_seq, region_order)
   WHERE CASE WHEN LEAST(b.by1 - b.by0, k.ky1 - k.ky0) <= 0 THEN FALSE
              ELSE GREATEST(LEAST(b.by1, k.ky1) - GREATEST(b.by0, k.ky0), 0)
@@ -524,8 +525,8 @@ bm AS (
 ),
 mki AS (
   SELECT *, SUM(CASE WHEN pmax IS NULL OR mlo > pmax THEN 1 ELSE 0 END)
-              OVER (PARTITION BY {key}, box_ord ORDER BY mlo, mhi) AS mgrp
-  FROM (SELECT *, MAX(mhi) OVER (PARTITION BY {key}, box_ord ORDER BY mlo, mhi
+              OVER (PARTITION BY {key}, box_ord ORDER BY mlo, kord) AS mgrp
+  FROM (SELECT *, MAX(mhi) OVER (PARTITION BY {key}, box_ord ORDER BY mlo, kord
                                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                     AS pmax
         FROM bm)
@@ -537,7 +538,7 @@ mrg AS (
 kept AS (
   SELECT m.*, b.bx0, b.bx1,
          ROW_NUMBER() OVER (PARTITION BY m.doc_id, m.page_seq, m.region_order, m.box_ord
-                            ORDER BY m.mlo) AS kpos
+                            ORDER BY m.mlo, m.mgrp) AS kpos
   FROM mrg m JOIN mbo b USING (doc_id, page_seq, region_order, box_ord)
   WHERE m.mhi >= b.bx0 AND m.mlo <= b.bx1
 ),

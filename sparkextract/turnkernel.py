@@ -8,12 +8,14 @@ stage is one numpy pass over the whole batch instead of a Python loop
 per turn and per page:
 - one lexsort brings each page's dets together in det_order; page and
   turn segments come from key changes;
-- region and mask selection, OCR center containment, the J1 first-wins
-  fill (span × fixed-block pairs per page, via ``kernels.page_pairs``),
-  and the O1 reading-order sort are segment-wise numpy;
-- only the genuinely sequential folds stay per group, fed with Python
-  lists: the OCR region folds (``ocr.ocr_page_arrays``), A2
-  ``kernels.merge_para`` per filled block, and the markdown concat.
+- region and mask selection, the OCR merge layer
+  (``ocr.ocr_page_arrays``, its region folds segment-wise over every
+  region), the J1 first-wins fill (span × fixed-block pairs per page,
+  via ``kernels.page_pairs``), and the O1 reading-order sort are
+  segment-wise numpy;
+- A2 is one ``kernels.merge_para`` call over every filled block; the
+  Python work left is string building: one piece per span and block,
+  and one join per block, page and turn.
 
 Why this exists: every turn is independent (SURVEY.md §3.1), so the
 scale-optimal plan is parse+extract fused in one narrow mapInPandas —
@@ -52,19 +54,20 @@ def _fill_first_wins(s_page, sboxes, b_page, bboxes) -> np.ndarray:
     earliest fixed block on its page with overlap_area/span_area > 0.6,
     else -1. Spans and blocks come sorted by (page, list order); pairs are
     checked chunk by chunk."""
-    assign = np.full(len(sboxes), -1, dtype=np.int64)
-    for a, b in kernels.page_pairs(s_page, b_page):
+    @np.errstate(invalid="ignore")  # inf payload coords: inf - inf, 0 * inf
+    def hit(a, b):
         s, k = sboxes[a], bboxes[b]
         ox = np.minimum(s[:, 2], k[:, 2]) - np.maximum(s[:, 0], k[:, 0])
         oy = np.minimum(s[:, 3], k[:, 3]) - np.maximum(s[:, 1], k[:, 1])
-        with np.errstate(invalid="ignore"):  # inf payload coords: 0 * inf
-            inter = np.where((ox >= 0) & (oy >= 0), ox * oy, 0.0)
-            area = (s[:, 2] - s[:, 0]) * (s[:, 3] - s[:, 1])
+        inter = np.where((ox >= 0) & (oy >= 0), ox * oy, 0.0)
+        area = (s[:, 2] - s[:, 0]) * (s[:, 3] - s[:, 1])
         ratio = np.divide(inter, area, out=np.zeros_like(inter), where=area > 0)
-        hit = np.flatnonzero(ratio > schema.FILL_RATIO)
-        a, b = a[hit], b[hit]
-        first = kernels.run_starts(a)  # pairs are a-major, b ascending
-        assign[a[first]] = b[first]
+        return ratio > schema.FILL_RATIO
+
+    a, b = kernels.pairs_where(s_page, b_page, hit)
+    first = kernels.run_starts(a)  # pairs are a-major, b ascending
+    assign = np.full(len(sboxes), -1, dtype=np.int64)
+    assign[a[first]] = b[first]
     return assign
 
 
@@ -158,18 +161,11 @@ def run_turn_arrays(dets: pd.DataFrame) -> tuple[list, list, list, list]:
         so = took[np.lexsort((ford[sp[took]], assign[took]))]
         blk = fx[assign[so]]
         rows = sp[so]
-        s_type = np.asarray(cuniq_text, dtype=object)[fcode[rows]].tolist()
-        s_content = fcontent[rows].tolist()
-        s_box = fbox[rows]
-        s_ord = ford[rows]
-        starts = np.flatnonzero(kernels.run_starts(blk))
-        bounds = np.r_[starts, len(so)].tolist()
-        for k, b in enumerate(blk[starts].tolist()):
-            s, e = bounds[k], bounds[k + 1]
-            btext[b] = kernels.merge_para(
-                s_type[s:e], s_content[s:e], s_box[s:e], s_ord[s:e],
-                is_interline=btype[b] == "isolate_formula",
-            )
+        starts = kernels.run_starts(blk)
+        btext[blk[starts]] = kernels.merge_para(
+            starts, np.asarray(cuniq_text, dtype=object)[fcode[rows]],
+            fcontent[rows], fbox[rows], ford[rows], btype[blk] == "isolate_formula",
+        )
 
     # O1 reading order per page: ymin*3000 + xmin, untouched blocks before
     # fixed ones on ties, then list position (DESIGN §3); pages of a turn

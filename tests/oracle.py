@@ -331,6 +331,46 @@ def _branch_order(dets):
     return sorted(dets, key=lambda d: (-d["score"], d["idx"]))
 
 
+def ocr_region(region, raws, masks):
+    """OCR of one layout region (pdf2markdown.py:195-256): the page's raw
+    text dets whose center lies in ``region``, merged, split by the
+    formula ``masks`` (page bboxes) and joined → text dets in page
+    coordinates."""
+    rx0, ry0, rx1, ry1 = region
+    nw, nh = rx1 - rx0 + 50, ry1 - ry0 + 50
+    mine = [r for r in raws
+            if rx0 <= (r["bbox"][0] + r["bbox"][2]) / 2 <= rx1
+            and ry0 <= (r["bbox"][1] + r["bbox"][3]) / 2 <= ry1]
+    crop = [[r["bbox"][0] - rx0 + 25, r["bbox"][1] - ry0 + 25,
+             r["bbox"][2] - rx0 + 25, r["bbox"][3] - ry0 + 25] for r in mine]
+    boxes = merge_det_boxes(sorted_boxes(crop))
+    adj = []
+    for m in masks:
+        a = [m[0] - rx0 + 25, m[1] - ry0 + 25, m[2] - rx0 + 25, m[3] - ry0 + 25]
+        if a[2] < 0 or a[3] < 0 or a[0] > nw or a[1] > nh:
+            continue
+        adj.append(a)
+    if adj:
+        boxes = update_det_boxes(boxes, adj)
+    out = []
+    for b in boxes:
+        cons = sorted(
+            [(c, r) for c, r in zip(crop, mine)
+             if b[0] <= (c[0] + c[2]) / 2 <= b[2]
+             and b[1] <= (c[1] + c[3]) / 2 <= b[3]],
+            key=lambda cr: ((cr[0][0] + cr[0][2]) / 2, cr[1]["idx"]))
+        score = (sum(r["score"] for _, r in cons) / len(cons)) if cons else 0.0
+        if score < DROP:
+            continue
+        out.append({
+            "category": "text",
+            "bbox": [b[0] - 25 + rx0, b[1] - 25 + ry0,
+                     b[2] - 25 + rx0, b[3] - 25 + ry0],
+            "score": round(score, 2),
+            "content": " ".join(r["content"] for _, r in cons)})
+    return out
+
+
 def run_page(page):
     """Full per-page fake-model + merge pipeline → ordered layout_dets list.
 
@@ -359,37 +399,7 @@ def run_page(page):
 
     # OCR per region (pdf2markdown.py:195-256)
     for reg in [d for d in page_dets if d["category"] in OCR_REGION_CLASSES]:
-        rx0, ry0, rx1, ry1 = reg["bbox"]
-        nw, nh = rx1 - rx0 + 50, ry1 - ry0 + 50
-        mine = [r for r in raws
-                if rx0 <= (r["bbox"][0] + r["bbox"][2]) / 2 <= rx1
-                and ry0 <= (r["bbox"][1] + r["bbox"][3]) / 2 <= ry1]
-        crop = [[r["bbox"][0] - rx0 + 25, r["bbox"][1] - ry0 + 25,
-                 r["bbox"][2] - rx0 + 25, r["bbox"][3] - ry0 + 25] for r in mine]
-        boxes = merge_det_boxes(sorted_boxes(crop))
-        adj = []
-        for m in masks:
-            a = [m[0] - rx0 + 25, m[1] - ry0 + 25, m[2] - rx0 + 25, m[3] - ry0 + 25]
-            if a[2] < 0 or a[3] < 0 or a[0] > nw or a[1] > nh:
-                continue
-            adj.append(a)
-        if adj:
-            boxes = update_det_boxes(boxes, adj)
-        for b in boxes:
-            cons = sorted(
-                [(c, r) for c, r in zip(crop, mine)
-                 if b[0] <= (c[0] + c[2]) / 2 <= b[2]
-                 and b[1] <= (c[1] + c[3]) / 2 <= b[3]],
-                key=lambda cr: ((cr[0][0] + cr[0][2]) / 2, cr[1]["idx"]))
-            score = (sum(r["score"] for _, r in cons) / len(cons)) if cons else 0.0
-            if score < DROP:
-                continue
-            page_dets.append({
-                "category": "text",
-                "bbox": [b[0] - 25 + rx0, b[1] - 25 + ry0,
-                         b[2] - 25 + rx0, b[3] - 25 + ry0],
-                "score": round(score, 2),
-                "content": " ".join(r["content"] for _, r in cons)})
+        page_dets.extend(ocr_region(reg["bbox"], raws, masks))
     return page_dets
 
 

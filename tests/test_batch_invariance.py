@@ -64,6 +64,10 @@ def _mixed_batch() -> pd.DataFrame:
         pdf = synth.gen_transcripts(n_convs=15, seed=seed)
         pdf["conv_id"] = f"s{seed}-" + pdf["conv_id"]
         rows += pdf[["conv_id", "turn_idx", "text", "tool"]].to_dict("records")
+    # varied pages whose regions the bubble pass does reorder
+    pdf = synth.gen_transcripts(n_convs=8, seed=7, payload_prob=1.0)
+    pdf["conv_id"] = "v7-" + pdf["conv_id"]
+    rows += pdf[["conv_id", "turn_idx", "text", "tool"]].to_dict("records")
     rng = random.Random(11)
     for doc_id in range(12):
         text = " ".join(rng.choice(WORDS) for _ in range(120))
@@ -132,3 +136,20 @@ def test_tiny_pair_chunks(batch_and_gold, monkeypatch):
     batch, gold = batch_and_gold
     monkeypatch.setattr(kernels, "PAIR_CHUNK", 7)
     _check([fused._extract_batch(batch)], gold)
+
+
+def test_bubble_swaps(batch_and_gold, monkeypatch):
+    """The batch has regions where the O2 bubble pass really swaps boxes,
+    so the tests above cover that path."""
+    bubble_pass = kernels.bubble_pass
+    swaps = []
+
+    def counting(rows):
+        idx = bubble_pass(rows)
+        swaps.append(idx != sorted(idx))
+        return idx
+
+    monkeypatch.setattr(kernels, "bubble_pass", counting)
+    batch, gold = batch_and_gold
+    _check([fused._extract_batch(batch)], gold)
+    assert sum(swaps) > 0

@@ -82,6 +82,17 @@ EDGE_TURNS = [
      "@det text|0.8|15|30|600|60|normal\n"
      "@det inline|0.8|200|40|300|40|z ^ 0\n"
      "@det title|0.9|10|500|700|500|", None),
+    # J2 mask merge sorts by x0 alone, stable in mask order: the inverted
+    # mask "b" shares its x0 with "a" and must not split off a second
+    # interval (a (x0, x1) sort repeats "dup" in two pieces)
+    ("mask-x0-tie", "@page 0 800 600\n@det plain text|0.9|10|10|700|100|\n"
+     "@det inline|0.8|100|20|200|60|a\n@det inline|0.7|100|20|70|60|b\n"
+     "@det text|0.8|60|20|90|60|dup\n@det text|0.8|85|20|600|60|tail", None),
+    # NMS divides by the union itself whenever it is > 0: two identical
+    # titles of area 1e-13 have IoU 1 and one of them goes
+    ("nms-tiny-union", "@page 0 800 600\n"
+     "@det title|0.9|10|200|10.0000001|200.000001|\n"
+     "@det title|0.8|10|200|10.0000001|200.000001|", None),
 ]
 
 
