@@ -124,20 +124,9 @@ def rank_steps(starts: np.ndarray) -> list[np.ndarray]:
     """Row positions by rank in run: element ``r`` holds every row that is
     the ``r``-th of its run. Drives the loops over rank that stand in
     for per-segment folds, one numpy step per rank."""
-    if len(starts) == 0:
-        return []
     rank = rank_in_run(starts)
     order = np.argsort(rank, kind="stable")
     return np.split(order, np.cumsum(np.bincount(rank))[:-1])
-
-
-def run_max(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    """Segment-wise cumulative max (a global ``np.maximum.accumulate``
-    would carry across segments)."""
-    out = values.copy()
-    for i in rank_steps(starts)[1:]:
-        out[i] = np.maximum(out[i - 1], values[i])
-    return out
 
 
 def run_sum(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
@@ -156,8 +145,11 @@ def islands(starts: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
     running max of ``hi`` reaches the next ``lo`` — the union fold of O5
     and O6, whose envelope hi is that running max. The segment's running
     max serves as well as the island's: every earlier island's max is
-    below a ``lo`` at or before this row."""
-    top = run_max(hi, starts)
+    below a ``lo`` at or before this row. The running max is segmented
+    (a global ``np.maximum.accumulate`` would carry across segments)."""
+    top = hi.copy()
+    for i in rank_steps(starts)[1:]:
+        top[i] = np.maximum(top[i - 1], hi[i])
     new = starts.copy()
     new[1:] |= ~(top[:-1] >= lo[1:])
     return new
@@ -351,8 +343,6 @@ def merge_para(starts: np.ndarray, types, contents, boxes: np.ndarray,
     (y0, pool order), or where it or its predecessor is ``isolated`` (an
     isolated span always sits alone in its line). A line is zh when any
     of its text spans has a CJK character."""
-    if len(starts) == 0:
-        return []
     codes, uniq = pd.factorize(np.asarray(types, dtype=object))
     t = np.array([_TYPE_CODE.get(u, 0) for u in uniq], dtype=np.int64)[codes]
     t[(t == _ISOLATED) & ~interline] = _INLINE  # fix_text_block (:71-80)
