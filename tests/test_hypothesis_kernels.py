@@ -10,7 +10,9 @@ from hypothesis import strategies as st
 import oracle
 from sparkextract import kernels
 from sparkextract.ocr import ocr_page_arrays
-from test_kernels import by_group, nms_batch, ocr_batch, oracle_ocr, oracle_para, pack, para_batch
+from test_kernels import (
+    by_group, nms_batch, ocr_batch, oracle_ocr, oracle_para, pack, para_batch,
+)
 
 coord = st.floats(min_value=0, max_value=2000, allow_nan=False, width=32)
 # ties on x0/y0 come from a few shared values
