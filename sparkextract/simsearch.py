@@ -6,14 +6,20 @@ same pattern). Cross-engine determinism: embeddings are quantized to
 integer milli-units first, so dot products are exact integer sums —
 no FP-summation-order ambiguity between Spark and the DuckDB oracle.
 
-Pairwise dots in plans are JVM-side zip_with/aggregate higher-order
-functions (``_dot``). Bulk math runs as exact int64 numpy inside
+Every pairwise sum has the twins' contract, ``list_sum(list_transform(
+range(1, len(a) + 1), i -> f(a[i], b[i])))``: terms over the common
+prefix, null terms skipped, NULL when no term is non-null. In plans it
+is the JVM-side ``_pair_sum``; bulk math runs as exact int64 numpy over
+``_arrow_matrix`` views (zero-padded, with a non-null mask) inside
 Arrow-batched Python UDFs: IVF training and cell probes (mapInArrow over
 broadcast centroids), the blocked and baseline GEMMs, and the
-small-corpus verify.
+small-corpus verify. The same contract holds on ragged, null and
+uniform vectors alike.
 """
 
 from __future__ import annotations
+
+import logging
 
 import numpy as np
 import pandas as pd
@@ -25,6 +31,8 @@ from pyspark.sql.window import Window
 
 from . import pyworker
 
+_log = logging.getLogger(__name__)
+
 
 def quantized(embeddings: DataFrame) -> DataFrame:
     # cast float→double BEFORE scaling: float*int arithmetic differs across
@@ -33,9 +41,14 @@ def quantized(embeddings: DataFrame) -> DataFrame:
     return embeddings.select("vec_id", q.alias("q"))
 
 
-def _dot(a, b):
+def _pair_sum(a, b, f=lambda x, y: x * y):
+    """Sum of ``f(x, y)`` over the zipped lists ``a`` and ``b``, null terms
+    skipped, NULL when no term is non-null: zip_with pads the shorter
+    list with nulls, so only the common prefix counts, exactly as in the
+    twins' ``list_sum`` over ``range(1, len(a) + 1)``."""
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("bigint"), lambda acc, v: acc + v
+        F.zip_with(a, b, f), F.lit(None).cast("bigint"),
+        lambda acc, v: F.coalesce(acc + v, acc, v),
     )
 
 
@@ -46,60 +59,39 @@ def baseline_ann_topk(
     BASELINE (used as exactly that by tests/test_ivf_recall.py), NOT a
     production plan. With the default query workload (vec_id % query_mod
     == 0) the query side is n/query_mod: it grows with the corpus, the
-    broadcast grows with it, and the `!=` condition makes the join a
-    BroadcastNestedLoopJoin — O(n²/query_mod) work. Safe only for a
-    FIXED small query workload; the scale path is ``ivf_topk_trained``
-    (cell-keyed probes, bounded candidates)."""
+    broadcast grows with it, and every vector meets every query —
+    O(n²/query_mod) work. Safe only for a FIXED small query workload;
+    the scale path is ``ivf_topk_trained`` (cell-keyed probes, bounded
+    candidates).
+
+    The query vectors are read once with ``toArrow()`` and broadcast;
+    each Arrow batch of the corpus is scored by ONE exact int64 GEMM
+    against them (``_pair_dots``), a dot being NULL where no index has
+    both values non-null, as in the twin."""
     base = quantized(embeddings)
-    queries = base.where(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("q").alias("qv")
+    qtab = base.where(F.col("vec_id") % query_mod == 0).toArrow()
+    Q, QM, _ = _arrow_matrix(qtab.column("q"))
+    bc = embeddings.sparkSession.sparkContext.broadcast(
+        (qtab.column("vec_id").to_numpy(), Q, QM)
     )
-    # round 6: the O(n²/query_mod) dot products run as ONE exact int64
-    # GEMM per Arrow batch (the cosine_neardup_blocked pattern) instead
-    # of an interpreted per-pair HOF over the nested-loop join — still
-    # the brute-force baseline algorithm, just vectorized. The query
-    # matrix ships in the closure (it is already collected to build the
-    # broadcast in the fallback); uniform-dim corpora only, and at most
-    # 262,144 query values (2 MB) ride in the closure.
-    qrows = queries.collect()
-    qmat_ok = (
-        qrows
-        and all(r["qv"] for r in qrows)
-        and len({len(r["qv"]) for r in qrows}) == 1
-        and len(qrows) * len(qrows[0]["qv"]) <= 262_144
-    )
-    if qmat_ok and _uniform_dim(base) == len(qrows[0]["qv"]):
-        q_ids = np.array([int(r["q_id"]) for r in qrows], dtype=np.int64)
-        qmat = np.array([r["qv"] for r in qrows], dtype=np.int64).T  # d×nq
 
-        def it(batches):
-            pyworker.install()
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vec_ids = pdf["vec_id"].to_numpy()
-                Q = np.array(
-                    [np.asarray(v, dtype=np.int64) for v in pdf["q"]]
-                )
-                dots = Q @ qmat  # (batch × nq), exact int64
-                keep = vec_ids[:, None] != q_ids[None, :]
-                ii, jj = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "q_id": q_ids[jj],
-                        "n_id": vec_ids[ii],
-                        "dot": dots[ii, jj],
-                    }
-                )
+    def it(batches):
+        pyworker.install()
+        q_ids, Q, QM = bc.value
+        for batch in batches:
+            V, M, _ = _arrow_matrix(batch.column("q"))
+            dots, ok = _pair_dots(V, M, Q, QM)
+            vec_ids = batch.column("vec_id").to_numpy()
+            ii, jj = np.nonzero(vec_ids[:, None] != q_ids[None, :])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(q_ids[jj]), pa.array(vec_ids[ii]),
+                    pa.array(dots[ii, jj], mask=~ok[ii, jj]),
+                ],
+                names=["q_id", "n_id", "dot"],
+            )
 
-        scored = base.mapInPandas(it, schema="q_id bigint, n_id bigint, dot bigint")
-    else:
-        pairs = base.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-        scored = pairs.select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            _dot(F.col("qv"), F.col("q")).alias("dot"),
-        )
+    scored = base.mapInArrow(it, schema="q_id bigint, n_id bigint, dot bigint")
     w = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("n_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -122,7 +114,7 @@ def ivf_topk(
         F.col("vec_id").alias("cell"), F.col("q").alias("cv")
     )
     scored = base.join(F.broadcast(cents), F.lit(True)).select(
-        "vec_id", "q", "cell", _dot(F.col("q"), F.col("cv")).alias("cdot")
+        "vec_id", "q", "cell", _pair_sum(F.col("q"), F.col("cv")).alias("cdot")
     )
     wc = Window.partitionBy("vec_id").orderBy(F.col("cdot").desc(), F.col("cell").asc())
     assigned = (
@@ -137,7 +129,7 @@ def ivf_topk(
         F.col("vec_id") != F.col("q_id")
     )
     scored2 = pairs.select(
-        "q_id", F.col("vec_id").alias("n_id"), _dot(F.col("qv"), F.col("q")).alias("dot")
+        "q_id", F.col("vec_id").alias("n_id"), _pair_sum(F.col("qv"), F.col("q")).alias("dot")
     )
     w = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("n_id").asc())
     return (
@@ -151,26 +143,6 @@ def ivf_topk(
 # (row, cell) pairs at once — rows per chunk = _SCORE_CHUNK // k, so a
 # kernel's float64 score block stays ≤ 32 MB at any cell count
 _SCORE_CHUNK = 1 << 22
-
-
-def _uniform_dim(base: DataFrame) -> int:
-    """One tiny aggregate answering: do ALL quantized vectors share one
-    non-null dimensionality with no null elements? Returns that dim, or
-    0 when the corpus is ragged/nullable (``baseline_ann_topk`` then
-    keeps the join phrasing whose semantics ragged data needs)."""
-    row = base.agg(
-        F.min(F.size("q")).alias("lo"),
-        F.max(F.size("q")).alias("hi"),
-        F.sum(F.when(F.col("q").isNull(), 1).otherwise(0)).alias("nulls"),
-        F.max(
-            F.exists("q", lambda x: x.isNull()).cast("int")
-        ).alias("nullel"),
-    ).first()
-    if row is None or row["lo"] is None:
-        return 0
-    if row["nulls"] or row["nullel"] or row["lo"] != row["hi"] or row["lo"] <= 0:
-        return 0
-    return int(row["lo"])
 
 
 def _arrow_matrix(col) -> tuple[np.ndarray, np.ndarray | None, np.ndarray]:
@@ -196,6 +168,23 @@ def _arrow_matrix(col) -> tuple[np.ndarray, np.ndarray | None, np.ndarray]:
     return V, M, lens
 
 
+def _pair_dots(V, M, W, N):
+    """``(dots, ok)`` for every row of ``V`` against every row of ``W``,
+    both ``_arrow_matrix`` views with masks ``M``/``N``: exact int64 dots
+    over the common prefix with nulls skipped (a zero-filled slot adds
+    nothing), and ``ok`` False where no index has both values non-null —
+    the twins' NULL dot."""
+    w = min(V.shape[1], W.shape[1])
+    dots = V[:, :w] @ W[:, :w].T
+    Mw = None if M is None or M[:, :w].all() else M[:, :w]
+    Nw = None if N is None or N[:, :w].all() else N[:, :w]
+    if Mw is None and Nw is None:
+        return dots, np.full(dots.shape, w > 0)
+    Mw = np.ones((len(V), w), bool) if Mw is None else Mw
+    Nw = np.ones((len(W), w), bool) if Nw is None else Nw
+    return dots, (Mw.astype(np.float32) @ Nw.T.astype(np.float32)) > 0
+
+
 def _scores(V, M, cent) -> np.ndarray:
     """(rows × k) ranking scores dot(v, sum_c) / count_c — the exact int64
     dot divided once in float64, bit-identical to the twin's
@@ -203,11 +192,9 @@ def _scores(V, M, cent) -> np.ndarray:
     (the twin's NULL cdot, which ranks last). A dim one side lacks adds
     nothing, as in the twin's dim join."""
     cells, C, P, counts = cent
-    w = min(V.shape[1], C.shape[1])
-    s = (V[:, :w] @ C[:, :w].T).astype(np.float64) / counts
-    if M is not None or not P[:, :w].all():
-        Mw = np.ones((len(V), w), np.float32) if M is None else M[:, :w].astype(np.float32)
-        s[(Mw @ P[:, :w].T.astype(np.float32)) == 0] = -np.inf
+    dots, ok = _pair_dots(V, M, C, P)
+    s = dots.astype(np.float64) / counts
+    s[~ok] = -np.inf
     return s
 
 
@@ -434,9 +421,7 @@ def ivf_topk_trained(
     exploded join, no window, no join-back for q. Null and empty vectors
     are neither assigned nor queried, and cells are ranked under
     ``ivf_train``'s ragged/null contract; the final exact dot is
-    ``_dot``, which is NULL when the two lengths differ or an element is
-    null (the twin sums the common prefix and skips nulls — a known
-    divergence on ragged data)."""
+    ``_pair_sum`` (common prefix, nulls skipped, NULL ranked last)."""
     base = quantized(embeddings)
     _, cent = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
     bc = embeddings.sparkSession.sparkContext.broadcast(cent)
@@ -450,7 +435,7 @@ def ivf_topk_trained(
         F.col("vec_id") != F.col("q_id")
     )
     scored2 = pairs.select(
-        "q_id", F.col("vec_id").alias("n_id"), _dot(F.col("qv"), F.col("q")).alias("dot")
+        "q_id", F.col("vec_id").alias("n_id"), _pair_sum(F.col("qv"), F.col("q")).alias("dot")
     )
     w2 = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("n_id").asc())
     return (
@@ -689,11 +674,14 @@ def cosine_neardup_blocked(
 ) -> DataFrame:
     """Exact near-dup via block-nested-loop matmul: identical result set to
     ``cosine_neardup`` (same integer quantization and squared compare) but
-    the inner product runs as ONE numpy matmul per block pair inside
-    applyInPandas instead of a per-pair higher-order function. Each vector
+    the inner product runs as ONE exact int64 matmul per block pair inside
+    applyInArrow instead of a per-pair higher-order function. Each vector
     is replicated ``blocks`` times through one shuffle; compute per group
-    is a dense (n/B × n/B) GEMM — the classic all-pairs scale pattern."""
-    t2 = float(threshold * threshold * 1_000_000)
+    is a dense (n/B × n/B) GEMM — the classic all-pairs scale pattern.
+    Ragged and null vectors follow the ``_pair_sum`` contract: the
+    zero-filled ``_arrow_matrix`` slots add nothing, and a dot with no
+    non-null term (the twin's NULL) is 0, which fails ``dot > 0`` alike."""
+    t2 = float(int(round(threshold * threshold * 1_000_000)))
     base = quantized(embeddings).withColumn(
         "blk", F.col("vec_id") % F.lit(blocks)
     )
@@ -709,99 +697,92 @@ def cosine_neardup_blocked(
                 F.col("partner").alias("lo"), F.col("blk").alias("hi"))
     )
 
-    def gemm(pdf: pd.DataFrame) -> pd.DataFrame:
+    def gemm(tab: pa.Table) -> pa.Table:
         pyworker.install()
-        lo, hi = int(pdf["lo"].iat[0]), int(pdf["hi"].iat[0])
-        a = pdf[pdf["blk"] == lo]
-        b = pdf[pdf["blk"] == hi] if hi != lo else a
-        am = np.array(list(a["q"]), dtype=np.float64)
-        bm = np.array(list(b["q"]), dtype=np.float64)
-        if len(am) == 0 or len(bm) == 0:
-            return pd.DataFrame(columns=["a_id", "b_id", "dot"])
+        lo, hi = tab.column("lo")[0].as_py(), tab.column("hi")[0].as_py()
+        blk = tab.column("blk").to_numpy()
+        ids = tab.column("vec_id").to_numpy()
+        V, _, _ = _arrow_matrix(tab.column("q"))
+        a, b = blk == lo, blk == hi
+        am, bm, ai, bi = V[a], V[b], ids[a], ids[b]
         dots = am @ bm.T
-        an = (am * am).sum(axis=1)
-        bn = (bm * bm).sum(axis=1)
-        ok = (dots > 0) & (dots * dots * 1_000_000.0 > t2 * an[:, None] * bn[None, :])
-        ai = a["vec_id"].to_numpy()
-        bi = b["vec_id"].to_numpy()
+        an = np.einsum("ij,ij->i", am, am).astype(np.float64)
+        bn = np.einsum("ij,ij->i", bm, bm).astype(np.float64)
+        d = dots.astype(np.float64)
+        ok = (dots > 0) & (d * d * 1_000_000.0 > t2 * an[:, None] * bn[None, :])
         ii, jj = np.nonzero(ok)
         # same-block groups see each unordered pair twice (and the
         # diagonal) → dedupe with ai<bi; cross-block pairs appear exactly
         # once and must ALL be kept (their ids are not ordered by block)
         keep = ai[ii] < bi[jj] if lo == hi else np.ones(len(ii), dtype=bool)
-        return pd.DataFrame(
+        return pa.table(
             {
                 "a_id": np.minimum(ai[ii], bi[jj])[keep],
                 "b_id": np.maximum(ai[ii], bi[jj])[keep],
-                "dot": dots[ii, jj][keep].astype(np.int64),
+                "dot": dots[ii, jj][keep],
             }
         )
 
-    return rep.groupBy("lo", "hi").applyInPandas(
+    return rep.groupBy("lo", "hi").applyInArrow(
         gemm, schema="a_id bigint, b_id bigint, dot bigint"
     )
 
 
-def neardup_clusters(
-    documents: DataFrame, max_iter: int = 1000, pointer_doubling: bool = False
-) -> DataFrame:
+def neardup_clusters(documents: DataFrame, max_iter: int = 1000) -> DataFrame:
     """Near-dup clustering = connected components over the LSH candidate
     graph — see ``_propagate_min_labels`` for the propagation contract
-    (convergence, pointer doubling, checkpointing)."""
+    (size gate, convergence, checkpointing)."""
     from .textops import lsh_candidate_pairs
 
     return _propagate_min_labels(
         documents.select("doc_id"),
         lsh_candidate_pairs(documents).select("doc_a", "doc_b"),
         max_iter=max_iter,
-        pointer_doubling=pointer_doubling,
     )
 
 
+def _min_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of the undirected edges (a[i], b[i]) as
+    ``(ids, labels)``: every id that some edge touches, sorted, and the
+    smallest id reachable from it. Ids are relabelled to their ranks
+    with ``np.unique``; each round hooks every edge's larger root under
+    the smallest root it meets, then pointer-jumps until the parents
+    stop changing. A parent is never larger than its node, so the roots
+    are the component minima, and each round with an unsettled edge
+    lowers some root's parent, so the loop ends."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(ids))
+    while True:
+        pu, pv = parent[u], parent[v]
+        if (pu == pv).all():
+            return ids, ids[parent]
+        np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+        while True:
+            jumped = parent[parent]
+            if (jumped == parent).all():
+                break
+            parent = jumped
+
+
 def _components_driver_unionfind(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Small-edge-set fast path for ``_propagate_min_labels``: collect the
-    (bounded — the caller guards the size) edge list, run union-find with
-    min-id roots on the driver, and broadcast-join the resulting
-    {edge-touched node → component min} map onto the node stream. Nodes
-    are NEVER collected — a 100 TB corpus with a few million duplicate
-    edges stays a stream + one broadcast map. Exactly the distributed
-    loop's fixpoint: every node's label = min reachable doc_id."""
-    rows = edges.collect()
-    parent: dict = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]  # path halving
-            x = parent[x]
-        return x
-
-    for r in rows:
-        a, b = r[0], r[1]
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # smaller id becomes the root, so a root IS its component's
-            # min reachable id
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
+    """Small-edge-set fast path for ``_propagate_min_labels``: read the
+    (bounded — the caller guards the size) edge list with ``toArrow()``,
+    label it with the numpy ``_min_labels`` on the driver, and
+    broadcast-join the resulting {edge-touched node → component min} map
+    onto the node stream. Nodes are NEVER collected — a 100 TB corpus
+    with a few million duplicate edges stays a stream + one broadcast
+    map. Exactly the distributed loop's fixpoint: every node's label =
+    min reachable doc_id."""
+    tab = edges.toArrow()
     edges.unpersist()
-    out = nodes.select("doc_id", F.col("doc_id").alias("cluster"))
-    if not parent:
-        return out
-    from pyspark.sql.types import StructField, StructType
-
-    t = edges.schema[0].dataType
-    # pandas input: an Arrow LocalRelation, not a Python-RDD scan (see
-    # ``_ivf_train_impl``)
+    ids, labels = _min_labels(
+        tab.column(0).to_numpy(), tab.column(1).to_numpy()
+    )
+    t = tab.schema.field(0).type
+    # an Arrow table plans as a LocalRelation, not a Python-RDD scan
     mapdf = nodes.sparkSession.createDataFrame(
-        pd.DataFrame(
-            [(x, find(x)) for x in parent], columns=["doc_id", "minlab"]
-        ),
-        StructType([StructField("doc_id", t), StructField("minlab", t)]),
+        pa.table({"doc_id": pa.array(ids, t), "minlab": pa.array(labels, t)})
     )
     return (
         nodes.select("doc_id")
@@ -813,26 +794,28 @@ def _components_driver_unionfind(nodes: DataFrame, edges: DataFrame) -> DataFram
     )
 
 
+# edge-count gate of ``_propagate_min_labels``: at most this many edges
+# are labelled on the driver, more take the distributed loop
+_DRIVER_EDGE_THRESHOLD = 2_000_000
+
+
 def _propagate_min_labels(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    max_iter: int = 1000,
-    pointer_doubling: bool = False,
-    driver_edge_threshold: int = 2_000_000,
+    nodes: DataFrame, pairs: DataFrame, max_iter: int = 1000
 ) -> DataFrame:
     """Connected components by min-label propagation (label = smallest
     reachable doc_id). ``nodes`` has one ``doc_id`` column; ``pairs``
     carries undirected edges (doc_a, doc_b).
 
-    Size-adaptive (round 6): when the edge set is small
-    (``driver_edge_threshold``, default 2M rows), components run as one
-    driver union-find over the EDGES ONLY plus a broadcast join onto the
-    node stream (``_components_driver_unionfind``) — replacing
+    Size-adaptive: when the edge set has at most
+    ``_DRIVER_EDGE_THRESHOLD`` (2M) rows, components run as one numpy
+    union-find on the driver over the EDGES ONLY plus a broadcast join
+    onto the node stream (``_components_driver_unionfind``) — replacing
     diameter-many join+checkpoint rounds (~1 s each of fixed latency)
-    with one job. Driver cost is Python objects, not raw ints: measured
-    on CPython 3.11, each collected edge Row takes ~330 B and the
-    union-find dict ~105 B per edge, so 2M edges hold ~0.9 GB of driver
-    memory at the threshold.
+    with one job. The decision is logged with the edge count. Driver
+    cost is flat arrays, not Python objects: measured on 2M-edge random
+    graphs and a 2M-edge chain, the edges take 32 MB of Arrow, the numpy
+    relabel and rounds peak at ~215 MB, and the label map is ≤ 40 MB of
+    Arrow — ~0.3 GB at the threshold, and 1.0–1.8 s.
     Duplicate-pair edge sets are sparse by nature (they are the output
     of near-dup DETECTION), so this is the production-common case; a
     bigger graph takes the distributed loop below, which remains the
@@ -843,20 +826,15 @@ def _propagate_min_labels(
     labels equal the full transitive closure that the DuckDB
     recursive-CTE twins compute; ``max_iter`` is only a runaway guard
     (one-hop propagation converges in ≤ graph-diameter rounds, itself ≤
-    |V|) and raises if ever hit.
-
-    ``pointer_doubling=True`` adds a grandparent shortcut per round
-    (node also adopts its label's label) → O(log diameter) rounds — the
-    same fixpoint (a label is always some reachable doc_id). MEASURED
-    before defaulting (re-measured after the per-round-checkpoint fix
-    below): on the synthetic corpus near-dup components are shallow —
-    BOTH variants converge in 4 rounds at sf0.1 and run within noise of
-    each other (3.1 s vs 2.5 s text graph; 4.6 s vs 4.4 s embedding
-    graph) — so doubling buys nothing here and stays opt-in, for corpora
-    with deep duplicate chains (mirror farms, versioned scrapes) where
-    diameter-many rounds would dominate."""
+    |V|) and raises if ever hit."""
     edges = pairs.persist()
-    if edges.count() <= driver_edge_threshold:
+    n_edges = edges.count()
+    driver = n_edges <= _DRIVER_EDGE_THRESHOLD
+    _log.info(
+        "components: %s (%d edges, driver limit %d)",
+        "driver" if driver else "distributed", n_edges, _DRIVER_EDGE_THRESHOLD,
+    )
+    if driver:
         return _components_driver_unionfind(nodes, edges)
     sym = edges.selectExpr("doc_a as a", "doc_b as b").unionByName(
         edges.selectExpr("doc_b as a", "doc_a as b")
@@ -870,45 +848,25 @@ def _propagate_min_labels(
             .groupBy("a")
             .agg(F.min("cluster").alias("nbr_min"))
         )
-        new = labels.join(nbr, labels["doc_id"] == nbr["a"], "left")
-        if pointer_doubling:
-            grand = (
-                labels.alias("l1")
-                .join(labels.alias("l2"), F.col("l1.cluster") == F.col("l2.doc_id"))
-                .select(
-                    F.col("l1.doc_id").alias("g_id"), F.col("l2.cluster").alias("gp")
-                )
-            )
-            new = new.join(grand, labels["doc_id"] == F.col("g_id"), "left").select(
-                "doc_id",
-                F.col("cluster").alias("old"),
-                F.least(
-                    F.col("cluster"),
-                    F.coalesce("nbr_min", F.col("cluster")),
-                    F.coalesce("gp", F.col("cluster")),
-                ).alias("cluster"),
-            )
-        else:
-            new = new.select(
-                "doc_id",
-                F.col("cluster").alias("old"),
-                F.least(F.col("cluster"), F.coalesce("nbr_min", F.col("cluster")))
-                .alias("cluster"),
-            )
+        new = labels.join(nbr, labels["doc_id"] == nbr["a"], "left").select(
+            "doc_id",
+            F.col("cluster").alias("old"),
+            F.least(F.col("cluster"), F.coalesce("nbr_min", F.col("cluster")))
+            .alias("cluster"),
+        )
         # eager checkpoint EVERY round: each round's label table must be
         # materialized anyway (the convergence count below), and cutting
         # the lineage here keeps every plan the driver touches
         # round-sized. The previous lazy every-8-rounds variant let the
         # logical plan grow geometrically (the labels subtree is embedded
-        # 2× per round, 3× with doubling) — at round ~8 the driver OOM'd
-        # just STRINGIFYING the plan for AQE's explain hook, and each
-        # `changed` count re-analyzed the whole history (~80 s for a
-        # 2000-node graph; ~1 s/round after this change). Superseded
-        # checkpoint blocks are freed by the ContextCleaner as each
-        # round's DataFrame goes unreferenced. Carrying the OLD label in
-        # the checkpointed frame makes the convergence check a bare
-        # filter-count over the checkpoint instead of a join (round 6:
-        # one fewer join job per round).
+        # 2× per round) — at round ~8 the driver OOM'd just STRINGIFYING
+        # the plan for AQE's explain hook, and each `changed` count
+        # re-analyzed the whole history (~80 s for a 2000-node graph;
+        # ~1 s/round after this change). Superseded checkpoint blocks are
+        # freed by the ContextCleaner as each round's DataFrame goes
+        # unreferenced. Carrying the OLD label in the checkpointed frame
+        # makes the convergence check a bare filter-count over the
+        # checkpoint instead of a join (one fewer join job per round).
         new = new.localCheckpoint(eager=True)
         changed = new.where(F.col("cluster") != F.col("old")).count()
         labels = new.select("doc_id", "cluster")
@@ -924,7 +882,7 @@ def _propagate_min_labels(
     )
 
 
-# vector-table budget for the broadcast verify fast path below: rows×dim
+# vector-table budget for the broadcast verify fast path below: rows×width
 # values of int64 (≤ ~16 MB broadcast). Past it — i.e. for genuinely
 # large corpora — the join phrasing is the scale path.
 _VERIFY_TABLE_VALUES = 2_000_000
@@ -938,22 +896,31 @@ def _verify_cosine_pairs(
     keep cos(a,b) > threshold via dot²·10⁶ > t²·10⁶·|a|²·|b|² (no sqrt,
     no FP division — engine-portable).
 
-    Round 6 small-corpus fast path: when the whole quantized vector
-    table fits ``_VERIFY_TABLE_VALUES`` (uniform dims, no nulls), it is
-    broadcast once and each candidate batch is verified by ONE exact
-    int64 row-dot pass in numpy (`cosine_neardup_blocked`'s arithmetic:
-    the squared-threshold compare runs in float64 with the identical
-    association Spark's double expressions use). Pairs whose ids lack a
-    (non-null, well-formed) vector drop exactly as the inner joins
-    dropped them. Bigger corpora keep the two keyed joins — that is the
-    100 TB shape."""
+    Small-corpus fast path, chosen by size alone: when the whole
+    quantized vector table fits ``_VERIFY_TABLE_VALUES`` as a
+    zero-padded ``_arrow_matrix``, it is broadcast once and each
+    candidate batch is verified by ONE exact int64 row-dot pass in numpy
+    (`cosine_neardup_blocked`'s arithmetic: the squared-threshold compare
+    runs in float64 with the identical association Spark's double
+    expressions use). Zero-filled slots add nothing, so the dot is the
+    ``_pair_sum`` one on any vector shape; where the twin's dot is NULL
+    this one is 0, and both fail ``dot > 0``. Pairs whose ids lack a
+    vector drop exactly as the inner joins drop them. Bigger corpora keep
+    the two keyed joins — that is the 100 TB shape. The decision is
+    logged with the probed rows × width."""
     base = quantized(embeddings)
     t2i = int(round(threshold * threshold * 1_000_000))
     # bounded probe: collect at most 32769 rows — enough to decide, and
-    # the budget check below re-guards rows×dim before building
+    # the budget check below re-guards rows×width before building
     probe = base.limit(32769).toArrow()
-    V, M, _ = _arrow_matrix(probe.column("q"))
-    if len(V) <= 32768 and M is None and 0 < V.size <= _VERIFY_TABLE_VALUES:
+    V, _, _ = _arrow_matrix(probe.column("q"))
+    broadcast = len(V) <= 32768 and 0 < V.size <= _VERIFY_TABLE_VALUES
+    _log.info(
+        "verify: %s (probed %d rows x width %d, table limit %d values)",
+        "broadcast" if broadcast else "join", len(V), V.shape[1],
+        _VERIFY_TABLE_VALUES,
+    )
+    if broadcast:
         ids = probe.column("vec_id").to_numpy()
         order = np.argsort(ids, kind="stable")
         ids_s = ids[order]
@@ -993,7 +960,7 @@ def _verify_cosine_pairs(
             F.col(b_col).cast("bigint").alias(b_col),
         ).mapInPandas(it, schema="a_id bigint, b_id bigint, dot bigint")
     norms = base.select(
-        "vec_id", F.col("q").alias("v"), _dot(F.col("q"), F.col("q")).alias("n2")
+        "vec_id", F.col("q").alias("v"), _pair_sum(F.col("q"), F.col("q")).alias("n2")
     )
     t2 = int(round(threshold * threshold * 1_000_000))
     pairs = (
@@ -1010,7 +977,7 @@ def _verify_cosine_pairs(
     )
     d = F.col("dot").cast("double")
     return (
-        pairs.withColumn("dot", _dot(F.col("av"), F.col("bv")))
+        pairs.withColumn("dot", _pair_sum(F.col("av"), F.col("bv")))
         .where(
             (F.col("dot") > 0)
             & (
@@ -1097,10 +1064,8 @@ def cosine_neardup_ivf(
     The probe list is one narrow mapInArrow pass over the broadcast
     trained centroids (``_probes``). Ragged/null contract: null and
     empty vectors get no cells, and cells rank under ``ivf_train``'s
-    contract; the verify (``_verify_cosine_pairs``) drops a pair whose
-    vectors differ in length or hold a null (``_dot`` is NULL there),
-    where the twin sums the common prefix and skips nulls — a known
-    divergence on ragged data."""
+    contract; the verify (``_verify_cosine_pairs``) sums the common
+    prefix and skips nulls, as the twin does."""
     if n_cells == "auto":
         n_cells = auto_cells(embeddings.count())
     if nprobe == "auto":
@@ -1763,7 +1728,7 @@ def cosine_neardup(embeddings: DataFrame, threshold: float = 0.35) -> DataFrame:
     verify) or ``cosine_neardup_blocked`` (bounded-replication GEMM)."""
     base = quantized(embeddings)
     norms = base.select(
-        "vec_id", F.col("q").alias("v"), _dot(F.col("q"), F.col("q")).alias("n2")
+        "vec_id", F.col("q").alias("v"), _pair_sum(F.col("q"), F.col("q")).alias("n2")
     )
     a = norms.select(
         F.col("vec_id").alias("a_id"), F.col("v").alias("av"), F.col("n2").alias("an")
@@ -1777,7 +1742,7 @@ def cosine_neardup(embeddings: DataFrame, threshold: float = 0.35) -> DataFrame:
     # bit-identical across engines, and immune to bigint overflow
     d = F.col("dot").cast("double")
     return (
-        pairs.withColumn("dot", _dot(F.col("av"), F.col("bv")))
+        pairs.withColumn("dot", _pair_sum(F.col("av"), F.col("bv")))
         .where(
             (F.col("dot") > 0)
             & (
@@ -1832,19 +1797,15 @@ def kcenter_select(embeddings: DataFrame, k: int = 8) -> DataFrame:
         raise ValueError("embeddings is empty")
 
     def dist_to(vec):
-        c = F.array(*[F.lit(int(x)) for x in vec])
-        return F.aggregate(
-            F.zip_with("q", c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
+        c = F.lit(None) if vec is None else F.array(*map(F.lit, vec))
+        return _pair_sum("q", c.cast("array<bigint>"), lambda x, y: (x - y) * (x - y))
 
     selected = [(0, int(seed.vec_id), None)]
     cur = base.select("vec_id", "q", dist_to(seed.q).alias("mind"))
     for r in range(1, k):
         cur = cur.localCheckpoint(eager=True)
         far = cur.orderBy(F.col("mind").desc(), F.col("vec_id").asc()).first()
-        selected.append((r, int(far.vec_id), int(far.mind)))
+        selected.append((r, far.vec_id, far.mind))
         cur = cur.select(
             "vec_id", "q", F.least("mind", dist_to(far.q)).alias("mind")
         )

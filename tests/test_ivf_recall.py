@@ -4,12 +4,15 @@ ivf_topk / ivf_topk_trained against the brute-force baseline_ann_topk ground
 truth, with n_cells sensitivity. The committed sf0.01/sf0.1 numbers live
 in BENCH/BASELINE.md (§recall).
 
-The second half pins the IVF train/probe kernels themselves: DuckDB-twin
-parity on ragged and null vectors, and the chunked numpy kernels against
-full-matrix references without Spark."""
+The second half pins every vector operator to its DuckDB twin on
+ragged and null vectors (one pair-sum contract: common prefix, nulls
+skipped, NULL when no term is non-null), and the chunked numpy kernels
+against full-matrix references without Spark."""
 
 import collections
+import logging
 import os
+import sys
 
 import duckdb
 import numpy as np
@@ -17,6 +20,9 @@ import pyarrow as pa
 import pytest
 
 from sparkextract import simsearch
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import __spark_entry__ as entrymod  # noqa: E402
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
@@ -92,21 +98,45 @@ def test_trained_not_catastrophically_worse(report):
 
 
 def test_numpy_paths_equal_join_paths(spark, monkeypatch):
-    """The broadcast numpy verify (small uniform corpus) must keep exactly
-    the pairs the keyed-join verify keeps — pinned by forcing
-    ``_VERIFY_TABLE_VALUES`` to 0 (join path) and diffing the IVF near-dup
-    output. IVF train/probe have one implementation; their twin parity on
-    ragged/null vectors is pinned below."""
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    """The broadcast numpy verify must keep exactly the pairs the
+    keyed-join verify keeps — pinned by forcing ``_VERIFY_TABLE_VALUES``
+    to 0 (join path) and diffing the IVF near-dup output, on the uniform
+    corpus and on a ragged fixture with null vectors and elements."""
+    cases = [
+        (spark.read.parquet(f"{SF_DIR}/embeddings.parquet"), 16, "auto"),
+        (spark.createDataFrame(vector_table(0, "combined")), 6, 3),
+    ]
 
     def snap():
-        return sorted(
-            map(tuple, simsearch.cosine_neardup_ivf(emb, n_cells=16).collect())
-        )
+        return [
+            sorted(map(tuple, simsearch.cosine_neardup_ivf(
+                emb, n_cells=cells, nprobe=nprobe
+            ).collect()))
+            for emb, cells, nprobe in cases
+        ]
 
     fast = snap()
+    assert fast[1], "the ragged fixture must keep some pairs"
     monkeypatch.setattr(simsearch, "_VERIFY_TABLE_VALUES", 0)
     assert fast == snap()
+
+
+def test_verify_gate_is_logged(spark, monkeypatch, caplog):
+    """The verify size gate logs which kernel it picked, with the probed
+    rows × width (the fixture's longest vector has 8 elements)."""
+    emb = spark.createDataFrame(vector_table(0, "ragged"))
+    cand = spark.createDataFrame([(0, 1)], "doc_a bigint, doc_b bigint")
+    caplog.set_level(logging.INFO, logger="sparkextract")
+    simsearch._verify_cosine_pairs(cand, emb, 0.35)
+    monkeypatch.setattr(simsearch, "_VERIFY_TABLE_VALUES", 0)
+    simsearch._verify_cosine_pairs(cand, emb, 0.35)
+    lines = [
+        r.getMessage() for r in caplog.records
+        if r.name == "sparkextract.simsearch" and r.getMessage().startswith("verify:")
+    ]
+    assert len(lines) == 2, lines
+    assert lines[0].startswith("verify: broadcast (probed 60 rows x width 8,"), lines
+    assert lines[1].startswith("verify: join (probed 60 rows x width 8,"), lines
 
 
 @pytest.mark.parametrize("shape", SHAPES)
@@ -143,40 +173,86 @@ def test_probe_lists_twin_parity(spark, shape):
 
 @pytest.mark.parametrize("shape", SHAPES)
 def test_cosine_neardup_ivf_within_twin(spark, shape):
-    """On any vector shape the near-dup path runs and keeps a subset of
-    the twin's pairs: candidates are equal (probe parity above) and the
-    verify only drops the ragged/null pairs ``_dot`` makes NULL."""
+    """On any vector shape the near-dup path keeps exactly the twin's
+    pairs: candidates are equal (probe parity above) and the verify sums
+    the common prefix and skips nulls, as the twin does."""
     tab = vector_table(3, shape)
     got = _spark(
         simsearch.cosine_neardup_ivf(spark.createDataFrame(tab), n_cells=6, nprobe=3)
     )
-    want = _twin(tab, simsearch.cosine_neardup_ivf_sql(n_cells=6, nprobe=3))
-    assert got and not got - want
+    assert got
+    assert got == _twin(tab, simsearch.cosine_neardup_ivf_sql(n_cells=6, nprobe=3))
 
 
-_DOT_DIVERGENCE = (
-    "_dot (zip_with pads the shorter list with null, so the aggregate is "
-    "NULL) differs from the twins' list_sum over range(1, len(a)+1), which "
-    "sums the common prefix and skips nulls; see ROADMAP carried fixes"
-)
+# operator → (Spark call, twin text); the baselines and kcenter use the
+# driver's oracle_sql() texts at their default parameters
+OPERATORS = {
+    "ivf_topk": (simsearch.ivf_topk, lambda: simsearch.ivf_topk_sql()),
+    "cosine_neardup": (
+        simsearch.cosine_neardup,
+        lambda: entrymod.oracle_sql()["baseline_cosine_neardup"],
+    ),
+    "cosine_neardup_blocked": (
+        simsearch.cosine_neardup_blocked,
+        lambda: entrymod.oracle_sql()["baseline_cosine_neardup_blocked"],
+    ),
+    # k = 59 keeps every candidate of the 60-vector fixtures, so the
+    # NULL dots of null and empty vectors show in the output
+    "baseline_ann_topk": (
+        lambda emb: simsearch.baseline_ann_topk(emb, k=59),
+        lambda: entrymod.oracle_sql()["baseline_ann_cosine_topk"].replace(
+            "WHERE rank <= 10", "WHERE rank <= 59"
+        ),
+    ),
+    "ivf_topk_trained": (
+        lambda emb: simsearch.ivf_topk_trained(emb, n_cells=6, nprobe=3),
+        lambda: simsearch.ivf_topk_trained_sql(n_cells=6, nprobe=3),
+    ),
+    "cosine_neardup_ivf": (
+        lambda emb: simsearch.cosine_neardup_ivf(emb, n_cells=6, nprobe=3),
+        lambda: simsearch.cosine_neardup_ivf_sql(n_cells=6, nprobe=3),
+    ),
+    "kcenter_select": (
+        simsearch.kcenter_select, lambda: entrymod.oracle_sql()["kcenter_select"]
+    ),
+}
 
 
-@pytest.mark.xfail(strict=True, reason=_DOT_DIVERGENCE)
-def test_cosine_neardup_ivf_twin_on_ragged(spark):
-    tab = vector_table(0, "ragged")
-    got = simsearch.cosine_neardup_ivf(spark.createDataFrame(tab), n_cells=6, nprobe=3)
-    assert _spark(got) == _twin(
-        tab, simsearch.cosine_neardup_ivf_sql(n_cells=6, nprobe=3)
+@pytest.mark.parametrize("shape", SHAPES)
+@pytest.mark.parametrize("op", OPERATORS)
+def test_operator_twin_parity(spark, op, shape):
+    """Every operator built on a pairwise vector sum equals its DuckDB
+    twin on ragged lengths, null and empty vectors and null elements:
+    each dot or distance sums the common prefix, skips null terms and is
+    NULL (ranked last, or failing ``dot > 0``) when no term is non-null."""
+    run, sql = OPERATORS[op]
+    tab = vector_table(0, shape)
+    got = _spark(run(spark.createDataFrame(tab)))
+    assert got
+    assert got == _twin(tab, sql())
+
+
+def test_neardup_threshold_boundary(spark):
+    """A pair at exactly cos = 0.35 (dot 7,000, norms² 10⁶ and 400) fails
+    the strict compare in every near-dup path and twin: the squared
+    threshold is the integer 122,500 everywhere, never 0.35² · 10⁶ in
+    floating point (122,499.99999999999), which kept this pair."""
+    tab = pa.table(
+        {
+            "vec_id": pa.array([0, 1], pa.int64()),
+            "embedding": pa.array(
+                [[1.0, 0, 0, 0, 0], [0.007, 0.017, 0.007, 0.003, 0.002]],
+                pa.list_(pa.float32()),
+            ),
+        }
     )
-
-
-@pytest.mark.xfail(strict=True, reason=_DOT_DIVERGENCE)
-def test_ivf_topk_trained_twin_on_ragged(spark):
-    tab = vector_table(0, "ragged")
-    got = simsearch.ivf_topk_trained(spark.createDataFrame(tab), n_cells=6, nprobe=3)
-    assert _spark(got) == _twin(
-        tab, simsearch.ivf_topk_trained_sql(n_cells=6, nprobe=3)
-    )
+    emb = spark.createDataFrame(tab)
+    assert not _spark(simsearch.cosine_neardup_blocked(emb))
+    assert not _spark(simsearch.cosine_neardup(emb))
+    assert not _twin(tab, entrymod.oracle_sql()["baseline_cosine_neardup_blocked"])
+    # just below the boundary the pair passes everywhere
+    assert _spark(simsearch.cosine_neardup_blocked(emb, threshold=0.3499))
+    assert _spark(simsearch.cosine_neardup(emb, threshold=0.3499))
 
 
 def test_chunked_kernels_equal_full_matrix_reference():
@@ -221,6 +297,7 @@ def test_chunked_kernels_equal_full_matrix_reference():
         score = (Vr @ C[:, :width].T).astype(np.float64) / counts
         hit = Mr.astype(np.int64) @ P[:, :width].T.astype(np.int64)
         score[hit == 0] = -np.inf
+        np.testing.assert_array_equal(simsearch._scores(V, M, cent), score)
         ref = np.argsort(-score, axis=1, kind="stable")[:, :3]
         np.testing.assert_array_equal(simsearch._top_cells(V, M, cent, 3), ref)
 

@@ -4,8 +4,10 @@ question is what fraction of true above-threshold pairs the cell
 blocking surfaces. Committed sf0.01/sf0.1 numbers: BENCH/BASELINE.md
 §near-dup recall."""
 
+import logging
 import os
 
+import numpy as np
 import pytest
 
 from sparkextract import simsearch
@@ -56,7 +58,7 @@ def test_auto_nprobe_rule_matches_sql_twin():
         cells *= 2
 
 
-def test_components_driver_equals_distributed(spark):
+def test_components_driver_equals_distributed(spark, monkeypatch):
     """Round-6 size-adaptive components: the driver union-find fast path
     (edges under the threshold) must label every node identically to the
     distributed min-label loop, including singletons, chains that force
@@ -75,12 +77,81 @@ def test_components_driver_equals_distributed(spark):
         (r.doc_id, r.cluster)
         for r in simsearch._propagate_min_labels(nodes, pairs).collect()
     }
+    monkeypatch.setattr(simsearch, "_DRIVER_EDGE_THRESHOLD", 0)
     slow = {
         (r.doc_id, r.cluster)
-        for r in simsearch._propagate_min_labels(
-            nodes, pairs, driver_edge_threshold=0
-        ).collect()
+        for r in simsearch._propagate_min_labels(nodes, pairs).collect()
     }
     assert fast == slow
     assert (5, 3) in fast and (7, 3) in fast and (15, 2) in fast
     assert (0, 0) in fast and (39, 39) in fast  # untouched nodes self-label
+
+
+def test_components_gate_is_logged(spark, monkeypatch, caplog):
+    """The components size gate logs driver or distributed with the edge
+    count."""
+    from pyspark.sql import functions as F
+
+    nodes = spark.range(0, 4).select(F.col("id").alias("doc_id"))
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a BIGINT, doc_b BIGINT")
+    caplog.set_level(logging.INFO, logger="sparkextract")
+    simsearch._propagate_min_labels(nodes, pairs)
+    monkeypatch.setattr(simsearch, "_DRIVER_EDGE_THRESHOLD", 1)
+    simsearch._propagate_min_labels(nodes, pairs)
+    lines = [
+        r.getMessage() for r in caplog.records
+        if r.name == "sparkextract.simsearch"
+        and r.getMessage().startswith("components:")
+    ]
+    assert lines == [
+        "components: driver (2 edges, driver limit 2000000)",
+        "components: distributed (2 edges, driver limit 1)",
+    ]
+
+
+def _dict_min_labels(edges):
+    """Reference: union-find on a dict with min-id roots (the component
+    label is its smallest id)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_numpy_min_labels_equal_dict_unionfind():
+    """No Spark: ``_min_labels`` labels every edge-touched id with its
+    component minimum, like a dict union-find — on random graphs of
+    several densities, a 2,000-node chain in both id orders and shuffled,
+    duplicate and self edges, and an empty edge set."""
+    rng = np.random.default_rng(5)
+    graphs = []
+    for n, m in ((10, 5), (50, 40), (200, 150), (200, 600), (1000, 900)):
+        for _ in range(10):
+            ids = rng.choice(10 * n, n, replace=False)
+            graphs.append(ids[rng.integers(0, n, (m, 2))])
+    chain = np.arange(2000)
+    perm = rng.permutation(2000)
+    graphs += [
+        np.c_[chain[:-1], chain[1:]],
+        np.c_[chain[:0:-1], chain[-2::-1]],
+        np.c_[perm[:-1], perm[1:]],
+        np.array([[7, 7], [3, 9], [9, 3], [3, 9], [5, 5], [9, 1]]),
+        np.zeros((0, 2), np.int64),
+    ]
+    for g in graphs:
+        ids, labels = simsearch._min_labels(g[:, 0], g[:, 1])
+        assert dict(zip(ids.tolist(), labels.tolist())) == _dict_min_labels(
+            g.tolist()
+        )
+        assert (np.diff(ids) > 0).all()

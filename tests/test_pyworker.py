@@ -15,7 +15,10 @@ import pandas as pd
 from sparkextract import pyworker
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sparkextract")
-UDF_METHODS = {"mapInPandas", "mapInArrow", "applyInPandas", "applyInPandasWithState"}
+UDF_METHODS = {
+    "mapInPandas", "mapInArrow", "applyInPandas", "applyInArrow",
+    "applyInPandasWithState",
+}
 
 
 def test_hook_rereads_only_changed_archives(tmp_path, monkeypatch):

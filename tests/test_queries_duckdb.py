@@ -9,6 +9,7 @@ Decimal(42) == 42 in Python. This gate now ALSO asserts canonical
 arrow-level type equality per column, so an uncast SUM in a DuckDB twin
 fails locally before it can fail at the driver."""
 
+import hashlib
 import math
 import os
 import sys
@@ -145,6 +146,18 @@ def test_query_parity(spark, duck, name):
     b = _rows_to_set(dcols, drows)
     mism = [(x, y) for x, y in zip(a, b) if x != y][:3]
     assert a == b, f"{name}: value mismatch, first diffs {mism}"
+
+
+def test_oracle_sql_texts_pinned():
+    """All 88 ``oracle_sql()`` twin texts stay byte-identical: one sha256
+    over name + text, names sorted. A change that edits a twin on purpose
+    updates this digest and names the texts it changed."""
+    o = entrymod.oracle_sql()
+    assert len(o) == 88
+    digest = hashlib.sha256("".join(k + o[k] for k in sorted(o)).encode())
+    assert digest.hexdigest() == (
+        "ed4bd299edcc74ee02165709b51d0ec295800ee4b06bc56fd0c762f6a19ad319"
+    )
 
 
 def test_entry_smoke(spark):
