@@ -1,5 +1,7 @@
 """spark-submit entry script: run the extraction job from a --py-files
-package (north_rule ship mode). Example:
+package (north_rule ship mode). Build first with
+``python -m sparkextract.cli package`` (writes dist/sparkextract.zip from
+the current sources; the zip is not tracked), then:
 
   spark-submit --master local[8] --py-files dist/sparkextract.zip \
       submit_job.py --input <transcripts.parquet> --output <dir> --snapshot s1

@@ -3,7 +3,6 @@ generated inputs. Each example packs many segments (regions, blocks, NMS
 groups, pages) into one batch-level kernel call and checks every
 segment against the oracle. Pure-Python/numpy — no Spark session needed."""
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -160,19 +159,6 @@ def test_latex_and_escape_prop(s):
     assert ("zh" if kernels.is_zh(s) else "en") == oracle.detect_lang(s)
 
 
-@given(
-    st.integers(1, 24), st.integers(1, 24), st.sampled_from([1, 2, 3, 4]),
-    st.integers(0, 2**32 - 1),
-)
-@settings(max_examples=60, deadline=None)
-def test_png_roundtrip_prop(h, w, ch, seed):
-    from sparkextract import multimodal
-
-    rng = np.random.default_rng(seed)
-    arr = rng.integers(0, 256, size=(h, w, ch), dtype=np.uint8)
-    assert (multimodal.decode_png(multimodal.encode_png(arr)) == arr).all()
-
-
 @given(st.lists(st.text(max_size=30), max_size=8))
 @settings(max_examples=200, deadline=None)
 def test_angle_cls_prop(contents):
@@ -183,14 +169,3 @@ def test_angle_cls_prop(contents):
         assert out == oracle.angle_cls(raw)
         if not raw.startswith("@rot180 "):
             assert out == raw
-
-
-@given(st.integers(1, 20), st.integers(1, 20), st.integers(0, 2**32 - 1))
-@settings(max_examples=40, deadline=None)
-def test_gif_roundtrip_prop(h, w, seed):
-    from sparkextract import multimodal
-
-    rng = np.random.default_rng(seed)
-    g = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-    got = multimodal.decode_gif(multimodal.encode_gif_gray(g))
-    assert (got[:, :, 0] == g).all()

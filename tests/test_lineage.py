@@ -1,10 +1,9 @@
-"""Lineage/resume semantics + multimodal plumbing tests."""
-
-import hashlib
+"""Lineage/resume semantics: snapshots, time travel, expiry, incremental
+extraction, partition/schema evolution and compaction."""
 
 import pytest
 
-from sparkextract import multimodal, synth
+from sparkextract import synth
 from sparkextract.lineage import committed_buckets, run_with_lineage, snapshot_id
 from sparkextract.pipeline import extract
 from sparkextract import schema
@@ -225,329 +224,6 @@ def test_expire_snapshots(spark, tmp_path):
     assert expire_snapshots(spark, out, keep_last=1)["expired"] == []
     with pytest.raises(ValueError):
         expire_snapshots(spark, out, keep_last=0)
-
-
-def test_media_features_deterministic(spark):
-    media = multimodal.synth_media(spark, n=30)
-    rows = multimodal.extract_features(media).collect()
-    assert len(rows) == 30
-    by_id = {r.media_id: r for r in rows}
-    assert all(len(r.features) == multimodal.FEATURE_DIM for r in rows)
-    # deterministic: recompute one feature vector by hand
-    payload = {r.media_id: r for r in media.collect()}[7].payload
-    import numpy as np
-
-    want = multimodal.decode_image(bytes(payload), fake=True).mean(axis=1).round(3)
-    assert np.allclose(by_id[7].features, want)
-
-
-def test_media_decode_stub_raises():
-    # non-PNG formats still need native codecs -> honest stub
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"abc", fake=False)
-
-
-def test_png_roundtrip_all_color_types():
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    for ch in (1, 2, 3, 4):
-        arr = rng.integers(0, 256, size=(13, 9, ch), dtype=np.uint8)
-        got = multimodal.decode_png(multimodal.encode_png(arr))
-        assert got.shape == (13, 9, ch)
-        assert (got == arr).all(), f"channels={ch}"
-    # 2-d gray input
-    g = rng.integers(0, 256, size=(5, 7), dtype=np.uint8)
-    assert (multimodal.decode_png(multimodal.encode_png(g))[:, :, 0] == g).all()
-
-
-def test_png_decoder_handles_all_filters():
-    """Hand-filter scanlines with Sub/Up/Average/Paeth and verify the
-    decoder reconstructs the original pixels."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    h, w, ch = 6, 5, 3
-    img = rng.integers(0, 256, size=(h, w, ch), dtype=np.uint8)
-    stride = w * ch
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-    raw = b""
-    prev = np.zeros(stride, dtype=np.int32)
-    for r in range(h):
-        cur = img[r].reshape(-1).astype(np.int32)
-        ftype = [0, 1, 2, 3, 4, 1][r]
-        line = np.zeros(stride, dtype=np.int32)
-        for i in range(stride):
-            a = int(cur[i - ch]) if i >= ch else 0
-            b = int(prev[i])
-            c = int(prev[i - ch]) if i >= ch else 0
-            pred = {0: 0, 1: a, 2: b, 3: (a + b) // 2, 4: paeth(a, b, c)}[ftype]
-            line[i] = (cur[i] - pred) & 0xFF
-        raw += bytes([ftype]) + bytes(line.astype(np.uint8))
-        prev = cur
-
-    def chunk(tag, body):
-        return (struct.pack(">I", len(body)) + tag + body
-                + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
-
-    data = (multimodal.PNG_MAGIC
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-    assert (multimodal.decode_png(data) == img).all()
-
-
-def test_gif_roundtrip_and_dispatch():
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    for shape in [(7, 5), (16, 16), (1, 1), (3, 40)]:
-        g = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        data = multimodal.encode_gif_gray(g)
-        assert data[:6] == b"GIF87a"
-        got = multimodal.decode_gif(data)
-        assert got.shape == (*shape, 3)
-        # gray palette: all three channels equal the source
-        assert (got[:, :, 0] == g).all() and (got == got[:, :, :1]).all()
-        # decode_image dispatches on the magic
-        assert (multimodal.decode_image(data)[:, :, 0] == g).all()
-    # a big image crosses multiple 255-byte sub-blocks and CLEAR resets
-    big = rng.integers(0, 256, size=(40, 40), dtype=np.uint8)
-    assert (multimodal.decode_gif(multimodal.encode_gif_gray(big))[:, :, 0] == big).all()
-    with pytest.raises(ValueError):
-        multimodal.decode_gif(b"GIF87a" + b"\x00" * 16)
-
-
-def test_png_real_decode_drives_features(spark):
-    import numpy as np
-
-    media = multimodal.synth_media(spark, n=12)
-    feats = {r.media_id: r.features for r in multimodal.extract_features(media).collect()}
-    # media 0 is a REAL PNG: features must equal the histogram of its pixels
-    p0 = {r.media_id: bytes(r.payload) for r in media.collect()}[0]
-    px = multimodal.decode_png(p0)
-    hist, _ = np.histogram(px, bins=multimodal.FEATURE_DIM, range=(0, 256))
-    want = (hist / px.size).round(3)
-    assert np.allclose(feats[0], want, atol=1e-6)
-    # corrupt PNG fails loudly, not silently
-    with pytest.raises(ValueError):
-        multimodal.decode_png(multimodal.PNG_MAGIC + b"garbage")
-
-
-def test_frame_sampling_and_metadata(spark):
-    media = multimodal.synth_media(spark, n=30)
-    frames = multimodal.sample_frames(media).collect()
-    assert frames and all(r.frame_idx >= 0 for r in frames)
-    kinds = {r.media_id for r in frames}
-    vids = {r.media_id for r in media.collect() if r.kind == "video"}
-    assert kinds == vids
-    meta = multimodal.media_metadata(media).collect()
-    sniffed = {r.media_id: r.sniffed for r in meta}
-    assert sniffed[0] == "png"  # images are real PNGs
-    assert sniffed[1] == "wav"  # audio is now a real RIFF/WAVE container
-    assert sniffed[2] == "avi"  # video is now a real RIFF/AVI container
-
-
-def test_jpeg_codec_exact_vs_reconstruction_oracle():
-    """decode(encode(x)) must equal the quantize/dequantize/IDCT
-    reconstruction BIT-FOR-BIT (entropy coding is exactly invertible);
-    smooth content decodes close to the original (lossy sanity)."""
-    import numpy as np
-
-    from sparkextract import jpeg
-
-    rng = np.random.default_rng(23)
-    for shape in [(8, 8), (16, 24), (7, 5), (1, 1), (33, 41)]:
-        a = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        got = jpeg.decode_jpeg_gray(jpeg.encode_jpeg_gray(a))[:, :, 0]
-        assert (got == jpeg.jpeg_reconstruct_gray(a)).all(), shape
-    x = np.tile(np.linspace(0, 255, 64).astype(np.uint8), (64, 1))
-    got = jpeg.decode_jpeg_gray(jpeg.encode_jpeg_gray(x))[:, :, 0]
-    assert np.abs(got.astype(int) - x.astype(int)).max() <= 4
-    with pytest.raises(ValueError):
-        jpeg.decode_jpeg_gray(b"\xff\xd8\xff\xd9")  # no segments
-
-
-def test_jpeg_color_codec_exact_vs_reconstruction_oracle():
-    """4:2:0 YCbCr color (round-3): decode(encode_jpeg_color(x)) must
-    bit-equal jpeg_reconstruct_color(x) — pins the MCU interleave,
-    per-component DC prediction, chroma tables, and the shared
-    colorspace/subsample/upsample helpers."""
-    import numpy as np
-
-    from sparkextract import jpeg
-
-    rng = np.random.default_rng(29)
-    for shape in [(16, 16), (8, 8), (17, 23), (1, 1), (31, 2), (40, 56)]:
-        a = rng.integers(0, 256, size=(*shape, 3), dtype=np.uint8)
-        got = jpeg.decode_jpeg(jpeg.encode_jpeg_color(a))
-        want = jpeg.jpeg_reconstruct_color(a)
-        assert got.shape == want.shape == (*shape, 3), shape
-        assert (got == want).all(), shape
-    # lossy sanity: a smooth (non-wrapping) gradient survives closely
-    base = np.add.outer(np.arange(48), np.arange(64) * 2).astype(np.uint8)
-    img = np.stack([base, base, base], axis=2)
-    got = jpeg.decode_jpeg(jpeg.encode_jpeg_color(img))
-    assert np.abs(got.astype(int) - img.astype(int)).max() <= 12
-    # gray wrapper refuses color payloads
-    with pytest.raises(ValueError):
-        jpeg.decode_jpeg_gray(jpeg.encode_jpeg_color(img))
-
-
-def test_media_four_real_formats(spark):
-    media = multimodal.synth_media(spark, n=24)
-    meta = {r.media_id: r.sniffed for r in multimodal.media_metadata(media).collect()}
-    # format rotation: png, gif, gray jpeg, color jpeg
-    assert meta[0] == "png" and meta[3] == "gif"
-    assert meta[6] == "jpeg" and meta[9] == "jpeg"
-    feats = {r.media_id: r.features
-             for r in multimodal.extract_features(media).collect()}
-    # all four real decodes produce FEATURE_DIM histograms summing ~1
-    for mid in (0, 3, 6, 9):
-        assert len(feats[mid]) == multimodal.FEATURE_DIM
-        assert abs(sum(feats[mid]) - 1.0) < 0.05
-
-
-def test_progressive_jpeg_exact_vs_reconstruction_oracle():
-    """decode(encode_progressive(x)) must equal the SAME
-    quantize/dequantize/IDCT reconstruction oracle as baseline,
-    BIT-FOR-BIT: progressive is a lossless re-packaging of the same
-    quantized coefficients (T.81 Annex G), so completing all four scans
-    restores full precision."""
-    import numpy as np
-
-    from sparkextract import jpeg
-
-    rng = np.random.default_rng(31)
-    for shape in [(8, 8), (16, 24), (7, 5), (1, 1), (33, 41)]:
-        a = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        got = jpeg.decode_jpeg(jpeg.encode_jpeg_gray_progressive(a))[:, :, 0]
-        assert (got == jpeg.jpeg_reconstruct_gray(a)).all(), shape
-    x = np.tile(np.linspace(0, 255, 64).astype(np.uint8), (64, 1))
-    got = jpeg.decode_jpeg(jpeg.encode_jpeg_gray_progressive(x))[:, :, 0]
-    assert (got == jpeg.jpeg_reconstruct_gray(x)).all()
-
-
-def test_progressive_partial_scans_are_coarse_approximation():
-    """Truncating after scan 3 (before AC refinement) must yield the
-    image reconstructed from the POINT-TRANSFORMED coefficients — the
-    'progressive rendering' semantics, checked exactly."""
-    import numpy as np
-
-    from sparkextract import jpeg
-
-    rng = np.random.default_rng(13)
-    a = rng.integers(0, 256, size=(24, 16), dtype=np.uint8)
-    data = jpeg.encode_jpeg_gray_progressive(a)
-    # cut before the 4th SOS, keep EOI
-    sos = [i for i in range(len(data) - 1) if data[i:i + 2] == b"\xff\xda"]
-    assert len(sos) == 4
-    partial = data[: sos[3]] + b"\xff\xd9"
-    got = jpeg.decode_jpeg(partial)[:, :, 0]
-
-    (H, W), blocks = jpeg._quantized_blocks(a)
-    approx = []
-    for zz in blocks:
-        z = zz.copy()
-        # DC fully refined by scan 2; AC carries only the Al=1 level
-        z[1:] = [jpeg._ac_shift(int(v), 1) << 1 for v in z[1:]]
-        approx.append(z)
-    want = jpeg._reconstruct(H, W, approx)[: a.shape[0], : a.shape[1]]
-    assert (got == want).all()
-    # and it differs from the full decode (the refinement scan matters)
-    full = jpeg.decode_jpeg(data)[:, :, 0]
-    assert (got != full).any()
-
-
-def test_progressive_malformed_raises():
-    import numpy as np
-    import pytest as _pytest
-
-    from sparkextract import jpeg, multimodal
-
-    a = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    data = jpeg.encode_jpeg_gray_progressive(a)
-    with _pytest.raises(ValueError):
-        multimodal.decode_image(data[:40], fake=False)
-    # color progressive is out of scope and must say so, not garble
-    bad = bytearray(data)
-    with _pytest.raises(ValueError):
-        jpeg._decode_progressive_gray(bytes(bad).replace(b"\xff\xc2\x00\x0b\x08", b"\xff\xc2\x00\x0b\x0c", 1))
-
-
-def test_synth_media_includes_progressive(spark):
-    media = multimodal.synth_media(spark, n=30)
-    rows = {r.media_id: bytes(r.payload) for r in media.collect() if r.kind == "image"}
-    # media 12: i//3 == 4 -> fmt 4 == progressive (SOF2 present)
-    assert b"\xff\xc2" in rows[12]
-    img = multimodal.decode_image(rows[12])
-    assert img.ndim == 3 and img.shape[2] == 1
-
-
-def test_color_progressive_jpeg_exact_vs_reconstruction_oracle():
-    """8-scan color progressive (interleaved DC + per-component AC
-    scans) must reproduce the SAME reconstruction oracle as baseline
-    color, bit-for-bit on the visible crop."""
-    import numpy as np
-
-    from sparkextract import jpeg
-
-    rng = np.random.default_rng(17)
-    for shape in [(8, 8), (16, 16), (7, 5), (33, 41), (20, 30)]:
-        a = rng.integers(0, 256, size=(*shape, 3), dtype=np.uint8)
-        got = jpeg.decode_jpeg(jpeg.encode_jpeg_color_progressive(a))
-        assert (got == jpeg.jpeg_reconstruct_color(a)).all(), shape
-
-
-def test_synth_media_includes_color_progressive(spark):
-    media = multimodal.synth_media(spark, n=48)
-    imgs = {r.media_id: bytes(r.payload) for r in media.collect() if r.kind == "image"}
-    # media 15: i//3 == 5 -> fmt 5 == color progressive (SOF2, 3 comps)
-    p = imgs[15]
-    assert b"\xff\xc2" in p
-    img = multimodal.decode_image(p)
-    assert img.ndim == 3 and img.shape[2] == 3
-    # the whole image rotation decodes for real
-    for mid, payload in imgs.items():
-        assert multimodal.decode_image(payload).ndim == 3, mid
-
-
-def test_jpeg_restart_markers_roundtrip():
-    """DRI/RSTn (T.81 B.2.5/E.2.4): byte-aligned restart markers with DC
-    predictor reset, gray and color, including RST number cycling past 7
-    — decode must still equal the reconstruction oracle exactly; a
-    misnumbered marker must raise, not desync."""
-    import numpy as np
-
-    from sparkextract import jpeg
-
-    rng = np.random.default_rng(41)
-    g = rng.integers(0, 256, size=(33, 41), dtype=np.uint8)
-    c = rng.integers(0, 256, size=(24, 40, 3), dtype=np.uint8)
-    for ri in (1, 3, 7):
-        got = jpeg.decode_jpeg(jpeg.encode_jpeg_gray(g, restart_interval=ri))
-        assert (got[:, :, 0] == jpeg.jpeg_reconstruct_gray(g)).all(), ri
-        got = jpeg.decode_jpeg(jpeg.encode_jpeg_color(c, restart_interval=ri))
-        assert (got == jpeg.jpeg_reconstruct_color(c)).all(), ri
-    # >8 restarts exercises the RSTn modulo-8 cycle
-    big = rng.integers(0, 256, size=(80, 80), dtype=np.uint8)
-    got = jpeg.decode_jpeg(jpeg.encode_jpeg_gray(big, restart_interval=1))
-    assert (got[:, :, 0] == jpeg.jpeg_reconstruct_gray(big)).all()
-    # corrupt marker number -> loud failure
-    data = bytearray(jpeg.encode_jpeg_gray(big, restart_interval=4))
-    i = bytes(data).index(b"\xff\xd0")
-    data[i + 1] = 0xD6
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        jpeg.decode_jpeg(bytes(data))
 
 
 def test_incremental_extraction_and_read_changes(spark, tmp_path):
