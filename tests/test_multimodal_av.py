@@ -1,11 +1,6 @@
-"""Audio/video container codecs (riffav.py) + their Spark-side operators.
-
-The reference decodes media through cv2/ffmpeg (paddle_ocr.py:17-55);
-here the RIFF containers are parsed directly, so these tests pin (a)
-encode→decode round-trips including hypothesis-driven PCM, (b) honest
-failure on malformed/unsupported payloads, (c) the mapInPandas operators
-over the synthetic media table, and (d) determinism across parallelism.
-"""
+"""WAV codec (sparkextract/wav.py): encode→decode round-trips including
+hypothesis-driven PCM, float32 scaling, exact features, and honest
+failure on malformed or unsupported payloads."""
 
 from __future__ import annotations
 
@@ -14,15 +9,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from sparkextract import multimodal
-from sparkextract.jpeg import encode_jpeg_gray
-from sparkextract.riffav import (
-    decode_wav,
-    encode_avi_mjpeg,
-    encode_wav_pcm16,
-    parse_avi_frames,
-    wav_features,
-)
+from sparkextract.wav import decode_wav, encode_wav_pcm16, wav_features
 
 
 @settings(max_examples=30, deadline=None)
@@ -64,7 +51,7 @@ def test_wav_non_pcm_raises_not_implemented():
 
 
 def test_wav_float32_decodes_scaled():
-    from sparkextract.riffav import encode_wav_float32
+    from sparkextract.wav import encode_wav_float32
 
     f = np.array([0.0, 0.5, -0.5, 1.0, -1.0, 2.0], dtype=np.float32)
     sr, out = decode_wav(encode_wav_float32(f, 22050))
@@ -83,216 +70,3 @@ def test_wav_features_exact():
     # alternating ±100: a crossing at every step
     alt = np.tile(np.array([100, -100], np.int16), 400)
     assert wav_features(encode_wav_pcm16(alt, 8000))["zero_crossings"] == 799
-
-
-def test_avi_roundtrip_and_frame_decode():
-    frames = [
-        encode_jpeg_gray(np.full((16, 16), 40 * i, np.uint8)) for i in range(1, 6)
-    ]
-    dims, out = parse_avi_frames(encode_avi_mjpeg(frames, 16, 16, fps=5))
-    assert dims == (16, 16)
-    assert out == frames
-    img = multimodal.decode_image(out[3])
-    assert img.shape == (16, 16, 1)
-
-
-def test_avi_malformed_and_unsupported():
-    with pytest.raises(ValueError):
-        parse_avi_frames(b"RIFF\x04\x00\x00\x00AVI ")  # no frames
-    with pytest.raises(ValueError):
-        parse_avi_frames(b"not a riff stream at all")
-    frames = [encode_jpeg_gray(np.zeros((8, 8), np.uint8))]
-    avi = encode_avi_mjpeg(frames, 8, 8)
-    with pytest.raises(NotImplementedError):
-        parse_avi_frames(avi.replace(b"vidsMJPG", b"vidsH264", 1))
-
-
-def test_audio_features_operator(spark):
-    media = multimodal.synth_media(spark, n=30)
-    rows = multimodal.audio_features(media).collect()
-    audio_ids = [r.media_id for r in media.collect() if r.kind == "audio"]
-    assert sorted(r.media_id for r in rows) == sorted(audio_ids)
-    by_id = {r.media_id: r for r in rows}
-    # recompute one row by hand from the payload
-    payload = {r.media_id: r.payload for r in media.collect()}[1]
-    want = wav_features(bytes(payload))
-    got = by_id[1]
-    assert got.sample_rate == want["sample_rate"]
-    assert got.n_samples == want["n_samples"]
-    assert got.rms == pytest.approx(want["rms"])
-    assert got.zero_crossings == want["zero_crossings"]
-
-
-def test_sample_frames_real_avi(spark):
-    media = multimodal.synth_media(spark, n=30)
-    frames = multimodal.sample_frames(media).collect()
-    video_rows = {r.media_id: r for r in media.collect() if r.kind == "video"}
-    got_ids = {r.media_id for r in frames}
-    assert got_ids == set(video_rows)
-    # each emitted frame is the exact JPEG stored in the container
-    for mid, row in video_rows.items():
-        _dims, want = parse_avi_frames(bytes(row.payload))
-        got = sorted(
-            ((r.frame_idx, bytes(r.frame)) for r in frames if r.media_id == mid)
-        )
-        assert got == list(enumerate(want))
-        # and it decodes to the synth frame size
-        assert multimodal.decode_image(got[0][1]).shape == (16, 16, 1)
-
-
-def test_sample_frames_stride_and_cap(spark):
-    media = multimodal.synth_media(spark, n=30)
-    capped = multimodal.sample_frames(media, stride=2, max_frames=2).collect()
-    per_id = {}
-    for r in capped:
-        per_id.setdefault(r.media_id, []).append(r.frame_idx)
-    assert all(sorted(v) in ([0], [0, 2]) for v in per_id.values())
-    assert all(len(v) <= 2 for v in per_id.values())
-
-
-def test_media_metadata_sniffs_riff(spark):
-    media = multimodal.synth_media(spark, n=12)
-    sniffed = {r.media_id: r.sniffed for r in multimodal.media_metadata(media).collect()}
-    kinds = {r.media_id: r.kind for r in media.collect()}
-    for mid, kind in kinds.items():
-        if kind == "audio":
-            assert sniffed[mid] == "wav"
-        elif kind == "video":
-            assert sniffed[mid] == "avi"
-        else:
-            assert sniffed[mid] in ("png", "gif", "jpeg")
-
-
-def test_audio_features_parallelism_invariant(spark):
-    media = multimodal.synth_media(spark, n=24)
-    a = multimodal.audio_features(media.repartition(1)).collect()
-    b = multimodal.audio_features(media.repartition(7)).collect()
-    key = lambda r: r.media_id  # noqa: E731
-    assert sorted(a, key=key) == sorted(b, key=key)
-
-
-def test_adpcm_roundtrip_bounded_error():
-    """IMA ADPCM (WAV fmt 0x11) is lossy; decode(encode(x)) must be
-    deterministic, length-exact, exact at block starts (the header
-    carries the raw predictor), and within step-table-bounded error on
-    smooth signals."""
-    t = np.arange(2500)
-    sig = (8000 * np.sin(t / 20)).astype(np.int16)
-    from sparkextract.riffav import ADPCM_SAMPLES_PER_BLOCK, encode_wav_adpcm
-
-    data = encode_wav_adpcm(sig, 16000)
-    assert data == encode_wav_adpcm(sig, 16000)  # deterministic
-    sr, out = decode_wav(data)
-    assert sr == 16000 and out.shape == (len(sig), 1)
-    err = np.abs(out[:, 0].astype(np.int64) - sig.astype(np.int64))
-    for b in range(0, len(sig), ADPCM_SAMPLES_PER_BLOCK):
-        assert err[b] == 0  # block-start samples are stored raw
-    assert err.max() < 2000 and float(err.mean()) < 100
-
-
-def test_adpcm_malformed_and_unsupported():
-    from sparkextract import riffav
-
-    sig = np.zeros(600, np.int16)
-    good = bytearray(riffav.encode_wav_adpcm(sig, 8000))
-    # corrupt the step index in the first block header
-    data_off = bytes(good).index(b"data") + 8
-    bad = bytearray(good)
-    bad[data_off + 2] = 120  # step index > 88
-    with pytest.raises(ValueError):
-        decode_wav(bytes(bad))
-    with pytest.raises(NotImplementedError):
-        # multi-channel ADPCM is out of scope
-        riffav._decode_adpcm(b"\x00" * 256, 2, 256, 505, None)
-
-
-def test_synth_media_includes_adpcm(spark):
-    from sparkextract import multimodal
-
-    media = multimodal.synth_media(spark, n=30)
-    payloads = {r.media_id: bytes(r.payload) for r in media.collect() if r.kind == "audio"}
-    import struct as _struct
-
-    fmts = set()
-    for p in payloads.values():
-        off = p.index(b"fmt ") + 8
-        fmts.add(_struct.unpack("<H", p[off:off + 2])[0])
-    assert fmts == {0x01, 0x11}  # both PCM and ADPCM payloads present
-    # and audio_features decodes every one (no drops)
-    rows = multimodal.audio_features(media).collect()
-    assert sorted(r.media_id for r in rows) == sorted(payloads)
-
-
-# ------------------------------------------------------------ BMP / PNM
-@given(
-    st.integers(1, 12), st.integers(1, 12), st.integers(0, 2**32 - 1),
-)
-@settings(max_examples=30, deadline=None)
-def test_bmp_roundtrip_property(w, h, seed):
-    rng = np.random.default_rng(seed)
-    a = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    assert np.array_equal(multimodal.decode_bmp(multimodal.encode_bmp(a)), a)
-
-
-@given(st.integers(1, 12), st.integers(1, 12), st.integers(0, 2**32 - 1))
-@settings(max_examples=30, deadline=None)
-def test_pnm_roundtrip_property(w, h, seed):
-    rng = np.random.default_rng(seed)
-    a = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    assert np.array_equal(multimodal.decode_pnm(multimodal.encode_ppm(a)), a)
-    g = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    assert np.array_equal(multimodal.decode_pnm(multimodal.encode_ppm(g)), g)
-
-
-def test_bmp_topdown_and_palette():
-    # top-down: negative height flips row order vs the bottom-up default
-    a = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
-    data = bytearray(multimodal.encode_bmp(a))
-    h = int.from_bytes(data[22:26], "little")
-    data[22:26] = (-h).to_bytes(4, "little", signed=True)
-    # rows must be reinterpreted in file order (which encode wrote
-    # bottom-up), so decoding the flipped header flips the image
-    flipped = multimodal.decode_bmp(bytes(data))
-    assert np.array_equal(flipped, a[::-1])
-    # 8-bit palette form
-    pal = b"".join(bytes((i, 255 - i, i ^ 0x5A, 0)) for i in range(256))
-    idx = bytes([0, 1, 2, 255])  # one row, w=4 (stride already 4)
-    hdr = (b"BM" + (14 + 40 + 1024 + 4).to_bytes(4, "little") + b"\x00" * 4
-           + (14 + 40 + 1024).to_bytes(4, "little")
-           + (40).to_bytes(4, "little")
-           + (4).to_bytes(4, "little", signed=True)
-           + (1).to_bytes(4, "little", signed=True)
-           + (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
-           + b"\x00" * 4 + (4).to_bytes(4, "little") + b"\x00" * 16)
-    out = multimodal.decode_bmp(hdr + pal + idx)
-    assert out.shape == (1, 4, 3)
-    # entry 255 stored as (B=255, G=0, R=255^0x5A, A) -> RGB
-    assert tuple(out[0, 3]) == (255 ^ 0x5A, 0, 255)
-
-
-def test_pnm_comment_and_maxval_rescale():
-    p = b"P5\n# generated\n4 2\n100\n" + bytes(range(8))
-    out = multimodal.decode_pnm(p)
-    assert out.shape == (2, 4)
-    assert out[0, 3] == (3 * 255 + 50) // 100  # netpbm ROUNDING rescale (=8)
-
-
-def test_bmp_pnm_malformed_raise():
-    a = np.zeros((3, 3, 3), dtype=np.uint8)
-    with pytest.raises(ValueError):
-        multimodal.decode_bmp(multimodal.encode_bmp(a)[:20])
-    with pytest.raises(ValueError):
-        multimodal.decode_pnm(b"P6\n3 3\n255\nxy")
-    with pytest.raises(ValueError):
-        multimodal.decode_bmp(b"BM" + b"\x00" * 60)  # zero dims
-    # compressed BMP honestly refused
-    data = bytearray(multimodal.encode_bmp(a))
-    data[30:34] = (1).to_bytes(4, "little")  # BI_RLE8
-    with pytest.raises(ValueError):
-        multimodal.decode_bmp(bytes(data))
-
-
-def test_decode_image_dispatches_bmp_pnm():
-    a = np.full((4, 5, 3), 77, dtype=np.uint8)
-    assert multimodal.decode_image(multimodal.encode_bmp(a)).shape == (4, 5, 3)
-    assert multimodal.decode_image(multimodal.encode_ppm(a)).shape == (4, 5, 3)
