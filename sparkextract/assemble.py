@@ -128,7 +128,8 @@ def _para_group(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({
         "conv_id": pdf["conv_id"].iat[0],
         "turn_idx": turn[starts], "page_seq": pseq[starts],
-        "block_order": border[starts], "para_text": texts,
+        "block_order": border[starts],
+        "para_text": texts.to_numpy(zero_copy_only=False),
     })
 
 

@@ -12,12 +12,17 @@ vs the staged pipeline's ~6 exchanges. Same golden-equality guarantee:
 tests/test_e2e_golden.py pins BOTH paths to tests/oracle.py. Use the
 staged path to study operators relationally; use this to run 10^12 turns.
 
-Batch internals are flat arrays end-to-end: ``parse._parse_batch``
-tokenizes the whole Arrow batch with pyarrow.compute, and
-``turnkernel.run_turn_arrays`` runs every turn of the batch as segment-wise
-numpy over (turn → page → det) segments, the sequential folds included
-(``kernels``) — per-turn or per-page frames and array slices cost more
-than the extraction itself at this granularity.
+Batch internals are columnar from parse to emit: ``parse._parse_batch``
+tokenizes the whole Arrow batch with pyarrow.compute and hands its
+columns to ``turnkernel.run_turn_arrays`` as arrays (no frame between
+them), which runs every turn of the batch as segment-wise numpy over
+(turn → page → det) segments, the sequential folds included
+(``kernels``), and builds every string with pyarrow.compute over whole
+columns — per-turn or per-page frames, array slices and per-span Python
+cost more than the extraction itself at this granularity. The only
+per-span Python left is emitting ``spans`` as tuples, which the
+``mapInPandas`` converter takes by position; ``main_text`` leaves as an
+Arrow-backed column.
 """
 
 from __future__ import annotations
@@ -40,7 +45,7 @@ def _extract_batch(batch: pd.DataFrame) -> pd.DataFrame:
         {
             "conv_id": pd.Series(conv, dtype=object),
             "turn_idx": pd.Series(turn, dtype="int32"),
-            "main_text": pd.Series(text, dtype=object),
+            "main_text": pd.arrays.ArrowExtensionArray(text),
             "spans": pd.Series(spans, dtype=object),
         }
     )

@@ -18,6 +18,12 @@ The segment helpers (``run_starts``, ``rank_in_run``, and ``page_pairs``,
 the chunked per-segment cross product) serve the batch-wide steps too:
 page/det ordering, OCR containment, the J1 fill.
 
+String work runs as pyarrow.compute over whole string columns: the F2
+CJK test and F3 escape, the A2 piece templates with ``str.strip()`` as
+a trim over ``WHITESPACE``, and every per-segment ``"".join`` as one
+list join (``join_runs``). Only the F1 fixpoint stays a Python regex
+loop, run once per distinct formula string by its caller.
+
 Semantics are pinned in DESIGN.md with reference file:line citations.
 """
 
@@ -27,8 +33,10 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-# ---------- scalar kernels ----------
+# ---------- string kernels ----------
 
 _PROT = re.compile(r"(\\(operatorname|mathrm|text|mathbf)\s?\*? {.*?})")
 _R1 = re.compile(r"(?!\\ )([\W_^\d])\s+?([\W_^\d])")
@@ -47,19 +55,37 @@ def latex_rm_whitespace(s: str) -> str:
     return prev
 
 
-def md_escape(s: str) -> str:
-    """F3 (merge_blocks_and_spans.py:207-215)."""
+def md_escape(c: pa.Array) -> pa.Array:
+    """F3 (merge_blocks_and_spans.py:207-215) over a string column."""
     for ch in ("*", "`", "~", "$"):
-        s = s.replace(ch, "\\" + ch)
-    return s
+        c = pc.replace_substring(c, ch, "\\" + ch)
+    return c
 
 
-_CJK = re.compile("[一-鿿]")
+def is_zh(c: pa.Array) -> np.ndarray:
+    """F2 (merge_blocks_and_spans.py:195-205) over a string column: bool
+    per row, the row has a CJK character."""
+    return pc.match_substring_regex(c, "[一-鿿]").to_numpy(zero_copy_only=False)
 
 
-def is_zh(s: str) -> bool:
-    """F2 (merge_blocks_and_spans.py:195-205)."""
-    return _CJK.search(s) is not None
+def strings(values) -> pa.Array:
+    """A list, numpy object array or pyarrow array of str as a pyarrow
+    string array."""
+    return values if isinstance(values, pa.Array) else pa.array(values, pa.string())
+
+
+def put(values: pa.Array, rows: np.ndarray, new: pa.Array) -> pa.Array:
+    """``values`` with ``values[rows] = new``."""
+    idx = np.arange(len(values))
+    idx[rows] = len(values) + np.arange(len(rows))
+    return pa.concat_arrays([values, new]).take(pa.array(idx))
+
+
+def join_runs(bounds: np.ndarray, values: pa.Array, sep: str) -> pa.Array:
+    """``sep.join`` of each run of ``values``: run k is rows
+    [bounds[k], bounds[k+1])."""
+    lists = pa.ListArray.from_arrays(pa.array(bounds, pa.int32()), values)
+    return pc.binary_join(lists, sep)
 
 
 # ---------- segments (batch-wide geometry) ----------
@@ -313,25 +339,53 @@ def split_masks(box_seg: np.ndarray, boxes: np.ndarray,
 _TEXT, _INLINE, _ISOLATED, _FOOTNOTE = 1, 2, 3, 4
 _TYPE_CODE = {"text": _TEXT, "inline": _INLINE, "ignore-formula": _INLINE,
               "isolated": _ISOLATED, "footnote": _FOOTNOTE}
+# the code points for which str.isspace() holds: str.strip()'s trim set
+WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002"
+    "\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f"
+    "\u205f\u3000"
+)
+_NONE = pa.scalar(None, pa.string())
 
 
-def _span_md(t: int, c: str) -> str:
-    """A2 piece template of one span (merge_blocks_and_spans.py:245-262);
-    '' for types the reference renders as nothing."""
-    if t == _TEXT:
-        return md_escape(c)
-    if t == _INLINE:
-        return f" ${c.strip('$')}$ "
-    if t == _ISOLATED:
-        return f"\n$$\n{c.strip('$')}\n$$\n"
-    if t == _FOOTNOTE:
-        body = c.strip("$")
-        return f" ${body}$ " if "^" in body else f" $^{body}$ "
-    return ""
+def _text(c):
+    # '' renders nothing: no piece and no trailing space
+    return pc.if_else(pc.equal(pc.binary_length(c), 0), _NONE,
+                      pc.utf8_trim(md_escape(c), WHITESPACE))
+
+
+def _inline(c):
+    return pc.binary_join_element_wise("$", pc.utf8_trim(c, "$"), "$", "")
+
+
+def _isolated(c):
+    return pc.binary_join_element_wise("$$\n", pc.utf8_trim(c, "$"), "\n$$", "")
+
+
+def _footnote(c):
+    body = pc.utf8_trim(c, "$")
+    return pc.if_else(pc.match_substring(body, "^"),
+                      pc.binary_join_element_wise("$", body, "$", ""),
+                      pc.binary_join_element_wise("$^", body, "$", ""))
+
+
+# A2 piece templates (merge_blocks_and_spans.py:245-262) with the
+# reference's str.strip() applied; other types render nothing (null)
+_RENDER = {_TEXT: _text, _INLINE: _inline, _ISOLATED: _isolated, _FOOTNOTE: _footnote}
+
+
+def _pieces(t: np.ndarray, c: pa.Array) -> pa.Array:
+    """Stripped A2 piece of every span, null for none; each template runs
+    over its own rows only."""
+    piece = pa.nulls(len(t), pa.string())
+    for k, render in _RENDER.items():
+        i = np.flatnonzero(t == k)
+        piece = put(piece, i, render(c.take(pa.array(i))))
+    return piece
 
 
 def merge_para(starts: np.ndarray, types, contents, boxes: np.ndarray,
-               pool_order: np.ndarray, interline: np.ndarray) -> list[str]:
+               pool_order: np.ndarray, interline: np.ndarray) -> pa.Array:
     """O3 + O4 + A2 for every block at once (merge_blocks_and_spans.py:
     19-88,228-268) → one paragraph string per block, in block order.
 
@@ -342,7 +396,11 @@ def merge_para(starts: np.ndarray, types, contents, boxes: np.ndarray,
     A line breaks where a span does not y-overlap its predecessor in
     (y0, pool order), or where it or its predecessor is ``isolated`` (an
     isolated span always sits alone in its line). A line is zh when any
-    of its text spans has a CJK character."""
+    of its text spans has a CJK character.
+
+    The string work is pyarrow.compute over the whole span column: the
+    piece templates, str.strip() as a trim over ``WHITESPACE``, the
+    zh-line space rule, and one join per block."""
     codes, uniq = pd.factorize(np.asarray(types, dtype=object))
     t = np.array([_TYPE_CODE.get(u, 0) for u in uniq], dtype=np.int64)[codes]
     t[(t == _ISOLATED) & ~interline] = _INLINE  # fix_text_block (:71-80)
@@ -354,17 +412,11 @@ def merge_para(starts: np.ndarray, types, contents, boxes: np.ndarray,
     line_start[1:] |= iso[1:] | iso[:-1] | ~y_overlaps(b[1:], b[:-1])
     line = np.cumsum(line_start) - 1
     xo = np.lexsort((b[:, 0], line))  # O4: stable x0 sort over y order
-    row = yo[xo]
-    t = t[xo].tolist()
-    c = np.asarray(contents, dtype=object)[row].tolist()
-    cjk = np.array(
-        [ti == _TEXT and _CJK.search(ci) is not None for ti, ci in zip(t, c)],
-        dtype=bool,
-    )
-    zh = np.logical_or.reduceat(cjk, np.flatnonzero(line_start))[line].tolist()
-    pieces = [
-        "" if (p := _span_md(ti, ci)) == "" else p.strip() if z else p.strip() + " "
-        for ti, ci, z in zip(t, c, zh)
-    ]
-    e = _ends(starts)
-    return ["".join(pieces[e[k]:e[k + 1]]) for k in range(len(e) - 1)]
+    t = t[xo]
+    c = strings(contents).take(pa.array(yo[xo]))
+    cjk = (t == _TEXT) & is_zh(c)
+    zh = np.logical_or.reduceat(cjk, np.flatnonzero(line_start))[line]
+    piece = _pieces(t, c)
+    spaced = pc.binary_join_element_wise(piece, "", " ")
+    piece = pc.fill_null(pc.if_else(pa.array(zh), piece, spaced), "")
+    return join_runs(np.r_[np.flatnonzero(starts), len(t)], piece, "")

@@ -12,8 +12,11 @@ carries its page id:
   the Python pass only on regions with a swap candidate), line merge
   (O7), formula-mask x-interval subtraction (J2);
 - the score/content join: merged box × member pairs per region, a
-  left-to-right score sum over rank, Python ``round`` per kept box and
-  one ``" ".join`` per kept box.
+  left-to-right score sum over rank, Python ``round`` per kept box
+  (correctly rounded: ``round(0.765, 2)`` is 0.77, ``np.round`` gives
+  0.76), and one pyarrow list join of the member contents per box;
+- M7 angle classification as pyarrow.compute over the raw content
+  column.
 
 It is called once per Arrow batch by the fused turn kernel and once per
 (conv_id, salted turn bucket) group by the staged pipeline's
@@ -28,6 +31,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -38,15 +43,16 @@ _PAD = float(schema.OCR_PAD)
 ROT_MARK = "@rot180 "
 
 
-def angle_cls(contents: list[str]) -> list[str]:
+def angle_cls(contents) -> pa.Array:
     """M7 angle classification (paddle_ocr.py:428-433: use_angle_cls flips
     180°-rotated crops before recognition). Deterministic stand-in: the
     payload marks rotated content with ``@rot180 `` + the reversed string;
-    the classifier detects the marker and un-rotates (strip + reverse)."""
-    return [
-        c[len(ROT_MARK):][::-1] if c.startswith(ROT_MARK) else c
-        for c in contents
-    ]
+    the classifier detects the marker and un-rotates (strip + reverse, by
+    code point), on the marked rows only."""
+    c = kernels.strings(contents)
+    rot = np.flatnonzero(pc.starts_with(c, ROT_MARK).to_numpy(zero_copy_only=False))
+    flipped = pc.utf8_reverse(pc.utf8_slice_codeunits(c.take(pa.array(rot)), len(ROT_MARK)))
+    return kernels.put(c, rot, flipped)
 
 
 @np.errstate(invalid="ignore")  # inf payload coords: inf - inf
@@ -58,16 +64,17 @@ def ocr_page_arrays(
     raw_page: np.ndarray,  # (r,) page id per raw text det
     raw_boxes: np.ndarray,  # (r,4) raw text dets in (page, det_idx) order
     raw_scores: np.ndarray,  # (r,)
-    raw_contents: list[str],
+    raw_contents,  # (r,) str: a list or a pyarrow string array
     use_angle_cls: bool = True,
-) -> tuple[np.ndarray, np.ndarray, list, list]:
+) -> tuple[np.ndarray, np.ndarray, list, pa.Array]:
     """→ (page ids, boxes (k,4) [x0,y0,x1,y1], scores, contents) of the OCR
     text spans in emission order: by page, then region, then merged box.
     Page ids are any non-decreasing integers, the same on all three
     inputs."""
-    none = (np.empty(0, dtype=np.int64), np.empty((0, 4)), [], [])
+    none = (np.empty(0, dtype=np.int64), np.empty((0, 4)), [], pa.array([], pa.string()))
     if len(raw_boxes) == 0 or len(region_boxes) == 0:
         return none
+    raw_contents = kernels.strings(raw_contents)
     if use_angle_cls:
         raw_contents = angle_cls(raw_contents)
     rcx = (raw_boxes[:, 0] + raw_boxes[:, 2]) / 2.0
@@ -128,13 +135,12 @@ def ocr_page_arrays(
     keep = (count > 0) & ~(score < schema.DROP_SCORE)
     k = np.flatnonzero(keep)
     g = regs[box_seg[k]]
-    text = np.asarray(raw_contents, dtype=object)[raw].tolist()
-    e = np.r_[0, np.cumsum(count)].tolist()
+    text = kernels.join_runs(np.r_[0, np.cumsum(count)], raw_contents.take(pa.array(raw)), " ")
     return (
         region_page[g],
         boxes[k] + shift[g],
         [round(s, 2) for s in score[k].tolist()],
-        [" ".join(text[e[j]:e[j + 1]]) for j in k.tolist()],
+        text.take(pa.array(k)),
     )
 
 
@@ -190,7 +196,7 @@ def _ocr_group(pdf: pd.DataFrame) -> pd.DataFrame:
         "category": "text",
         "score": np.asarray(tscores, dtype=np.float64),
         "x0": tboxes[:, 0], "y0": tboxes[:, 1], "x1": tboxes[:, 2], "y1": tboxes[:, 3],
-        "content": pd.Series(tcontents, dtype=object),
+        "content": tcontents.to_numpy(zero_copy_only=False),
     })[cols]
 
 

@@ -15,6 +15,10 @@ No shuffle: each input row (turn) expands to its detection rows in place.
 Raw OCR text detections (branch 2) pass through unconverted — the OCR
 stage (ocr.py) consumes them. ``@page`` markers are emitted as branch -1
 rows so empty pages still contribute to the markdown join (A4).
+
+``_parse_batch`` returns the rows as one array per DETECTIONS field: the
+fused turn kernel takes them as they are, and ``parse_detections`` wraps
+them in the stage's frame.
 """
 
 from __future__ import annotations
@@ -47,6 +51,18 @@ def _fields(lines: pa.Array, sep: str, ks: range, max_splits=None) -> list[pa.Ar
     return [flat.take(pa.array(offsets[:-1] + k, mask=length <= k)) for k in ks]
 
 
+def _has_exponent(a: pa.Array) -> bool:
+    """Any ``e`` or ``E`` byte in the string data of ``a``: the bytes
+    between its first and last offset, read from the data buffer without
+    a per-row kernel. ``| 0x20`` maps exactly ``E`` and ``e`` to ``e``."""
+    _, offsets, data = a.buffers()
+    if data is None:
+        return False
+    bounds = np.frombuffer(offsets, np.int32)[[a.offset, a.offset + len(a)]]
+    span = np.frombuffer(data, np.uint8)[bounds[0]:bounds[1]]
+    return bool(((span | 0x20) == ord("e")).any())
+
+
 def _to_float(cols: list[pa.Array]) -> list[np.ndarray]:
     """``pd.to_numeric(errors="coerce")`` of each string column as float64,
     null → NaN.
@@ -65,7 +81,7 @@ def _to_float(cols: list[pa.Array]) -> list[np.ndarray]:
     if (
         vals is not None
         and (pc.max(pc.binary_length(both)).as_py() or 0) <= 15
-        and not pc.any(pc.match_substring(both, "e", ignore_case=True)).as_py()
+        and not _has_exponent(both)
         and not np.isinf(vals).any()
         and not (np.signbit(vals) & (vals == 0)).any()
     ):
@@ -78,15 +94,18 @@ def _to_float(cols: list[pa.Array]) -> list[np.ndarray]:
     ]
 
 
-def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized payload → detection rows for one Arrow batch: det rows
-    in (conv_id, turn_idx, page_seq, det_order) order, then one ``@page``
-    marker row per page in (conv_id, turn_idx, page_seq) order."""
-    conv = batch["conv_id"].to_numpy(object)
+def _parse_batch(batch: pd.DataFrame) -> dict:
+    """Vectorized payload → detection rows for one Arrow batch, as one
+    array per schema.DETECTIONS field: det rows in (conv_id, turn_idx,
+    page_seq, det_order) order, then one ``@page`` marker row per page in
+    (conv_id, turn_idx, page_seq) order. ``conv_id`` and ``category`` are
+    ``pd.Categorical`` (the conv_id codes follow conv_id order),
+    ``content`` a pyarrow string array, the rest numpy;
+    ``pd.DataFrame`` of the dict is the DETECTIONS frame."""
     turn = batch["turn_idx"].to_numpy(np.int64)
     # turn key per row: dense code in (conv_id, turn_idx) order; rows that
     # repeat a key form one turn
-    ccode = pd.factorize(conv, sort=True)[0]
+    ccode, conv = pd.factorize(batch["conv_id"].to_numpy(object), sort=True)
     ro = np.lexsort((turn, ccode))
     tkey = np.empty(len(batch), dtype=np.int64)
     tkey[ro] = np.cumsum(kernels.run_starts(ccode[ro], turn[ro])) - 1
@@ -174,10 +193,11 @@ def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
 
     d_row = lrow[dl][v]
     n_pg = len(pg)
-    cats = np.asarray(names, dtype=object)[codes]
-    content = pc.fill_null(fields[6].take(pa.array(v)), "").to_numpy(zero_copy_only=False)
-    return pd.DataFrame({
-        "conv_id": np.concatenate([conv[d_row], conv[p_row]]),
+    if "@page" not in names:
+        names.append("@page")
+    content = pc.fill_null(fields[6].take(pa.array(v)), "")
+    return {
+        "conv_id": pd.Categorical.from_codes(np.r_[ccode[d_row], ccode[p_row]], conv),
         "turn_idx": np.r_[turn[d_row], turn[p_row]].astype(np.int32),
         "page_seq": np.r_[n_seen[dl][v] - 1, p_seq].astype(np.int32),
         "page_no": np.r_[p_no[page], p_no].astype(np.int32),
@@ -186,14 +206,15 @@ def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
         "det_idx": np.r_[det_idx, np.full(n_pg, -1)].astype(np.int32),
         "det_order": np.r_[det_order, np.full(n_pg, -1)].astype(np.int32),
         "branch": np.r_[branch, np.full(n_pg, -1)].astype(np.int32),
-        "category": np.concatenate([cats, np.full(n_pg, "@page", dtype=object)]),
+        "category": pd.Categorical.from_codes(
+            np.r_[codes, np.full(n_pg, names.index("@page"))], names),
         "score": np.r_[sc, np.zeros(n_pg)],
         "x0": np.r_[boxes[:, 0], np.zeros(n_pg)],
         "y0": np.r_[boxes[:, 1], np.zeros(n_pg)],
         "x1": np.r_[boxes[:, 2], np.zeros(n_pg)],
         "y1": np.r_[boxes[:, 3], np.zeros(n_pg)],
-        "content": np.concatenate([content, np.full(n_pg, "", dtype=object)]),
-    })
+        "content": pa.concat_arrays([content, pa.array([""] * n_pg, pa.string())]),
+    }
 
 
 def parse_detections(transcripts: DataFrame) -> DataFrame:
@@ -207,6 +228,6 @@ def parse_detections(transcripts: DataFrame) -> DataFrame:
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pyworker.install()
         for batch in it:
-            yield _parse_batch(batch)
+            yield pd.DataFrame(_parse_batch(batch))
 
     return doc_turns.mapInPandas(gen, schema=schema.DETECTIONS)

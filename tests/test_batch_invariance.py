@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 
 import oracle
-from sparkextract import docsource, fused, kernels, synth
+from sparkextract import docsource, fused, kernels, schema, synth
 from test_edge_payloads import EDGE_TURNS
 
 WORDS = ["alpha", "beta", "gamma", "词语", "a*b", "$d$", "spaced  out"]
@@ -90,6 +90,12 @@ def batch_and_gold():
     return batch, gold
 
 
+def span_dicts(spans):
+    """The engine's spans, tuples in SPAN_STRUCT field order, as the
+    oracle's dicts."""
+    return [dict(zip(schema.SPAN_STRUCT.names, s)) for s in spans]
+
+
 def _check(outputs, gold):
     got = {}
     for out in outputs:
@@ -100,7 +106,7 @@ def _check(outputs, gold):
     assert set(got) == set(gold)
     for key, want in gold.items():
         assert got[key].main_text == want["main_text"], key
-        assert got[key].spans == want["spans"], key
+        assert span_dicts(got[key].spans) == want["spans"], key
 
 
 def _splits(batch: pd.DataFrame, seed: int):

@@ -111,7 +111,8 @@ def spans(draw, max_n=10):
 @given(st.lists(st.tuples(spans(), st.booleans()), min_size=1, max_size=8))
 @settings(max_examples=200, deadline=None)
 def test_merge_para_prop(blocks):
-    got = kernels.merge_para(*para_batch([b for b, _ in blocks], [i for _, i in blocks]))
+    got = kernels.merge_para(
+        *para_batch([b for b, _ in blocks], [i for _, i in blocks])).to_pylist()
     assert got == [oracle_para(sp, interline) for sp, interline in blocks]
 
 
@@ -148,15 +149,17 @@ def ocr_page(draw):
 @settings(max_examples=200, deadline=None)
 def test_ocr_page_arrays_prop(pages):
     page, boxes, scores, contents = ocr_page_arrays(*ocr_batch(pages), use_angle_cls=False)
-    assert list(zip(page.tolist(), boxes.tolist(), scores, contents)) == oracle_ocr(pages)
+    got = list(zip(page.tolist(), boxes.tolist(), scores, contents.to_pylist()))
+    assert got == oracle_ocr(pages)
 
 
 @given(st.text(max_size=60))
 @settings(max_examples=300, deadline=None)
 def test_latex_and_escape_prop(s):
     assert kernels.latex_rm_whitespace(s) == oracle.latex_rm_whitespace(s)
-    assert kernels.md_escape(s) == oracle.md_escape(s)
-    assert ("zh" if kernels.is_zh(s) else "en") == oracle.detect_lang(s)
+    col = kernels.strings([s])
+    assert kernels.md_escape(col).to_pylist() == [oracle.md_escape(s)]
+    assert ("zh" if kernels.is_zh(col)[0] else "en") == oracle.detect_lang(s)
 
 
 @given(st.lists(st.text(max_size=30), max_size=8))
@@ -164,7 +167,7 @@ def test_latex_and_escape_prop(s):
 def test_angle_cls_prop(contents):
     from sparkextract.ocr import angle_cls
 
-    got = angle_cls(contents)
+    got = angle_cls(contents).to_pylist()
     for raw, out in zip(contents, got):
         assert out == oracle.angle_cls(raw)
         if not raw.startswith("@rot180 "):

@@ -77,9 +77,11 @@ def test_latex_rm_whitespace_samples():
 
 
 def test_md_escape_and_lang():
-    for s in ["a*b `c` ~d~ $e$", "plain", "混合 mixed 文本", ""]:
-        assert kernels.md_escape(s) == oracle.md_escape(s)
-        assert ("zh" if kernels.is_zh(s) else "en") == oracle.detect_lang(s)
+    cases = ["a*b `c` ~d~ $e$", "plain", "混合 mixed 文本", ""]
+    col = kernels.strings(cases)
+    assert kernels.md_escape(col).to_pylist() == [oracle.md_escape(s) for s in cases]
+    zh = kernels.is_zh(col)
+    assert [("zh" if z else "en") for z in zh] == [oracle.detect_lang(s) for s in cases]
 
 
 def test_sorted_boxes_bubble():
@@ -193,7 +195,7 @@ def test_merge_para_parity():
     rng = random.Random(5)
     blocks = [rand_block(rng, rng.randint(1, 12)) for _ in range(300)]
     interline = [rng.random() < 0.3 for _ in blocks]
-    got = kernels.merge_para(*para_batch(blocks, interline))
+    got = kernels.merge_para(*para_batch(blocks, interline)).to_pylist()
     assert len(got) == len(blocks)
     for k, (spans, il) in enumerate(zip(blocks, interline)):
         assert got[k] == oracle_para(spans, il), k
@@ -256,7 +258,7 @@ def oracle_ocr(pages):
 
 def check_ocr(pages):
     page, boxes, scores, contents = ocr_page_arrays(*ocr_batch(pages), use_angle_cls=False)
-    got = list(zip(page.tolist(), boxes.tolist(), scores, contents))
+    got = list(zip(page.tolist(), boxes.tolist(), scores, contents.to_pylist()))
     assert got == oracle_ocr(pages)
 
 
@@ -333,8 +335,8 @@ def test_angle_cls_hook_changes_output():
     page = np.zeros(1, dtype=np.int64)
     args = (page, regions, page[:0], masks, np.zeros(2, dtype=np.int64), raws,
             scores, contents)
-    _, _, _, on = ocr_page_arrays(*args, use_angle_cls=True)
-    _, _, _, off = ocr_page_arrays(*args, use_angle_cls=False)
+    on = ocr_page_arrays(*args, use_angle_cls=True)[3].to_pylist()
+    off = ocr_page_arrays(*args, use_angle_cls=False)[3].to_pylist()
     assert on != off
     assert any("upside down" in c for c in on)
     assert any("@rot180" in c for c in off)

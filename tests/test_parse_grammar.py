@@ -8,9 +8,10 @@ The table pins which dets survive and with what value. No Spark."""
 import math
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from sparkextract.parse import _parse_batch
+from sparkextract.parse import _has_exponent, _parse_batch, _to_float
 
 INF = math.inf
 DROP = None
@@ -35,6 +36,7 @@ NUMERIC_CASES = [
     ("1E3", 1000.0),
     ("1e", DROP),
     ("1e400", DROP),
+    ("0.328E28", 3.2800000000000004e27),  # pandas' reading, see below
     ("+1", 1.0),
     ("+-1", DROP),
     ("1.", 1.0),
@@ -50,6 +52,9 @@ NUMERIC_CASES = [
     ("0.12345678901234567891", 0.1234567890123456),
     ("1e-400", 0.0),
 ]
+# an exponent sends its column to pandas' parser; were this "E" missed,
+# the correctly rounded cast would read 3.28e27 instead
+CAST_BREAKER = "0.328E28"
 
 
 def _det_line(field: str, value: str) -> str:
@@ -69,12 +74,13 @@ def _batch(field: str) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-@pytest.mark.parametrize("field", ["score", "x0"])
-def test_numeric_fields_follow_pandas_coerce(field):
-    dets = _parse_batch(_batch(field))
+def _check_fields(field, start=0):
+    """Parse the cases from ``start`` on, as a frame slice that keeps
+    its index, and check every kept value."""
+    dets = pd.DataFrame(_parse_batch(_batch(field).iloc[start:]))
     kept = dets[dets["branch"] >= 0]
     got = {int(r.turn_idx): getattr(r, field) for r in kept.itertuples()}
-    for i, (value, want) in enumerate(NUMERIC_CASES):
+    for i, (value, want) in list(enumerate(NUMERIC_CASES))[start:]:
         if want is DROP:
             assert i not in got, (value, got.get(i))
         else:
@@ -82,7 +88,30 @@ def test_numeric_fields_follow_pandas_coerce(field):
             assert got[i] == want and math.copysign(1, got[i]) == math.copysign(1, want), (
                 value, got[i], want)
     # every turn keeps its page marker, whatever happens to its det
-    assert sorted(dets.loc[dets["branch"] == -1, "turn_idx"]) == list(range(len(NUMERIC_CASES)))
+    assert sorted(dets.loc[dets["branch"] == -1, "turn_idx"]) == list(
+        range(start, len(NUMERIC_CASES)))
+
+
+@pytest.mark.parametrize("field", ["score", "x0"])
+def test_numeric_fields_follow_pandas_coerce(field):
+    _check_fields(field)
+
+
+@pytest.mark.parametrize("field", ["score", "x0"])
+def test_sliced_batch(field):
+    _check_fields(field, start=7)
+
+
+def test_exponent_scan_reads_only_the_slice():
+    """The exponent test reads the string bytes between the column's own
+    first and last offsets, not the whole data buffer: an "E" hidden
+    before or after a slice does not count, one inside it does."""
+    col = pa.array(["1" * 20, "2.5", CAST_BREAKER, "1e3"])
+    assert _has_exponent(col.slice(1, 2))
+    assert not _has_exponent(col.slice(0, 2))
+    assert not _has_exponent(col.slice(1, 1))
+    (got,) = _to_float([col.slice(1, 2)])
+    assert got.tolist() == [2.5, 3.2800000000000004e27]
 
 
 def test_negative_zero_follows_column_type():
@@ -91,8 +120,8 @@ def test_negative_zero_follows_column_type():
     def x0s(values):
         text = "@page 0 800 600\n" + "\n".join(
             f"@det text|0.9|{v}|20|300|60|c" for v in values)
-        dets = _parse_batch(pd.DataFrame(
-            [{"conv_id": "z", "turn_idx": 0, "text": text, "tool": None}]))
+        dets = pd.DataFrame(_parse_batch(pd.DataFrame(
+            [{"conv_id": "z", "turn_idx": 0, "text": text, "tool": None}])))
         return [math.copysign(1, v) for v in dets.loc[dets["branch"] >= 0, "x0"]]
 
     assert x0s(["-0", "5"]) == [1.0, 1.0]
@@ -108,8 +137,8 @@ def test_page_header_fields_coerce_to_zero():
         "@page +4 1e3 nan",
         "@page ٥ 800 600",
     ])
-    dets = _parse_batch(pd.DataFrame(
-        [{"conv_id": "p", "turn_idx": 0, "text": text, "tool": None}]))
+    dets = pd.DataFrame(_parse_batch(pd.DataFrame(
+        [{"conv_id": "p", "turn_idx": 0, "text": text, "tool": None}])))
     pages = dets[dets["branch"] == -1].sort_values("page_seq")
     assert pages["page_no"].tolist() == [2, 0, 0, 1, 4, 0]
     assert pages["page_w"].tolist() == [800.5, 800.0, 3.0, 0.0, 1000.0, 800.0]
