@@ -12,9 +12,11 @@ carries its page id:
   the Python pass only on regions with a swap candidate), line merge
   (O7), formula-mask x-interval subtraction (J2);
 - the score/content join: merged box × member pairs per region, a
-  left-to-right score sum over rank, Python ``round`` per kept box
-  (correctly rounded: ``round(0.765, 2)`` is 0.77, ``np.round`` gives
-  0.76), and one pyarrow list join of the member contents per box;
+  left-to-right score sum over rank, ``round(s, 2)`` per kept box to
+  the bit (``_round2``: numpy, with Python's correctly rounded ``round``
+  kept for scores near a half-way point — ``round(0.765, 2)`` is 0.77,
+  ``np.round`` gives 0.76), and one pyarrow list join of the member
+  contents per box;
 - M7 angle classification as pyarrow.compute over the raw content
   column.
 
@@ -53,6 +55,23 @@ def angle_cls(contents) -> pa.Array:
     rot = np.flatnonzero(pc.starts_with(c, ROT_MARK).to_numpy(zero_copy_only=False))
     flipped = pc.utf8_reverse(pc.utf8_slice_codeunits(c.take(pa.array(rot)), len(ROT_MARK)))
     return kernels.put(c, rot, flipped)
+
+
+@np.errstate(invalid="ignore", over="ignore")
+def _round2(s: np.ndarray) -> list:
+    """``[round(x, 2) for x in s]``, bit for bit, in numpy. For y = x·100
+    more than 1e-9·max(1, |y|) from a half-way point — far more than
+    the product's rounding error — ``rint(y) / 100`` picks the integer
+    ``round`` picks and divides as exactly; the rest (near a half-way
+    point, non-finite, or |y| ≥ 2**52, where y has no fraction left)
+    keep Python's ``round``."""
+    y = s * 100.0
+    out = (np.rint(y) / 100.0).tolist()
+    ay = np.abs(y)
+    slow = ~(ay < 2.0**52) | (np.abs(y - np.floor(y) - 0.5) <= 1e-9 * np.maximum(ay, 1.0))
+    for i in np.flatnonzero(slow).tolist():
+        out[i] = round(float(s[i]), 2)
+    return out
 
 
 @np.errstate(invalid="ignore")  # inf payload coords: inf - inf
@@ -139,7 +158,7 @@ def ocr_page_arrays(
     return (
         region_page[g],
         boxes[k] + shift[g],
-        [round(s, 2) for s in score[k].tolist()],
+        _round2(score[k]),
         text.take(pa.array(k)),
     )
 

@@ -12,9 +12,10 @@ prefix, null terms skipped, NULL when no term is non-null. In plans it
 is the JVM-side ``_pair_sum``; bulk math runs as exact int64 numpy over
 ``_arrow_matrix`` views (zero-padded, with a non-null mask) inside
 Arrow-batched Python UDFs: IVF training and cell probes (mapInArrow over
-broadcast centroids), the blocked and baseline GEMMs, and the
-small-corpus verify. The same contract holds on ragged, null and
-uniform vectors alike.
+broadcast centroids), the baseline GEMM, the tiled pair-verify GEMM
+that blocked all-pairs and IVF cells share (``_gemm_verified``), and
+the small-corpus verify of the LSH candidates. The same contract holds
+on ragged, null and uniform vectors alike.
 """
 
 from __future__ import annotations
@@ -680,8 +681,9 @@ def cosine_neardup_blocked(
     is a dense (n/B × n/B) GEMM — the classic all-pairs scale pattern.
     Ragged and null vectors follow the ``_pair_sum`` contract: the
     zero-filled ``_arrow_matrix`` slots add nothing, and a dot with no
-    non-null term (the twin's NULL) is 0, which fails ``dot > 0`` alike."""
-    t2 = float(int(round(threshold * threshold * 1_000_000)))
+    non-null term (the twin's NULL) is 0, which fails ``dot > 0`` alike.
+    The GEMM+threshold kernel is ``_gemm_verified``, shared with
+    ``cosine_neardup_ivf``'s per-cell verify."""
     base = quantized(embeddings).withColumn(
         "blk", F.col("vec_id") % F.lit(blocks)
     )
@@ -696,32 +698,54 @@ def cosine_neardup_blocked(
         .select("vec_id", "q", "blk",
                 F.col("partner").alias("lo"), F.col("blk").alias("hi"))
     )
+    return _gemm_verified(rep, threshold)
+
+
+def _gemm_verified(rep: DataFrame, threshold: float) -> DataFrame:
+    """(a_id, b_id, dot), a_id < b_id, of every member pair of each
+    (lo, hi) group of ``rep`` (vec_id, q, lo, hi[, blk]) with cos >
+    ``threshold``: dot > 0 and dot²·10⁶ > t²·10⁶·|a|²·|b|², t²·10⁶ the
+    integer the twins use. A cross group (lo < hi) pairs its blk = lo
+    rows with its blk = hi rows (only cross groups read ``blk``); a
+    diagonal group (lo = hi) pairs its members among themselves, each
+    unordered pair once, reading its one member matrix for both sides.
+    One applyInArrow call per group; its int64 dot block is tiled to
+    ≤ ``_SCORE_CHUNK`` entries, so a group costs its member matrix plus
+    one tile of memory."""
+    t2 = float(int(round(threshold * threshold * 1_000_000)))
 
     def gemm(tab: pa.Table) -> pa.Table:
         pyworker.install()
         lo, hi = tab.column("lo")[0].as_py(), tab.column("hi")[0].as_py()
-        blk = tab.column("blk").to_numpy()
         ids = tab.column("vec_id").to_numpy()
         V, _, _ = _arrow_matrix(tab.column("q"))
-        a, b = blk == lo, blk == hi
-        am, bm, ai, bi = V[a], V[b], ids[a], ids[b]
-        dots = am @ bm.T
-        an = np.einsum("ij,ij->i", am, am).astype(np.float64)
-        bn = np.einsum("ij,ij->i", bm, bm).astype(np.float64)
-        d = dots.astype(np.float64)
-        ok = (dots > 0) & (d * d * 1_000_000.0 > t2 * an[:, None] * bn[None, :])
-        ii, jj = np.nonzero(ok)
-        # same-block groups see each unordered pair twice (and the
-        # diagonal) → dedupe with ai<bi; cross-block pairs appear exactly
-        # once and must ALL be kept (their ids are not ordered by block)
-        keep = ai[ii] < bi[jj] if lo == hi else np.ones(len(ii), dtype=bool)
-        return pa.table(
-            {
-                "a_id": np.minimum(ai[ii], bi[jj])[keep],
-                "b_id": np.maximum(ai[ii], bi[jj])[keep],
-                "dot": dots[ii, jj][keep],
-            }
-        )
+        n2 = np.einsum("ij,ij->i", V, V).astype(np.float64)
+        if lo == hi:
+            A, B, ai, bi, an, bn = V, V, ids, ids, n2, n2
+        else:
+            blk = tab.column("blk").to_numpy()
+            a, b = blk == lo, blk == hi
+            A, B, ai, bi, an, bn = V[a], V[b], ids[a], ids[b], n2[a], n2[b]
+        step = max(1, _SCORE_CHUNK // max(1, len(B)))
+        out = [(np.empty(0, np.int64),) * 3]
+        for i in range(0, len(A), step):
+            # a diagonal tile needs only the columns from its first row on
+            j = i if lo == hi else 0
+            dots = A[i:i + step] @ B[j:].T
+            d = dots.astype(np.float64)
+            ok = (dots > 0) & (
+                d * d * 1_000_000.0 > t2 * an[i:i + step, None] * bn[None, j:]
+            )
+            if lo == hi:  # each unordered pair once, above the diagonal
+                ok &= np.arange(j, len(B))[None, :] > np.arange(i, i + len(d))[:, None]
+            ii, jj = np.nonzero(ok)
+            x, y = ai[i + ii], bi[j + jj]
+            # cross pairs come in either id order; a diagonal pair of equal
+            # ids is no pair, as the twins' strict a < b says
+            keep = x != y
+            out.append((np.minimum(x, y)[keep], np.maximum(x, y)[keep], dots[ii, jj][keep]))
+        a_id, b_id, dot = (np.concatenate(c) for c in zip(*out))
+        return pa.table({"a_id": a_id, "b_id": b_id, "dot": dot})
 
     return rep.groupBy("lo", "hi").applyInArrow(
         gemm, schema="a_id bigint, b_id bigint, dot bigint"
@@ -765,17 +789,15 @@ def _min_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
             parent = jumped
 
 
-def _components_driver_unionfind(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Small-edge-set fast path for ``_propagate_min_labels``: read the
-    (bounded — the caller guards the size) edge list with ``toArrow()``,
-    label it with the numpy ``_min_labels`` on the driver, and
+def _components_driver_unionfind(nodes: DataFrame, tab: pa.Table) -> DataFrame:
+    """Small-edge-set fast path for ``_propagate_min_labels``: label the
+    (bounded — the caller collected at most the gate's limit) Arrow edge
+    table with the numpy ``_min_labels`` on the driver, and
     broadcast-join the resulting {edge-touched node → component min} map
     onto the node stream. Nodes are NEVER collected — a 100 TB corpus
     with a few million duplicate edges stays a stream + one broadcast
     map. Exactly the distributed loop's fixpoint: every node's label =
     min reachable doc_id."""
-    tab = edges.toArrow()
-    edges.unpersist()
     ids, labels = _min_labels(
         tab.column(0).to_numpy(), tab.column(1).to_numpy()
     )
@@ -806,12 +828,15 @@ def _propagate_min_labels(
     reachable doc_id). ``nodes`` has one ``doc_id`` column; ``pairs``
     carries undirected edges (doc_a, doc_b).
 
-    Size-adaptive: when the edge set has at most
-    ``_DRIVER_EDGE_THRESHOLD`` (2M) rows, components run as one numpy
-    union-find on the driver over the EDGES ONLY plus a broadcast join
-    onto the node stream (``_components_driver_unionfind``) — replacing
-    diameter-many join+checkpoint rounds (~1 s each of fixed latency)
-    with one job. The decision is logged with the edge count. Driver
+    Size-adaptive, decided by ONE bounded collect: at most
+    ``_DRIVER_EDGE_THRESHOLD`` (2M) + 1 edges are read with ``toArrow()``.
+    When the edge set has at most the limit, that collect IS the input:
+    components run as one numpy union-find on the driver over the EDGES
+    ONLY plus a broadcast join onto the node stream
+    (``_components_driver_unionfind``) — replacing diameter-many
+    join+checkpoint rounds (~1 s each of fixed latency) with one job, and
+    ``pairs`` is computed once. The decision is logged, with the edge
+    count on the driver path and "exceed" on the other. Driver
     cost is flat arrays, not Python objects: measured on 2M-edge random
     graphs and a 2M-edge chain, the edges take 32 MB of Arrow, the numpy
     relabel and rounds peak at ~215 MB, and the label map is ≤ 40 MB of
@@ -826,16 +851,24 @@ def _propagate_min_labels(
     labels equal the full transitive closure that the DuckDB
     recursive-CTE twins compute; ``max_iter`` is only a runaway guard
     (one-hop propagation converges in ≤ graph-diameter rounds, itself ≤
-    |V|) and raises if ever hit."""
-    edges = pairs.persist()
-    n_edges = edges.count()
-    driver = n_edges <= _DRIVER_EDGE_THRESHOLD
+    |V|) and raises if ever hit. Only this branch materializes the edges
+    (an eager ``localCheckpoint``, which cuts the lineage each round's
+    plan would embed); that RECOMPUTES ``pairs``, since the bounded
+    collect above keeps no copy — one extra pass on the path whose
+    rounds cost far more."""
+    tab = pairs.limit(_DRIVER_EDGE_THRESHOLD + 1).toArrow()
+    if tab.num_rows <= _DRIVER_EDGE_THRESHOLD:
+        _log.info(
+            "components: driver (%d edges, driver limit %d)",
+            tab.num_rows, _DRIVER_EDGE_THRESHOLD,
+        )
+        return _components_driver_unionfind(nodes, tab)
     _log.info(
-        "components: %s (%d edges, driver limit %d)",
-        "driver" if driver else "distributed", n_edges, _DRIVER_EDGE_THRESHOLD,
+        "components: distributed (edges exceed driver limit %d)",
+        _DRIVER_EDGE_THRESHOLD,
     )
-    if driver:
-        return _components_driver_unionfind(nodes, edges)
+    del tab
+    edges = pairs.localCheckpoint(eager=True)
     sym = edges.selectExpr("doc_a as a", "doc_b as b").unionByName(
         edges.selectExpr("doc_b as a", "doc_a as b")
     ).persist()
@@ -872,10 +905,8 @@ def _propagate_min_labels(
         labels = new.select("doc_id", "cluster")
         if changed == 0:
             sym.unpersist()
-            edges.unpersist()
             return labels
     sym.unpersist()
-    edges.unpersist()
     raise RuntimeError(
         f"min-label propagation did not converge in {max_iter} rounds — "
         "graph diameter exceeds the runaway guard; raise max_iter"
@@ -1009,7 +1040,7 @@ def cosine_neardup_lsh(
 def auto_cells(n: int) -> int:
     """The ``n_cells="auto"`` rule: largest power of two p in [8, 2^30]
     with p*p <= n. That is ⌊√n⌋ floored to a power of two — candidate
-    volume in the cell self-join is ∝ n²·nprobe²/cells, so ~√n cells
+    volume over all cells is ∝ n²·nprobe²/cells, so ~√n cells
     keeps per-cell work linear as the corpus grows. Must stay EXACTLY
     equivalent to ``_auto_cells_sql`` (the DuckDB params CTE)."""
     cells = 8
@@ -1046,12 +1077,12 @@ def cosine_neardup_ivf(
     nprobe: int | str = "auto",
 ) -> DataFrame:
     """Embedding-side production near-dup: candidates = pairs sharing any
-    of each vector's ``nprobe`` closest TRAINED IVF cells (cell-keyed
-    self-join — candidate volume ∝ nprobe²·n²/n_cells per cell, never
-    all-pairs), then the same exact quantized-cosine verify. The
-    embedding-space complement to ``cosine_neardup_lsh``'s text-space
-    blocking: this one finds semantic near-dups whose TEXT shares no
-    shingle, as long as their vectors land in a common cell.
+    of each vector's ``nprobe`` closest TRAINED IVF cells (candidate
+    volume ∝ nprobe²·n²/n_cells, never all-pairs), each kept iff its
+    exact quantized cosine passes. The embedding-space complement to
+    ``cosine_neardup_lsh``'s text-space blocking: this one finds
+    semantic near-dups whose TEXT shares no shingle, as long as their
+    vectors land in a common cell.
 
     ``n_cells`` defaults to ``"auto"`` (one corpus count → ``auto_cells``)
     so the DEFAULT path is the one that survives corpus growth; pass an
@@ -1061,27 +1092,27 @@ def cosine_neardup_ivf(
     loses recall as auto-cells grows — measured in
     BENCH/recall_grid.json; rule + cost tradeoff on ``auto_nprobe``).
 
-    The probe list is one narrow mapInArrow pass over the broadcast
-    trained centroids (``_probes``). Ragged/null contract: null and
-    empty vectors get no cells, and cells rank under ``ivf_train``'s
-    contract; the verify (``_verify_cosine_pairs``) sums the common
-    prefix and skips nulls, as the twin does."""
+    Plan: the probe list is one narrow mapInArrow pass over the broadcast
+    trained centroids (``_probes``) that carries each vector along; one
+    shuffle groups the (vec_id, q) rows by cell, and each cell's member
+    pairs are verified by ONE tiled int64 GEMM (``_gemm_verified``, a
+    cell being a diagonal group); a ``distinct`` drops the copies of
+    pairs that share several cells. No candidate pair is ever a row:
+    the shuffle moves n·nprobe vectors, and a cell's member matrix must
+    fit one Python worker (SCALE.md §4). Ragged/null contract: null and
+    empty vectors get no cells, cells rank under ``ivf_train``'s
+    contract, and the GEMM sums the common prefix with nulls skipped
+    (zero-filled), as the twin does."""
     if n_cells == "auto":
         n_cells = auto_cells(embeddings.count())
     if nprobe == "auto":
         nprobe = auto_nprobe(n_cells)
     _, cent = _ivf_train_impl(embeddings, k=n_cells, iters=iters)
     bc = embeddings.sparkSession.sparkContext.broadcast(cent)
-    probes = _probes(quantized(embeddings), bc, nprobe).select("vec_id", "cell")
-    cand = (
-        probes.alias("a").join(probes.alias("b"), "cell")
-        .where(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("doc_a"), F.col("b.vec_id").alias("doc_b")
-        )
-        .distinct()
+    members = _probes(quantized(embeddings), bc, nprobe, with_q=True).select(
+        "vec_id", "q", F.col("cell").alias("lo"), F.col("cell").alias("hi")
     )
-    return _verify_cosine_pairs(cand, embeddings, threshold)
+    return _gemm_verified(members, threshold).distinct()
 
 
 def _nprobe_pred(n_cells: int | str, nprobe: int | str) -> str:
@@ -1171,12 +1202,15 @@ def semdedup(
     """SemDedup (Abbas et al. 2023, arXiv:2303.09540): deduplicate in
     EMBEDDING space — semantic duplicates whose text shares no shingle
     still collapse. Composes the production pieces end to end:
-    trained-IVF cell blocking → exact quantized-cosine verify
+    trained-IVF cells, each verified by one exact quantized-cosine GEMM
     (``cosine_neardup_ivf``) → connected components
     (``_propagate_min_labels``) → one representative (min id) per
-    semantic cluster with its size. Every stage is a keyed join or a
-    bounded driver loop; nothing all-pairs, so the composition survives
-    the same 100 TB argument as its parts (SCALE.md).
+    semantic cluster with its size. Every stage is a keyed shuffle, a
+    bounded per-cell GEMM or a bounded driver collect; nothing
+    all-pairs, so the composition survives the same 100 TB argument as
+    its parts (SCALE.md). The verified edges are not materialized: on
+    the driver path the components gate's one bounded collect is their
+    only consumer.
 
     ``n_cells`` must grow ~√n (candidate volume ∝ n²·nprobe²/cells, so
     √n cells keeps per-cell work linear): the DEFAULT is ``"auto"`` —
@@ -1190,11 +1224,6 @@ def semdedup(
     pairs = cosine_neardup_ivf(
         embeddings, threshold=threshold, n_cells=n_cells, iters=iters, nprobe=nprobe
     ).select(F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b"))
-    # materialize the (small) verified edge set: the IVF probe self-join +
-    # verify plan would otherwise be embedded 2× per propagation round
-    # (symmetric union), compounding the logical plan past what the
-    # driver can even stringify
-    pairs = pairs.localCheckpoint(eager=True)
     labels = _propagate_min_labels(
         embeddings.select(F.col("vec_id").alias("doc_id")), pairs
     )
@@ -1262,26 +1291,25 @@ def training_corpus_v2(
     keeper = min doc_id) → token accounting. Returns one row per
     surviving document: (doc_id, n_tokens, n_members, text_fp).
 
-    Plan shape at 100 TB: two fused scalar passes, the semdedup keyed
-    joins + bounded driver loop, one md5-keyed shuffle, two doc_id
-    equi-joins — nothing all-pairs, nothing per-row Python."""
+    Plan shape at 100 TB: two fused scalar passes, the semdedup cell
+    GEMMs + bounded driver collect, one doc_id equi-join and ONE
+    md5-keyed aggregate whose ``min(struct(doc_id, …))`` carries the
+    keeper's columns — no join-back, so no fan-out to materialize.
+    Nothing all-pairs, nothing per-row Python."""
     from .textops import _gopher_pass_col, pii_scrub
 
     gated = documents.where(_gopher_pass_col())
     scrubbed = pii_scrub(gated).select("doc_id", "scrubbed")
     reps = semdedup(embeddings, threshold, n_cells, iters, nprobe)
-    # sem feeds the dedup agg AND the keeper join-back — materialize once
-    # (see _training_corpus_v4_full)
-    sem = scrubbed.join(reps, "doc_id").localCheckpoint(eager=True)
-    keep = sem.groupBy(F.md5("scrubbed").alias("text_fp")).agg(
-        F.min("doc_id").alias("doc_id")
+    # the token count rides in the keeper struct (ints, not the text)
+    keep = (
+        scrubbed.join(reps, "doc_id")
+        .groupBy(F.md5("scrubbed").alias("text_fp"))
+        .agg(F.min(F.struct(
+            "doc_id", F.size(F.split("scrubbed", " ")).alias("n_tokens"), "n_members"
+        )).alias("k"))
     )
-    return keep.join(sem, "doc_id").select(
-        "doc_id",
-        F.size(F.split("scrubbed", " ")).alias("n_tokens"),
-        "n_members",
-        "text_fp",
-    )
+    return keep.select("k.doc_id", "k.n_tokens", "k.n_members", "text_fp")
 
 
 def training_corpus_v2_sql(

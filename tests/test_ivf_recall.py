@@ -12,6 +12,7 @@ against full-matrix references without Spark."""
 import collections
 import logging
 import os
+import re
 import sys
 
 import duckdb
@@ -99,24 +100,37 @@ def test_trained_not_catastrophically_worse(report):
 
 def test_numpy_paths_equal_join_paths(spark, monkeypatch):
     """The broadcast numpy verify must keep exactly the pairs the
-    keyed-join verify keeps — pinned by forcing ``_VERIFY_TABLE_VALUES``
-    to 0 (join path) and diffing the IVF near-dup output, on the uniform
-    corpus and on a ragged fixture with null vectors and elements."""
-    cases = [
-        (spark.read.parquet(f"{SF_DIR}/embeddings.parquet"), 16, "auto"),
-        (spark.createDataFrame(vector_table(0, "combined")), 6, 3),
-    ]
+    keyed-join verify keeps — pinned by feeding ``_verify_cosine_pairs``
+    every a < b pair of each corpus (plus pairs naming an id with no
+    vector) and forcing ``_VERIFY_TABLE_VALUES`` to 0 (join path), on the
+    uniform corpus and on a ragged fixture with null vectors and
+    elements."""
+    from pyspark.sql import functions as F
+
+    cases = []
+    for emb in (
+        spark.read.parquet(f"{SF_DIR}/embeddings.parquet"),
+        spark.createDataFrame(vector_table(0, "combined")),
+    ):
+        ids = emb.select("vec_id")
+        cand = (
+            ids.select(F.col("vec_id").alias("doc_a"))
+            .crossJoin(ids.select(F.col("vec_id").alias("doc_b")))
+            .where("doc_a < doc_b")
+            .unionByName(spark.createDataFrame(
+                [(0, 10**9), (10**9, 10**9 + 1)], "doc_a bigint, doc_b bigint"
+            ))
+        )
+        cases.append((cand, emb))
 
     def snap():
         return [
-            sorted(map(tuple, simsearch.cosine_neardup_ivf(
-                emb, n_cells=cells, nprobe=nprobe
-            ).collect()))
-            for emb, cells, nprobe in cases
+            sorted(map(tuple, simsearch._verify_cosine_pairs(cand, emb, 0.35).collect()))
+            for cand, emb in cases
         ]
 
     fast = snap()
-    assert fast[1], "the ragged fixture must keep some pairs"
+    assert all(fast), "every case must keep some pairs"
     monkeypatch.setattr(simsearch, "_VERIFY_TABLE_VALUES", 0)
     assert fast == snap()
 
@@ -137,6 +151,24 @@ def test_verify_gate_is_logged(spark, monkeypatch, caplog):
     assert len(lines) == 2, lines
     assert lines[0].startswith("verify: broadcast (probed 60 rows x width 8,"), lines
     assert lines[1].startswith("verify: join (probed 60 rows x width 8,"), lines
+
+
+def test_ivf_plan_probes_once_without_join(spark):
+    """``cosine_neardup_ivf`` verifies each cell's member pairs in one
+    grouped GEMM: its executed plan runs the probe kernel once (one
+    MapInArrow) and has no join — no candidate self-join, no verify
+    join."""
+    df = simsearch.cosine_neardup_ivf(spark.read.parquet(f"{SF_DIR}/embeddings.parquet"))
+    df.collect()  # AQE settles the final plan on execution
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    # node name of each line, past the tree drawing and any "*(n) " codegen stage
+    nodes = [
+        re.sub(r"^[\s+\-:|]*(\*\(\d+\) )?", "", ln).split(" ")[0]
+        for ln in plan.splitlines()
+    ]
+    assert nodes.count("MapInArrow") == 1, plan
+    assert "FlatMapGroupsInArrow" in nodes, plan
+    assert not [n for n in nodes if "Join" in n or n == "CartesianProduct"], plan
 
 
 @pytest.mark.parametrize("shape", SHAPES)
@@ -249,10 +281,12 @@ def test_neardup_threshold_boundary(spark):
     emb = spark.createDataFrame(tab)
     assert not _spark(simsearch.cosine_neardup_blocked(emb))
     assert not _spark(simsearch.cosine_neardup(emb))
+    assert not _spark(simsearch.cosine_neardup_ivf(emb))
     assert not _twin(tab, entrymod.oracle_sql()["baseline_cosine_neardup_blocked"])
-    # just below the boundary the pair passes everywhere
+    # just below the boundary the pair passes everywhere, once
     assert _spark(simsearch.cosine_neardup_blocked(emb, threshold=0.3499))
     assert _spark(simsearch.cosine_neardup(emb, threshold=0.3499))
+    assert _spark(simsearch.cosine_neardup_ivf(emb, threshold=0.3499)) == {(0, 1, 7000): 1}
 
 
 def test_chunked_kernels_equal_full_matrix_reference():

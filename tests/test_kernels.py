@@ -9,13 +9,14 @@ edge cases and seeded random boxes.
 """
 
 import random
+import struct
 
 import numpy as np
 import pandas as pd
 
 import oracle
-from sparkextract import fused, kernels
-from sparkextract.ocr import ocr_page_arrays
+from sparkextract import fused, kernels, schema
+from sparkextract.ocr import _round2, ocr_page_arrays
 
 
 def rand_boxes(rng, n, w=1000, h=1000, min_side=5, max_side=120):
@@ -301,6 +302,34 @@ def test_ocr_page_arrays_parity():
     # round(0.765, 2) is 0.77 (correctly rounded); np.round gives 0.76
     pages.append(([[0, 0, 400, 100]], [], [([10.0, 20.0, 30.0, 40.0], 0.765, "r")]))
     check_ocr(pages)
+
+
+def test_ocr_score_rounding_equals_python_round():
+    """OCR span scores round in numpy except near a half-way point; the
+    result must still be ``round(s, 2)`` to the bit (sign of zero and NaN
+    included): random scores of every sign and scale, every k/200 and
+    its neighbouring doubles, 0.765, ±inf, NaN and 1e300 — directly and
+    through ``ocr_page_arrays`` (one raw per region, so each span's score
+    is its raw score)."""
+    rng = np.random.default_rng(11)
+    k = np.arange(-400, 401) / 200
+    scores = np.concatenate([
+        rng.random(5000), rng.normal(0, 1e4, 2000), rng.uniform(-1, 1, 2000) * 1e15,
+        k, np.nextafter(k, np.inf), np.nextafter(k, -np.inf),
+        [0.765, np.inf, -np.inf, np.nan, 1e300, -1e300, -0.0, 0.001, -0.001],
+    ])
+    bits = [struct.pack("<d", x) for x in _round2(scores)]
+    assert bits == [struct.pack("<d", round(s, 2)) for s in scores.tolist()]
+    n = len(scores)
+    page = np.arange(n)
+    got = ocr_page_arrays(
+        page, np.tile([0.0, 0.0, 400.0, 100.0], (n, 1)), page[:0], np.empty((0, 4)),
+        page, np.tile([10.0, 20.0, 30.0, 40.0], (n, 1)), scores, ["r"] * n,
+    )
+    kept = scores[~(scores < schema.DROP_SCORE)]
+    assert [struct.pack("<d", x) for x in got[2]] == [
+        struct.pack("<d", round(s, 2)) for s in kept.tolist()
+    ]
 
 
 def test_non_finite_coords_do_not_raise():

@@ -88,8 +88,9 @@ def test_components_driver_equals_distributed(spark, monkeypatch):
 
 
 def test_components_gate_is_logged(spark, monkeypatch, caplog):
-    """The components size gate logs driver or distributed with the edge
-    count."""
+    """The components size gate logs driver with the edge count, or
+    distributed when its bounded collect finds more edges than the
+    limit (the distributed branch counts no edges)."""
     from pyspark.sql import functions as F
 
     nodes = spark.range(0, 4).select(F.col("id").alias("doc_id"))
@@ -105,8 +106,33 @@ def test_components_gate_is_logged(spark, monkeypatch, caplog):
     ]
     assert lines == [
         "components: driver (2 edges, driver limit 2000000)",
-        "components: distributed (2 edges, driver limit 1)",
+        "components: distributed (edges exceed driver limit 1)",
     ]
+
+
+# the job-count pin holds for sf0.001, whichever scale PARITY_SF_DIR picks
+SF0001 = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+
+
+@pytest.mark.skipif(not os.path.exists(SF0001), reason="testdata absent")
+def test_training_corpus_v2_job_count(spark):
+    """Plan guard for the v2 capstone: building and collecting it on
+    sf0.001 runs 19 Spark jobs (the auto-cells count, IVF init and
+    training rounds, the components gate's one bounded edge collect and
+    the final collect), with no eager checkpoint and no keeper join-back
+    left to add jobs. A new materialization or driver action shows up
+    here."""
+    import __spark_entry__ as entrymod
+
+    sc = spark.sparkContext
+    group = "training_corpus_v2-job-count"
+    sc.setJobGroup(group, "training_corpus_v2 job-count guard")
+    try:
+        rows = entrymod.queries()["training_corpus_v2"](spark, SF0001).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 19
 
 
 def _dict_min_labels(edges):
