@@ -8,8 +8,9 @@ Usage:
       # content-addressed hash of the input file listing; rerunning on
       # unchanged input is a no-op resume
 
-``run`` executes the extraction pipeline with per-partition lineage and
-exact resume (lineage.py). ``package`` builds the --py-files zip.
+``run`` executes the fused extraction engine (fused.py) with
+per-partition lineage and exact resume (lineage.py). ``package`` builds
+the --py-files zip.
 """
 
 from __future__ import annotations
@@ -49,7 +50,6 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--buckets", type=int, default=256)
     r.add_argument("--master", default=None)
     r.add_argument("--repartition", type=int, default=0)
-    r.add_argument("--formula-length-buckets", type=int, default=8)
 
     args = ap.parse_args(argv)
     if args.cmd == "package":
@@ -69,7 +69,6 @@ def main(argv: list[str] | None = None) -> int:
             snapshot=args.snapshot,
             buckets=args.buckets,
             repartition=args.repartition,
-            formula_length_buckets=args.formula_length_buckets,
         )
         print(json.dumps(summary))
     finally:

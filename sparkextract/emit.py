@@ -107,24 +107,3 @@ def emit_extracted(blocks: DataFrame, pages: DataFrame) -> DataFrame:
 def page_markers(dets: DataFrame) -> DataFrame:
     return dets.filter(F.col("branch") == -1).select(*PAGE_KEY, "page_no")
 
-
-def write_extracted_sorted(
-    extracted: DataFrame, path: str, buckets: int = 64
-) -> None:
-    """100 TB sink variant (SCALE.md §1): bucket by conv hash and sort
-    WITHIN partitions by (conv_id, turn_idx) before writing, so every
-    parquet file holds contiguous, turn-ordered conversations. Downstream
-    consumers that only need within-conversation order can then read
-    sorted data without any global sort — the O8 row_number window stays
-    the semantic source of ``turn_seq``, but its global shuffle need not
-    be repeated by every reader."""
-    (
-        extracted.withColumn(
-            "bucket", F.pmod(F.hash("conv_id"), F.lit(buckets))
-        )
-        .repartition(buckets, F.col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )

@@ -1383,7 +1383,13 @@ def training_corpus_v3(
     scrubbed = pii_scrub(gated).select("doc_id", "scrubbed")
     reps = semdedup(embeddings, threshold, n_cells, iters, nprobe)
     # sem and kept each feed two consumers — materialize once
-    # (see _training_corpus_v4_full)
+    # (see _training_corpus_v4_full). Unlike v2's keeper, one
+    # min(struct(doc_id, scrubbed, n_members)) aggregate does not remove
+    # these: the keeper itself still feeds the chunking AND the n_members
+    # join. Measured at sf0.01 (4 cores, two interleaved sets of 5 runs),
+    # the aggregate without both checkpoints gave identical output in 23
+    # Spark jobs instead of 29 but ran slower: job_s medians 2.77 / 3.46 s
+    # against 2.53 / 2.83 s with the checkpoints.
     sem = scrubbed.join(reps, "doc_id").localCheckpoint(eager=True)
     keep = sem.groupBy(F.md5("scrubbed").alias("text_fp")).agg(
         F.min("doc_id").alias("doc_id")
@@ -1481,15 +1487,6 @@ def training_corpus_v4(
     semdedup keyed joins, one md5 shuffle) + one content-keyed segment
     shuffle + a |sources|-row broadcast quota + one per-source window —
     nothing all-pairs, nothing per-row Python."""
-    from .textops import (
-        _gopher_pass_col,
-        mixture_sample,
-        pack_assign,
-        pii_scrub,
-        quality_classifier,
-        segment_dedup,
-    )
-
     return _training_corpus_v4_full(
         documents, embeddings, doc_sources, threshold, n_cells, iters,
         nprobe, seg_words, rate, salt, seq_len,
@@ -1530,7 +1527,13 @@ def _training_corpus_v4_full(
     # embedded once per consumer (multiplicatively: the quality/gopher
     # gates re-executed ~8x in the v4 plan; ReuseExchange can't dedupe
     # the column-pruned copies). Each checkpointed set is a SURVIVOR
-    # table, the pipeline's natural stage boundary.
+    # table, the pipeline's natural stage boundary. sem stays even though
+    # one min(struct(doc_id, scrubbed)) aggregate could replace the keeper
+    # join-back: segment_dedup reads the keeper twice, so the gate chain
+    # would run twice. Measured at sf0.01 (4 cores, two interleaved sets
+    # of 5 runs), that variant gave identical output in 39 Spark jobs
+    # instead of 43 (v5: 56-57 instead of 60) but ran slower: job_s
+    # medians 3.62 / 4.15 s against 3.19 / 3.89 s with this checkpoint.
     sem = scrubbed.join(reps.select("doc_id"), "doc_id").localCheckpoint(
         eager=True
     )

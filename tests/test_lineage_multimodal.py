@@ -1,5 +1,5 @@
-"""Lineage/resume semantics: snapshots, time travel, expiry, incremental
-extraction, partition/schema evolution and compaction."""
+"""Lineage/resume semantics: run and exact resume, lineage row counts
+observed inside the write, and content-addressed snapshot ids."""
 
 import pytest
 
@@ -33,7 +33,7 @@ def test_lineage_run_and_resume(spark, tmp_path):
     s3 = run_with_lineage(spark, sdf, out, snapshot="snapA", buckets=8)
     assert s3["processed"] == 3 and s3["skipped"] == 5
 
-    # final output equals a direct run
+    # final output (fused engine) equals a direct staged-engine run
     got = {
         (r.conv_id, r.turn_idx): r.main_text
         for r in spark.read.parquet(f"{out}/data").collect()
@@ -70,31 +70,6 @@ def test_lineage_observe_counts_match_truth(spark, tmp_path):
         assert lin[b].rows_out == truth_out.get(b, 0), b
 
 
-def test_lineage_observe_counts_match_truth_sorted(spark, tmp_path):
-    # the sort_by= path adds a repartitionByRange whose boundary-sampling
-    # job re-executes its child subtree: with observe() BELOW the range
-    # exchange every count recorded 2x truth (round-5 ADVICE, high).
-    # observe now sits ABOVE the exchange; counts must equal truth.
-    pdf = synth.gen_transcripts(n_convs=8, seed=33)
-    sdf = spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS)
-    out = str(tmp_path / "out_sorted")
-    s = run_with_lineage(
-        spark, sdf, out, snapshot="snapS", buckets=4, sort_by="turn_idx"
-    )
-    assert s["rows_in"] == sdf.count()
-    lin = {r.partition_id: r for r in spark.read.parquet(f"{out}/_lineage").collect()}
-    from pyspark.sql import functions as F
-
-    data = spark.read.parquet(f"{out}/data")
-    truth_out = {
-        r.bucket: r.n
-        for r in data.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert s["rows_out"] == data.count()
-    for b in range(4):
-        assert lin[b].rows_out == truth_out.get(b, 0), b
-
-
 def test_lineage_snapshot_content_addressed(spark, tmp_path):
     # auto snapshot ids hash the input file listing: same files resume as
     # a no-op; a rewritten input is a NEW snapshot and reprocesses
@@ -124,454 +99,3 @@ def test_lineage_snapshot_content_addressed(spark, tmp_path):
     # file-less frames must demand an explicit snapshot
     with pytest.raises(ValueError):
         snapshot_id(spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS))
-
-
-def test_lineage_time_travel(spark, tmp_path):
-    """Iceberg-analog pinned reads + history: after an input file is
-    rewritten (new snapshot, full reprocess), reading the PRE-change
-    snapshot still returns exactly the old rows (VERDICT r02 item 8)."""
-    from sparkextract.lineage import read_snapshot, snapshot_log
-
-    pdf = synth.gen_transcripts(n_convs=6, seed=44)
-    src_dir = str(tmp_path / "src")
-    spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS).coalesce(1).write.parquet(src_dir)
-    out = str(tmp_path / "out")
-
-    sdf1 = spark.read.parquet(src_dir)
-    sid1 = snapshot_id(sdf1)
-    run_with_lineage(spark, sdf1, out, buckets=4)
-    want1 = {
-        (r.conv_id, r.turn_idx): r.main_text for r in extract(sdf1).collect()
-    }
-
-    # rewrite the input in place → new snapshot, reprocess
-    pdf2 = synth.gen_transcripts(n_convs=9, seed=45)
-    spark.createDataFrame(pdf2, schema=schema.TRANSCRIPTS).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    sdf2 = spark.read.parquet(src_dir)
-    sid2 = snapshot_id(sdf2)
-    run_with_lineage(spark, sdf2, out, buckets=4)
-    want2 = {
-        (r.conv_id, r.turn_idx): r.main_text for r in extract(sdf2).collect()
-    }
-    assert want1 != want2  # the corpora genuinely differ
-
-    # pinned read of the pre-change snapshot returns the OLD rows
-    got1 = {
-        (r.conv_id, r.turn_idx): r.main_text
-        for r in read_snapshot(spark, out, sid1).collect()
-    }
-    assert got1 == want1
-    # default (latest) read returns the new rows
-    got2 = {
-        (r.conv_id, r.turn_idx): r.main_text
-        for r in read_snapshot(spark, out).collect()
-    }
-    assert got2 == want2
-
-    # history table: two snapshots, oldest first, correct bucket counts
-    log = snapshot_log(spark, out).collect()
-    assert [r.snapshot for r in log] == [sid1, sid2]
-    assert all(r.n_buckets == 4 for r in log)
-    assert log[0].first_committed_at <= log[1].first_committed_at
-
-    with pytest.raises(ValueError):
-        read_snapshot(spark, out, "no-such-snapshot")
-
-
-def test_expire_snapshots(spark, tmp_path):
-    """Retention GC: expiring all but the newest snapshot removes the old
-    data directory and manifest rows; the retained snapshot still reads
-    exactly, the expired id raises (Iceberg expireSnapshots analog)."""
-    import os
-
-    from sparkextract.lineage import (
-        expire_snapshots,
-        read_snapshot,
-        snapshot_log,
-    )
-
-    src_dir, out = str(tmp_path / "src"), str(tmp_path / "out")
-    sids = []
-    for n_convs, seed in ((5, 61), (7, 62), (9, 63)):
-        pdf = synth.gen_transcripts(n_convs=n_convs, seed=seed)
-        spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS).coalesce(1) \
-            .write.mode("overwrite").parquet(src_dir)
-        sdf = spark.read.parquet(src_dir)
-        sids.append(snapshot_id(sdf))
-        run_with_lineage(spark, sdf, out, buckets=4)
-    want_latest = {
-        (r.conv_id, r.turn_idx): r.main_text
-        for r in read_snapshot(spark, out).collect()
-    }
-
-    res = expire_snapshots(spark, out, keep_last=1)
-    assert res["expired"] == sids[:2] and res["kept"] == sids[2:]
-    # data dirs of expired snapshots are gone, retained one remains
-    for sid in sids[:2]:
-        assert not os.path.exists(f"{out}/data/snapshot={sid}")
-        with pytest.raises(ValueError):
-            read_snapshot(spark, out, sid)
-    got = {
-        (r.conv_id, r.turn_idx): r.main_text
-        for r in read_snapshot(spark, out, sids[2]).collect()
-    }
-    assert got == want_latest
-    log = snapshot_log(spark, out).collect()
-    assert [r.snapshot for r in log] == [sids[2]]
-    # idempotent: nothing left to expire
-    assert expire_snapshots(spark, out, keep_last=1)["expired"] == []
-    with pytest.raises(ValueError):
-        expire_snapshots(spark, out, keep_last=0)
-
-
-def test_incremental_extraction_and_read_changes(spark, tmp_path):
-    """Iceberg-style incremental chain: snapshot A extracts the initial
-    corpus; a conv-aligned file append makes extract_incremental process
-    ONLY the new file as snapshot B; read_changes(A, B) returns exactly
-    the appended conversations' extraction; read_changes(None) is the
-    full table; and the structured-streaming path (extract_stream with a
-    checkpoint, availableNow twice) independently computes the same
-    incremental delta."""
-    from sparkextract.lineage import extract_incremental, read_changes
-    from sparkextract.streaming import extract_stream, read_transcript_stream
-
-    def keyed(df):
-        return {
-            (r.conv_id, r.turn_idx): r.main_text
-            for r in df.select("conv_id", "turn_idx", "main_text").collect()
-        }
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    pdfA = synth.gen_transcripts(n_convs=6, seed=51)
-    spark.createDataFrame(pdfA, schema=schema.TRANSCRIPTS).coalesce(1).write.parquet(src)
-
-    sA = extract_incremental(spark, spark.read.parquet(src), out, buckets=4)
-    assert sA["processed"] == 4 and sA["new_files"] == 1
-    sidA = sA["snapshot"]
-
-    # unchanged input -> no-op (no new snapshot, zero work)
-    s0 = extract_incremental(spark, spark.read.parquet(src), out, buckets=4)
-    assert s0["processed"] == 0 and s0["new_files"] == 0 and s0["snapshot"] is None
-
-    # streaming pass 1 over the same source (checkpointed)
-    out_s, ckpt = str(tmp_path / "out_s"), str(tmp_path / "ckpt")
-    q = extract_stream(
-        read_transcript_stream(spark, src), out_s, ckpt, trigger_once=True
-    )
-    q.awaitTermination(300)
-
-    # conv-aligned append: a file of entirely NEW conversations
-    pdfB = synth.gen_transcripts(n_convs=5, seed=52)
-    pdfB["conv_id"] = pdfB["conv_id"].str.replace("conv-", "convB-", regex=False)
-    spark.createDataFrame(pdfB, schema=schema.TRANSCRIPTS).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    sB = extract_incremental(spark, spark.read.parquet(src), out, buckets=4)
-    assert sB["new_files"] == 1 and sB["processed"] == 4
-    sidB = sB["snapshot"]
-    assert sidB != sidA
-
-    want_b = keyed(extract(spark.createDataFrame(pdfB, schema=schema.TRANSCRIPTS)))
-    got_changes = keyed(read_changes(spark, out, sidA, sidB))
-    assert got_changes == want_b and got_changes
-
-    # full current state = union of the whole snapshot chain
-    want_all = keyed(extract(spark.read.parquet(src)))
-    assert keyed(read_changes(spark, out, None)) == want_all
-    # default to_snapshot = latest
-    assert keyed(read_changes(spark, out, sidA)) == want_b
-
-    # empty range and error cases
-    assert read_changes(spark, out, sidB, sidB).count() == 0
-    with pytest.raises(ValueError):
-        read_changes(spark, out, "no-such-snapshot")
-    with pytest.raises(ValueError):
-        read_changes(spark, out, sidB, sidA)  # reversed range
-
-    # streaming pass 2: same checkpoint -> processes ONLY the appended
-    # file; its delta must equal read_changes(A, B)
-    q2 = extract_stream(
-        read_transcript_stream(spark, src), out_s, ckpt, trigger_once=True
-    )
-    q2.awaitTermination(300)
-    s_all = spark.read.parquet(out_s)
-    first_batches = [
-        r.batch_id for r in s_all.select("batch_id").distinct().collect()
-    ]
-    new_batch = max(first_batches)
-    assert keyed(s_all.where(s_all.batch_id == new_batch)) == want_b
-    assert keyed(s_all) == want_all
-
-
-def test_partition_evolution_across_snapshots(spark, tmp_path):
-    """Bucket-count (partition-spec) EVOLUTION across snapshots: the
-    manifest records each snapshot's own committed bucket set, so
-    snapshot A written with 4 buckets and snapshot B with 8 coexist —
-    pinned reads of each resolve their own layout, and the incremental
-    read between them spans the spec change (Iceberg partition-evolution
-    semantics at the granularity this stand-in supports)."""
-    from sparkextract.lineage import (
-        committed_buckets,
-        read_changes,
-        read_snapshot,
-        run_with_lineage,
-    )
-
-    out = str(tmp_path / "out")
-    pdfA = synth.gen_transcripts(n_convs=6, seed=61)
-    sA = run_with_lineage(
-        spark, spark.createDataFrame(pdfA, schema=schema.TRANSCRIPTS),
-        out, snapshot="snapA", buckets=4,
-    )
-    assert sA["processed"] == 4
-    pdfB = synth.gen_transcripts(n_convs=5, seed=62)
-    pdfB["conv_id"] = pdfB["conv_id"].str.replace("conv-", "convB-", regex=False)
-    sB = run_with_lineage(
-        spark, spark.createDataFrame(pdfB, schema=schema.TRANSCRIPTS),
-        out, snapshot="snapB", buckets=8,
-    )
-    assert sB["processed"] == 8
-    assert committed_buckets(spark, out, "snapA") == set(range(4))
-    assert committed_buckets(spark, out, "snapB") == set(range(8))
-
-    def keyed(df):
-        return {
-            (r.conv_id, r.turn_idx): r.main_text
-            for r in df.select("conv_id", "turn_idx", "main_text").collect()
-        }
-
-    wantA = keyed(extract(spark.createDataFrame(pdfA, schema=schema.TRANSCRIPTS)))
-    wantB = keyed(extract(spark.createDataFrame(pdfB, schema=schema.TRANSCRIPTS)))
-    assert keyed(read_snapshot(spark, out, "snapA")) == wantA
-    assert keyed(read_snapshot(spark, out, "snapB")) == wantB
-    # incremental read spans the spec change
-    assert keyed(read_changes(spark, out, "snapA", "snapB")) == wantB
-    assert keyed(read_changes(spark, out, None)) == {**wantA, **wantB}
-
-
-def test_schema_evolution_across_snapshots(spark, tmp_path):
-    """Add-column SCHEMA evolution across snapshots (round-5 VERDICT
-    item 7): snapshot A is written with the base extract schema, snapshot
-    B with a transform that ADDS a column. Pinned reads serve each
-    snapshot's OWN schema (Iceberg time travel reads with the snapshot's
-    schema-id); the incremental read spanning the boundary merges — A's
-    rows read NULL for the added column, B's carry values."""
-    from pyspark.sql import functions as F
-
-    from sparkextract.lineage import read_changes, read_snapshot
-
-    out = str(tmp_path / "out")
-    pdfA = synth.gen_transcripts(n_convs=6, seed=63)
-    run_with_lineage(
-        spark, spark.createDataFrame(pdfA, schema=schema.TRANSCRIPTS),
-        out, snapshot="snapA", buckets=4,
-    )
-
-    def evolved(df, **kw):
-        return extract(df, **kw).withColumn("n_chars", F.length("main_text"))
-
-    pdfB = synth.gen_transcripts(n_convs=5, seed=64)
-    pdfB["conv_id"] = pdfB["conv_id"].str.replace("conv-", "convB-", regex=False)
-    run_with_lineage(
-        spark, spark.createDataFrame(pdfB, schema=schema.TRANSCRIPTS),
-        out, snapshot="snapB", buckets=4, transform=evolved,
-    )
-
-    # pinned read of A: the snapshot's OWN (pre-evolution) schema
-    pinA = read_snapshot(spark, out, "snapA")
-    assert "n_chars" not in pinA.columns
-    # pinned read of B: evolved schema with real values
-    pinB = read_snapshot(spark, out, "snapB")
-    assert "n_chars" in pinB.columns
-    for r in pinB.select("main_text", "n_chars").collect():
-        assert r.n_chars == len(r.main_text)
-
-    def keyed(df):
-        return {
-            (r.conv_id, r.turn_idx): r.main_text
-            for r in df.select("conv_id", "turn_idx", "main_text").collect()
-        }
-
-    wantA = keyed(extract(spark.createDataFrame(pdfA, schema=schema.TRANSCRIPTS)))
-    wantB = keyed(extract(spark.createDataFrame(pdfB, schema=schema.TRANSCRIPTS)))
-    assert keyed(pinA) == wantA
-    assert keyed(pinB) == wantB
-
-    # incremental range ending at B carries the new column
-    delta = read_changes(spark, out, "snapA", "snapB")
-    assert "n_chars" in delta.columns and keyed(delta) == wantB
-
-    # full incremental read spans the boundary: merged schema, A rows NULL
-    full = read_changes(spark, out, None)
-    assert "n_chars" in full.columns
-    assert keyed(full) == {**wantA, **wantB}
-    nulls = {
-        r.conv_id
-        for r in full.where(F.col("n_chars").isNull())
-        .select("conv_id").distinct().collect()
-    }
-    assert nulls == {c for c, _ in wantA}
-    for r in full.where(F.col("n_chars").isNotNull()).collect():
-        assert r.n_chars == len(r.main_text)
-
-    # retention composes with evolution: expiring the pre-evolution
-    # snapshot leaves the evolved one fully readable (own schema), and
-    # the full incremental read now covers only B
-    from sparkextract.lineage import expire_snapshots
-
-    gc = expire_snapshots(spark, out, keep_last=1)
-    assert gc["expired"] == ["snapA"] and gc["kept"] == ["snapB"]
-    still = read_snapshot(spark, out, "snapB")
-    assert "n_chars" in still.columns and keyed(still) == wantB
-    assert keyed(read_changes(spark, out, None)) == wantB
-
-
-def test_compaction_rewrite_data_files(spark, tmp_path):
-    """Bin-pack compaction (Iceberg rewrite_data_files analog): rewriting
-    a snapshot's many small files into one per bucket must be INVISIBLE
-    to every reader — pinned reads, incremental reads, the snapshot log
-    and the logical snapshot ids are byte-identical before and after.
-    Also covers: chained re-compaction (.c2), compaction of a
-    schema-evolved snapshot (keeps its own schema), the crash window
-    (data written, commit record missing → readers untouched, orphan
-    reclaimed), remove_orphan_files, and expiry taking every physical
-    generation of an expired logical id."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from sparkextract.lineage import (
-        compact_snapshot,
-        expire_snapshots,
-        read_changes,
-        read_snapshot,
-        remove_orphan_files,
-        snapshot_log,
-    )
-
-    out = str(tmp_path / "out")
-
-    # fan the output over 6 tasks so every bucket dir gets several small
-    # files — the state compaction exists to fix
-    def fanout(df, **kw):
-        return extract(df, **kw).repartition(6)
-
-    def fanout_evolved(df, **kw):
-        return (
-            extract(df, **kw)
-            .withColumn("n_chars", F.length("main_text"))
-            .repartition(6)
-        )
-
-    pdfA = synth.gen_transcripts(n_convs=6, seed=71)
-    run_with_lineage(
-        spark, spark.createDataFrame(pdfA, schema=schema.TRANSCRIPTS),
-        out, snapshot="snapA", buckets=4, transform=fanout,
-    )
-    pdfB = synth.gen_transcripts(n_convs=5, seed=72)
-    pdfB["conv_id"] = pdfB["conv_id"].str.replace("conv-", "convB-", regex=False)
-    run_with_lineage(
-        spark, spark.createDataFrame(pdfB, schema=schema.TRANSCRIPTS),
-        out, snapshot="snapB", buckets=4, transform=fanout_evolved,
-    )
-
-    def keyed(df):
-        return {
-            (r.conv_id, r.turn_idx): r.main_text
-            for r in df.select("conv_id", "turn_idx", "main_text").collect()
-        }
-
-    wantA = keyed(read_snapshot(spark, out, "snapA"))
-    wantB = keyed(read_snapshot(spark, out, "snapB"))
-    log_before = [
-        (r.snapshot, r.n_buckets, r.rows_out)
-        for r in snapshot_log(spark, out).collect()
-    ]
-
-    # --- compact the latest (snapB) ---
-    res = compact_snapshot(spark, out)
-    assert res["snapshot"] == "snapB" and res["physical"] == "snapB.c1"
-    assert res["files_before"] > res["files_after"] == res["buckets"]
-    pinB = read_snapshot(spark, out, "snapB")
-    assert keyed(pinB) == wantB
-    # logical id on the wire, never the physical ".c1" name; own schema kept
-    assert {r.snapshot for r in pinB.select("snapshot").distinct().collect()} \
-        == {"snapB"}
-    assert "n_chars" in pinB.columns
-    for r in pinB.select("main_text", "n_chars").collect():
-        assert r.n_chars == len(r.main_text)
-    assert keyed(read_snapshot(spark, out, "snapA")) == wantA
-    full = read_changes(spark, out, None)
-    assert keyed(full) == {**wantA, **wantB}
-    assert {r.snapshot for r in full.select("snapshot").distinct().collect()} \
-        == {"snapA", "snapB"}
-    assert keyed(read_changes(spark, out, "snapA", "snapB")) == wantB
-    # manifest untouched: the snapshot log is identical
-    assert [
-        (r.snapshot, r.n_buckets, r.rows_out)
-        for r in snapshot_log(spark, out).collect()
-    ] == log_before
-
-    # --- chained re-compaction and compaction of the older snapshot ---
-    assert compact_snapshot(spark, out, "snapB")["physical"] == "snapB.c2"
-    assert keyed(read_snapshot(spark, out, "snapB")) == wantB
-    assert compact_snapshot(spark, out, "snapA")["physical"] == "snapA.c1"
-    assert keyed(read_snapshot(spark, out, "snapA")) == wantA
-
-    # --- crash window: data dir written, _replaces append never happened;
-    # readers must not see it, orphan cleanup must reclaim it ---
-    orphan = os.path.join(out, "data", "snapshot=snapA.c9")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-junk.parquet"), "wb") as f:
-        f.write(b"not parquet")
-    assert keyed(read_snapshot(spark, out, "snapA")) == wantA
-
-    gc = remove_orphan_files(spark, out)
-    assert sorted(gc["removed"]) == ["snapA", "snapA.c9", "snapB", "snapB.c1"]
-    assert sorted(gc["kept"]) == ["snapA.c1", "snapB.c2"]
-    assert keyed(read_snapshot(spark, out, "snapA")) == wantA
-    assert keyed(read_changes(spark, out, None)) == {**wantA, **wantB}
-
-    # --- expiry removes every physical generation of the expired id ---
-    exp = expire_snapshots(spark, out, keep_last=1)
-    assert exp["expired"] == ["snapA"] and exp["kept"] == ["snapB"]
-    assert not os.path.exists(os.path.join(out, "data", "snapshot=snapA.c1"))
-    with pytest.raises(ValueError):
-        read_snapshot(spark, out, "snapA")
-    assert keyed(read_snapshot(spark, out)) == wantB
-    assert keyed(read_changes(spark, out, None)) == wantB
-
-
-def test_incremental_strict_detects_conv_overlap(spark, tmp_path):
-    """strict=True must refuse a non-conv-aligned append (turns added to
-    an already-extracted conversation) and accept a conv-aligned one."""
-    from sparkextract.lineage import extract_incremental
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    pdfA = synth.gen_transcripts(n_convs=5, seed=71)
-    spark.createDataFrame(pdfA, schema=schema.TRANSCRIPTS).coalesce(1).write.parquet(src)
-    s = extract_incremental(spark, spark.read.parquet(src), out, buckets=4, strict=True)
-    assert s["processed"] == 4  # first snapshot: nothing to overlap with
-
-    # conv-ALIGNED append passes strict
-    pdfB = synth.gen_transcripts(n_convs=3, seed=72)
-    pdfB["conv_id"] = pdfB["conv_id"].str.replace("conv-", "convB-", regex=False)
-    spark.createDataFrame(pdfB, schema=schema.TRANSCRIPTS).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    s2 = extract_incremental(spark, spark.read.parquet(src), out, buckets=4, strict=True)
-    assert s2["new_files"] == 1 and s2["processed"] == 4
-
-    # append MORE TURNS to an existing conv -> strict raises, nothing written
-    pdfC = synth.gen_transcripts(n_convs=1, seed=73)  # conv-000000 again
-    pdfC["turn_idx"] = pdfC["turn_idx"] + 1000  # later turns, same conv
-    spark.createDataFrame(pdfC, schema=schema.TRANSCRIPTS).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    with pytest.raises(ValueError, match="already-extracted conversations"):
-        extract_incremental(spark, spark.read.parquet(src), out, buckets=4, strict=True)

@@ -39,63 +39,6 @@ def test_exact_dedup_reads_only_needed_columns(spark):
     assert "lang" not in rs and "source" not in rs and "n_chars" not in rs, rs
 
 
-@pytest.mark.skipif(not os.path.exists(SF), reason="testdata absent")
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-bucketed catalog tables joined on the bucket key must plan a
-    SortMergeJoin with ZERO Exchange (the write-time shuffle is the only
-    one that ever happens) — the repeated-join layout for 100 TB."""
-    from sparkextract.bucketing import colocated_join, write_bucketed
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").withColumnRenamed(
-        "vec_id", "doc_id"
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(docs, "bkt_docs", "doc_id", buckets=8)
-        write_bucketed(emb, "bkt_emb", "doc_id", buckets=8)
-        joined = colocated_join(spark, "bkt_docs", "bkt_emb", "doc_id")
-        tree = _plan(joined).split("\n\n")[0]
-        assert "SortMergeJoin" in tree, tree
-        assert "- Exchange" not in tree, tree
-        # and the result is the real join
-        assert joined.count() == emb.count()
-        # contrast: the same join over plain parquet exchanges both sides
-        plain = docs.join(emb.hint("merge"), "doc_id")
-        plain_tree = _plan(plain).split("\n\n")[0]
-        assert plain_tree.count("- Exchange") == 2, plain_tree
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_docs")
-        spark.sql("DROP TABLE IF EXISTS bkt_emb")
-
-
-def test_read_changes_prunes_partitions(spark, tmp_path):
-    """read_changes' committed-(snapshot, bucket) filter must be a STATIC
-    predicate over the two partition columns — PartitionFilters on the
-    scan, so untouched snapshots' files are never listed or read (the
-    SCALE.md §5 incremental-read claim, plan-guarded)."""
-    from sparkextract import schema, synth
-    from sparkextract.lineage import read_changes, run_with_lineage
-
-    out = str(tmp_path / "out")
-    for i, seed in enumerate((81, 82)):
-        pdf = synth.gen_transcripts(n_convs=4, seed=seed)
-        pdf["conv_id"] = pdf["conv_id"] + f"-s{i}"
-        run_with_lineage(
-            spark, spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS),
-            out, snapshot=f"snap{i}", buckets=2,
-        )
-    df = read_changes(spark, out, "snap0", "snap1")
-    plan = _plan(df)
-    scan = plan[plan.index("Scan parquet"):]
-    pf_line = scan[scan.index("PartitionFilters"):].split("\n")[0]
-    assert "snapshot" in pf_line and "bucket" in pf_line, pf_line
-    # the predicate names only the CHANGED snapshot
-    assert "snap1" in pf_line, pf_line
-
-
 def test_staged_tail_fused(spark):
     """Round-5 tail fuse (VERDICT item 5): the staged pipeline's
     A3 (page agg) → A4 (turn agg) → O8 (turn_seq window) tail must run

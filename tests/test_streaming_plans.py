@@ -1,33 +1,9 @@
-"""Streaming micro-batch reuse + physical plan regression tests
-(the plan *shape* is a deliverable at 100 TB: exchange counts, column
-pruning, cache reuse — SURVEY.md §4)."""
+"""Physical plan regression tests for the fused engine (the plan
+*shape* is a deliverable at 100 TB: exchange counts and column pruning —
+SURVEY.md §4)."""
 
-import oracle
 from sparkextract import schema, synth
 from sparkextract.fused import extract_fused
-from sparkextract.streaming import extract_stream, read_transcript_stream
-
-
-def test_streaming_matches_batch(spark, tmp_path):
-    pdf = synth.gen_transcripts(n_convs=6, seed=77)
-    src = str(tmp_path / "src")
-    spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS).repartition(3).write.parquet(src)
-
-    out = str(tmp_path / "out")
-    q = extract_stream(
-        read_transcript_stream(spark, src, max_files_per_trigger=2),
-        out_dir=out,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        trigger_once=True,
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r.conv_id, r.turn_idx): r.main_text
-        for r in spark.read.parquet(out).collect()
-    }
-    golden = oracle.extract_corpus(pdf)
-    assert got == {k: v["main_text"] for k, v in golden.items()}
 
 
 def _plan(df) -> str:
@@ -59,295 +35,3 @@ def test_fused_plan_column_pruning(spark, tmp_path):
     readschema = scan[scan.index("ReadSchema"): scan.index("\n", scan.index("ReadSchema"))]
     # role/ts never reach the scan (nested-column pruning of the payload)
     assert "role" not in readschema and "ts" not in readschema, readschema
-
-
-def test_stateful_conversation_stats(spark, tmp_path):
-    """applyInPandasWithState: group state accumulates across micro-batches
-    (maxFilesPerTrigger=1 over 3 files); the last emission per conversation
-    equals the batch groupBy truth."""
-    from pyspark.sql import functions as F
-
-    from sparkextract.streaming import conversation_stats_stream
-
-    pdf = synth.gen_transcripts(n_convs=6, seed=88)
-    src = str(tmp_path / "src_state")
-    sdf = spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS)
-    sdf.repartition(3).write.parquet(src)
-
-    stream = read_transcript_stream(spark, src, max_files_per_trigger=1)
-    q = (
-        conversation_stats_stream(stream)
-        .writeStream.format("memory")
-        .queryName("conv_stats")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    emitted = spark.sql("SELECT * FROM conv_stats").collect()
-    assert len(emitted) > 6  # multiple batches -> multiple emissions per conv
-    final = {}
-    for r in emitted:  # memory sink preserves emission order; keep the last
-        final[r.conv_id] = (r.n_turns, r.n_doc_turns, r.max_turn_idx)
-    truth = {
-        r.conv_id: (r.n, r.nd, r.mx)
-        for r in sdf.groupBy("conv_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.coalesce(
-                    (F.col("text").contains("@page ")
-                     | F.col("tool").contains("@page ")).cast("long"),
-                    F.lit(0),
-                )
-            ).alias("nd"),
-            F.max("turn_idx").alias("mx"),
-        ).collect()
-    }
-    assert final == truth
-
-
-def test_windowed_doc_counts_watermark(spark, tmp_path):
-    """Watermarked tumbling window: streaming complete-mode result equals
-    the batch windowed aggregation; the plan carries the watermark node."""
-    from pyspark.sql import functions as F
-
-    from sparkextract.streaming import windowed_doc_counts
-
-    pdf = synth.gen_transcripts(n_convs=5, seed=91)
-    src = str(tmp_path / "src_win")
-    sdf = spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS)
-    sdf.repartition(2).write.parquet(src)
-
-    stream = read_transcript_stream(spark, src, max_files_per_trigger=1)
-    agg = windowed_doc_counts(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_win"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r.win.start, r.win.end, r.conv_id): r.n_doc_turns
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    doc = sdf.where(F.col("text").contains("@page ") | F.col("tool").contains("@page "))
-    want = {
-        (r.win.start, r.win.end, r.conv_id): r.n
-        for r in doc.groupBy(F.window("ts", "10 minutes").alias("win"), "conv_id")
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert got == want and got
-    assert "EventTimeWatermark" in agg._jdf.queryExecution().analyzed().toString()
-
-
-def test_sorted_write_sink(spark, tmp_path):
-    """write_extracted_sorted: every output file holds conversations
-    contiguously, turns ascending — no global sort needed by readers."""
-    import glob
-
-    import pandas as pd
-
-    from sparkextract.emit import write_extracted_sorted
-
-    pdf = synth.gen_transcripts(n_convs=10, seed=13)
-    out = str(tmp_path / "sorted_out")
-    write_extracted_sorted(
-        extract_fused(spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS)),
-        out, buckets=4,
-    )
-    files = glob.glob(f"{out}/bucket=*/*.parquet")
-    assert files
-    seen_convs = set()
-    n_rows = 0
-    for f in files:
-        part = pd.read_parquet(f, columns=["conv_id", "turn_idx"])
-        n_rows += len(part)
-        keys = list(zip(part["conv_id"], part["turn_idx"]))
-        assert keys == sorted(keys), f  # within-file (conv, turn) order
-        for c in part["conv_id"].unique():
-            assert c not in seen_convs  # conversations never split
-            seen_convs.add(c)
-    golden = oracle.extract_corpus(pdf)
-    assert n_rows == len(golden)
-
-
-def test_streaming_dedup_matches_batch(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps exactly one row per content
-    key (all synth duplicates share event times within the watermark, so
-    the streaming result's key set equals batch DISTINCT); the plan
-    carries the dedup-within-watermark state node."""
-    from pyspark.sql import functions as F
-
-    from sparkextract.streaming import dedup_stream
-
-    pdf = synth.gen_transcripts(n_convs=8, seed=95)
-    # force duplicates: replicate the frame with shifted turn_idx
-    dup = pdf.copy()
-    dup["turn_idx"] = dup["turn_idx"] + 1000
-    both = __import__("pandas").concat([pdf, dup], ignore_index=True)
-    src = str(tmp_path / "src_dedup")
-    sdf = spark.createDataFrame(both, schema=schema.TRANSCRIPTS)
-    sdf.repartition(3).write.parquet(src)
-
-    stream = read_transcript_stream(spark, src, max_files_per_trigger=1)
-    dd = dedup_stream(stream)
-    q = (
-        dd.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = [r.key for r in spark.sql("SELECT key FROM dedup_out").collect()]
-    assert len(got) == len(set(got))  # one row per key
-    want = {
-        r.key
-        for r in sdf.select(
-            F.md5(F.substring(F.coalesce(F.col("text"), F.lit("")), 1, 64)).alias("key")
-        ).distinct().collect()
-    }
-    assert set(got) == want
-    assert len(got) < sdf.count()  # the duplicates were actually dropped
-
-
-def test_quality_scrub_stream_matches_batch(spark, tmp_path):
-    """Stateless text filters under streaming: gopher gate + PII scrub on
-    a document stream must equal the batch composition row for row (one
-    filter definition, two arrival modes)."""
-    from sparkextract.streaming import quality_scrub_stream
-    from sparkextract.textops import _gopher_pass_col, pii_scrub
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    src = str(tmp_path / "src_docs")
-    docs.repartition(3).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        quality_scrub_stream(stream)
-        .writeStream.format("memory")
-        .queryName("scrubbed_docs")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_scrub"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        r.doc_id: (r.n_emails, r.n_phones, r.n_ips, r.scrubbed)
-        for r in spark.sql("SELECT * FROM scrubbed_docs").collect()
-    }
-    want = {
-        r.doc_id: (r.n_emails, r.n_phones, r.n_ips, r.scrubbed)
-        for r in pii_scrub(
-            docs.where(_gopher_pass_col()).select("doc_id", "text")
-        ).collect()
-    }
-    assert got == want
-    assert 0 < len(got) < docs.count()  # the gate actually filtered
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join == the same join run as
-    batch, row for row (one join definition, two arrival modes)."""
-    from sparkextract.streaming import enrich_clicks_stream
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "src_events")
-    events.repartition(4).write.parquet(src)
-    # LOAD-BEARING batch count (ADVICE r03): the equality below holds only
-    # because 4 files / maxFilesPerTrigger=2 = exactly 2 micro-batches —
-    # state eviction during batch 1 uses the INITIAL watermark, so nothing
-    # is evicted before batch 2 arrives. The events corpus spans ~30 days
-    # against a 30-minute watermark, so with 3+ batches cross-batch matches
-    # WOULD be dropped and stream != batch. Pin the file count so a
-    # repartition/trigger tweak can't silently change the batch count.
-    import glob
-
-    n_files = len(glob.glob(src + "/part-*.parquet"))
-    assert n_files == 4, f"test assumes exactly 2 micro-batches (4 files / 2 per trigger), got {n_files} files"
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    q = (
-        enrich_clicks_stream(stream)
-        .writeStream.format("memory")
-        .queryName("enriched_clicks")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = sorted(
-        tuple(r)
-        for r in spark.sql(
-            "SELECT click_id, user_id, purchase_id, purchase_value "
-            "FROM enriched_clicks"
-        ).collect()
-    )
-    want = sorted(tuple(r) for r in enrich_clicks_stream(events).collect())
-    assert got == want and got  # non-vacuous: some clicks do enrich
-
-
-def test_split_stream_matches_batch(spark, tmp_path):
-    """Content-keyed train/val routing under streaming must equal the
-    batch split row for row — and duplicates arriving in DIFFERENT
-    micro-batches must still land on the same side (the leakage
-    property arrival order cannot break)."""
-    from pyspark.sql import functions as F
-
-    from sparkextract.streaming import split_stream
-    from sparkextract.textops import leakage_safe_split
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # plant a cross-batch duplicate: doc 9001 repeats doc 0's text
-    dup = docs.limit(1).select(
-        F.lit(9001).cast("long").alias("doc_id"), "source", "text",
-        *[c for c in docs.columns if c not in ("doc_id", "source", "text")],
-    ).select(*docs.columns)
-    planted = docs.unionByName(dup)
-    src = str(tmp_path / "src_docs")
-    planted.repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        split_stream(stream)
-        .writeStream.format("memory")
-        .queryName("split_docs")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_split"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        r.doc_id: r.split
-        for r in spark.sql("SELECT * FROM split_docs").collect()
-    }
-    want = {
-        r.doc_id: r.split for r in leakage_safe_split(planted).collect()
-    }
-    assert got == want
-    assert got[9001] == got[0], "cross-batch duplicate straddled the split"
-    assert {"train", "val"} == set(got.values())
