@@ -133,11 +133,13 @@ def _para_group(pdf: pd.DataFrame) -> pd.DataFrame:
     })
 
 
-def merge_paragraphs(filled: DataFrame, salt: int = 16) -> DataFrame:
+def merge_paragraphs(filled: DataFrame) -> DataFrame:
     """O3+A2 fold per block, grouped by (conv_id, salted turn bucket) —
     coarse groups amortize applyInPandas' per-group frame cost; the salt
     caps group size under conversation skew (block ⊂ turn ⊂ bucket)."""
-    salted = filled.withColumn("salt", F.pmod(F.hash("turn_idx"), F.lit(salt)))
+    salted = filled.withColumn(
+        "salt", F.pmod(F.hash("turn_idx"), F.lit(schema.SALT_BUCKETS))
+    )
     return salted.groupBy("conv_id", "salt").applyInPandas(
         _para_group, schema=PARA
     )

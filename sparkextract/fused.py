@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import pyworker, schema
-from .parse import _parse_batch
+from .parse import _parse_batch, payload_turn
 from .turnkernel import run_turn_arrays
 
 
@@ -48,6 +48,17 @@ def _extract_batch(batch: pd.DataFrame) -> pd.DataFrame:
             "main_text": pd.arrays.ArrowExtensionArray(text),
             "spans": pd.Series(spans, dtype=object),
         }
+    )
+
+
+def salted_repartition(df: DataFrame, n: int) -> DataFrame:
+    """Skew control for power-law conversation lengths (north_rule): salt
+    on turn_idx so one huge conversation spreads over
+    ``schema.SALT_BUCKETS`` partitions. Turn-level extraction is
+    embarrassingly parallel; conversation-level grouping only happens at
+    the final window, which re-shuffles anyway."""
+    return df.repartition(
+        n, F.col("conv_id"), F.pmod(F.hash("turn_idx"), F.lit(schema.SALT_BUCKETS))
     )
 
 
@@ -64,8 +75,8 @@ def _conv_keyed_partitions(df: DataFrame) -> int:
     fused nothing in exchange: mapInPandas hides partitioning from the
     planner, so the O8 window re-exchanges by conv_id regardless. The
     engine therefore converts such an input into its own salted spread
-    (the ``repartition=`` path below) — identical rows out, hot
-    conversations spread over 16 salt buckets."""
+    (``salted_repartition``) — identical rows out, hot conversations
+    spread over the salt buckets."""
     try:
         jp = df._jdf.queryExecution().logical()
         if jp.getClass().getSimpleName() != "RepartitionByExpression":
@@ -99,13 +110,11 @@ def extract_fused(transcripts: DataFrame, repartition: int = 0) -> DataFrame:
     ``_conv_keyed_partitions``."""
     if repartition == 0:
         repartition = _conv_keyed_partitions(transcripts)
-    doc_turns = transcripts.filter(
-        F.col("text").contains("@page ") | F.col("tool").contains("@page ")
-    ).select("conv_id", "turn_idx", "text", "tool")
+    doc_turns = transcripts.filter(payload_turn()).select(
+        "conv_id", "turn_idx", "text", "tool"
+    )
     if repartition > 0:
-        doc_turns = doc_turns.repartition(
-            repartition, F.col("conv_id"), F.pmod(F.hash("turn_idx"), F.lit(16))
-        )
+        doc_turns = salted_repartition(doc_turns, repartition)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pyworker.install()

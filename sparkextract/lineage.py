@@ -40,7 +40,7 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .fused import extract_fused
+from .fused import _conv_keyed_partitions, extract_fused
 
 LINEAGE_DIR = "_lineage"
 DATA_DIR = "data"
@@ -100,11 +100,18 @@ def run_with_lineage(
     """Run (or resume) the extraction job (``fused.extract_fused``, with
     ``repartition`` passed through). Returns a summary dict.
 
+    ``repartition=0`` takes the partition count of a caller's conv_id-only
+    repartition of ``transcripts`` (``fused._conv_keyed_partitions``): the
+    bucket column and the observed metrics wrap it below, so
+    ``extract_fused`` would no longer see it at the plan root.
+
     ``snapshot=None`` derives a content-addressed id from the input file
     listing (``snapshot_id``); file-less DataFrames need an explicit one.
     """
     if snapshot is None:
         snapshot = snapshot_id(transcripts)
+    if repartition == 0:
+        repartition = _conv_keyed_partitions(transcripts)
     done = committed_buckets(spark, out_dir, snapshot)
     todo = sorted(set(range(buckets)) - done)
     if not todo:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from . import kernels, pyworker
+from . import kernels, pyworker, schema
 
 
 @F.pandas_udf(StringType())
@@ -40,9 +40,7 @@ def latex_udf(s: pd.Series) -> pd.Series:
     return s.map(f)
 
 
-def recognize_formulas(
-    dets: DataFrame, length_buckets: int = 0, salt: int = 16
-) -> DataFrame:
+def recognize_formulas(dets: DataFrame, length_buckets: int = 0) -> DataFrame:
     """branch-1 detections → same rows with content = F1(content).
 
     length_buckets > 0 enables the packing repartition (use at scale; at
@@ -54,7 +52,7 @@ def recognize_formulas(
             F.width_bucket(
                 F.length("content"), F.lit(0), F.lit(2048), F.lit(length_buckets)
             ),
-            F.pmod(F.hash("conv_id", "turn_idx"), F.lit(salt)),
+            F.pmod(F.hash("conv_id", "turn_idx"), F.lit(schema.SALT_BUCKETS)),
         )
     return formulas.withColumn("content", latex_udf(F.col("content")))
 

@@ -261,19 +261,19 @@ def ocr_crop_assign(detections: DataFrame) -> DataFrame:
     )
 
 
-def ocr_text_spans(detections: DataFrame, salt: int = 16) -> DataFrame:
+def ocr_text_spans(detections: DataFrame) -> DataFrame:
     """detections → final OCR text span rows (branch 2, DETECTIONS schema).
 
     Catalyst pre-filter shrinks the shuffle to exactly the rows the kernel
     needs: OCR-able regions (pdf2markdown.py:209), formula masks, raw dets.
     Grouping key = (conv_id, salted turn bucket): coarse enough to
     amortize per-group overhead, salted so one huge conversation spreads
-    over ``salt`` groups (pages never split — page ⊂ turn ⊂ bucket)."""
+    over ``schema.SALT_BUCKETS`` groups (pages never split — page ⊂ turn ⊂ bucket)."""
     need = detections.filter(
         (F.col("branch") == 2)
         | (F.col("branch") == 1)
         | ((F.col("branch") == 0) & F.col("category").isin(schema.OCR_REGION_CLASSES))
-    ).withColumn("salt", F.pmod(F.hash("turn_idx"), F.lit(salt)))
+    ).withColumn("salt", F.pmod(F.hash("turn_idx"), F.lit(schema.SALT_BUCKETS)))
     return (
         need.groupBy("conv_id", "salt")
         .applyInPandas(lambda pdf: _ocr_group(pdf), schema=schema.DETECTIONS)

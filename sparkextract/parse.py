@@ -217,13 +217,19 @@ def _parse_batch(batch: pd.DataFrame) -> dict:
     }
 
 
+def payload_turn():
+    """Catalyst predicate of a document turn: ``@page `` appears in its
+    text or tool. Filtering on it keeps non-document turns out of the
+    UDFs, and the contains() predicate reaches the parquet scan."""
+    return F.col("text").contains("@page ") | F.col("tool").contains("@page ")
+
+
 def parse_detections(transcripts: DataFrame) -> DataFrame:
-    """transcripts → detections (schema.DETECTIONS). Filters non-document
-    turns Catalyst-side so the UDF only sees payload rows (pushdown-friendly:
-    the contains() predicate reaches the parquet scan)."""
-    doc_turns = transcripts.filter(
-        F.col("text").contains("@page ") | F.col("tool").contains("@page ")
-    ).select("conv_id", "turn_idx", "text", "tool")
+    """transcripts → detections (schema.DETECTIONS) of the payload turns
+    (``payload_turn``)."""
+    doc_turns = transcripts.filter(payload_turn()).select(
+        "conv_id", "turn_idx", "text", "tool"
+    )
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pyworker.install()

@@ -21,46 +21,32 @@ from pyspark.sql.window import Window
 
 from .assemble import assemble_blocks
 from .emit import emit_extracted, page_markers
+from .fused import salted_repartition
 from .mfr import recognize_formulas
 from .ocr import ocr_text_spans
 from .parse import parse_detections
-
-
-def salted_repartition(df: DataFrame, n: int, salt: int = 16) -> DataFrame:
-    """Skew control for power-law conversation lengths (north_rule): salt on
-    turn_idx so one huge conversation spreads over ``salt`` partitions.
-    Turn-level extraction is embarrassingly parallel; conversation-level
-    grouping only happens at the final window, which re-shuffles anyway."""
-    return df.repartition(
-        n, F.col("conv_id"), F.pmod(F.hash("turn_idx"), F.lit(salt))
-    )
 
 
 def extract(
     transcripts: DataFrame,
     repartition: int = 0,
     formula_length_buckets: int = 0,
-    cache_detections: bool = True,
 ) -> DataFrame:
     """transcripts → extracted (schema.EXTRACTED + turn_seq).
 
-    ``cache_detections`` persists the stage-1 output, which fans out to
-    three consumers (OCR, MFR, block building). At cluster scale you would
-    materialize it to a table instead; in one job, persist is the analog.
+    The stage-1 output is persisted: it fans out to three consumers (OCR,
+    MFR, block building). At cluster scale you would materialize it to a
+    table instead; in one job, persist is the analog.
     """
     if repartition > 0:
         transcripts = salted_repartition(transcripts, repartition)
-    dets = parse_detections(transcripts)
-    if cache_detections:
-        dets = dets.persist()
+    dets = parse_detections(transcripts).persist()
     model_dets = dets.filter((F.col("branch") == 0))
     formulas = recognize_formulas(dets, length_buckets=formula_length_buckets)
     texts = ocr_text_spans(dets)
-    final_dets = model_dets.unionByName(formulas).unionByName(texts)
-    if cache_detections:
-        # final_dets fans out to spans/blocks/fill — without this the OCR
-        # applyInPandas recomputes once per consumer (6× in the plan)
-        final_dets = final_dets.persist()
+    # final_dets fans out to spans/blocks/fill — without this the OCR
+    # applyInPandas recomputes once per consumer (6× in the plan)
+    final_dets = model_dets.unionByName(formulas).unionByName(texts).persist()
     blocks = assemble_blocks(final_dets)
     extracted = emit_extracted(blocks, page_markers(dets))
     # O8: the mandated stable turn ordering window over (conv_id, turn_idx)

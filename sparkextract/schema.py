@@ -73,6 +73,9 @@ FILL_RATIO = 0.6  # pdf2markdown.py:300
 Y_OVERLAP = 0.8  # merge_blocks_and_spans.py:7 / paddle_ocr.py:81
 OCR_PAD = 25  # pdf2markdown.py:217
 READ_ORDER_W = 3000.0  # pdf2markdown.py:265
+# turn_idx salt buckets: a hot conversation's turns spread over this many
+# partitions or groups (fused/staged input spread, OCR, A2 and MFR groups)
+SALT_BUCKETS = 16
 
 # post-detect detection rows (one per surviving detection, page-local order)
 DETECTIONS = StructType(

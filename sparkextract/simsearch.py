@@ -12,10 +12,11 @@ prefix, null terms skipped, NULL when no term is non-null. In plans it
 is the JVM-side ``_pair_sum``; bulk math runs as exact int64 numpy over
 ``_arrow_matrix`` views (zero-padded, with a non-null mask) inside
 Arrow-batched Python UDFs: IVF training and cell probes (mapInArrow over
-broadcast centroids), the baseline GEMM, the tiled pair-verify GEMM
-that blocked all-pairs and IVF cells share (``_gemm_verified``), and
-the small-corpus verify of the LSH candidates. The same contract holds
-on ragged, null and uniform vectors alike.
+broadcast centroids), the baseline GEMM and the tiled pair-verify GEMM
+that blocked all-pairs and IVF cells share (``_gemm_verified``). The
+all-pairs baseline and the LSH candidates share one Catalyst verify
+(``_cosine_verify``). The same contract holds on ragged, null and
+uniform vectors alike.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ from __future__ import annotations
 import logging
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -50,6 +50,38 @@ def _pair_sum(a, b, f=lambda x, y: x * y):
     return F.aggregate(
         F.zip_with(a, b, f), F.lit(None).cast("bigint"),
         lambda acc, v: F.coalesce(acc + v, acc, v),
+    )
+
+
+def _t2(threshold: float) -> int:
+    """t²·10⁶ as the integer every cosine verify and its twin compare
+    against: cos > t iff dot > 0 and dot²·10⁶ > t²·10⁶·|a|²·|b|²."""
+    return int(round(threshold * threshold * 1_000_000))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(q_id, n_id, dot, rank) of each query's ``k`` best (q_id, n_id,
+    dot) rows: dot DESC with NULL last, ties by n_id ASC."""
+    w = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("n_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q_id", "n_id", "dot", "rank")
+    )
+
+
+def _cell_topk(assigned: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """``_topk`` over the exact dots of each query (q_id, qv, cell) with
+    every other vector (vec_id, q, cell) of a cell it probes."""
+    pairs = assigned.join(F.broadcast(queries), "cell").where(
+        F.col("vec_id") != F.col("q_id")
+    )
+    return _topk(
+        pairs.select(
+            "q_id", F.col("vec_id").alias("n_id"),
+            _pair_sum(F.col("qv"), F.col("q")).alias("dot"),
+        ),
+        k,
     )
 
 
@@ -92,12 +124,8 @@ def baseline_ann_topk(
                 names=["q_id", "n_id", "dot"],
             )
 
-    scored = base.mapInArrow(it, schema="q_id bigint, n_id bigint, dot bigint")
-    w = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "dot", "rank")
+    return _topk(
+        base.mapInArrow(it, schema="q_id bigint, n_id bigint, dot bigint"), k
     )
 
 
@@ -126,18 +154,7 @@ def ivf_topk(
     queries = assigned.where(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("q_id"), F.col("q").alias("qv"), "cell"
     )
-    pairs = assigned.join(F.broadcast(queries), "cell").where(
-        F.col("vec_id") != F.col("q_id")
-    )
-    scored2 = pairs.select(
-        "q_id", F.col("vec_id").alias("n_id"), _pair_sum(F.col("qv"), F.col("q")).alias("dot")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("n_id").asc())
-    return (
-        scored2.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "dot", "rank")
-    )
+    return _cell_topk(assigned, queries, k)
 
 
 # score-matrix chunk: the train/probe kernels score at most this many
@@ -432,18 +449,7 @@ def ivf_topk_trained(
     queries = _probes(
         base.where(F.col("vec_id") % query_mod == 0), bc, nprobe, with_q=True
     ).select(F.col("vec_id").alias("q_id"), F.col("q").alias("qv"), "cell")
-    pairs = assigned.join(F.broadcast(queries), "cell").where(
-        F.col("vec_id") != F.col("q_id")
-    )
-    scored2 = pairs.select(
-        "q_id", F.col("vec_id").alias("n_id"), _pair_sum(F.col("qv"), F.col("q")).alias("dot")
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("n_id").asc())
-    return (
-        scored2.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "dot", "rank")
-    )
+    return _cell_topk(assigned, queries, k)
 
 
 def recall_at_k(approx: DataFrame, exact: DataFrame, k: int) -> float:
@@ -712,7 +718,7 @@ def _gemm_verified(rep: DataFrame, threshold: float) -> DataFrame:
     One applyInArrow call per group; its int64 dot block is tiled to
     ≤ ``_SCORE_CHUNK`` entries, so a group costs its member matrix plus
     one tile of memory."""
-    t2 = float(int(round(threshold * threshold * 1_000_000)))
+    t2 = float(_t2(threshold))
 
     def gemm(tab: pa.Table) -> pa.Table:
         pyworker.install()
@@ -913,110 +919,49 @@ def _propagate_min_labels(
     )
 
 
-# vector-table budget for the broadcast verify fast path below: rows×width
-# values of int64 (≤ ~16 MB broadcast). Past it — i.e. for genuinely
-# large corpora — the join phrasing is the scale path.
-_VERIFY_TABLE_VALUES = 2_000_000
-
-
-def _verify_cosine_pairs(
-    cand: DataFrame, embeddings: DataFrame, threshold: float,
-    a_col: str = "doc_a", b_col: str = "doc_b",
-) -> DataFrame:
-    """Exact integer-quantized cosine verification of candidate id pairs:
-    keep cos(a,b) > threshold via dot²·10⁶ > t²·10⁶·|a|²·|b|² (no sqrt,
-    no FP division — engine-portable).
-
-    Small-corpus fast path, chosen by size alone: when the whole
-    quantized vector table fits ``_VERIFY_TABLE_VALUES`` as a
-    zero-padded ``_arrow_matrix``, it is broadcast once and each
-    candidate batch is verified by ONE exact int64 row-dot pass in numpy
-    (`cosine_neardup_blocked`'s arithmetic: the squared-threshold compare
-    runs in float64 with the identical association Spark's double
-    expressions use). Zero-filled slots add nothing, so the dot is the
-    ``_pair_sum`` one on any vector shape; where the twin's dot is NULL
-    this one is 0, and both fail ``dot > 0``. Pairs whose ids lack a
-    vector drop exactly as the inner joins drop them. Bigger corpora keep
-    the two keyed joins — that is the 100 TB shape. The decision is
-    logged with the probed rows × width."""
-    base = quantized(embeddings)
-    t2i = int(round(threshold * threshold * 1_000_000))
-    # bounded probe: collect at most 32769 rows — enough to decide, and
-    # the budget check below re-guards rows×width before building
-    probe = base.limit(32769).toArrow()
-    V, _, _ = _arrow_matrix(probe.column("q"))
-    broadcast = len(V) <= 32768 and 0 < V.size <= _VERIFY_TABLE_VALUES
-    _log.info(
-        "verify: %s (probed %d rows x width %d, table limit %d values)",
-        "broadcast" if broadcast else "join", len(V), V.shape[1],
-        _VERIFY_TABLE_VALUES,
+def _cosine_verify(embeddings: DataFrame, threshold: float, pairs) -> DataFrame:
+    """(a_id, b_id, dot) of the pairs ``pairs(a, b)`` builds whose cosine
+    exceeds ``threshold``. The sides a (a_id, av, an) and b (b_id, bv,
+    bn) are the quantized vectors with their squared norms; a pair is
+    kept iff dot > 0 and dot²·10⁶ > t²·10⁶·|a|²·|b|² (no sqrt, no FP
+    division). The squared compare runs in doubles over exact integer
+    inputs — bit-identical across engines, and immune to bigint
+    overflow."""
+    norms = quantized(embeddings).select(
+        "vec_id", "q", _pair_sum(F.col("q"), F.col("q")).alias("n2")
     )
-    if broadcast:
-        ids = probe.column("vec_id").to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids_s = ids[order]
-        V = V[order]
-        n2 = np.einsum("ij,ij->i", V, V)
-        bc = embeddings.sparkSession.sparkContext.broadcast((ids_s, V, n2))
-        t2f = float(t2i)
-
-        def it(batches):
-            pyworker.install()
-            tids, tV, tn2 = bc.value
-            n = len(tids)
-            for pdf in batches:
-                pdf = pdf.dropna()
-                if not len(pdf):
-                    continue
-                a = pdf[a_col].to_numpy(dtype=np.int64)
-                b = pdf[b_col].to_numpy(dtype=np.int64)
-                pa = np.searchsorted(tids, a)
-                pb = np.searchsorted(tids, b)
-                ok = (pa < n) & (pb < n)
-                pa0 = np.where(ok, pa, 0)
-                pb0 = np.where(ok, pb, 0)
-                ok &= (tids[pa0] == a) & (tids[pb0] == b)
-                dots = np.einsum("ij,ij->i", tV[pa0], tV[pb0])
-                d = dots.astype(np.float64)
-                keep = ok & (dots > 0) & (
-                    d * d * 1_000_000.0
-                    > t2f * tn2[pa0].astype(np.float64) * tn2[pb0].astype(np.float64)
-                )
-                yield pd.DataFrame(
-                    {"a_id": a[keep], "b_id": b[keep], "dot": dots[keep]}
-                )
-
-        return cand.select(
-            F.col(a_col).cast("bigint").alias(a_col),
-            F.col(b_col).cast("bigint").alias(b_col),
-        ).mapInPandas(it, schema="a_id bigint, b_id bigint, dot bigint")
-    norms = base.select(
-        "vec_id", F.col("q").alias("v"), _pair_sum(F.col("q"), F.col("q")).alias("n2")
+    a = norms.select(
+        F.col("vec_id").alias("a_id"), F.col("q").alias("av"), F.col("n2").alias("an")
     )
-    t2 = int(round(threshold * threshold * 1_000_000))
-    pairs = (
-        cand.join(norms, cand[a_col] == norms["vec_id"])
-        .select(
-            F.col(a_col).alias("a_id"), F.col(b_col),
-            F.col("v").alias("av"), F.col("n2").alias("an"),
-        )
-        .join(norms, F.col(b_col) == norms["vec_id"])
-        .select(
-            "a_id", F.col(b_col).alias("b_id"), "av", "an",
-            F.col("v").alias("bv"), F.col("n2").alias("bn"),
-        )
+    b = norms.select(
+        F.col("vec_id").alias("b_id"), F.col("q").alias("bv"), F.col("n2").alias("bn")
     )
     d = F.col("dot").cast("double")
     return (
-        pairs.withColumn("dot", _pair_sum(F.col("av"), F.col("bv")))
+        pairs(a, b)
+        .withColumn("dot", _pair_sum(F.col("av"), F.col("bv")))
         .where(
             (F.col("dot") > 0)
             & (
                 d * d * F.lit(1_000_000.0)
-                > F.lit(float(t2)) * F.col("an").cast("double") * F.col("bn").cast("double")
+                > F.lit(float(_t2(threshold)))
+                * F.col("an").cast("double") * F.col("bn").cast("double")
             )
         )
         .select("a_id", "b_id", "dot")
+    )
+
+
+def _verify_cosine_pairs(
+    cand: DataFrame, embeddings: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact integer-quantized cosine verification of candidate id pairs
+    (doc_a, doc_b) (``_cosine_verify``): two keyed joins fetch each
+    pair's vectors, and Spark's planner broadcasts a small vector table
+    by itself. Pairs whose ids lack a vector drop with the inner joins."""
+    ids = cand.select(F.col("doc_a").alias("a_id"), F.col("doc_b").alias("b_id"))
+    return _cosine_verify(
+        embeddings, threshold, lambda a, b: ids.join(a, "a_id").join(b, "b_id")
     )
 
 
@@ -1136,7 +1081,7 @@ def cosine_neardup_ivf_sql(
     Spark side) derives the cell count inside the SQL via the params CTE
     — see ``_auto_cells_sql``; ``nprobe="auto"`` couples to it
     (``auto_nprobe`` / the params CTE's nprobe column)."""
-    t2 = float(int(round(threshold * threshold * 1_000_000)))
+    t2 = float(_t2(threshold))
     nprobe = _nprobe_pred(n_cells, nprobe)
     return f"""
 WITH {_ivf_train_cte_body(n_cells, iters)},
@@ -1185,7 +1130,13 @@ def dedup_keep_representatives(documents: DataFrame) -> DataFrame:
     downstream training reads the deduped corpus directly. Composes
     ``neardup_clusters`` (LSH graph → connected components); one extra
     groupBy on the label."""
-    labels = neardup_clusters(documents)
+    return _representatives(neardup_clusters(documents))
+
+
+def _representatives(labels: DataFrame) -> DataFrame:
+    """(doc_id, n_members): one row per component of ``labels`` (doc_id,
+    cluster) — its representative, the min doc_id that is the label
+    itself — with the component's size."""
     sizes = labels.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_members"))
     return (
         labels.where(F.col("doc_id") == F.col("cluster"))
@@ -1224,15 +1175,9 @@ def semdedup(
     pairs = cosine_neardup_ivf(
         embeddings, threshold=threshold, n_cells=n_cells, iters=iters, nprobe=nprobe
     ).select(F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b"))
-    labels = _propagate_min_labels(
+    return _representatives(_propagate_min_labels(
         embeddings.select(F.col("vec_id").alias("doc_id")), pairs
-    )
-    sizes = labels.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_members"))
-    return (
-        labels.where(F.col("doc_id") == F.col("cluster"))
-        .join(sizes, "cluster")
-        .select("doc_id", "n_members")
-    )
+    ))
 
 
 def _semdedup_cte_body(
@@ -1350,6 +1295,36 @@ FROM keep k JOIN sem s ON s.doc_id = k.doc_id
 """
 
 
+def _survivors(
+    documents: DataFrame, embeddings: DataFrame, threshold: float,
+    n_cells: int | str, iters: int, nprobe: int | str,
+) -> DataFrame:
+    """(doc_id, text, n_members): the survivor prefix v3 and v4 share —
+    Gopher rule gate AND linear quality-classifier gate → PII scrub →
+    semdedup representatives → exact dedup on the scrubbed text (md5
+    groupBy, keeper = min doc_id, joined back for its text)."""
+    from .textops import _gopher_pass_col, pii_scrub, quality_classifier
+
+    qc = quality_classifier(documents).where(F.col("pass")).select("doc_id")
+    gated = documents.where(_gopher_pass_col()).join(qc, "doc_id")
+    scrubbed = pii_scrub(gated).select("doc_id", "scrubbed")
+    reps = semdedup(embeddings, threshold, n_cells, iters, nprobe)
+    # sem feeds the md5 dedup agg AND the keeper join-back: materialize it
+    # once, or the gate chain runs once per consumer. It stays even though
+    # one min(struct(doc_id, scrubbed)) aggregate could replace the keeper
+    # join-back: v4's segment_dedup reads the keeper twice, so the gate
+    # chain would run twice. Measured at sf0.01 (4 cores, two interleaved
+    # sets of 5 runs), that v4 variant gave identical output in 39 Spark
+    # jobs instead of 43 (v5: 56-57 instead of 60) but ran slower: job_s
+    # medians 3.62 / 4.15 s against 3.19 / 3.89 s with this checkpoint.
+    sem = scrubbed.join(reps, "doc_id").localCheckpoint(eager=True)
+    keep = sem.groupBy(F.md5("scrubbed").alias("text_fp")).agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    return keep.join(sem, "doc_id").select(
+        "doc_id", F.col("scrubbed").alias("text"), "n_members"
+    )
+
 
 def training_corpus_v3(
     documents: DataFrame, embeddings: DataFrame, threshold: float = 0.35,
@@ -1371,31 +1346,18 @@ def training_corpus_v3(
     Plan: two fused scalar passes + one broadcast join (gates), the
     semdedup keyed joins, one md5 shuffle (exact dedup), then the
     narrow chunk explode — nothing all-pairs, nothing per-row Python."""
-    from .textops import (
-        _gopher_pass_col,
-        chunk_documents,
-        pii_scrub,
-        quality_classifier,
-    )
+    from .textops import chunk_documents
 
-    qc = quality_classifier(documents).where(F.col("pass")).select("doc_id")
-    gated = documents.where(_gopher_pass_col()).join(qc, "doc_id")
-    scrubbed = pii_scrub(gated).select("doc_id", "scrubbed")
-    reps = semdedup(embeddings, threshold, n_cells, iters, nprobe)
-    # sem and kept each feed two consumers — materialize once
-    # (see _training_corpus_v4_full). Unlike v2's keeper, one
-    # min(struct(doc_id, scrubbed, n_members)) aggregate does not remove
-    # these: the keeper itself still feeds the chunking AND the n_members
-    # join. Measured at sf0.01 (4 cores, two interleaved sets of 5 runs),
-    # the aggregate without both checkpoints gave identical output in 23
+    # kept feeds two consumers, the chunking AND the n_members join —
+    # materialize it once, like sem in ``_survivors``. Unlike v2's keeper,
+    # one min(struct(doc_id, scrubbed, n_members)) aggregate does not
+    # remove these checkpoints: the keeper itself still feeds both.
+    # Measured at sf0.01 (4 cores, two interleaved sets of 5 runs), the
+    # aggregate without both checkpoints gave identical output in 23
     # Spark jobs instead of 29 but ran slower: job_s medians 2.77 / 3.46 s
     # against 2.53 / 2.83 s with the checkpoints.
-    sem = scrubbed.join(reps, "doc_id").localCheckpoint(eager=True)
-    keep = sem.groupBy(F.md5("scrubbed").alias("text_fp")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    kept = keep.join(sem, "doc_id").select(
-        "doc_id", F.col("scrubbed").alias("text"), "n_members"
+    kept = _survivors(
+        documents, embeddings, threshold, n_cells, iters, nprobe
     ).localCheckpoint(eager=True)
     chunks = chunk_documents(kept, chunk_words, overlap)
     return chunks.join(kept.select("doc_id", "n_members"), "doc_id").select(
@@ -1507,42 +1469,19 @@ def _training_corpus_v4_full(
     can consume the surviving bytes. ``training_corpus_v4`` is the
     md5-projected public face; output here is (doc_id, source, seq_bin,
     n_words, dedup_text, n_kept)."""
-    from .textops import (
-        _gopher_pass_col,
-        mixture_sample,
-        pack_assign,
-        pii_scrub,
-        quality_classifier,
-        segment_dedup,
-    )
+    from .textops import mixture_sample, pack_assign, segment_dedup
 
-    qc = quality_classifier(documents).where(F.col("pass")).select("doc_id")
-    gated = documents.where(_gopher_pass_col()).join(qc, "doc_id")
-    scrubbed = pii_scrub(gated).select("doc_id", "scrubbed")
-    reps = semdedup(embeddings, threshold, n_cells, iters, nprobe)
-    # materialize each fan-out point ONCE (round 6): sem feeds the md5
-    # dedup agg AND the keeper join-back, withsrc feeds the mixture
-    # quota AND the survivor join, final feeds packing AND the output
-    # join — without these the whole upstream gate/scrub/dedup chain is
-    # embedded once per consumer (multiplicatively: the quality/gopher
-    # gates re-executed ~8x in the v4 plan; ReuseExchange can't dedupe
-    # the column-pruned copies). Each checkpointed set is a SURVIVOR
-    # table, the pipeline's natural stage boundary. sem stays even though
-    # one min(struct(doc_id, scrubbed)) aggregate could replace the keeper
-    # join-back: segment_dedup reads the keeper twice, so the gate chain
-    # would run twice. Measured at sf0.01 (4 cores, two interleaved sets
-    # of 5 runs), that variant gave identical output in 39 Spark jobs
-    # instead of 43 (v5: 56-57 instead of 60) but ran slower: job_s
-    # medians 3.62 / 4.15 s against 3.19 / 3.89 s with this checkpoint.
-    sem = scrubbed.join(reps.select("doc_id"), "doc_id").localCheckpoint(
-        eager=True
-    )
-    keep = sem.groupBy(F.md5("scrubbed").alias("text_fp")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    kept = keep.join(sem, "doc_id").select(
-        "doc_id", F.col("scrubbed").alias("text")
-    )
+    # materialize each fan-out point ONCE (round 6; sem's checkpoint is in
+    # ``_survivors``): withsrc feeds the mixture quota AND the survivor
+    # join, final feeds packing AND the output join — without these the
+    # whole upstream gate/scrub/dedup chain is embedded once per consumer
+    # (multiplicatively: the quality/gopher gates re-executed ~8x in the
+    # v4 plan; ReuseExchange can't dedupe the column-pruned copies). Each
+    # checkpointed set is a SURVIVOR table, the pipeline's natural stage
+    # boundary.
+    kept = _survivors(
+        documents, embeddings, threshold, n_cells, iters, nprobe
+    ).select("doc_id", "text")
     segd = segment_dedup(kept, seg_words)
     withsrc = segd.join(
         doc_sources.select("doc_id", "source"), "doc_id"
@@ -1757,31 +1696,8 @@ def cosine_neardup(embeddings: DataFrame, threshold: float = 0.35) -> DataFrame:
     CORRECTNESS BASELINE ONLY — O(n²) nested-loop pairs; the production
     path at scale is ``cosine_neardup_lsh`` (LSH candidates → exact
     verify) or ``cosine_neardup_blocked`` (bounded-replication GEMM)."""
-    base = quantized(embeddings)
-    norms = base.select(
-        "vec_id", F.col("q").alias("v"), _pair_sum(F.col("q"), F.col("q")).alias("n2")
-    )
-    a = norms.select(
-        F.col("vec_id").alias("a_id"), F.col("v").alias("av"), F.col("n2").alias("an")
-    )
-    b = norms.select(
-        F.col("vec_id").alias("b_id"), F.col("v").alias("bv"), F.col("n2").alias("bn")
-    )
-    t2 = int(round(threshold * threshold * 1_000_000))
-    pairs = a.join(b, F.col("a_id") < F.col("b_id"))
-    # the squared compare runs in doubles over exact integer inputs —
-    # bit-identical across engines, and immune to bigint overflow
-    d = F.col("dot").cast("double")
-    return (
-        pairs.withColumn("dot", _pair_sum(F.col("av"), F.col("bv")))
-        .where(
-            (F.col("dot") > 0)
-            & (
-                d * d * F.lit(1_000_000.0)
-                > F.lit(float(t2)) * F.col("an").cast("double") * F.col("bn").cast("double")
-            )
-        )
-        .select("a_id", "b_id", "dot")
+    return _cosine_verify(
+        embeddings, threshold, lambda a, b: a.join(b, F.col("a_id") < F.col("b_id"))
     )
 
 

@@ -20,7 +20,7 @@ from pyspark.sql.window import Window
 from . import schema
 from .mfr import recognize_formulas
 from .ocr import ocr_text_spans
-from .parse import parse_detections
+from .parse import parse_detections, payload_turn
 
 # id→name table shared by BOTH reference layout models
 # (layout_detection/models/yolo.py:18-29 == models/layoutlmv3.py:21-32);
@@ -51,9 +51,7 @@ def layout_detection_lmv3(
         F.coalesce(F.col("tool"), F.lit("")),
     )
     lines = (
-        transcripts.filter(
-            F.col("text").contains("@page ") | F.col("tool").contains("@page ")
-        )
+        transcripts.filter(payload_turn())
         .select("conv_id", "turn_idx", F.posexplode(F.split(src, "\n")).alias("lidx", "line"))
         .where(F.col("line").startswith("@page ") | F.col("line").startswith("@det "))
     )

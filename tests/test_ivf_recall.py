@@ -10,7 +10,6 @@ skipped, NULL when no term is non-null), and the chunked numpy kernels
 against full-matrix references without Spark."""
 
 import collections
-import logging
 import os
 import re
 import sys
@@ -98,16 +97,14 @@ def test_trained_not_catastrophically_worse(report):
         assert r["trained"] >= r["ivf"] - 0.25, (cells, r)
 
 
-def test_numpy_paths_equal_join_paths(spark, monkeypatch):
-    """The broadcast numpy verify must keep exactly the pairs the
-    keyed-join verify keeps — pinned by feeding ``_verify_cosine_pairs``
-    every a < b pair of each corpus (plus pairs naming an id with no
-    vector) and forcing ``_VERIFY_TABLE_VALUES`` to 0 (join path), on the
-    uniform corpus and on a ragged fixture with null vectors and
+def test_lsh_verify_equals_exact_pairs(spark):
+    """The LSH candidates' verify keeps exactly the pairs the all-pairs
+    ``cosine_neardup`` finds when it is fed every a < b pair of the
+    corpus, plus two pairs naming an id with no vector (which drop), on
+    the uniform corpus and on a ragged fixture with null vectors and
     elements."""
     from pyspark.sql import functions as F
 
-    cases = []
     for emb in (
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet"),
         spark.createDataFrame(vector_table(0, "combined")),
@@ -121,36 +118,9 @@ def test_numpy_paths_equal_join_paths(spark, monkeypatch):
                 [(0, 10**9), (10**9, 10**9 + 1)], "doc_a bigint, doc_b bigint"
             ))
         )
-        cases.append((cand, emb))
-
-    def snap():
-        return [
-            sorted(map(tuple, simsearch._verify_cosine_pairs(cand, emb, 0.35).collect()))
-            for cand, emb in cases
-        ]
-
-    fast = snap()
-    assert all(fast), "every case must keep some pairs"
-    monkeypatch.setattr(simsearch, "_VERIFY_TABLE_VALUES", 0)
-    assert fast == snap()
-
-
-def test_verify_gate_is_logged(spark, monkeypatch, caplog):
-    """The verify size gate logs which kernel it picked, with the probed
-    rows × width (the fixture's longest vector has 8 elements)."""
-    emb = spark.createDataFrame(vector_table(0, "ragged"))
-    cand = spark.createDataFrame([(0, 1)], "doc_a bigint, doc_b bigint")
-    caplog.set_level(logging.INFO, logger="sparkextract")
-    simsearch._verify_cosine_pairs(cand, emb, 0.35)
-    monkeypatch.setattr(simsearch, "_VERIFY_TABLE_VALUES", 0)
-    simsearch._verify_cosine_pairs(cand, emb, 0.35)
-    lines = [
-        r.getMessage() for r in caplog.records
-        if r.name == "sparkextract.simsearch" and r.getMessage().startswith("verify:")
-    ]
-    assert len(lines) == 2, lines
-    assert lines[0].startswith("verify: broadcast (probed 60 rows x width 8,"), lines
-    assert lines[1].startswith("verify: join (probed 60 rows x width 8,"), lines
+        got = _spark(simsearch._verify_cosine_pairs(cand, emb, 0.35))
+        assert got, "the case must keep some pairs"
+        assert got == _spark(simsearch.cosine_neardup(emb, 0.35))
 
 
 def test_ivf_plan_probes_once_without_join(spark):

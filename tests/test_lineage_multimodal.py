@@ -3,7 +3,7 @@ observed inside the write, and content-addressed snapshot ids."""
 
 import pytest
 
-from sparkextract import synth
+from sparkextract import lineage, synth
 from sparkextract.lineage import committed_buckets, run_with_lineage, snapshot_id
 from sparkextract.pipeline import extract
 from sparkextract import schema
@@ -42,6 +42,24 @@ def test_lineage_run_and_resume(spark, tmp_path):
         (r.conv_id, r.turn_idx): r.main_text for r in extract(sdf).collect()
     }
     assert got == want
+
+
+def test_lineage_keeps_conv_keyed_spread(spark, tmp_path, monkeypatch):
+    """A caller's conv_id-only repartition reaches ``extract_fused`` as
+    its partition count: the bucket column and the observed metrics wrap
+    the input, so the engine cannot find it at the plan root itself."""
+    seen = []
+    real = lineage.extract_fused
+
+    def spy(df, repartition=0):
+        seen.append(repartition)
+        return real(df, repartition=repartition)
+
+    monkeypatch.setattr(lineage, "extract_fused", spy)
+    pdf = synth.gen_transcripts(n_convs=6, seed=22)
+    sdf = spark.createDataFrame(pdf, schema=schema.TRANSCRIPTS).repartition(4, "conv_id")
+    run_with_lineage(spark, sdf, str(tmp_path / "out"), snapshot="s", buckets=2)
+    assert seen == [4]
 
 
 def test_lineage_observe_counts_match_truth(spark, tmp_path):

@@ -135,6 +135,22 @@ def test_training_corpus_v2_job_count(spark):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 19
 
 
+@pytest.mark.skipif(not os.path.exists(SF0001), reason="testdata absent")
+def test_lsh_build_runs_no_job(spark):
+    """Building ``cosine_neardup_lsh``'s DataFrame is lazy: it starts no
+    Spark job until an action runs it."""
+    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
+    sc = spark.sparkContext
+    group = "cosine_neardup_lsh-build"
+    sc.setJobGroup(group, "cosine_neardup_lsh build guard")
+    try:
+        simsearch.cosine_neardup_lsh(docs, emb)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def _dict_min_labels(edges):
     """Reference: union-find on a dict with min-id roots (the component
     label is its smallest id)."""

@@ -149,5 +149,5 @@ def test_every_udf_body_installs_hook_first():
             seen += 1
             if fn is None or not _first_stmt_installs(fn):
                 bad.append(f"{name}:{line}")
-    assert seen == 12, seen
+    assert seen == 11, seen
     assert bad == [], "UDF bodies that do not call pyworker.install() first: " + ", ".join(bad)
