@@ -41,14 +41,18 @@ _BRANCH = {
 }
 
 
-def _fields(lines: pa.Array, sep: str, ks: range, max_splits=None) -> list[pa.Array]:
-    """Fields ``ks`` of every line split on ``sep``; null where a line has
-    fewer fields (pandas ``str.split(expand=True)`` padding)."""
+def _fields(lines: pa.Array, sep: str, ks: range, max_splits=None) -> pa.Array:
+    """Fields ``ks`` of every line split on ``sep``, field-major in one
+    array from one take: field ``ks[0]`` of every line, then ``ks[1]``,
+    and so on. Null where a line has fewer fields (pandas
+    ``str.split(expand=True)`` padding)."""
     parts = pc.split_pattern(lines, sep, max_splits=max_splits)
-    flat = parts.flatten()
     offsets = parts.offsets.to_numpy()
     length = np.diff(offsets)
-    return [flat.take(pa.array(offsets[:-1] + k, mask=length <= k)) for k in ks]
+    idx = np.concatenate([offsets[:-1] + k for k in ks])
+    return parts.flatten().take(
+        pa.array(idx, mask=np.concatenate([length <= k for k in ks]))
+    )
 
 
 def _has_exponent(a: pa.Array) -> bool:
@@ -63,9 +67,9 @@ def _has_exponent(a: pa.Array) -> bool:
     return bool(((span | 0x20) == ord("e")).any())
 
 
-def _to_float(cols: list[pa.Array]) -> list[np.ndarray]:
-    """``pd.to_numeric(errors="coerce")`` of each string column as float64,
-    null → NaN.
+def _to_float(cols: pa.Array, n: int) -> list[np.ndarray]:
+    """``pd.to_numeric(errors="coerce")`` of each of the ``n`` equal
+    string columns that ``cols`` holds end to end, as float64, null → NaN.
 
     pyarrow's cast is correctly rounded and rejects padded numbers;
     pandas' parser strips whitespace, is not correctly rounded past 15
@@ -73,24 +77,24 @@ def _to_float(cols: list[pa.Array]) -> list[np.ndarray]:
     (so "-0" gives +0.0). The cast therefore serves only when every value
     is a plain decimal of at most 15 characters with a finite, non-(-0.0)
     result; any other input takes pandas, column by column."""
-    both = pa.concat_arrays(cols)
     try:
-        vals = pc.cast(both, pa.float64()).to_numpy(zero_copy_only=False)
+        vals = pc.cast(cols, pa.float64()).to_numpy(zero_copy_only=False)
     except pa.ArrowInvalid:
         vals = None
     if (
         vals is not None
-        and (pc.max(pc.binary_length(both)).as_py() or 0) <= 15
-        and not _has_exponent(both)
+        and (pc.max(pc.binary_length(cols)).as_py() or 0) <= 15
+        and not _has_exponent(cols)
         and not np.isinf(vals).any()
         and not (np.signbit(vals) & (vals == 0)).any()
     ):
-        return np.split(vals, np.cumsum([len(c) for c in cols])[:-1])
+        return np.split(vals, n)
+    m = len(cols) // n
     return [
         pd.to_numeric(
             pd.Series(c.to_numpy(zero_copy_only=False), dtype=object), errors="coerce"
         ).to_numpy(np.float64)
-        for c in cols
+        for c in (cols.slice(i * m, m) for i in range(n))
     ]
 
 
@@ -135,7 +139,9 @@ def _parse_batch(batch: pd.DataFrame) -> dict:
     page_ord = seen - 1  # batch-wide ordinal of each line's current page
 
     pg = np.flatnonzero(lpage)
-    p_no, p_w, p_h = _to_float(_fields(lines.take(pa.array(keep[pg])), " ", range(1, 4)))
+    p_no, p_w, p_h = _to_float(
+        _fields(lines.take(pa.array(keep[pg])), " ", range(1, 4)), 3
+    )
     p_no = pd.Series(p_no).fillna(0).astype("int32").to_numpy()
     p_w = np.where(np.isnan(p_w), 0.0, p_w)
     p_h = np.where(np.isnan(p_h), 0.0, p_h)
@@ -143,8 +149,11 @@ def _parse_batch(batch: pd.DataFrame) -> dict:
     p_seq = n_seen[pg] - 1
 
     dl = np.flatnonzero(~lpage & (n_seen > 0))
+    # fields 0-6 of every det line, field-major: the "@det <category>"
+    # head, the five numbers, the content
     fields = _fields(lines.take(pa.array(keep[dl])), "|", range(7), max_splits=6)
-    score, x0, y0, x1, y1 = _to_float(fields[1:6])
+    n_dl = len(dl)
+    score, x0, y0, x1, y1 = _to_float(fields.slice(n_dl, 5 * n_dl), 5)
     valid = ~(np.isnan(score) | np.isnan(x0) | np.isnan(y0) | np.isnan(x1) | np.isnan(y1))
     d_page = page_ord[dl]  # a det's page: the batch's page_ord-th @page line
     # det_idx: payload position among the page's well-formed dets
@@ -153,7 +162,7 @@ def _parse_batch(batch: pd.DataFrame) -> dict:
 
     # category → branch (0 layout, 1 mfd, 2 raw OCR text, -9 unknown);
     # field 0 still carries the "@det " prefix
-    head = pc.dictionary_encode(fields[0].take(pa.array(v)))
+    head = pc.dictionary_encode(fields.take(pa.array(v)))
     names = [c[5:] for c in head.dictionary.to_pylist()]
     codes = head.indices.to_numpy()
     branch = np.array([_BRANCH.get(c, -9) for c in names], dtype=np.int64)[codes]
@@ -195,7 +204,7 @@ def _parse_batch(batch: pd.DataFrame) -> dict:
     n_pg = len(pg)
     if "@page" not in names:
         names.append("@page")
-    content = pc.fill_null(fields[6].take(pa.array(v)), "")
+    content = pc.fill_null(fields.take(pa.array(6 * n_dl + v)), "")
     return {
         "conv_id": pd.Categorical.from_codes(np.r_[ccode[d_row], ccode[p_row]], conv),
         "turn_idx": np.r_[turn[d_row], turn[p_row]].astype(np.int32),

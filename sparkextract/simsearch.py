@@ -1128,20 +1128,19 @@ def dedup_keep_representatives(documents: DataFrame) -> DataFrame:
     """End of the dedup pipeline: keep ONE document per near-dup cluster
     (the min doc_id — the cluster label itself) with the cluster size, so
     downstream training reads the deduped corpus directly. Composes
-    ``neardup_clusters`` (LSH graph → connected components); one extra
-    groupBy on the label."""
+    ``neardup_clusters`` (LSH graph → connected components) with one
+    groupBy on the label (``_representatives``)."""
     return _representatives(neardup_clusters(documents))
 
 
 def _representatives(labels: DataFrame) -> DataFrame:
     """(doc_id, n_members): one row per component of ``labels`` (doc_id,
-    cluster) — its representative, the min doc_id that is the label
-    itself — with the component's size."""
-    sizes = labels.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_members"))
-    return (
-        labels.where(F.col("doc_id") == F.col("cluster"))
-        .join(sizes, "cluster")
-        .select("doc_id", "n_members")
+    cluster) — its representative with the component's size, from one
+    aggregate on the label. A component's min label is always one of its
+    members, so the label IS the representative's doc_id: no self-join
+    back to the member rows."""
+    return labels.groupBy(F.col("cluster").alias("doc_id")).agg(
+        F.count(F.lit(1)).alias("n_members")
     )
 
 
@@ -1156,12 +1155,15 @@ def semdedup(
     trained-IVF cells, each verified by one exact quantized-cosine GEMM
     (``cosine_neardup_ivf``) → connected components
     (``_propagate_min_labels``) → one representative (min id) per
-    semantic cluster with its size. Every stage is a keyed shuffle, a
-    bounded per-cell GEMM or a bounded driver collect; nothing
-    all-pairs, so the composition survives the same 100 TB argument as
-    its parts (SCALE.md). The verified edges are not materialized: on
-    the driver path the components gate's one bounded collect is their
-    only consumer.
+    semantic cluster with its size, from one aggregate on the label
+    (``_representatives``, the keeper tail ``dedup_keep_representatives``
+    and ``textops.training_corpus`` share). Every stage is a keyed
+    shuffle, a bounded per-cell GEMM or a bounded driver collect;
+    nothing all-pairs, so the composition survives the same 100 TB
+    argument as its parts (SCALE.md). The verified edges are not
+    materialized: on the driver path the components gate's one bounded
+    collect is their only consumer. The training_corpus capstones call
+    it with these defaults.
 
     ``n_cells`` must grow ~√n (candidate volume ∝ n²·nprobe²/cells, so
     √n cells keeps per-cell work linear): the DEFAULT is ``"auto"`` —
@@ -1224,11 +1226,7 @@ SELECT doc_id, n_members FROM sem_reps
 """
 
 
-def training_corpus_v2(
-    documents: DataFrame, embeddings: DataFrame, threshold: float = 0.35,
-    n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto",
-) -> DataFrame:
+def training_corpus_v2(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
     """The modern LLM training-data pipeline composed end to end, every
     stage individually hash-green: Gopher quality gate (map-only) →
     PII scrub (map-only) → SEMANTIC dedup (keep only semdedup
@@ -1245,10 +1243,9 @@ def training_corpus_v2(
 
     gated = documents.where(_gopher_pass_col())
     scrubbed = pii_scrub(gated).select("doc_id", "scrubbed")
-    reps = semdedup(embeddings, threshold, n_cells, iters, nprobe)
     # the token count rides in the keeper struct (ints, not the text)
     keep = (
-        scrubbed.join(reps, "doc_id")
+        scrubbed.join(semdedup(embeddings), "doc_id")
         .groupBy(F.md5("scrubbed").alias("text_fp"))
         .agg(F.min(F.struct(
             "doc_id", F.size(F.split("scrubbed", " ")).alias("n_tokens"), "n_members"
@@ -1257,23 +1254,29 @@ def training_corpus_v2(
     return keep.select("k.doc_id", "k.n_tokens", "k.n_members", "text_fp")
 
 
-def training_corpus_v2_sql(
-    threshold: float = 0.35, n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto", source_cte: str | None = None,
-) -> str:
-    """DuckDB twin of ``training_corpus_v2``. ``source_cte`` optionally
-    replaces the documents source (e.g. the PII-injected corpus the
-    driver query uses) — it must yield (doc_id, text)."""
+def _source_prologue(source_cte: str | None) -> tuple[str, str]:
+    """(head, src) of the capstone twins. ``head`` follows ``WITH``:
+    ``RECURSIVE``, the optional ``src_docs`` CTE, then the semdedup CTE
+    chain ending in ``sem_reps``; ``src`` names the documents source.
+    ``source_cte`` optionally replaces the documents source (e.g. the
+    PII-injected corpus the driver queries use) — it must yield
+    (doc_id, text)."""
+    if source_cte is None:
+        return f"RECURSIVE {_semdedup_cte_body()}", "documents"
+    return (
+        f"RECURSIVE src_docs AS ({source_cte}),\n{_semdedup_cte_body()}",
+        "src_docs",
+    )
+
+
+def training_corpus_v2_sql(source_cte: str | None = None) -> str:
+    """DuckDB twin of ``training_corpus_v2`` (``source_cte``: see
+    ``_source_prologue``)."""
     from .textops import gopher_pass_sql, pii_scrub_sql_expr
 
-    body = _semdedup_cte_body(threshold, n_cells, iters, nprobe)
-    src = "documents"
-    src_cte = ""
-    if source_cte is not None:
-        src = "src_docs"
-        src_cte = f"src_docs AS ({source_cte}),\n"
+    head, src = _source_prologue(source_cte)
     return f"""
-WITH RECURSIVE {src_cte}{body},
+WITH {head},
 gated AS (
   SELECT doc_id, text FROM {src} WHERE {gopher_pass_sql("text")}
 ),
@@ -1295,20 +1298,17 @@ FROM keep k JOIN sem s ON s.doc_id = k.doc_id
 """
 
 
-def _survivors(
-    documents: DataFrame, embeddings: DataFrame, threshold: float,
-    n_cells: int | str, iters: int, nprobe: int | str,
-) -> DataFrame:
+def _survivors(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
     """(doc_id, text, n_members): the survivor prefix v3 and v4 share —
     Gopher rule gate AND linear quality-classifier gate → PII scrub →
     semdedup representatives → exact dedup on the scrubbed text (md5
-    groupBy, keeper = min doc_id, joined back for its text)."""
+    groupBy, keeper = min doc_id, joined back for its text). Twin:
+    ``_survivors_cte``."""
     from .textops import _gopher_pass_col, pii_scrub, quality_classifier
 
     qc = quality_classifier(documents).where(F.col("pass")).select("doc_id")
     gated = documents.where(_gopher_pass_col()).join(qc, "doc_id")
     scrubbed = pii_scrub(gated).select("doc_id", "scrubbed")
-    reps = semdedup(embeddings, threshold, n_cells, iters, nprobe)
     # sem feeds the md5 dedup agg AND the keeper join-back: materialize it
     # once, or the gate chain runs once per consumer. It stays even though
     # one min(struct(doc_id, scrubbed)) aggregate could replace the keeper
@@ -1317,7 +1317,7 @@ def _survivors(
     # sets of 5 runs), that v4 variant gave identical output in 39 Spark
     # jobs instead of 43 (v5: 56-57 instead of 60) but ran slower: job_s
     # medians 3.62 / 4.15 s against 3.19 / 3.89 s with this checkpoint.
-    sem = scrubbed.join(reps, "doc_id").localCheckpoint(eager=True)
+    sem = scrubbed.join(semdedup(embeddings), "doc_id").localCheckpoint(eager=True)
     keep = sem.groupBy(F.md5("scrubbed").alias("text_fp")).agg(
         F.min("doc_id").alias("doc_id")
     )
@@ -1326,11 +1326,42 @@ def _survivors(
     )
 
 
-def training_corpus_v3(
-    documents: DataFrame, embeddings: DataFrame, threshold: float = 0.35,
-    n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto", chunk_words: int = 64, overlap: int = 8,
-) -> DataFrame:
+def _survivors_cte(src: str) -> str:
+    """Twin of ``_survivors`` as a CTE chain after ``_source_prologue``'s
+    head, reading the documents from ``src``: qcpass → gated → scrub →
+    sem → keep → survivors(doc_id, text, n_members). The names stay
+    clear of the CTEs that nested stage twins define inside themselves:
+    DuckDB resolves a name to the innermost CTE, so an outer ``kept``
+    read by ``segment_dedup_sql`` would be shadowed by its own."""
+    from .textops import gopher_pass_sql, pii_scrub_sql_expr, quality_classifier_sql
+
+    qc = quality_classifier_sql(src, "text").strip()
+    return f"""qcpass AS (
+  SELECT doc_id FROM ({qc}) q WHERE q.pass
+),
+gated AS (
+  SELECT d.doc_id, d.text FROM {src} d
+  JOIN qcpass USING (doc_id)
+  WHERE {gopher_pass_sql("d.text")}
+),
+scrub AS (
+  SELECT doc_id, {pii_scrub_sql_expr("text")} AS scrubbed FROM gated
+),
+sem AS (
+  SELECT s.doc_id, s.scrubbed, r.n_members
+  FROM scrub s JOIN sem_reps r USING (doc_id)
+),
+keep AS (
+  SELECT md5(scrubbed) AS text_fp, MIN(doc_id) AS doc_id
+  FROM sem GROUP BY 1
+),
+survivors AS (
+  SELECT k.doc_id, s.scrubbed AS text, s.n_members
+  FROM keep k JOIN sem s ON s.doc_id = k.doc_id
+)"""
+
+
+def training_corpus_v3(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
     """The round-3 capstone composition — every stage of a modern
     LLM training-data pipeline, each individually hash-green, chained:
 
@@ -1356,76 +1387,37 @@ def training_corpus_v3(
     # aggregate without both checkpoints gave identical output in 23
     # Spark jobs instead of 29 but ran slower: job_s medians 2.77 / 3.46 s
     # against 2.53 / 2.83 s with the checkpoints.
-    kept = _survivors(
-        documents, embeddings, threshold, n_cells, iters, nprobe
-    ).localCheckpoint(eager=True)
-    chunks = chunk_documents(kept, chunk_words, overlap)
-    return chunks.join(kept.select("doc_id", "n_members"), "doc_id").select(
+    kept = _survivors(documents, embeddings).localCheckpoint(eager=True)
+    return chunk_documents(kept).join(
+        kept.select("doc_id", "n_members"), "doc_id"
+    ).select(
         "doc_id", "chunk_idx",
         F.md5("chunk_text").alias("chunk_fp"), "n_words", "n_members",
     )
 
 
-def training_corpus_v3_sql(
-    threshold: float = 0.35, n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto", chunk_words: int = 64, overlap: int = 8,
-    source_cte: str | None = None,
-) -> str:
-    """DuckDB twin of ``training_corpus_v3``: stage twins embedded as
-    nested-WITH subqueries (legal in DuckDB; inner WITH sees outer
-    CTEs), so each stage's oracle text is reused verbatim."""
-    from .textops import (
-        chunk_documents_sql,
-        gopher_pass_sql,
-        pii_scrub_sql_expr,
-        quality_classifier_sql,
-    )
+def training_corpus_v3_sql(source_cte: str | None = None) -> str:
+    """DuckDB twin of ``training_corpus_v3``: the shared survivor CTEs
+    (``_survivors_cte``), then the chunking twin embedded as a
+    nested-WITH subquery (legal in DuckDB; inner WITH sees outer CTEs),
+    so the stage's oracle text is reused verbatim."""
+    from .textops import chunk_documents_sql
 
-    body = _semdedup_cte_body(threshold, n_cells, iters, nprobe)
-    src = "documents"
-    src_cte = ""
-    if source_cte is not None:
-        src = "src_docs"
-        src_cte = f"src_docs AS ({source_cte}),\n"
-    qc = quality_classifier_sql(src, "text").strip()
-    chunk = chunk_documents_sql(chunk_words, overlap, "kept3", "text").strip()
+    head, src = _source_prologue(source_cte)
+    chunk = chunk_documents_sql(source_sql="survivors").strip()
     return f"""
-WITH RECURSIVE {src_cte}{body},
-qcpass AS (
-  SELECT doc_id FROM ({qc}) q WHERE q.pass
-),
-gated3 AS (
-  SELECT d.doc_id, d.text FROM {src} d
-  JOIN qcpass USING (doc_id)
-  WHERE {gopher_pass_sql("d.text")}
-),
-scrub3 AS (
-  SELECT doc_id, {pii_scrub_sql_expr("text")} AS scrubbed FROM gated3
-),
-sem3 AS (
-  SELECT s.doc_id, s.scrubbed, r.n_members
-  FROM scrub3 s JOIN sem_reps r USING (doc_id)
-),
-keep3 AS (
-  SELECT md5(scrubbed) AS text_fp, MIN(doc_id) AS doc_id
-  FROM sem3 GROUP BY 1
-),
-kept3 AS (
-  SELECT k.doc_id, s.scrubbed AS text, s.n_members
-  FROM keep3 k JOIN sem3 s ON s.doc_id = k.doc_id
-),
+WITH {head},
+{_survivors_cte(src)},
 chunks3 AS ({chunk})
 SELECT c.doc_id, c.chunk_idx, md5(c.chunk_text) AS chunk_fp,
        c.n_words, k.n_members
-FROM chunks3 c JOIN kept3 k USING (doc_id)
+FROM chunks3 c JOIN survivors k USING (doc_id)
 """
 
 
 def training_corpus_v4(
     documents: DataFrame, embeddings: DataFrame, doc_sources: DataFrame,
-    threshold: float = 0.35, n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto", seg_words: int = 32, rate: float = 0.5,
-    salt: str = "mix", seq_len: int = 256,
+    seg_words: int = 32, rate: float = 0.5, seq_len: int = 256,
 ) -> DataFrame:
     """The round-4 capstone — v3's gate/scrub/dedup chain extended with
     the three corpus-shaping stages a training run needs downstream:
@@ -1450,8 +1442,7 @@ def training_corpus_v4(
     shuffle + a |sources|-row broadcast quota + one per-source window —
     nothing all-pairs, nothing per-row Python."""
     return _training_corpus_v4_full(
-        documents, embeddings, doc_sources, threshold, n_cells, iters,
-        nprobe, seg_words, rate, salt, seq_len,
+        documents, embeddings, doc_sources, seg_words, rate, seq_len
     ).select(
         "doc_id", "source", "seq_bin", "n_words",
         F.md5("dedup_text").alias("text_fp"), "n_kept",
@@ -1460,9 +1451,7 @@ def training_corpus_v4(
 
 def _training_corpus_v4_full(
     documents: DataFrame, embeddings: DataFrame, doc_sources: DataFrame,
-    threshold: float = 0.35, n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto", seg_words: int = 32, rate: float = 0.5,
-    salt: str = "mix", seq_len: int = 256,
+    seg_words: int = 32, rate: float = 0.5, seq_len: int = 256,
 ) -> DataFrame:
     """The v4 chain keeping ``dedup_text`` in the clear (not just its
     md5) so downstream stages (v5's DSIR gate and content-keyed split)
@@ -1479,14 +1468,12 @@ def _training_corpus_v4_full(
     # v4 plan; ReuseExchange can't dedupe the column-pruned copies). Each
     # checkpointed set is a SURVIVOR table, the pipeline's natural stage
     # boundary.
-    kept = _survivors(
-        documents, embeddings, threshold, n_cells, iters, nprobe
-    ).select("doc_id", "text")
+    kept = _survivors(documents, embeddings).select("doc_id", "text")
     segd = segment_dedup(kept, seg_words)
     withsrc = segd.join(
         doc_sources.select("doc_id", "source"), "doc_id"
     ).localCheckpoint(eager=True)
-    sampled = mixture_sample(withsrc, rate, salt)
+    sampled = mixture_sample(withsrc, rate)
     final = withsrc.join(sampled.select("doc_id"), "doc_id").localCheckpoint(
         eager=True
     )
@@ -1501,11 +1488,8 @@ def _training_corpus_v4_full(
 
 def training_corpus_v5(
     documents: DataFrame, embeddings: DataFrame, doc_sources: DataFrame,
-    target: DataFrame,
-    threshold: float = 0.35, n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto", seg_words: int = 32, rate: float = 0.5,
-    salt: str = "mix", seq_len: int = 256,
-    min_score: int = 40, val_frac: float = 0.1, split_salt: str = "split",
+    target: DataFrame, seg_words: int = 32, rate: float = 0.5,
+    seq_len: int = 256, min_score: int = 40,
 ) -> DataFrame:
     """The round-5 capstone — the v4 corpus-shaping chain extended with
     the two selection/assignment stages that close a training-data
@@ -1532,10 +1516,8 @@ def training_corpus_v5(
     target slice, so scores sit well above ``dsir_select``'s raw-corpus
     range — 40 splits the survivor distribution at both test SFs
     (measured medians 58 / 33)."""
-    full = _training_corpus_v4_full(
-        documents, embeddings, doc_sources, threshold, n_cells, iters,
-        nprobe, seg_words, rate, salt, seq_len,
-    )
+    from .textops import dsir_select_threshold, leakage_safe_split
+
     # materialize the v4 chain ONCE (round-5 VERDICT item 2): `full` feeds
     # THREE consumers below (the DSIR corpus, the split input, and the
     # final manifest join) — without this the whole gate/scrub/dedup/
@@ -1545,14 +1527,13 @@ def training_corpus_v5(
     # manifest (already mixture-sampled — far smaller than the corpus);
     # at cluster scale the analog is materializing the v4 table before
     # the selection/split stages read it.
-    full = full.localCheckpoint(eager=True)
-    from .textops import dsir_select_threshold, leakage_safe_split
-
+    full = _training_corpus_v4_full(
+        documents, embeddings, doc_sources, seg_words, rate, seq_len
+    ).localCheckpoint(eager=True)
     corpus = full.select("doc_id", F.col("dedup_text").alias("text"))
     scored = dsir_select_threshold(corpus, target, min_score)
     split = leakage_safe_split(
-        full.select("doc_id", "source", F.col("dedup_text").alias("text")),
-        val_frac, split_salt,
+        full.select("doc_id", "source", F.col("dedup_text").alias("text"))
     ).select("doc_id", "split")
     return (
         full.join(scored, "doc_id")
@@ -1566,59 +1547,24 @@ def training_corpus_v5(
 
 
 def _training_corpus_v4_cte_body(
-    threshold: float = 0.35, n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto", seg_words: int = 32, rate: float = 0.5,
-    salt: str = "mix", seq_len: int = 256, source_cte: str | None = None,
+    seg_words: int = 32, rate: float = 0.5, seq_len: int = 256,
+    source_cte: str | None = None,
 ) -> str:
     """The v4 twin as a CTE chain ending in ``v4full`` (dedup_text in
     the clear) — shared by the v4 and v5 twins, mirroring the Spark-side
-    ``_training_corpus_v4_full`` split. Stage twins embed as nested-WITH
+    ``_training_corpus_v4_full`` split: the shared survivor CTEs
+    (``_survivors_cte``), then the stage twins embedded as nested-WITH
     subqueries (the v3 pattern); the source column joins in from the raw
     ``documents`` view, mirroring the chain's ``doc_sources`` argument.
     Returned string starts after ``WITH `` (it begins with RECURSIVE)."""
-    from .textops import (
-        gopher_pass_sql,
-        mixture_sample_sql,
-        pack_assign_sql,
-        pii_scrub_sql_expr,
-        quality_classifier_sql,
-        segment_dedup_sql,
-    )
+    from .textops import mixture_sample_sql, pack_assign_sql, segment_dedup_sql
 
-    body = _semdedup_cte_body(threshold, n_cells, iters, nprobe)
-    src = "documents"
-    src_cte = ""
-    if source_cte is not None:
-        src = "src_docs"
-        src_cte = f"src_docs AS ({source_cte}),\n"
-    qc = quality_classifier_sql(src, "text").strip()
-    segd = segment_dedup_sql(seg_words, "kept4", "text").strip()
-    mix = mixture_sample_sql(rate, salt, "withsrc4").strip()
+    head, src = _source_prologue(source_cte)
+    segd = segment_dedup_sql(seg_words, "survivors", "text").strip()
+    mix = mixture_sample_sql(rate, source_sql="withsrc4").strip()
     pack = pack_assign_sql(seq_len, "final4", "dedup_text").strip()
-    return f"""RECURSIVE {src_cte}{body},
-qcpass AS (
-  SELECT doc_id FROM ({qc}) q WHERE q.pass
-),
-gated4 AS (
-  SELECT d.doc_id, d.text FROM {src} d
-  JOIN qcpass USING (doc_id)
-  WHERE {gopher_pass_sql("d.text")}
-),
-scrub4 AS (
-  SELECT doc_id, {pii_scrub_sql_expr("text")} AS scrubbed FROM gated4
-),
-sem4 AS (
-  SELECT s.doc_id, s.scrubbed
-  FROM scrub4 s JOIN sem_reps r USING (doc_id)
-),
-keep4 AS (
-  SELECT md5(scrubbed) AS text_fp, MIN(doc_id) AS doc_id
-  FROM sem4 GROUP BY 1
-),
-kept4 AS (
-  SELECT k.doc_id, s.scrubbed AS text
-  FROM keep4 k JOIN sem4 s ON s.doc_id = k.doc_id
-),
+    return f"""{head},
+{_survivors_cte(src)},
 segd4 AS ({segd}),
 withsrc4 AS (
   SELECT g.doc_id, g.dedup_text, g.n_kept, d.source
@@ -1637,16 +1583,12 @@ v4full AS (
 
 
 def training_corpus_v4_sql(
-    threshold: float = 0.35, n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto", seg_words: int = 32, rate: float = 0.5,
-    salt: str = "mix", seq_len: int = 256, source_cte: str | None = None,
+    seg_words: int = 32, rate: float = 0.5, seq_len: int = 256,
+    source_cte: str | None = None,
 ) -> str:
     """DuckDB twin of ``training_corpus_v4`` (the md5 projection of the
     shared ``v4full`` CTE body)."""
-    body = _training_corpus_v4_cte_body(
-        threshold, n_cells, iters, nprobe, seg_words, rate, salt,
-        seq_len, source_cte,
-    )
+    body = _training_corpus_v4_cte_body(seg_words, rate, seq_len, source_cte)
     return f"""
 WITH {body}
 SELECT doc_id, source, seq_bin, n_words,
@@ -1656,10 +1598,8 @@ FROM v4full
 
 
 def training_corpus_v5_sql(
-    threshold: float = 0.35, n_cells: int | str = "auto", iters: int = 2,
-    nprobe: int | str = "auto", seg_words: int = 32, rate: float = 0.5,
-    salt: str = "mix", seq_len: int = 256, source_cte: str | None = None,
-    min_score: int = 40, val_frac: float = 0.1, split_salt: str = "split",
+    seg_words: int = 32, rate: float = 0.5, seq_len: int = 256,
+    source_cte: str | None = None, min_score: int = 40,
     target_sql: str = "(SELECT doc_id, text FROM documents WHERE source = 'src0')",
 ) -> str:
     """DuckDB twin of ``training_corpus_v5``: the shared v4 body, then
@@ -1667,12 +1607,9 @@ def training_corpus_v5_sql(
     and the content-keyed split, joined back per survivor."""
     from .textops import _dsir_scored_cte, leakage_safe_split_sql
 
-    body = _training_corpus_v4_cte_body(
-        threshold, n_cells, iters, nprobe, seg_words, rate, salt,
-        seq_len, source_cte,
-    )
+    body = _training_corpus_v4_cte_body(seg_words, rate, seq_len, source_cte)
     dsir = _dsir_scored_cte("v5txt", target_sql)
-    split = leakage_safe_split_sql(val_frac, split_salt, "v5txt").strip()
+    split = leakage_safe_split_sql(source_sql="v5txt").strip()
     return f"""
 WITH {body},
 v5txt AS (

@@ -569,7 +569,8 @@ def training_corpus(documents: DataFrame, min_words: int = 40) -> DataFrame:
 
         extraction (min_slice, pure Catalyst)
           → near-dup dedup (LSH graph → connected components → one
-            representative per cluster)
+            representative per cluster: the keeper tail
+            ``simsearch.dedup_keep_representatives``)
           → quality gate (≥ ``min_words`` real words in the EXTRACTED
             text — the sf0.01 median is 49, so the gate provably bites)
           → token accounting over the surviving corpus.
@@ -579,16 +580,11 @@ def training_corpus(documents: DataFrame, min_words: int = 40) -> DataFrame:
     md5 of the extracted markdown pins the actual text content through
     the whole chain, not just row counts."""
     from .minslice import min_slice
-    from .simsearch import neardup_clusters
+    from .simsearch import dedup_keep_representatives
 
-    extracted = min_slice(documents)
-    labels = neardup_clusters(documents)
-    reps = (
-        labels.groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .withColumnRenamed("cluster", "doc_id")
+    joined = min_slice(documents).join(
+        dedup_keep_representatives(documents), "doc_id"
     )
-    joined = extracted.join(reps, "doc_id")
     nw = F.size(F.filter(F.split("mini_md", " "), lambda w: w != "")).cast("int")
     bpe = F.size(
         F.regexp_extract_all(F.col("mini_md"), F.lit(r"\w+|[^\w\s]"), 0)

@@ -110,7 +110,7 @@ def test_exponent_scan_reads_only_the_slice():
     assert _has_exponent(col.slice(1, 2))
     assert not _has_exponent(col.slice(0, 2))
     assert not _has_exponent(col.slice(1, 1))
-    (got,) = _to_float([col.slice(1, 2)])
+    (got,) = _to_float(col.slice(1, 2), 1)
     assert got.tolist() == [2.5, 3.2800000000000004e27]
 
 

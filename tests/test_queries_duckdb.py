@@ -151,12 +151,14 @@ def test_query_parity(spark, duck, name):
 def test_oracle_sql_texts_pinned():
     """All 88 ``oracle_sql()`` twin texts stay byte-identical: one sha256
     over name + text, names sorted. A change that edits a twin on purpose
-    updates this digest and names the texts it changed."""
+    updates this digest and names the texts it changed. Last change:
+    training_corpus_v3, training_corpus_v4 and training_corpus_v5 splice
+    the shared survivor CTEs (``simsearch._survivors_cte``)."""
     o = entrymod.oracle_sql()
     assert len(o) == 88
     digest = hashlib.sha256("".join(k + o[k] for k in sorted(o)).encode())
     assert digest.hexdigest() == (
-        "ed4bd299edcc74ee02165709b51d0ec295800ee4b06bc56fd0c762f6a19ad319"
+        "19e7f770e9be5c425c1a9628e7c9ff09f89fffa74b3b4d139e74c4b4a4f742c4"
     )
 
 
