@@ -1137,8 +1137,7 @@ def _representatives(labels: DataFrame) -> DataFrame:
     """(doc_id, n_members): one row per component of ``labels`` (doc_id,
     cluster) — its representative with the component's size, from one
     aggregate on the label. A component's min label is always one of its
-    members, so the label IS the representative's doc_id: no self-join
-    back to the member rows."""
+    members, so the label is the representative's doc_id."""
     return labels.groupBy(F.col("cluster").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_members")
     )
